@@ -267,7 +267,7 @@ def _q_pip_join_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer edges with .0 offsets... boundary hits excluded by the
     oracle's strict inequalities).
 
-    v2 — GEOGRAPHIC PIP join (join/geo_knn.py:geo_pip_join): 4000
+    v2 — GEOGRAPHIC PIP join (join/pip.py:geo_pip_join): 4000
     lon/lat points against 21 convex diamond zones in UNWRAPPED
     coordinates, including one date-line zone (lon 170.6..190). Convex
     zones make the crossing-number test pure sign arithmetic, so the
@@ -278,7 +278,7 @@ def _q_pip_join_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pygeoops_spark.corpus.pages import order_points
     from pygeoops_spark.join.pip import pip_join_polygons
     from pygeoops_spark.geom import polygon as mk_poly, wkb_dumps
-    from pygeoops_spark.join.geo_knn import geo_pip_join
+    from pygeoops_spark.join.pip import geo_pip_join
 
     zones = _zones_wkb_df(spark).select("zone_id", "xmin", "ymin", "xmax", "ymax", "zone_wkb")
     v1 = pip_join_polygons(order_points(spark, sf_dir), zones, level=None).select(
@@ -406,13 +406,13 @@ def _q_view_angles_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_geo_bbox_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geographic bbox overlap join (join/geo_knn.py geo_bbox_join):
+    """Geographic bbox overlap join (join/bbox.py geo_bbox_join):
     deterministic box sets including date-line-wrapped intervals
     (lonmin > lonmax); the cell-cover join with array_min shared-cell
     dedup must reproduce DuckDB's brute-force circular-interval
     predicate exactly (all box edges are exact binary doubles, so both
     engines decide every inclusive boundary identically)."""
-    from pygeoops_spark.join.geo_knn import geo_bbox_join
+    from pygeoops_spark.join.bbox import geo_bbox_join
 
     half = F.lit(1.0) / F.lit(2.0)
     quarter = F.lit(1.0) / F.lit(4.0)
@@ -1255,89 +1255,94 @@ def _q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the file stream source wants a DIRECTORY: expose the single
     # parquet file through a scratch dir symlink
     import os
+    import shutil
     import tempfile
-
-    d = tempfile.mkdtemp(prefix="sess_stream_src_")
-    os.symlink(f"{sf_dir}/events.parquet", os.path.join(d, "events.parquet"))
-    stream = spark.readStream.schema(batch.schema).parquet(d)
-    total_rows = batch.count()
-    # State-partition count sized to the replayed volume (r07): every
-    # microbatch — including the EMPTY timer batches availableNow keeps
-    # scheduling — pays a state-store task plus an applyInPandasWithState
-    # Python round-trip PER state partition, so a session-default 32/200
-    # partitions is pure fixed overhead at this event volume (measured
-    # 3.4 s -> 2.4 s warm at 100k events with 8). ~12.5k events per
-    # state partition, floored at 4; restored in the finally block.
-    _prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(max(4, min(int(_prev_shuffle), total_rows // 12_500))),
-    )
-    # idle_flush far beyond the run: only gap-rule closures are emitted,
-    # which is the deterministic subset (open sessions depend on wall
-    # clock, closed ones only on the data)
-    closed = sessionize_stream(stream, gap_seconds=1800, idle_flush_ms=3_600_000)
-    name = "sess_stream_" + uuid.uuid4().hex[:8]
-    q = (
-        closed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    # with ProcessingTimeTimeout state, the availableNow query keeps
-    # scheduling empty batches to evaluate timers and never
-    # self-terminates: poll until the CUMULATIVE committed input rows
-    # (progress entries are emitted on batch COMPLETION; batchId-keyed
-    # so the rolling recentProgress window cannot double-count) reach
-    # the exact source row count — robust even if the file source ever
-    # splits the input into several data batches with interleaved
-    # empty timer batches (ADVICE r03).  Fail loudly otherwise —
-    # stopping an in-flight batch would silently emit a partial table.
     import time
 
+    d = tempfile.mkdtemp(prefix="sess_stream_src_")
+    name = "sess_stream_" + uuid.uuid4().hex[:8]
+    # every exit path — a raise from the operator, the stream start or
+    # the poll included — restores the shuffle conf and drops the
+    # scratch dir and sink table (ADVICE r07)
     try:
-        committed: dict[int, int] = {}
-        done = False
-        # 0.1 s poll (r07): with ProcessingTimeTimeout the query keeps
-        # running EMPTY timer batches until we notice completion — each
-        # costs a full state pass, so detection latency buys real work
-        for _ in range(3000):
-            for lp in q.recentProgress:
-                committed[lp["batchId"]] = int(lp["numInputRows"])
-            if sum(committed.values()) >= total_rows:
-                done = True
-                break
-            time.sleep(0.1)
-        if not done:
-            raise RuntimeError(
-                "sessionize_stream: committed input rows "
-                f"{sum(committed.values())} < source rows {total_rows} "
-                "within the poll budget; refusing to emit a partial "
-                "memory-sink table"
-            )
-    finally:
-        q.stop()
-        q.awaitTermination(120)
-        spark.conf.set("spark.sql.shuffle.partitions", _prev_shuffle)
-    dur_us = F.unix_micros("session_end") - F.unix_micros("session_start")
-    out = (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_closed"),
-            F.sum("n_events").cast("bigint").alias("n_events_closed"),
-            F.sum(dur_us).cast("bigint").alias("total_dur_us"),
+        os.symlink(f"{sf_dir}/events.parquet", os.path.join(d, "events.parquet"))
+        stream = spark.readStream.schema(batch.schema).parquet(d)
+        total_rows = batch.count()
+        # State-partition count sized to the replayed volume (r07): every
+        # microbatch — including the EMPTY timer batches availableNow keeps
+        # scheduling — pays a state-store task plus an applyInPandasWithState
+        # Python round-trip PER state partition, so a session-default 32/200
+        # partitions is pure fixed overhead at this event volume (measured
+        # 3.4 s -> 2.4 s warm at 100k events with 8). ~12.5k events per
+        # state partition, floored at 4; restored once the stream stops.
+        _prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(max(4, min(int(_prev_shuffle), total_rows // 12_500))),
         )
-        # materialize so the memory-sink table and scratch dir can be
-        # dropped (repeated runs in one session no longer accumulate
-        # sink tables holding full result rows)
-        .localCheckpoint(eager=True)
-    )
-    spark.catalog.dropTempView(name)
-    import shutil
-
-    shutil.rmtree(d, ignore_errors=True)
+        try:
+            # idle_flush far beyond the run: only gap-rule closures are
+            # emitted, which is the deterministic subset (open sessions
+            # depend on wall clock, closed ones only on the data)
+            closed = sessionize_stream(stream, gap_seconds=1800, idle_flush_ms=3_600_000)
+            q = (
+                closed.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("update")
+                .trigger(availableNow=True)
+                .start()
+            )
+            # with ProcessingTimeTimeout state, the availableNow query keeps
+            # scheduling empty batches to evaluate timers and never
+            # self-terminates: poll until the CUMULATIVE committed input rows
+            # (progress entries are emitted on batch COMPLETION; batchId-keyed
+            # so the rolling recentProgress window cannot double-count) reach
+            # the exact source row count — robust even if the file source ever
+            # splits the input into several data batches with interleaved
+            # empty timer batches (ADVICE r03).  Fail loudly otherwise —
+            # stopping an in-flight batch would silently emit a partial table.
+            try:
+                committed: dict[int, int] = {}
+                done = False
+                # 0.1 s poll (r07): with ProcessingTimeTimeout the query keeps
+                # running EMPTY timer batches until we notice completion — each
+                # costs a full state pass, so detection latency buys real work
+                for _ in range(3000):
+                    for lp in q.recentProgress:
+                        committed[lp["batchId"]] = int(lp["numInputRows"])
+                    if sum(committed.values()) >= total_rows:
+                        done = True
+                        break
+                    time.sleep(0.1)
+                if not done:
+                    raise RuntimeError(
+                        "sessionize_stream: committed input rows "
+                        f"{sum(committed.values())} < source rows {total_rows} "
+                        "within the poll budget; refusing to emit a partial "
+                        "memory-sink table"
+                    )
+            finally:
+                q.stop()
+                q.awaitTermination(120)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", _prev_shuffle)
+        dur_us = F.unix_micros("session_end") - F.unix_micros("session_start")
+        out = (
+            spark.table(name)
+            .groupBy("user_id")
+            .agg(
+                F.count("*").alias("n_closed"),
+                F.sum("n_events").cast("bigint").alias("n_events_closed"),
+                F.sum(dur_us).cast("bigint").alias("total_dur_us"),
+            )
+            # materialize so the memory-sink table and scratch dir can be
+            # dropped (repeated runs in one session no longer accumulate
+            # sink tables holding full result rows)
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(d, ignore_errors=True)
     return out
 
 
@@ -1529,7 +1534,7 @@ def _q_geodesic_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((j * 19 % 150 - 75).cast("double") + half).alias("lat"),
     )
     # level=None → auto level 2 (45-degree cells) for the 16-hub
-    # target density (geo_auto_level_knn; pinned by
+    # target density (auto_level_knn over the geographic scheme; pinned by
     # tests/test_auto_level.py): most probes resolve at radius 1-2 and
     # the doubling recursion exact-stops at radius 4 = nlat (measured
     # 3.6 s vs 7.4 s at level 3)

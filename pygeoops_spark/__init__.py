@@ -99,10 +99,10 @@ _EXPORTS = {
     "pip_join_polygons": "pygeoops_spark.join.pip",
     "knn_join": "pygeoops_spark.join.knn",
     "geodesic_knn_join": "pygeoops_spark.join.geo_knn",
-    "geo_cell_id": "pygeoops_spark.join.geo_knn",
-    "geo_cover_cells_bbox": "pygeoops_spark.join.geo_knn",
-    "geo_bbox_join": "pygeoops_spark.join.geo_knn",
-    "geo_pip_join": "pygeoops_spark.join.geo_knn",
+    "geo_cell_id": "pygeoops_spark.join.cells",
+    "geo_cover_cells_bbox": "pygeoops_spark.join.cells",
+    "geo_bbox_join": "pygeoops_spark.join.bbox",
+    "geo_pip_join": "pygeoops_spark.join.pip",
     "bbox_join": "pygeoops_spark.join.bbox",
     # text / dedup / ann pipeline
     "exact_dedup": "pygeoops_spark.text.dedup",

@@ -2,39 +2,15 @@
 or true-geodesic ranking.
 
 The geographic analog of join/knn.py's planar kNN (VERDICT r03 task 7
-— previously the geodesic re-rank existed only as a test composition).
-A from-scratch lat/lon cell index (the geographic face of the engine's
-quadkey layer): at level L the world is nlat = 2^L latitude rows and
-nlon = 2^(L+1) longitude columns of equal DEGREE size (180/2^L each),
-``cell_id = ix * nlat + iy``.  All candidate generation is pure SQL —
-sequences/transform/pmod inside whole-stage codegen; shuffle keys are
-plain long cell ids.
+— previously the geodesic re-rank existed only as a test composition):
+the same ring-expansion core over the lon/lat ``GeoScheme``
+(join/cells.py — longitude convergence, date-line wrap, polar rows).
 
-What makes the geographic case different from the planar one, and how
-each is handled:
-
-* **Longitude convergence**: a fixed metre radius spans more lon cells
-  at high latitude.  The ring widens per latitude row —
-  ``rx(row) = ceil(r / cos(lat_extreme(row)))`` — so candidates stay
-  tight at the equator and complete near the poles.
-* **Date line**: lon cell indices wrap modulo nlon (``pmod``), so a
-  probe at lon 179.9 sees targets at -179.9 with no special casing;
-  duplicate cells from a full wrap are removed with array_distinct.
-* **Poles**: when the ring would extend past a pole (iy ± r outside
-  [0, nlat-1]) every covered row goes full-wrap: the covered region
-  becomes a complete latitude band including the pole, which is both
-  simple to reason about for the exactness bound and cheap (polar
-  probes are rare; nlon cells per row).
 * **Exactness**: the k-th neighbour is provably correct when its
   distance is below a lower bound on the distance to anything OUTSIDE
-  the covered region.  Any escaping geodesic crosses one of the
-  region's bounding curves, so the bound is the minimum over
-    - the latitude-circle edges:  a * Δφ_edge   (∞ past a covered pole)
-    - the meridian edges:  a * asin(cos φ_p * |sin Δλ_edge|)
-      (distance to the full meridian great circle — conservative),
-  computed on the guaranteed-covered sub-box (half-width r cells in
-  lon: every row's rx >= r).  Probes that fail re-run with doubled
-  radius, exactly like the planar knn_join.
+  the covered region (``GeoScheme.safe_radius``: latitude-circle and
+  meridian edges of the guaranteed-covered sub-box).  Probes that fail
+  re-run with doubled radius, exactly like the planar knn_join.
 * **Spheroid mode**: ranking by the true WGS84 geodesic (Arrow-batched
   kernel, geom/geodesic.py) keeps the sphere-based bound valid via a
   conservative shrink: s_ellipsoid >= (1-f) * (s_sphere(a) - 2 a f)
@@ -48,348 +24,11 @@ cell-ring expansion over web-page points).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd  # module-level: pandas_udf type hints resolve here
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _ncells(level: int) -> tuple[int, int]:
-    """(nlon, nlat) at a level: equal-degree cells, 2:1 grid."""
-    return 2 << level, 1 << level
-
-
-def geo_auto_level(
-    n_points: int,
-    points_per_cell: float = 16.0,
-    lo: int = 1,
-    hi: int = 10,
-    min_cell_deg: float | None = None,
-) -> int:
-    """Density-derived default level for geographic PIP/bbox joins
-    (VERDICT r05 task #5): total cells 2^(2L+1) ≈ n / points_per_cell,
-    optionally capped so a cell's latitude extent (180/2^L degrees)
-    never drops below ``min_cell_deg`` (≈ median zone span / 8) —
-    bounded candidate blowup without exploding a zone's cell cover.
-    Reproduces the hand-picked level 3 for the driver's 4000-point /
-    21-diamond-zone shape."""
-    import math
-
-    raw = 0.5 * (math.log2(max(1.0, n_points / points_per_cell)) - 1.0)
-    level = int(round(raw))
-    if min_cell_deg is not None and min_cell_deg > 0:
-        cap = int(math.floor(math.log2(max(1.0, 180.0 / min_cell_deg))))
-        level = min(level, cap)
-    return max(lo, min(hi, level))
-
-
-def geo_auto_level_knn(
-    n_targets: int, k: int, radius: int, lo: int = 0, hi: int = 10
-) -> int:
-    """Density-derived default level for the geographic kNN join:
-    coarsest L whose initial (2r+1)^2 ring window still holds ≥ k
-    targets in expectation, i.e. 2^(2L+1) ≤ n_targets*(2r+1)^2/k
-    (floor, so the expectation is a guarantee, not a coin flip) —
-    starting too fine multiplies whole-join ring-expansion passes
-    (measured 2x on the 16-hub driver shape: level 2 beats level 3).
-    Reproduces the hand-picked level 2 for 16 hubs at k=3, radius=1."""
-    import math
-
-    w = (2 * radius + 1) ** 2
-    raw = 0.5 * (math.log2(max(1.0, n_targets * w / max(1, k))) - 1.0)
-    return max(lo, min(hi, int(raw)))
-
-
-def geo_cell_ix(lon: Column | str, level: int) -> Column:
-    """Longitude cell index in [0, nlon); input wraps into [-180, 180)."""
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    nlon, _ = _ncells(level)
-    step = 360.0 / nlon
-    ix = F.floor(F.pmod(lon + F.lit(180.0), F.lit(360.0)) / F.lit(step)).cast("long")
-    return F.least(F.lit(nlon - 1), ix)
-
-
-def geo_cell_iy(lat: Column | str, level: int) -> Column:
-    """Latitude cell index in [0, nlat); +-90 clamp to the polar rows."""
-    lat = F.col(lat) if isinstance(lat, str) else lat
-    _, nlat = _ncells(level)
-    step = 180.0 / nlat
-    iy = F.floor((lat + F.lit(90.0)) / F.lit(step)).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit(nlat - 1), iy))
-
-
-def geo_cell_id(lon: Column | str, lat: Column | str, level: int) -> Column:
-    """Row-major geographic cell id: ix * nlat + iy (pure SQL)."""
-    _, nlat = _ncells(level)
-    return geo_cell_ix(lon, level) * F.lit(nlat) + geo_cell_iy(lat, level)
-
-
-def geo_ring_cells(
-    lon: Column | str, lat: Column | str, level: int, radius: int
-) -> Column:
-    """Array of candidate cell ids around the point's cell: +-radius
-    latitude rows, each widened in longitude by rx = ceil(radius /
-    cos(extreme row latitude)) with date-line wrap; full-wrap rows when
-    the ring touches a pole.  Pure SQL (codegen)."""
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    lat = F.col(lat) if isinstance(lat, str) else lat
-    nlon, nlat = _ncells(level)
-    dlat = 180.0 / nlat
-    half = nlon // 2
-    ix, iy = geo_cell_ix(lon, level), geo_cell_iy(lat, level)
-    touches_pole = ((iy - radius) < 0) | ((iy + radius) > (nlat - 1))
-    iy0 = F.greatest(F.lit(0), iy - radius)
-    iy1 = F.least(F.lit(nlat - 1), iy + radius)
-
-    def row_cells(iyr: Column) -> Column:
-        # extreme |lat| over the row band [lat_lo, lat_lo + dlat]
-        lat_lo = F.lit(-90.0) + iyr.cast("double") * F.lit(dlat)
-        cos_min = F.least(
-            F.cos(F.radians(lat_lo)), F.cos(F.radians(lat_lo + F.lit(dlat)))
-        )
-        rx = F.when(
-            touches_pole | (cos_min <= F.lit(1e-12)), F.lit(half)
-        ).otherwise(
-            F.least(F.lit(half), F.ceil(F.lit(float(radius)) / cos_min).cast("int"))
-        )
-        return F.transform(
-            F.sequence(-rx, rx),
-            lambda dx: F.pmod(ix + dx, F.lit(nlon)) * F.lit(nlat) + iyr,
-        )
-
-    return F.array_distinct(F.flatten(F.transform(F.sequence(iy0, iy1), row_cells)))
-
-
-def geo_cover_cells_bbox(
-    lonmin: Column | str,
-    latmin: Column | str,
-    lonmax: Column | str,
-    latmax: Column | str,
-    level: int,
-) -> Column:
-    """Array of cell ids intersecting a geographic bbox, pure SQL.
-
-    ``lonmin > lonmax`` means the box CROSSES the date line (wraps
-    east past +180); a box spanning >= 360 degrees covers every
-    longitude column.  The cover may slightly over-cover at the +180
-    seam (a superset is fine for candidate generation — the exact
-    predicate decides), but it is the SAME deterministic set for a
-    given box, which is what the min-shared-cell dedup needs."""
-    lonmin = F.col(lonmin) if isinstance(lonmin, str) else lonmin
-    latmin = F.col(latmin) if isinstance(latmin, str) else latmin
-    lonmax = F.col(lonmax) if isinstance(lonmax, str) else lonmax
-    latmax = F.col(latmax) if isinstance(latmax, str) else latmax
-    nlon, nlat = _ncells(level)
-    ix0 = geo_cell_ix(lonmin, level)
-    ix1 = geo_cell_ix(lonmax, level)
-    full = (lonmax - lonmin) >= F.lit(360.0)
-    # a date-line-wrapped box whose span exceeds 360 - cell_width can
-    # land both endpoints in the SAME column: pmod(ix1 - ix0) = 0 would
-    # emit a single column though the box covers every one. Wrapped +
-    # same-cell implies span > 360 - cell_width, so cover fully.
-    wrapped_full = (lonmax < lonmin) & (F.pmod(ix1 - ix0, F.lit(nlon)) == 0)
-    nx = F.when(full | wrapped_full, F.lit(nlon - 1)).otherwise(
-        F.pmod(ix1 - ix0, F.lit(nlon))
-    )
-    iy0 = geo_cell_iy(latmin, level)
-    iy1 = geo_cell_iy(latmax, level)
-    return F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), nx),
-            lambda dx: F.transform(
-                F.sequence(iy0, iy1),
-                lambda iy: F.pmod(ix0 + dx, F.lit(nlon)) * F.lit(nlat) + iy,
-            ),
-        )
-    )
-
-
-def _lon_span(lo: Column, hi: Column) -> Column:
-    """Circular longitude span of [lo, hi] in degrees: hi wraps past
-    the date line when hi < lo; >= 360 means the full circle."""
-    return F.when((hi - lo) >= F.lit(360.0), F.lit(360.0)).otherwise(
-        F.pmod(hi - lo, F.lit(360.0))
-    )
-
-
-def geo_bbox_join(
-    left: DataFrame,
-    right: DataFrame,
-    level: int = 3,
-    suffix: str = "_r",
-    broadcast_right: bool = True,
-) -> DataFrame:
-    """Overlap join of two geographic bbox tables (lonmin/latmin/
-    lonmax/latmax each; lonmin > lonmax = date-line crossing).
-
-    The geographic analog of join/bbox.py: cell-cover equi-join for
-    candidates, exact circular-interval overlap predicate (touching
-    edges count), then pair dedup.  Because two WRAPPED lon intervals
-    can overlap in TWO disjoint arcs, the planar 'overlap-corner cell'
-    trick is ambiguous here — instead each side carries its cover
-    array and the pair is kept only in the smallest shared cell
-    (``array_min(array_intersect(...))``), which is exact for any
-    overlap topology and still purely distributed (no distinct
-    shuffle)."""
-    r = right
-    for c in right.columns:
-        r = r.withColumnRenamed(c, c + suffix)
-    lc = left.withColumn(
-        "_cells", geo_cover_cells_bbox("lonmin", "latmin", "lonmax", "latmax", level)
-    ).withColumn("_cell", F.explode("_cells"))
-    rc = r.withColumn(
-        "_cells" + suffix,
-        geo_cover_cells_bbox(
-            f"lonmin{suffix}", f"latmin{suffix}", f"lonmax{suffix}", f"latmax{suffix}",
-            level,
-        ),
-    ).withColumn("_cell", F.explode("_cells" + suffix))
-    if broadcast_right:
-        rc = F.broadcast(rc)
-    joined = lc.join(rc, "_cell")
-    lat_ov = (F.col("latmin") <= F.col(f"latmax{suffix}")) & (
-        F.col(f"latmin{suffix}") <= F.col("latmax")
-    )
-    span_l = _lon_span(F.col("lonmin"), F.col("lonmax"))
-    span_r = _lon_span(F.col(f"lonmin{suffix}"), F.col(f"lonmax{suffix}"))
-    off_rl = F.pmod(F.col(f"lonmin{suffix}") - F.col("lonmin"), F.lit(360.0))
-    off_lr = F.pmod(F.col("lonmin") - F.col(f"lonmin{suffix}"), F.lit(360.0))
-    lon_ov = (off_rl <= span_l) | (off_lr <= span_r)
-    dedup = F.col("_cell") == F.array_min(
-        F.array_intersect("_cells", "_cells" + suffix)
-    )
-    return joined.where(lat_ov & lon_ov & dedup).drop(
-        "_cell", "_cells", "_cells" + suffix
-    )
-
-
-def geo_pip_join(
-    points: DataFrame,
-    zones: DataFrame,
-    lon: str = "lon",
-    lat: str = "lat",
-    zone_geom: str = "zone_wkb",
-    zone_id: str = "zone_id",
-    level: int | None = 5,
-    broadcast_zones: bool = True,
-    ship: str = "auto",
-) -> DataFrame:
-    """Point-in-polygon join on geographic coordinates (plate-carree
-    edge semantics — straight edges in lon/lat space, the same
-    convention the reference applies to whatever CRS it is handed).
-
-    Zone convention: polygon coords and bbox columns (lonmin/latmin/
-    lonmax/latmax) are UNWRAPPED — a zone crossing the date line
-    continues past +180 (e.g. lon 170..190), so lonmax may exceed 180
-    and always lonmax >= lonmin.  Candidate cells come from the
-    wrapped cover; each candidate point is shifted into the zone's
-    frame (p' = lonmin + pmod(p - lonmin, 360)) before the bbox
-    prefilter and the shared crossing-number kernel, so date-line
-    zones need no special casing in the geometry test.
-
-    Same scale shape as join/pip.py: zones explode to cells once and
-    broadcast; the point table is never shuffled.  ship='prepared'
-    (default) decodes zone geometries once on the driver and ships a
-    broadcast {zone_id: rings} dict — only the 8-byte id rides the
-    candidate rows (16·V bytes per candidate pair otherwise; see
-    join/pip.py). ship='wkb' keeps the column path for zones tables
-    too large to collect."""
-    from pyspark.sql.types import BooleanType
-
-    from pygeoops_spark.geom.kernels import points_in_polygon
-    from pygeoops_spark.geom.wkb import wkb_loads
-    from pygeoops_spark.join.pip import (
-        _pip_prepared_udf,
-        _prepare_rings,
-        _resolve_ship,
-    )
-
-    med_span = None
-    if level is None and ship == "auto":
-        # one fused zone-side aggregate for auto-ship + auto-level
-        # (r07; mirrors join/pip.py — each saved action is a saved job)
-        from pygeoops_spark.join.pip import PREPARED_MAX_BYTES
-
-        row = zones.select(
-            F.sum(F.length(F.col(zone_geom))).alias("b"),
-            F.percentile_approx(F.col("latmax") - F.col("latmin"), 0.5).alias("m"),
-        ).first()
-        ship = "prepared" if int(row["b"] or 0) * 3 <= PREPARED_MAX_BYTES else "wkb"
-        med_span = float(row["m"] or 0.0)
-    else:
-        ship = _resolve_ship(zones, zone_geom, ship)
-    if ship == "prepared":
-        bc = points.sparkSession.sparkContext.broadcast(
-            {
-                r[0]: _prepare_rings(bytes(r[1]))
-                for r in zones.select(zone_id, zone_geom).collect()
-            }
-        )
-        zones = zones.drop(zone_geom)
-
-    if level is None:
-        if med_span is None:
-            row = zones.select(
-                F.percentile_approx(F.col("latmax") - F.col("latmin"), 0.5).alias("m")
-            ).first()
-            med_span = float(row["m"] or 0.0)
-        level = geo_auto_level(
-            points.count(),
-            min_cell_deg=med_span / 8.0 if med_span > 0 else None,
-        )
-
-    span = F.col("lonmax") - F.col("lonmin")
-    wrapped_max = F.when(span >= F.lit(360.0), F.col("lonmin") + F.lit(360.0)).otherwise(
-        F.pmod(F.col("lonmax") + F.lit(180.0), F.lit(360.0)) - F.lit(180.0)
-    )
-    zc = zones.withColumn(
-        "_cell",
-        F.explode(
-            geo_cover_cells_bbox(
-                F.col("lonmin"), F.col("latmin"), wrapped_max, F.col("latmax"), level
-            )
-        ),
-    )
-    if broadcast_zones:
-        zc = F.broadcast(zc)
-    pts = points.withColumn("_cell", geo_cell_id(lon, lat, level))
-    cand = pts.join(zc, "_cell").drop("_cell")
-    # point longitude in the zone's unwrapped frame
-    plon = F.col("lonmin") + F.pmod(F.col(lon) - F.col("lonmin"), F.lit(360.0))
-    cand = cand.withColumn("_plon", plon).where(
-        (F.col("_plon") >= F.col("lonmin"))
-        & (F.col("_plon") <= F.col("lonmax"))
-        & (F.col(lat) >= F.col("latmin"))
-        & (F.col(lat) <= F.col("latmax"))
-    )
-
-    if ship == "prepared":
-        # shuffle-free local sort → zone-pure Arrow batches (one big
-        # vectorized kernel call per zone; see join/pip.py)
-        cand = cand.sortWithinPartitions(zone_id)
-        return cand.where(
-            _pip_prepared_udf(bc)(F.col("_plon"), F.col(lat), F.col(zone_id))
-        ).drop("_plon")
-
-    @F.pandas_udf(BooleanType())
-    def _pip(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
-        out = np.zeros(len(px), dtype=bool)
-        pxv, pyv = px.to_numpy(np.float64), py.to_numpy(np.float64)
-        groups: dict[bytes, list[int]] = {}
-        for i, b in enumerate(wkb):
-            groups.setdefault(bytes(b), []).append(i)
-        for b, idxs in groups.items():
-            geom = wkb_loads(b)
-            ii = np.asarray(idxs)
-            out[ii] = points_in_polygon(pxv[ii], pyv[ii], geom)
-        return pd.Series(out)
-
-    # schema parity with the prepared path (ADVICE r06): ship='auto'
-    # must not change the output columns with the zones' data volume
-    return cand.where(_pip(F.col("_plon"), F.col(lat), F.col(zone_geom))).drop(
-        "_plon", zone_geom
-    )
+from pygeoops_spark.join.cells import GeoScheme
+from pygeoops_spark.join.knn import _knn
 
 
 def great_circle_distance_sql(
@@ -428,183 +67,24 @@ def geodesic_knn_join(
     tie-break on target key.
 
     Output: probe columns + ``<target_key>_nn`` + ``dist_m`` + ``knn_rank``.
-    Cache lifecycle matches join/knn.py: every doubling level persists
-    its probes x k frame for the exactness check; the top-level call
-    checkpoints the final union eagerly and unpersists the caches.
+    Cache lifecycle: see join/knn.py:_knn.
     """
     from pygeoops_spark.geom.geodesic import WGS84_A, WGS84_F
 
     ell_a = WGS84_A if a is None else float(a)
     ell_f = WGS84_F if f is None else float(f)
-    n_targets = None
-    if level is None:
-        n_targets = targets.count()
-        level = geo_auto_level_knn(n_targets, k, radius)
-    nlon, nlat = _ncells(level)
-    dlat = 180.0 / nlat
-
-    top_level = _caches is None
-    if _caches is None:
-        _caches = []
-
-    def _dist_col() -> Column:
-        if spheroid:
-            from pygeoops_spark.operators.geodesic import geodesic_distance_col
-
-            return geodesic_distance_col(
-                F.col(plon), F.col(plat), F.col("_tlon"), F.col("_tlat"),
-                a=ell_a, f=ell_f,
-            ).alias("dist_m")
-        return great_circle_distance_sql(
-            F.col(plon), F.col(plat), F.col("_tlon"), F.col("_tlat"), ell_a
-        ).alias("dist_m")
-
-    nn_col = target_key + "_nn"
-    w = Window.partitionBy(probe_key).orderBy(
-        F.col("dist_m").asc(), F.col(nn_col).asc()
-    )
-
-    # Brute-force escape (r07; mirrors join/knn.py): with the target
-    # table no bigger than the initial ring's own capacity, cell
-    # pruning saves at most a small constant factor of candidate rows
-    # per probe while the exactness recursion costs per-level persists,
-    # kth aggregates, isEmpty() actions and whole re-join passes (the
-    # r06 auto-level finding — ring expansion doubles its radius per
-    # miss — taken to its limit). The broadcast cross join computes the
-    # identical top-k (same distance expression, same tie-break) in one
-    # window pass at any probe count. Only under guarantee_exact.
-    if top_level and guarantee_exact:
-        if n_targets is None:
-            n_targets = targets.count()
-        if n_targets <= k * (2 * radius + 1) ** 2:
-            t_all = targets.select(
-                F.col(target_key).alias("_tkey"),
-                F.col(tlon).alias("_tlon"),
-                F.col(tlat).alias("_tlat"),
-            )
-            cand = probes.crossJoin(F.broadcast(t_all))
-            return (
-                cand.select(*probes.columns, F.col("_tkey").alias(nn_col), _dist_col())
-                .withColumn("knn_rank", F.row_number().over(w))
-                .where(F.col("knn_rank") <= k)
-            )
-
-    def _finish(df: DataFrame) -> DataFrame:
-        if top_level and _caches:
-            df = df.localCheckpoint(eager=True)
-            for c in _caches:
-                c.unpersist()
-        return df
-
-    t = targets.select(
-        F.col(target_key).alias("_tkey"),
-        F.col(tlon).alias("_tlon"),
-        F.col(tlat).alias("_tlat"),
-        geo_cell_id(tlon, tlat, level).alias("_cell"),
-    )
-    if broadcast_targets:
-        t = F.broadcast(t)
-
-    p = probes.withColumn("_cell", F.explode(geo_ring_cells(plon, plat, level, radius)))
-    cand = p.join(t, "_cell").drop("_cell")
-    ranked = (
-        cand.select(*probes.columns, F.col("_tkey").alias(nn_col), _dist_col())
-        .withColumn("knn_rank", F.row_number().over(w))
-        .where(F.col("knn_rank") <= k)
-    )
-    if not guarantee_exact:
-        return _finish(ranked)
-    if radius >= nlat:
-        # rows cover every latitude and (rx >= radius >= nlon/2 per
-        # row once widened) every longitude: candidates were ALL
-        # targets, so `ranked` is exact
-        return _finish(ranked)
-
-    from pyspark import StorageLevel
-
-    ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
-    _caches.append(ranked)
-
-    # ---- per-probe guaranteed-covered lower bound (metres) ----------
-    pk = probes.select(
-        probe_key, F.col(plon).alias("_plon"), F.col(plat).alias("_plat")
-    )
-    ix, iy = geo_cell_ix("_plon", level), geo_cell_iy("_plat", level)
-    touches_pole = ((iy - radius) < 0) | ((iy + radius) > (nlat - 1))
-    iy0 = F.greatest(F.lit(0), iy - radius)
-    iy1 = F.least(F.lit(nlat - 1), iy + radius)
-    lat_s_edge = F.lit(-90.0) + iy0.cast("double") * F.lit(dlat)
-    lat_n_edge = F.lit(-90.0) + (iy1 + 1).cast("double") * F.lit(dlat)
-    inf = F.lit(float("inf"))
-    bound_s = F.when(touches_pole & (iy0 == 0), inf).otherwise(
-        F.lit(ell_a) * F.radians(F.col("_plat") - lat_s_edge)
-    )
-    bound_n = F.when(touches_pole & (iy1 == nlat - 1), inf).otherwise(
-        F.lit(ell_a) * F.radians(lat_n_edge - F.col("_plat"))
-    )
-    full_wrap = touches_pole | (2 * radius + 1 >= nlon)
-    dlon_deg = 360.0 / nlon
-    # sub-box lon edges at half-width `radius` cells (covered in every
-    # row since rx(row) >= radius)
-    edge_e = (ix + radius + 1).cast("double") * F.lit(dlon_deg) - F.lit(180.0)
-    edge_w = (ix - radius).cast("double") * F.lit(dlon_deg) - F.lit(180.0)
-    dl_e = F.pmod(edge_e - F.col("_plon"), F.lit(360.0))
-    dl_w = F.pmod(F.col("_plon") - edge_w, F.lit(360.0))
-
-    def meridian_bound(dl: Column) -> Column:
-        return F.lit(ell_a) * F.asin(
-            F.least(
-                F.lit(1.0),
-                F.cos(F.radians("_plat")) * F.abs(F.sin(F.radians(dl))),
-            )
-        )
-
-    bound_lon = F.when(full_wrap, inf).otherwise(
-        F.least(meridian_bound(dl_e), meridian_bound(dl_w))
-    )
-    safe = F.least(bound_s, bound_n, bound_lon)
     if spheroid:
-        # sphere bound -> conservative ellipsoid bound (module doc)
-        safe = (safe - F.lit(2.0 * ell_a * ell_f)) * F.lit(1.0 - ell_f)
-    pk = pk.select(probe_key, safe.alias("_safe"))
+        from pygeoops_spark.operators.geodesic import geodesic_distance_col
 
-    kth = ranked.groupBy(probe_key).agg(
-        F.max("dist_m").alias("_kth"), F.count("*").alias("_n")
-    )
-    bad = (
-        kth.join(pk, probe_key)
-        .where((F.col("_kth") > F.col("_safe")) | (F.col("_n") < k))
-        .select(probe_key)
-    )
-    # probes with zero candidates never reach `ranked` — also inexact
-    missing = probes.select(probe_key).join(
-        kth.select(probe_key), probe_key, "left_anti"
-    )
-    bad = bad.unionByName(missing)
-    if bad.isEmpty():
-        return _finish(ranked)
-    good = ranked.join(bad, probe_key, "left_anti")
-    redo = probes.join(bad, probe_key, "left_semi")
-    return _finish(
-        good.unionByName(
-            geodesic_knn_join(
-                redo,
-                targets,
-                probe_key,
-                target_key,
-                k,
-                level=level,
-                radius=radius * 2,
-                plon=plon,
-                plat=plat,
-                tlon=tlon,
-                tlat=tlat,
-                broadcast_targets=broadcast_targets,
-                guarantee_exact=True,
-                spheroid=spheroid,
-                a=ell_a,
-                f=ell_f,
-                _caches=_caches,
-            )
-        )
+        def dist(plon_c, plat_c, tlon_c, tlat_c):
+            return geodesic_distance_col(plon_c, plat_c, tlon_c, tlat_c, a=ell_a, f=ell_f)
+    else:
+        def dist(plon_c, plat_c, tlon_c, tlat_c):
+            return great_circle_distance_sql(plon_c, plat_c, tlon_c, tlat_c, ell_a)
+
+    scheme = GeoScheme(ell_a, ell_f if spheroid else None)
+    return _knn(
+        scheme, probes, targets, probe_key, target_key, k, level, radius,
+        (plon, plat), (tlon, tlat), broadcast_targets, guarantee_exact, dist, "dist_m",
+        _caches,
     )

@@ -1,4 +1,6 @@
-"""Point-in-polygon spatial join via cell-id candidate equi-join.
+"""Point-in-polygon spatial join via cell-id candidate equi-join, planar
+(``pip_join_rects``/``pip_join_polygons``) and geographic
+(``geo_pip_join``) — one core written against ``join.cells.CellScheme``.
 
 Scale design (the whole point of this layer):
   * zones explode to their covering cells ONCE (small side) and are
@@ -15,7 +17,7 @@ Scale design (the whole point of this layer):
 
 Skew: Zipfian hotspots concentrate points in few cells, which is
 harmless on the broadcast plan (no shuffle of the point side). For
-shuffle plans (huge zone side) use `salt_cells` + AQE skew-join.
+shuffle plans (huge zone side) pass ``n_salt`` + AQE skew-join.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
@@ -32,18 +34,81 @@ from pygeoops_spark.geom.kernels import (
     points_in_polygon,
 )
 from pygeoops_spark.geom.wkb import POLYGON, get_parts, wkb_loads
-from pygeoops_spark.join.cells import cell_id, cover_cells_bbox
+from pygeoops_spark.join.cells import GEO, PLANAR, CellScheme, auto_level
+
+# prepared-broadcast cap: total zone WKB above this stays on the
+# ship='wkb' column path (driver collect + executor broadcast memory)
+PREPARED_MAX_BYTES = 256 * 1024 * 1024
 
 
-def _resolve_level(points: DataFrame, zones: DataFrame, level: int | None) -> int:
-    """``level=None`` → density-derived default: points-per-cell ≈ 16,
-    capped so cells never shrink below median-zone-span/8 (one parquet
-    footer count + one tiny aggregate on the small zones side)."""
-    if level is not None:
-        return level
-    from pygeoops_spark.join.cells import auto_level, zone_span_cap
+def _resolve(points, zones, scheme: CellScheme, level, ship=None, zone_geom=None):
+    """Resolve ``level=None`` and ``ship='auto'`` with ONE zone-side
+    aggregate (r07, guide §1.2: these are eager actions at
+    plan-construction time — ADVICE r06 — so every saved action is a
+    saved Spark job per call).
 
-    return auto_level(points.count(), min_cell=zone_span_cap(zones))
+    level=None → density-derived default: points-per-cell ≈ 16, capped
+    so cells never shrink below median-zone-span/8 (one parquet footer
+    count + the tiny zones-side aggregate). ship='auto' → 'prepared'
+    unless the zones' total WKB exceeds PREPARED_MAX_BYTES; explicit
+    'prepared'/'wkb' pass through."""
+    aggs = []
+    if ship == "auto":
+        aggs.append(F.sum(F.length(F.col(zone_geom))).alias("b"))
+    if level is None:
+        ax = scheme.span_axis
+        aggs.append(F.percentile_approx(F.col(f"{ax}max") - F.col(f"{ax}min"), 0.5).alias("m"))
+    if not aggs:
+        return level, ship
+    row = zones.select(*aggs).first()
+    if ship == "auto":
+        # the broadcast ships DECODED float64 ring ndarrays plus per-ring
+        # Python object overhead — ~3x the raw WKB payload — so the cap is
+        # applied to the decoded estimate, not the WKB length (ADVICE r06)
+        ship = "prepared" if int(row["b"] or 0) * 3 <= PREPARED_MAX_BYTES else "wkb"
+    if level is None:
+        span = float(row["m"] or 0.0)
+        level = auto_level(points.count(), scheme, min_cell=span / 8.0 if span > 0 else None)
+    return level, ship
+
+
+def _cell_sides(points, zones, x, y, level, scheme, broadcast_zones, n_salt, salt_key):
+    """(points, zone cells, key) for the candidate equi-join: zones
+    explode to their covering cells once, points get their cell id.
+
+    ``n_salt > 1`` salts the key for Zipfian hotspots. It matters on the
+    SHUFFLE plan (``broadcast_zones=False``): the bbox filter and the
+    Arrow-batched PIP kernel run in the post-shuffle join stage, so an
+    unsalted hot cell funnels ALL its candidates through one task's
+    single Python worker. The zone-cell table is replicated n_salt
+    times (still tiny); each point picks one replica via
+    pmod(hash(key)), so a hot cell spreads over n_salt join keys →
+    n_salt tasks/workers (measured on kernel-bound zones:
+    scripts/skew_bench.py → BENCH/skew_salted_r06.json). Output is
+    identical to the unsalted join (asserted in tests)."""
+    zc = zones.withColumn("_cell", F.explode(scheme.zone_cover(level)))
+    key, point_key = "_cell", scheme.cell_id(x, y, level)
+    if n_salt > 1:
+        zc = zc.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
+        zc = zc.withColumn("_skey", F.col("_cell") * n_salt + F.col("_salt")).drop(
+            "_cell", "_salt"
+        )
+        salt = F.col(salt_key) if salt_key else (F.col(x) * 7919 + F.col(y))
+        key, point_key = "_skey", point_key * n_salt + F.pmod(F.hash(salt), F.lit(n_salt))
+    if broadcast_zones:
+        zc = F.broadcast(zc)
+    return points.withColumn(key, point_key), zc, key
+
+
+def _in_bbox(px: Column, py: Column, scheme: CellScheme) -> Column:
+    """Closed bbox test of a point against the zone's bbox columns."""
+    ax, ay = scheme.axes
+    return (
+        (px >= F.col(f"{ax}min"))
+        & (px <= F.col(f"{ax}max"))
+        & (py >= F.col(f"{ay}min"))
+        & (py <= F.col(f"{ay}max"))
+    )
 
 
 def pip_join_rects(
@@ -53,30 +118,24 @@ def pip_join_rects(
     y: str = "y",
     level: int | None = 5,
     broadcast_zones: bool = True,
-    how: str = "inner",
+    n_salt: int = 1,
+    salt_key: str | None = None,
 ) -> DataFrame:
     """Join points to rectangle zones (zones carry xmin/ymin/xmax/ymax).
 
     Fully SQL (no UDF): cell equi-join prefilter + BETWEEN exact test.
     Inclusive bounds on all edges (rectangle closed set).
     ``level=None`` derives the cell level from point density
-    (see _resolve_level; VERDICT r05 task #5).
+    (see _resolve; VERDICT r05 task #5). ``n_salt``/``salt_key`` salt
+    the join key for hotspots (see _cell_sides); with
+    ``broadcast_zones=False`` the join runs as a shuffle (sort-merge)
+    join — the plan where key skew actually stalls a task and where
+    salting earns its keep.
     """
-    level = _resolve_level(points, zones, level)
-    zc = zones.withColumn(
-        "_cell", F.explode(cover_cells_bbox("xmin", "ymin", "xmax", "ymax", level))
+    return _pip_join(
+        points, zones, x, y, None, None, level, broadcast_zones, None, PLANAR,
+        n_salt, salt_key,
     )
-    if broadcast_zones:
-        zc = F.broadcast(zc)
-    pts = points.withColumn("_cell", cell_id(x, y, level))
-    cond = (
-        (pts["_cell"] == zc["_cell"])
-        & (pts[x] >= zc["xmin"])
-        & (pts[x] <= zc["xmax"])
-        & (pts[y] >= zc["ymin"])
-        & (pts[y] <= zc["ymax"])
-    )
-    return pts.join(zc, cond, how).drop("_cell")
 
 
 def _prepare_rings(wkb_bytes: bytes) -> list[tuple[np.ndarray, bool]]:
@@ -92,23 +151,50 @@ def _prepare_rings(wkb_bytes: bytes) -> list[tuple[np.ndarray, bool]]:
     return rings
 
 
-# prepared-broadcast cap: total zone WKB above this stays on the
-# ship='wkb' column path (driver collect + executor broadcast memory)
-PREPARED_MAX_BYTES = 256 * 1024 * 1024
-
-
-def _resolve_ship(zones: DataFrame, zone_geom: str, ship: str) -> str:
-    """ship='auto' → 'prepared' unless the zones' total WKB exceeds
-    PREPARED_MAX_BYTES (one tiny aggregate on the small side); explicit
-    'prepared'/'wkb' pass through."""
-    if ship != "auto":
-        return ship
-    row = zones.select(F.sum(F.length(F.col(zone_geom))).alias("b")).first()
-    total = int(row["b"] or 0)
-    # the broadcast ships DECODED float64 ring ndarrays plus per-ring
-    # Python object overhead — ~3x the raw WKB payload — so the cap is
-    # applied to the decoded estimate, not the WKB length (ADVICE r06)
-    return "prepared" if total * 3 <= PREPARED_MAX_BYTES else "wkb"
+def _pip_join(
+    points, zones, x, y, zone_geom, zone_id, level, broadcast_zones, ship,
+    scheme: CellScheme = PLANAR, n_salt: int = 1, salt_key=None, sort: bool = True,
+) -> DataFrame:
+    """The PIP core: cell equi-join of points against the zones' bbox
+    cover, the cheap SQL bbox pre-filter, then the kernel. ``ship=None``
+    (rectangle zones) stops at the bbox test, which is then exact;
+    ``sort=False`` skips the zone-purity sort (streaming)."""
+    level, ship = _resolve(points, zones, scheme, level, ship, zone_geom)
+    if ship == "prepared":
+        # decode zone geometries ONCE on the driver and ship them to
+        # executors as a Spark broadcast variable keyed by zone id
+        rows = zones.select(zone_id, zone_geom).collect()
+        bc = zones.sparkSession.sparkContext.broadcast(
+            {r[0]: _prepare_rings(bytes(r[1])) for r in rows}
+        )
+        zones = zones.drop(zone_geom)
+    pts, zc, key = _cell_sides(
+        points, zones, x, y, level, scheme, broadcast_zones, n_salt, salt_key
+    )
+    cand = pts.join(zc, key).drop(key)
+    drop = []
+    px = scheme.zone_frame_x(x)
+    if px is not None:
+        # point x in the zone's frame (GeoScheme: unwrapped longitude)
+        x = "_p" + scheme.axes[0]
+        cand, drop = cand.withColumn(x, px), [x]
+    cand = cand.where(_in_bbox(F.col(x), F.col(y), scheme))
+    if ship == "prepared":
+        if sort:
+            # shuffle-free local sort: Arrow batches become zone-pure, so
+            # the kernel runs one big vectorized call per zone instead of
+            # shattering across interleaved zones (the broadcast plan joins
+            # in input-row order; measured ~2x on kernel-bound zones)
+            cand = cand.sortWithinPartitions(zone_id)
+        cand = cand.where(_pip_prepared_udf(bc)(F.col(x), F.col(y), F.col(zone_id)))
+    elif ship is not None:
+        # drop the geometry column on the wkb path too, so ship='auto'
+        # yields ONE output schema regardless of which side of the size
+        # threshold the zones landed on (ADVICE r06: a schema that flips
+        # with data volume breaks downstream selects only at scale)
+        cand = cand.where(_pip_udf(F.col(x), F.col(y), F.col(zone_geom)))
+        drop.append(zone_geom)
+    return cand.drop(*drop) if drop else cand
 
 
 def pip_join_polygons(
@@ -121,6 +207,8 @@ def pip_join_polygons(
     level: int | None = 5,
     broadcast_zones: bool = True,
     ship: str = "auto",
+    n_salt: int = 1,
+    salt_key: str | None = None,
 ) -> DataFrame:
     """Join points to arbitrary polygon zones (WKB column + bbox cols).
 
@@ -128,7 +216,8 @@ def pip_join_polygons(
     point-in-polygon runs as an Arrow-batched pandas UDF. Within a
     batch, rows are grouped by zone so each polygon is decoded once
     (prepared-geometry behavior). ``level=None`` derives the cell
-    level from point density (see _resolve_level).
+    level from point density (see _resolve). ``n_salt``/``salt_key``
+    salt the join key for hotspots on the shuffle plan (see _cell_sides).
 
     ship='auto' (default) resolves to 'prepared' while the zones'
     total WKB fits PREPARED_MAX_BYTES: zone geometries are decoded
@@ -142,57 +231,34 @@ def pip_join_polygons(
     shuffle join). The prepared output omits the ``zone_geom`` column
     (never needed by callers; keeps the plan narrow).
     """
-    if level is None and ship == "auto":
-        # fuse the two tiny zone-side aggregates (auto-level span cap +
-        # auto-ship WKB total) into ONE job (r07, guide §1.2: these are
-        # eager actions at plan-construction time — ADVICE r06 — so
-        # every saved action is a saved Spark job per call)
-        row = zones.select(
-            F.sum(F.length(F.col(zone_geom))).alias("b"),
-            F.percentile_approx(F.col("xmax") - F.col("xmin"), 0.5).alias("m"),
-        ).first()
-        ship = "prepared" if int(row["b"] or 0) * 3 <= PREPARED_MAX_BYTES else "wkb"
-        from pygeoops_spark.join.cells import auto_level
+    return _pip_join(
+        points, zones, x, y, zone_geom, zone_id, level, broadcast_zones, ship,
+        PLANAR, n_salt, salt_key,
+    )
 
-        span = float(row["m"] or 0.0)
-        level = auto_level(points.count(), min_cell=span / 8.0 if span > 0 else 0.0)
-    else:
-        level = _resolve_level(points, zones, level)
-        ship = _resolve_ship(zones, zone_geom, ship)
-    if ship == "prepared":
-        zone_wkbs = {
-            r[0]: bytes(r[1]) for r in zones.select(zone_id, zone_geom).collect()
-        }
-        bc = points.sparkSession.sparkContext.broadcast(
-            {zid: _prepare_rings(w) for zid, w in zone_wkbs.items()}
-        )
-        zones = zones.drop(zone_geom)
-    zc = zones.withColumn(
-        "_cell", F.explode(cover_cells_bbox("xmin", "ymin", "xmax", "ymax", level))
+
+def geo_pip_join(
+    points: DataFrame,
+    zones: DataFrame,
+    lon: str = "lon",
+    lat: str = "lat",
+    zone_geom: str = "zone_wkb",
+    zone_id: str = "zone_id",
+    level: int | None = 5,
+    broadcast_zones: bool = True,
+    ship: str = "auto",
+) -> DataFrame:
+    """Point-in-polygon join on geographic coordinates (plate-carree
+    edge semantics — straight edges in lon/lat space, the same
+    convention the reference applies to whatever CRS it is handed).
+
+    Zones carry UNWRAPPED polygon coords and lonmin/latmin/lonmax/latmax
+    bbox columns; date-line zones need no special casing (see
+    join.cells.GeoScheme). Same scale shape and ship modes as
+    pip_join_polygons."""
+    return _pip_join(
+        points, zones, lon, lat, zone_geom, zone_id, level, broadcast_zones, ship, GEO
     )
-    if broadcast_zones:
-        zc = F.broadcast(zc)
-    pts = points.withColumn("_cell", cell_id(x, y, level))
-    cand = pts.join(zc, "_cell").drop("_cell")
-    # cheap SQL bbox pre-filter before the kernel
-    cand = cand.where(
-        (F.col(x) >= F.col("xmin"))
-        & (F.col(x) <= F.col("xmax"))
-        & (F.col(y) >= F.col("ymin"))
-        & (F.col(y) <= F.col("ymax"))
-    )
-    if ship == "prepared":
-        # shuffle-free local sort: Arrow batches become zone-pure, so
-        # the kernel runs one big vectorized call per zone instead of
-        # shattering across interleaved zones (the broadcast plan joins
-        # in input-row order; measured ~2x on kernel-bound zones)
-        cand = cand.sortWithinPartitions(zone_id)
-        return cand.where(_pip_prepared_udf(bc)(F.col(x), F.col(y), F.col(zone_id)))
-    # drop the geometry column on the wkb path too, so ship='auto'
-    # yields ONE output schema regardless of which side of the size
-    # threshold the zones landed on (ADVICE r06: a schema that flips
-    # with data volume breaks downstream selects only at scale)
-    return cand.where(_pip_udf(F.col(x), F.col(y), F.col(zone_geom))).drop(zone_geom)
 
 
 def _pip_prepared_udf(bc):
@@ -228,120 +294,3 @@ def _pip_udf(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
         ii = np.asarray(idxs)
         out[ii] = points_in_polygon(pxv[ii], pyv[ii], geom)
     return pd.Series(out)
-
-
-def pip_join_polygons_salted(
-    points: DataFrame,
-    zones: DataFrame,
-    x: str = "x",
-    y: str = "y",
-    zone_geom: str = "zone_wkb",
-    zone_id: str = "zone_id",
-    level: int = 5,
-    n_salt: int = 8,
-    salt_key: str | None = None,
-    broadcast_zones: bool = False,
-    ship: str = "auto",
-) -> DataFrame:
-    """pip_join_polygons with key salting for Zipfian hotspots.
-
-    Matters on the SHUFFLE plan: the bbox filter and the Arrow-batched
-    PIP kernel run in the post-shuffle join stage, so an unsalted hot
-    cell funnels ALL its candidates through one task's single Python
-    worker. Salting spreads the hot cell over n_salt join keys →
-    n_salt tasks/workers (measured on kernel-bound zones:
-    scripts/skew_bench.py → BENCH/skew_salted_r06.json). Output is
-    identical to pip_join_polygons (asserted in tests).
-    """
-    ship = _resolve_ship(zones, zone_geom, ship)
-    if ship == "prepared":
-        zone_wkbs = {
-            r[0]: bytes(r[1]) for r in zones.select(zone_id, zone_geom).collect()
-        }
-        bc = points.sparkSession.sparkContext.broadcast(
-            {zid: _prepare_rings(w) for zid, w in zone_wkbs.items()}
-        )
-        zones = zones.drop(zone_geom)
-    zc = zones.withColumn(
-        "_cell", F.explode(cover_cells_bbox("xmin", "ymin", "xmax", "ymax", level))
-    ).withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
-    zc = zc.withColumn("_skey", F.col("_cell") * n_salt + F.col("_salt")).drop(
-        "_cell", "_salt"
-    )
-    if broadcast_zones:
-        zc = F.broadcast(zc)
-    key = F.col(salt_key) if salt_key else (F.col(x) * 7919 + F.col(y))
-    pts = points.withColumn(
-        "_skey",
-        cell_id(x, y, level) * n_salt + F.pmod(F.hash(key), F.lit(n_salt)),
-    )
-    cand = pts.join(zc, "_skey").drop("_skey")
-    cand = cand.where(
-        (F.col(x) >= F.col("xmin"))
-        & (F.col(x) <= F.col("xmax"))
-        & (F.col(y) >= F.col("ymin"))
-        & (F.col(y) <= F.col("ymax"))
-    )
-    if ship == "prepared":
-        cand = cand.sortWithinPartitions(zone_id)
-        return cand.where(_pip_prepared_udf(bc)(F.col(x), F.col(y), F.col(zone_id)))
-    # schema parity with the prepared path (ADVICE r06)
-    return cand.where(_pip_udf(F.col(x), F.col(y), F.col(zone_geom))).drop(zone_geom)
-
-
-def salt_cells(df: DataFrame, cell_col: str, n_salt: int, key_col: str) -> DataFrame:
-    """Salted join key for skewed cells: cell_id * n_salt + pmod(hash(key)).
-
-    Replicate the small side n_salt times (explode over sequence) and
-    join on the salted key; with AQE skew-join enabled this bounds the
-    largest task at roughly hot_cell/n_salt rows.
-    """
-    return df.withColumn(
-        "_salted_cell",
-        F.col(cell_col) * n_salt + F.pmod(F.hash(F.col(key_col)), F.lit(n_salt)),
-    )
-
-
-def pip_join_rects_salted(
-    points: DataFrame,
-    zones: DataFrame,
-    x: str = "x",
-    y: str = "y",
-    level: int = 5,
-    n_salt: int = 8,
-    salt_key: str | None = None,
-    broadcast_zones: bool = True,
-) -> DataFrame:
-    """pip_join_rects with explicit key salting for Zipfian hotspots.
-
-    The zone-cell table is replicated n_salt times (still tiny, and
-    broadcast by default); each point picks one replica via
-    pmod(hash(key)). A hot cell's rows spread over n_salt join keys,
-    bounding the largest build-side bucket / skew-split task. With
-    ``broadcast_zones=False`` the join runs as a shuffle (sort-merge)
-    join — the plan where key skew actually stalls a task and where
-    salting earns its keep (evidence: scripts/skew_bench.py →
-    BENCH/skew_salted_r06.json). Results are identical to the unsalted
-    join (asserted in tests).
-    """
-    zc = zones.withColumn(
-        "_cell", F.explode(cover_cells_bbox("xmin", "ymin", "xmax", "ymax", level))
-    ).withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
-    zc = zc.withColumn("_skey", F.col("_cell") * n_salt + F.col("_salt")).drop(
-        "_cell", "_salt"
-    )
-    if broadcast_zones:
-        zc = F.broadcast(zc)
-    key = F.col(salt_key) if salt_key else (F.col(x) * 7919 + F.col(y))
-    pts = points.withColumn(
-        "_skey",
-        cell_id(x, y, level) * n_salt + F.pmod(F.hash(key), F.lit(n_salt)),
-    )
-    cond = (
-        (pts["_skey"] == zc["_skey"])
-        & (pts[x] >= zc["xmin"])
-        & (pts[x] <= zc["xmax"])
-        & (pts[y] >= zc["ymin"])
-        & (pts[y] <= zc["ymax"])
-    )
-    return pts.join(zc, cond, "inner").drop("_skey")

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pygeoops_spark.geom.grid import Bounds
-from pygeoops_spark.join.cells import cell_id, cover_cells_bbox
+from pygeoops_spark.join.cells import cell_id
 from pygeoops_spark.operators.grid import tile_cols
 
 
@@ -134,26 +134,8 @@ def geofence_stream(
     and a per-batch sort adds latency for no measurable kernel win at
     streaming batch sizes.
     """
-    from pygeoops_spark.join.pip import _pip_prepared_udf, _prepare_rings
+    from pygeoops_spark.join.pip import _pip_join
 
-    bc = zones.sparkSession.sparkContext.broadcast(
-        {
-            r[0]: _prepare_rings(bytes(r[1]))
-            for r in zones.select(zone_id, zone_geom).collect()
-        }
+    return _pip_join(
+        stream, zones, x, y, zone_geom, zone_id, level, True, "prepared", sort=False
     )
-    zc = F.broadcast(
-        zones.drop(zone_geom).withColumn(
-            "_cell",
-            F.explode(cover_cells_bbox("xmin", "ymin", "xmax", "ymax", level)),
-        )
-    )
-    pts = stream.withColumn("_cell", cell_id(x, y, level))
-    cand = pts.join(zc, "_cell").drop("_cell")
-    cand = cand.where(
-        (F.col(x) >= F.col("xmin"))
-        & (F.col(x) <= F.col("xmax"))
-        & (F.col(y) >= F.col("ymin"))
-        & (F.col(y) <= F.col("ymax"))
-    )
-    return cand.where(_pip_prepared_udf(bc)(F.col(x), F.col(y), F.col(zone_id)))

@@ -474,8 +474,13 @@ def simhash_sig_expr(bits: int = 64) -> Column:
         m = len(hs)
         if not m:
             return pd.Series([], dtype="int64")
-        lens = np.fromiter((len(a) for a in hs), dtype=np.int64, count=m)
-        nv = n.to_numpy(np.int64)
+        null = hs.isna().to_numpy()
+        lens = np.fromiter(
+            (0 if z else len(a) for a, z in zip(hs, null)), dtype=np.int64, count=m
+        )
+        # a null _hs sizes to -1 (or null under ANSI): only rows with
+        # words read n
+        nv = n.fillna(0).to_numpy(np.int64)
         out = np.zeros(m, dtype=np.uint64)
         nz = np.nonzero(lens > 0)[0]
         if nz.size:
@@ -491,7 +496,9 @@ def simhash_sig_expr(bits: int = 64) -> Column:
                 cnt = np.add.reduceat(bit.view(np.int64), starts)
                 acc |= (2 * cnt > half).astype(np.uint64) << np.uint64(b)
             out[nz] = acc
-        return pd.Series(out.view(np.int64))
+        sig = pd.Series(out.view(np.int64))
+        # null word-hash array in, null signature out
+        return sig.astype("Int64").mask(null) if null.any() else sig
 
     return _sig("_hs", "_n")
 

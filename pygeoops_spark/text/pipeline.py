@@ -18,6 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# Edge-count gate for the single-task union-find in connected_components:
+# the whole deduplicated edge set plus a Python dict live in ONE task, so
+# this is a fixed code constant, not a user knob.
+CC_LOCAL_MAX_EDGES = 100_000
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     """For each node u (edges read in both directions), connect every
@@ -91,11 +96,8 @@ def connected_components(
     # reads the count off the just-checkpointed edges (a metadata-cheap
     # job), so at corpus scale the distributed O(log n)-round algorithm
     # — the one that matters at 10^12 docs — runs unchanged.
-    import os as _os
-
-    gate = int(_os.environ.get("PYGEOOPS_CC_LOCAL_MAX_EDGES", "100000"))
     n_edges = e.count()
-    if n_edges <= gate:
+    if n_edges <= CC_LOCAL_MAX_EDGES:
         import pandas as pd
 
         def _union_find(batches):

@@ -2,7 +2,7 @@
 
 The module docstring in join/pip.py claims: hotspot skew is harmless on
 the broadcast plan, and the shuffle (sort-merge) plan needs
-`salt_cells` or AQE skew-join. This script MEASURES that claim on the
+key salting (`n_salt`) or AQE skew-join. This script MEASURES that claim on the
 20%-hotspot pages corpus (corpus/pages.py:118 — 20% of points snap
 into ONE level-5 cell, so one shuffle key carries 20% of the big side):
 
@@ -125,33 +125,23 @@ def _points(spark, n_pages: int):
 
 def _join(spark, n_pages: int, salted: bool, broadcast: bool, poly: bool = False):
     from pygeoops_spark.corpus.pages import synth_zones
-    from pygeoops_spark.join.pip import (
-        pip_join_polygons,
-        pip_join_polygons_salted,
-        pip_join_rects,
-        pip_join_rects_salted,
-    )
+    from pygeoops_spark.join.pip import pip_join_polygons, pip_join_rects
 
     # salt_key default (numeric x*7919+y): a string key (url) measured
     # +3s/task of map-side hash/materialization cost — the salt only
     # needs to decorrelate points within a cell
     pts = _points(spark, n_pages)
+    n_salt = N_SALT if salted else 1
     if poly:
-        zones = _poly_zones(spark)
-        if salted:
-            out = pip_join_polygons_salted(
-                pts, zones, level=LEVEL, n_salt=N_SALT,
-                broadcast_zones=broadcast,
-            )
-        else:
-            out = pip_join_polygons(pts, zones, level=LEVEL, broadcast_zones=broadcast)
-    elif salted:
-        out = pip_join_rects_salted(
-            pts, synth_zones(spark), level=LEVEL, n_salt=N_SALT,
+        out = pip_join_polygons(
+            pts, _poly_zones(spark), level=LEVEL, n_salt=n_salt,
             broadcast_zones=broadcast,
         )
     else:
-        out = pip_join_rects(pts, synth_zones(spark), level=LEVEL, broadcast_zones=broadcast)
+        out = pip_join_rects(
+            pts, synth_zones(spark), level=LEVEL, n_salt=n_salt,
+            broadcast_zones=broadcast,
+        )
     return out.select("url", "zone_id")
 
 

@@ -9,17 +9,16 @@ the hand-picked-level results.
 import pyspark.sql.functions as F
 import pytest
 
-from pygeoops_spark.join.cells import auto_level, auto_level_knn
-from pygeoops_spark.join.geo_knn import geo_auto_level, geo_auto_level_knn
+from pygeoops_spark.join.cells import GEO, auto_level, auto_level_knn
 
 
 def test_auto_level_pins_driver_shapes():
     # planar PIP: 15k order points at sf0.01 -> hand-picked level 5
     assert auto_level(15_000) == 5
     # geographic PIP: 4000 probe points -> hand-picked level 3
-    assert geo_auto_level(4_000) == 3
+    assert auto_level(4_000, GEO) == 3
     # geographic kNN: 16 hubs, k=3, radius=1 -> hand-picked level 2
-    assert geo_auto_level_knn(16, k=3, radius=1) == 2
+    assert auto_level_knn(16, k=3, radius=1, scheme=GEO) == 2
 
 
 def test_auto_level_scaling_monotone():
@@ -28,14 +27,14 @@ def test_auto_level_scaling_monotone():
     levels = [auto_level(n) for n in (1_000, 100_000, 10_000_000, 1_000_000_000)]
     assert levels == sorted(levels)
     assert levels[-1] - levels[0] >= 9  # ~log4(1e6) = 10
-    glv = [geo_auto_level(n) for n in (1_000, 100_000, 10_000_000)]
+    glv = [auto_level(n, GEO) for n in (1_000, 100_000, 10_000_000)]
     assert glv == sorted(glv)
 
 
 def test_auto_level_zone_span_cap():
     # a zone family with tiny spans must not push cells below span/8
     assert auto_level(10**9, min_cell=128.0) == 3  # 1024/128 = 8 cells/axis
-    assert geo_auto_level(10**9, min_cell_deg=22.5) == 3  # 180/22.5
+    assert auto_level(10**9, GEO, min_cell=22.5) == 3  # 180/22.5
 
 
 def test_auto_level_knn_floor_guarantee():
@@ -44,7 +43,7 @@ def test_auto_level_knn_floor_guarantee():
         lvl = auto_level_knn(n_t, k, r)
         w = (2 * r + 1) ** 2
         assert n_t * w / k >= 4**lvl
-        glvl = geo_auto_level_knn(n_t, k, r)
+        glvl = auto_level_knn(n_t, k, r, scheme=GEO)
         assert n_t * w / k >= 2 ** (2 * glvl + 1)
 
 

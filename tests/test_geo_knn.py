@@ -8,9 +8,8 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pygeoops_spark.join.cells import geo_cell_id, geo_ring_cells
 from pygeoops_spark.join.geo_knn import (
-    geo_cell_id,
-    geo_ring_cells,
     geodesic_knn_join,
     great_circle_distance_sql,
 )
@@ -228,7 +227,7 @@ def test_geo_bbox_join_matches_bruteforce(spark):
         for b in B
         if lon_ov(a, b) and a[2] <= b[4] and b[2] <= a[4]
     }
-    from pygeoops_spark.join.geo_knn import geo_bbox_join
+    from pygeoops_spark.join.bbox import geo_bbox_join
 
     out = geo_bbox_join(_boxes(spark, A), _boxes(spark, B), level=3)
     got = [(r["bid"], r["bid_r"]) for r in out.collect()]
@@ -240,7 +239,7 @@ def test_geo_bbox_join_two_arc_overlap_single_row(spark):
     """Two wrapped intervals overlapping in TWO disjoint arcs must
     still produce exactly one pair row (the planar corner trick would
     be ambiguous here; the array_min dedup is not)."""
-    from pygeoops_spark.join.geo_knn import geo_bbox_join
+    from pygeoops_spark.join.bbox import geo_bbox_join
 
     A = _boxes(spark, [(0, 170.0, -10.0, -170.0, 10.0)])   # wraps: [170, 190]
     B = _boxes(spark, [(1, -175.0, -5.0, 175.0, 5.0)])     # [185 .. 535] ~ nearly full
@@ -250,7 +249,7 @@ def test_geo_bbox_join_two_arc_overlap_single_row(spark):
 
 
 def test_geo_cover_cells_bbox_wraps(spark):
-    from pygeoops_spark.join.geo_knn import geo_cover_cells_bbox
+    from pygeoops_spark.join.cells import geo_cover_cells_bbox
 
     df = spark.createDataFrame(
         [(175.0, 0.0, -175.0, 10.0), (-180.0, -90.0, 180.0, 90.0)],
@@ -271,7 +270,7 @@ def test_geo_cover_cells_bbox_near_global_wrap(spark):
     """Wrapped box with span in (360 - cell_width, 360): both endpoints
     land in the SAME column (pmod = 0) but the box covers every column
     — the r04 ADVICE under-cover case."""
-    from pygeoops_spark.join.geo_knn import geo_cover_cells_bbox
+    from pygeoops_spark.join.cells import geo_cover_cells_bbox
 
     # span 359.9: lonmin 170, wrapped lonmax 169.9 — same level-3 cell
     df = spark.createDataFrame(
@@ -294,7 +293,7 @@ def test_geo_pip_join_dateline_zone(spark):
     on BOTH sides of the seam that fall inside must join; nearby
     outside points must not."""
     from pygeoops_spark.geom import polygon as mk_poly, wkb_dumps
-    from pygeoops_spark.join.geo_knn import geo_pip_join
+    from pygeoops_spark.join.pip import geo_pip_join
 
     zone = mk_poly([(170.0, -10.0), (190.0, -10.0), (190.0, 10.0), (170.0, 10.0)])
     zones = spark.createDataFrame(
@@ -320,7 +319,7 @@ def test_geo_pip_join_plain_zone_triangle(spark):
     """Non-wrapped triangular zone: interior/exterior points resolve by
     the crossing-number kernel, not just the bbox."""
     from pygeoops_spark.geom import polygon as mk_poly, wkb_dumps
-    from pygeoops_spark.join.geo_knn import geo_pip_join
+    from pygeoops_spark.join.pip import geo_pip_join
 
     tri = mk_poly([(0.0, 0.0), (20.0, 0.0), (0.0, 20.0)])
     zones = spark.createDataFrame(

@@ -203,7 +203,7 @@ def test_geo_pip_join_broadcasts_no_cartesian(spark):
     shuffled), candidate join is a hash join on cell id — no cartesian
     product anywhere in the plan."""
     from pygeoops_spark.geom import polygon as mk_poly, wkb_dumps
-    from pygeoops_spark.join.geo_knn import geo_pip_join
+    from pygeoops_spark.join.pip import geo_pip_join
 
     zones = spark.createDataFrame(
         [

@@ -73,7 +73,8 @@ def test_geo_knn_brute_escape_matches_ring_path(spark):
 
 def test_cc_gate_matches_distributed_rounds(spark, monkeypatch):
     """The <=100k-edge single-task union-find must label exactly like
-    the distributed alternating-star path (gate forced off via env)."""
+    the distributed alternating-star path (gate forced off)."""
+    import pygeoops_spark.text.pipeline as pipeline
     from pygeoops_spark.text.pipeline import connected_components
 
     edges = [(i, i + 1) for i in range(100, 140)]          # 41-node chain
@@ -85,7 +86,7 @@ def test_cc_gate_matches_distributed_rounds(spark, monkeypatch):
     fast = _rows(connected_components(pairs, stats=fast_stats))
     assert fast_stats["rounds"] == 0  # gate path taken
 
-    monkeypatch.setenv("PYGEOOPS_CC_LOCAL_MAX_EDGES", "0")
+    monkeypatch.setattr(pipeline, "CC_LOCAL_MAX_EDGES", 0)
     dist_stats: dict = {}
     dist = _rows(connected_components(pairs, stats=dist_stats))
     assert dist_stats["rounds"] >= 1  # distributed path taken
@@ -127,6 +128,23 @@ def test_simhash_arrow_kernel_matches_legacy_sql_tree(spark):
     got = _rows(d.select("doc_id", simhash_sig_expr(64).alias("s")))
     want = _rows(d.select("doc_id", legacy_sig(64).alias("s")))
     assert got == want
+
+
+def test_simhash_arrow_kernel_null_row(spark):
+    """A null word-hash array gets a null signature; the other rows of
+    the same Arrow batch keep theirs."""
+    from pygeoops_spark.text.dedup import simhash_sig_expr, word_hash_array
+
+    docs = spark.createDataFrame(
+        [(0, "a b c"), (1, None), (2, "x y")], "doc_id long, text string"
+    ).coalesce(1)
+    d = docs.select("doc_id", word_hash_array("text").alias("_hs")).withColumn(
+        "_n", F.size("_hs")
+    )
+    got = dict(_rows(d.select("doc_id", simhash_sig_expr(64).alias("s"))))
+    assert got[1] is None
+    alone = dict(_rows(d.where("doc_id != 1").select("doc_id", simhash_sig_expr(64))))
+    assert got[0] == alone[0] and got[2] == alone[2]
 
 
 def test_positional_filter_keeps_every_threshold_pair(spark):

@@ -185,12 +185,11 @@ def test_pages_corpus_deterministic_and_text_invariant(spark):
 def test_pip_join_salted_matches_unsalted(spark):
     """Salted skew-mitigation join must give identical pairs on the
     hotspot-skewed pages corpus."""
-    from pygeoops_spark.join.pip import pip_join_rects_salted
 
     pages = synth_pages(spark, 3000)
     zones = synth_zones(spark)
     plain = pip_join_rects(pages, zones, level=5).select("url", "zone_id")
-    salted = pip_join_rects_salted(pages, zones, level=5, n_salt=8, salt_key="url").select(
+    salted = pip_join_rects(pages, zones, level=5, n_salt=8, salt_key="url").select(
         "url", "zone_id"
     )
     assert plain.exceptAll(salted).count() == 0
@@ -201,7 +200,6 @@ def test_pip_join_polygons_salted_matches_unsalted(spark):
     """Salted polygon PIP (shuffle plan, kernel post-shuffle) must give
     identical pairs to the broadcast unsalted plan."""
     from pygeoops_spark.geom import polygon as mk_poly, wkb_dumps
-    from pygeoops_spark.join.pip import pip_join_polygons_salted
 
     zones_pd = synth_zones(spark).toPandas()
     zones_pd["zone_wkb"] = [
@@ -215,7 +213,7 @@ def test_pip_join_polygons_salted_matches_unsalted(spark):
     zones = spark.createDataFrame(zones_pd)
     pages = synth_pages(spark, 3000)
     plain = pip_join_polygons(pages, zones, level=5).select("url", "zone_id")
-    salted = pip_join_polygons_salted(
+    salted = pip_join_polygons(
         pages, zones, level=5, n_salt=8, salt_key="url", broadcast_zones=False
     ).select("url", "zone_id")
     assert plain.exceptAll(salted).count() == 0
@@ -234,7 +232,7 @@ def test_geo_pip_join_ship_modes_agree(spark):
     """geo_pip_join prepared-broadcast vs wkb-column paths, incl. a
     date-line zone (unwrapped coords)."""
     from pygeoops_spark.geom import polygon as mk_poly, wkb_dumps
-    from pygeoops_spark.join.geo_knn import geo_pip_join
+    from pygeoops_spark.join.pip import geo_pip_join
 
     rows = []
     for jz in range(9):

@@ -272,7 +272,7 @@ def test_streaming_geo_cell_assignment(spark, tmp_path):
     assign_stream_to_grid)."""
     import pandas as pd
 
-    from pygeoops_spark.join.geo_knn import geo_cell_id
+    from pygeoops_spark.join.cells import geo_cell_id
 
     src = tmp_path / "geo_src"
     src.mkdir()
@@ -328,3 +328,32 @@ def test_streaming_geofence_matches_batch_pip(spark, tmp_path):
     got = {(r[0], r[1]) for r in spark.table("geofence_t").collect()}
     assert got == expected
     assert len(got) > 0
+
+
+def test_sessionize_stream_query_restores_session_on_failure(spark, sf_dir, monkeypatch):
+    """The driver query lowers spark.sql.shuffle.partitions and makes a
+    scratch source dir before it starts the stream; a failure inside
+    the operator must leave neither behind."""
+    import glob
+    import os
+
+    import pytest
+
+    import __spark_entry__ as entry
+    import pygeoops_spark.streaming.sessions as sessions
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("operator failed")
+
+    monkeypatch.setattr(sessions, "sessionize_stream", boom)
+    pattern = os.path.join(tempfile.gettempdir(), "sess_stream_src_*")
+    dirs_before = set(glob.glob(pattern))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        with pytest.raises(RuntimeError, match="operator failed"):
+            entry._q_sessionize_stream(spark, sf_dir)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        assert set(glob.glob(pattern)) == dirs_before
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
