@@ -20,7 +20,7 @@ from collections.abc import Callable
 # ensure the package resolves regardless of the driver's cwd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import pandas as pd  # noqa: F401,E402 — pandas_udf type hints resolve here
+import pandas as pd  # noqa: E402
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -124,12 +124,11 @@ def _q_grid_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell), split 3-way along y; the three pieces' bounds and areas are
     exact dyadic closed forms the oracle recomputes (full-width slab
     2.5, L-piece 1.875, left-column slab 1.25)."""
-    from pyspark.sql.types import ArrayType, BinaryType, DoubleType
-
     from pygeoops_spark.geom import polygon as mk_poly
     from pygeoops_spark.geom.kernels import polygon_area
-    from pygeoops_spark.geom.wkb import bounds as g_bounds, wkb_dumps, wkb_loads
+    from pygeoops_spark.geom.wkb import bounds as g_bounds
     from pygeoops_spark.operators.grid import create_grid, split_tiles
+    from pygeoops_spark.udf import row_udf
 
     base = create_grid(spark, (40.0, 40.0, 45.0, 46.0), 2, 2)
     v1 = split_tiles(base, 12).select(
@@ -144,30 +143,14 @@ def _q_grid_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("area"),
     )
 
-    @F.pandas_udf(BinaryType())
-    def l_wkb(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        out = []
-        for x0, y0, x1, y1 in zip(xmin, ymin, xmax, ymax):
-            xm, ym = x0 + (x1 - x0) / 2, y0 + (y1 - y0) / 2
-            out.append(
-                wkb_dumps(
-                    mk_poly([(x0, y0), (x1, y0), (x1, ym), (xm, ym), (xm, y1), (x0, y1)])
-                )
-            )
-        return pd.Series(out)
+    def l_shape(x0, y0, x1, y1):
+        xm, ym = x0 + (x1 - x0) / 2, y0 + (y1 - y0) / 2
+        return mk_poly([(x0, y0), (x1, y0), (x1, ym), (xm, ym), (xm, y1), (x0, y1)])
 
+    l_wkb = row_udf(l_shape, "binary")
     ltiles = base.select("tile_id", l_wkb("xmin", "ymin", "xmax", "ymax").alias("wkb"))
     pieces = split_tiles(ltiles, 12, wkb_col="wkb")
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def piece_stats(wkbs: pd.Series) -> pd.Series:
-        out = []
-        for b in wkbs:
-            g = wkb_loads(bytes(b))
-            bx0, by0, bx1, by1 = g_bounds(g)
-            out.append([bx0, by0, bx1, by1, polygon_area(g)])
-        return pd.Series(out)
-
+    piece_stats = row_udf(lambda g: [*g_bounds(g), polygon_area(g)], "array<double>")
     v2 = pieces.withColumn("_s", piece_stats("wkb")).select(
         F.lit(2).alias("variant"),
         "tile_id",
@@ -576,23 +559,14 @@ def _q_simplify_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     26 + {50,75,100} = 29 kept; a huge tolerance with preserve_topology
     returns the original ring (101), without it the degenerate result
     is dropped (NULL)."""
-    from pygeoops_spark.geom import linestring as mk_line, wkb_dumps
+    from pygeoops_spark.geom import linestring as mk_line
     from pygeoops_spark.operators.simplify import num_coords_col, simplify_col
-    from pyspark.sql.types import BinaryType
+    from pygeoops_spark.udf import row_udf
 
     zones = _zones_wkb_df(spark).select(
         "zone_id", "xmin", "ymin", "xmax", "zone_wkb_dense"
     )
-
-    @F.pandas_udf(BinaryType())
-    def bottom_edge(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                wkb_dumps(mk_line([(a, b), (c, b)]))
-                for a, b, c in zip(xmin, ymin, xmax)
-            ]
-        )
-
+    bottom_edge = row_udf(lambda a, b, c: mk_line([(a, b), (c, b)]), "binary")
     zones = zones.withColumn("_keep", bottom_edge("xmin", "ymin", "xmax"))
     kept = simplify_col("zone_wkb_dense", 0.1, "rdp", keep_points_on_wkb=F.col("_keep"))
     preserved = simplify_col("zone_wkb_dense", 1e9, "rdp", preserve_topology=True)
@@ -619,64 +593,49 @@ def _q_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — area = w*h - 20*h - 600 (the 1e-9 sliver is ~1.5e-8,
     far below the 6-decimal rounding), 1 ring.
     """
-    from pygeoops_spark.geom import polygon as mk_poly, wkb_dumps
+    from pygeoops_spark.geom import polygon as mk_poly
     from pygeoops_spark.geom.difference import difference_all
-    from pygeoops_spark.geom.wkb import wkb_loads
     from pygeoops_spark.corpus.pages import synth_zones
-    from pyspark.sql.types import BinaryType
+    from pygeoops_spark.operators.difference import area_col, num_rings_col
+    from pygeoops_spark.udf import row_udf
+
+    def rect(x0, y0, x1, y1):
+        return mk_poly([(x0, y0), (x1, y0), (x1, y1), (x0, y1)])
 
     zones = synth_zones(spark)
 
-    @F.pandas_udf(BinaryType())
-    def diff_ud(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        out = []
-        for x0, y0, x1, y1 in zip(xmin, ymin, xmax, ymax):
-            zone = mk_poly([(x0, y0), (x1, y0), (x1, y1), (x0, y1)])
-            subs = [
-                mk_poly([(x0 + 10, y0 + 10), (x0 + 30, y0 + 10), (x0 + 30, y0 + 30), (x0 + 10, y0 + 30)]),
-                mk_poly([(x1 - 30, y1 - 30), (x1 - 10, y1 - 30), (x1 - 10, y1 - 10), (x1 - 30, y1 - 10)]),
-            ]
-            r = difference_all(zone, subs)
-            out.append(wkb_dumps(r) if r is not None else None)
-        return pd.Series(out)
-
-    @F.pandas_udf(BinaryType())
-    def diff_shared_ud(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        out = []
-        for x0, y0, x1, y1 in zip(xmin, ymin, xmax, ymax):
-            zone = mk_poly([(x0, y0), (x1, y0), (x1, y1), (x0, y1)])
-            subs = [
-                # strip sharing the zone's full left edge + both corners
-                mk_poly([(x0, y0), (x0 + 20, y0), (x0 + 20, y1), (x0, y1)]),
-                # triangle sharing a bottom-edge segment; apex 1e-9
-                # INSIDE the right edge (near-coincident vertex-on-edge)
-                mk_poly([(x1 - 40, y0), (x1, y0), (x1 - 1e-9, y0 + 30)]),
-            ]
-            r = difference_all(zone, subs)
-            out.append(wkb_dumps(r) if r is not None else None)
-        return pd.Series(out)
-
-    from pygeoops_spark.operators.difference import area_col, num_rings_col
-
-    v1 = (
-        zones.withColumn("_res", diff_ud("xmin", "ymin", "xmax", "ymax"))
-        .select(
+    def variant(v, subtrahends):
+        diff = row_udf(
+            lambda x0, y0, x1, y1: difference_all(
+                rect(x0, y0, x1, y1), subtrahends(x0, y0, x1, y1)
+            ),
+            "binary",
+        )
+        return zones.withColumn("_res", diff("xmin", "ymin", "xmax", "ymax")).select(
             "zone_id",
-            F.lit(1).alias("variant"),
+            F.lit(v).alias("variant"),
             F.round(area_col("_res"), 6).alias("area"),
             num_rings_col("_res").alias("n_rings"),
         )
+
+    inner = variant(
+        1,
+        lambda x0, y0, x1, y1: [
+            rect(x0 + 10, y0 + 10, x0 + 30, y0 + 30),
+            rect(x1 - 30, y1 - 30, x1 - 10, y1 - 10),
+        ],
     )
-    v2 = (
-        zones.withColumn("_res", diff_shared_ud("xmin", "ymin", "xmax", "ymax"))
-        .select(
-            "zone_id",
-            F.lit(2).alias("variant"),
-            F.round(area_col("_res"), 6).alias("area"),
-            num_rings_col("_res").alias("n_rings"),
-        )
+    shared = variant(
+        2,
+        lambda x0, y0, x1, y1: [
+            # strip sharing the zone's full left edge + both corners
+            rect(x0, y0, x0 + 20, y1),
+            # triangle sharing a bottom-edge segment; apex 1e-9
+            # INSIDE the right edge (near-coincident vertex-on-edge)
+            mk_poly([(x1 - 40, y0), (x1, y0), (x1 - 1e-9, y0 + 30)]),
+        ],
     )
-    return v1.unionByName(v2)
+    return inner.unionByName(shared)
 
 
 def _q_subdivide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -791,21 +750,20 @@ def _q_simplify_topo(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """collect aggregation: order-points per 8x8 tile -> multipoint.
     Oracle: n_parts = count, type 4 (multipoint) when >1 else 1."""
-    from pygeoops_spark.corpus.pages import order_points
+    from pygeoops_spark.corpus.pages import order_points, with_point_wkb
+    from pygeoops_spark.geom import polygon as mk_poly
+    from pygeoops_spark.geom.general import collection_extract
+    from pygeoops_spark.geom.kernels import polygon_area
+    from pygeoops_spark.geom.validity import make_valid
+    from pygeoops_spark.geom.wkb import collection, get_parts, linestring, point
     from pygeoops_spark.operators.collection import collect_agg
     from pygeoops_spark.operators.grid import assign_to_grid
+    from pygeoops_spark.udf import row_udf
 
     pts = assign_to_grid(
         order_points(spark, sf_dir), "x", "y", (0.0, 0.0, 1000.0, 1000.0), 8, 8
     )
-
-    @F.pandas_udf("binary")
-    def point_wkb(x: pd.Series, y: pd.Series) -> pd.Series:
-        from pygeoops_spark.geom import point as mk_point, wkb_dumps
-
-        return pd.Series([wkb_dumps(mk_point(a, b)) for a, b in zip(x, y)])
-
-    pts = pts.withColumn("wkb", point_wkb("x", "y"))
+    pts = with_point_wkb(pts, out="wkb")
     v1 = collect_agg(pts, ["tile_id"], "wkb").select(
         F.lit(1).alias("variant"),
         "tile_id",
@@ -821,31 +779,13 @@ def _q_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arithmetic. Scaled-integer BIGINT area per the oracle discipline.
     from pygeoops_spark.corpus.pages import synth_zones
 
-    @F.pandas_udf("binary")
-    def bowtie_wkb(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        from pygeoops_spark.geom import polygon as mk_poly, wkb_dumps
+    def stats(g):
+        return [float(len(get_parts(g))), float(g.type_id), polygon_area(g)]
 
-        return pd.Series(
-            [
-                wkb_dumps(mk_poly([(x0, y0), (x1, y1), (x1, y0), (x0, y1)]))
-                for x0, y0, x1, y1 in zip(xmin, ymin, xmax, ymax)
-            ]
-        )
-
-    @F.pandas_udf("array<double>")
-    def repaired_stats(wkbs: pd.Series) -> pd.Series:
-        from pygeoops_spark.geom.kernels import polygon_area
-        from pygeoops_spark.geom.validity import make_valid
-        from pygeoops_spark.geom.wkb import get_parts, wkb_loads
-
-        out = []
-        for b in wkbs:
-            g = make_valid(wkb_loads(bytes(b)))
-            out.append(
-                [float(len(get_parts(g))), float(g.type_id), polygon_area(g)]
-            )
-        return pd.Series(out)
-
+    bowtie_wkb = row_udf(
+        lambda x0, y0, x1, y1: mk_poly([(x0, y0), (x1, y1), (x1, y0), (x0, y1)]), "binary"
+    )
+    repaired_stats = row_udf(lambda g: stats(make_valid(g)), "array<double>")
     zones = synth_zones(spark)
     v2 = (
         zones.withColumn("_b", bowtie_wkb("xmin", "ymin", "xmax", "ymax"))
@@ -863,33 +803,18 @@ def _q_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # GEOMETRYCOLLECTION per zone (center point, diagonal line, and the
     # bottom-left quadrant rectangle); extracting POLYGON keeps exactly
     # the quadrant -> 1 part, type 3, exact area w*h/4.
-    @F.pandas_udf("array<double>")
-    def extract_stats(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        from pygeoops_spark.geom import (
-            linestring as mk_line2,
-            point as mk_point2,
-            polygon as mk_poly2,
+    def extracted(x0, y0, x1, y1):
+        xm, ym = x0 + (x1 - x0) / 2, y0 + (y1 - y0) / 2
+        col = collection(
+            [
+                point(xm, ym),
+                linestring([(x0, y0), (x1, y1)]),
+                mk_poly([(x0, y0), (xm, y0), (xm, ym), (x0, ym)]),
+            ]
         )
-        from pygeoops_spark.geom.general import collection_extract
-        from pygeoops_spark.geom.kernels import polygon_area
-        from pygeoops_spark.geom.wkb import collection, get_parts
+        return stats(collection_extract(col, 3))
 
-        out = []
-        for x0, y0, x1, y1 in zip(xmin, ymin, xmax, ymax):
-            xm, ym = x0 + (x1 - x0) / 2, y0 + (y1 - y0) / 2
-            col = collection(
-                [
-                    mk_point2(xm, ym),
-                    mk_line2([(x0, y0), (x1, y1)]),
-                    mk_poly2([(x0, y0), (xm, y0), (xm, ym), (x0, ym)]),
-                ]
-            )
-            g = collection_extract(col, 3)
-            out.append(
-                [float(len(get_parts(g))), float(g.type_id), polygon_area(g)]
-            )
-        return pd.Series(out)
-
+    extract_stats = row_udf(extracted, "array<double>")
     v3 = (
         zones.withColumn("_s", extract_stats("xmin", "ymin", "xmax", "ymax"))
         .select(
@@ -906,21 +831,14 @@ def _q_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_explode_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """collect -> explode round-trip: exploding the per-tile multipoints
     yields exactly the original point count per tile."""
-    from pygeoops_spark.corpus.pages import order_points
+    from pygeoops_spark.corpus.pages import order_points, with_point_wkb
     from pygeoops_spark.operators.collection import collect_agg, parts_recursive_col
     from pygeoops_spark.operators.grid import assign_to_grid
 
     pts = assign_to_grid(
         order_points(spark, sf_dir), "x", "y", (0.0, 0.0, 1000.0, 1000.0), 8, 8
     )
-
-    @F.pandas_udf("binary")
-    def point_wkb(x: pd.Series, y: pd.Series) -> pd.Series:
-        from pygeoops_spark.geom import point as mk_point, wkb_dumps
-
-        return pd.Series([wkb_dumps(mk_point(a, b)) for a, b in zip(x, y)])
-
-    collected = collect_agg(pts.withColumn("wkb", point_wkb("x", "y")), ["tile_id"], "wkb")
+    collected = collect_agg(with_point_wkb(pts, out="wkb"), ["tile_id"], "wkb")
     exploded = collected.select(
         "tile_id", F.explode(parts_recursive_col("collected_wkb")).alias("part")
     )
@@ -948,26 +866,22 @@ def _q_extend_line(spark: SparkSession, sf_dir: str) -> DataFrame:
     """extend_line_to_geometry: the middle third of each zone's midline
     extends to the zone boundary -> endpoints (xmin, ymid), (xmax, ymid).
     Oracle: pure arithmetic."""
-    from pygeoops_spark.geom import linestring as mk_line, polygon as mk_poly, wkb_dumps
+    from pygeoops_spark.geom import linestring as mk_line, polygon as mk_poly
     from pygeoops_spark.geom.extend_line import extend_line_to_geometry
-    from pygeoops_spark.geom.wkb import wkb_loads
     from pygeoops_spark.corpus.pages import synth_zones
     from pygeoops_spark.operators.centerline import line_endpoints_col
-    from pyspark.sql.types import BinaryType
+    from pygeoops_spark.udf import row_udf
 
     zones = synth_zones(spark)
 
-    @F.pandas_udf(BinaryType())
-    def ext_ud(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        out = []
-        for x0, y0, x1, y1 in zip(xmin, ymin, xmax, ymax):
-            ymid = (y0 + y1) / 2
-            w = x1 - x0
-            line = mk_line([(x0 + w / 4, ymid), (x0 + w / 2, ymid)])
-            rect = mk_poly([(x0, y0), (x1, y0), (x1, y1), (x0, y1)])
-            out.append(wkb_dumps(extend_line_to_geometry(line, rect)))
-        return pd.Series(out)
+    def extended(x0, y0, x1, y1):
+        ymid = (y0 + y1) / 2
+        w = x1 - x0
+        line = mk_line([(x0 + w / 4, ymid), (x0 + w / 2, ymid)])
+        rect = mk_poly([(x0, y0), (x1, y0), (x1, y1), (x0, y1)])
+        return extend_line_to_geometry(line, rect)
 
+    ext_ud = row_udf(extended, "binary")
     res = zones.withColumn("_ext", ext_ud("xmin", "ymin", "xmax", "ymax"))
     ep = line_endpoints_col("_ext")
     v1 = res.select(
@@ -986,15 +900,11 @@ def _q_extend_line(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arithmetic DuckDB mirrors op-for-op.
     from pygeoops_spark.geom.extend_line import extend_line_by_distance
 
-    @F.pandas_udf(BinaryType())
-    def ext_d_ud(xmin: pd.Series, ymin: pd.Series, ymax: pd.Series) -> pd.Series:
-        out = []
-        for x0, y0, y1 in zip(xmin, ymin, ymax):
-            ymid = (y0 + y1) / 2
-            line = mk_line([(x0 + 3, ymid), (x0 + 6, ymid + 4)])
-            out.append(wkb_dumps(extend_line_by_distance(line, 2.0, 3.0)))
-        return pd.Series(out)
+    def extended_by_distance(x0, y0, y1):
+        ymid = (y0 + y1) / 2
+        return extend_line_by_distance(mk_line([(x0 + 3, ymid), (x0 + 6, ymid + 4)]), 2.0, 3.0)
 
+    ext_d_ud = row_udf(extended_by_distance, "binary")
     res2 = zones.withColumn("_ext", ext_d_ud("xmin", "ymin", "ymax"))
     ep2 = line_endpoints_col("_ext")
     v2 = res2.select(
@@ -1011,11 +921,11 @@ def _q_extend_line(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_remove_inner_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """remove_inner_rings thresholds over 2-hole zone polygons (holes
     20x20=400 each): min_area 500 drops both, 100 keeps both."""
-    from pygeoops_spark.geom import polygon as mk_poly, wkb_dumps
+    from pygeoops_spark.geom import polygon as mk_poly
     from pygeoops_spark.geom.general import remove_inner_rings
     from pygeoops_spark.corpus.pages import synth_zones
     from pygeoops_spark.operators.difference import area_col
-    from pyspark.sql.types import BinaryType
+    from pygeoops_spark.udf import row_udf
 
     zones = synth_zones(spark)
 
@@ -1028,24 +938,8 @@ def _q_remove_inner_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
 
-    @F.pandas_udf(BinaryType())
-    def drop_all(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                wkb_dumps(remove_inner_rings(_mk(a, b, c, d), 500))
-                for a, b, c, d in zip(xmin, ymin, xmax, ymax)
-            ]
-        )
-
-    @F.pandas_udf(BinaryType())
-    def keep_all(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                wkb_dumps(remove_inner_rings(_mk(a, b, c, d), 100))
-                for a, b, c, d in zip(xmin, ymin, xmax, ymax)
-            ]
-        )
-
+    drop_all = row_udf(lambda *bbox: remove_inner_rings(_mk(*bbox), 500), "binary")
+    keep_all = row_udf(lambda *bbox: remove_inner_rings(_mk(*bbox), 100), "binary")
     res = zones.withColumn("_d", drop_all("xmin", "ymin", "xmax", "ymax")).withColumn(
         "_k", keep_all("xmin", "ymin", "xmax", "ymax")
     )
@@ -1710,12 +1604,12 @@ def _q_geodesic_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output scaled to 1e13 m^2 so round(.., 9) checks ~1e-10 relative
     — far below the quadrature error, far above 1-ulp libm drift
     between numpy and DuckDB."""
+    import numpy as np
     import pandas as pdl
 
     from pygeoops_spark.geom import polygon as mk_poly, wkb_dumps
     from pygeoops_spark.geom.geodesic import ring_area_ellipsoidal
-    from pygeoops_spark.geom.wkb import wkb_loads
-    from pyspark.sql.types import DoubleType
+    from pygeoops_spark.udf import row_udf
 
     rows = []
     for i in range(64):
@@ -1744,20 +1638,13 @@ def _q_geodesic_area(spark: SparkSession, sf_dir: str) -> DataFrame:
         pdl.DataFrame(rows, columns=["variant", "tri_id", "wkb"])
     )
 
-    @F.pandas_udf(DoubleType())
-    def area_e13(variants: pd.Series, wkbs: pd.Series) -> pd.Series:
-        import numpy as np
+    def tri_area_e13(variant, g):
+        ring = np.asarray(g.data[0])
+        if int(variant) == 2:
+            return abs(ring_area_ellipsoidal(ring, f=0.0)) / 1e13
+        return ring_area_ellipsoidal(ring) / 1e13
 
-        out = []
-        for v, b in zip(variants, wkbs):
-            g = wkb_loads(bytes(b))
-            ring = np.asarray(g.data[0])
-            if int(v) == 2:
-                out.append(abs(ring_area_ellipsoidal(ring, f=0.0)) / 1e13)
-            else:
-                out.append(ring_area_ellipsoidal(ring) / 1e13)
-        return pd.Series(out)
-
+    area_e13 = row_udf(tri_area_e13, "double")
     return df.select(
         "variant",
         "tri_id",

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pygeoops_spark.join.cells import PLANAR, CellScheme, auto_level_knn
+from pygeoops_spark.session import checkpoint_and_release
 
 Dist = Callable[[Column, Column, Column, Column], Column]
 
@@ -53,10 +54,9 @@ def _knn(
 
     Cache lifecycle (guarantee_exact): every radius-doubling level
     persists its probes x k `ranked` frame for the exactness check; the
-    TOP-level call eagerly localCheckpoints the final union and then
-    unpersists every level's cache, so repeated exact kNN joins in a
-    long session no longer accumulate storage (the checkpoint itself is
-    GC-cleaned with the returned DataFrame).
+    TOP-level call hands the final union and every level's cache to
+    session.py:checkpoint_and_release, so repeated exact kNN joins in a
+    long session no longer accumulate storage.
     """
     ta = tuple("_t" + ax for ax in scheme.axes)
     tsel = [F.col(target_key).alias("_tkey"), F.col(t[0]).alias(ta[0]), F.col(t[1]).alias(ta[1])]
@@ -89,11 +89,7 @@ def _knn(
             return _rank(cand, probes, probe_key, target_key, k, p, ta, dist, dist_col)
 
     def _finish(df: DataFrame) -> DataFrame:
-        if top_level and _caches:
-            df = df.localCheckpoint(eager=True)
-            for c in _caches:
-                c.unpersist()
-        return df
+        return checkpoint_and_release(df, _caches) if top_level else df
 
     tc = targets.select(*tsel, scheme.cell_id(t[0], t[1], level).alias("_cell"))
     if broadcast_targets:

@@ -1,4 +1,5 @@
-"""centerline + buffer_by_m as Spark operators (Arrow-batched UDFs).
+"""centerline + buffer_by_m as Spark operators (per-row WKB columns,
+pygeoops_spark/udf.py:row_udf).
 
 The kernel runs per geometry inside the executor's Python worker; at
 100 TB the operator is a narrow map over the scan (no shuffle), so
@@ -8,15 +9,13 @@ Voronoi cost dominates and is embarrassingly parallel.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, DoubleType, StructField, StructType
 
 from pygeoops_spark.geom.buffer_by_m import buffer_by_m as _buffer_kernel
 from pygeoops_spark.geom.centerline import centerline as _centerline_kernel
-from pygeoops_spark.geom.wkb import wkb_dumps, wkb_loads
+from pygeoops_spark.geom.wkb import get_coordinates
+from pygeoops_spark.udf import row_udf
 
 
 def centerline_col(
@@ -26,26 +25,16 @@ def centerline_col(
     simplifytolerance: float = -0.25,
     extend: bool = False,
 ) -> Column:
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-
-    @F.pandas_udf(BinaryType())
-    def _ud(wkbs: pd.Series) -> pd.Series:
-        out = []
-        for b in wkbs:
-            if b is None:
-                out.append(None)
-                continue
-            r = _centerline_kernel(
-                wkb_loads(bytes(b)),
-                densify_distance=densify_distance,
-                min_branch_length=min_branch_length,
-                simplifytolerance=simplifytolerance,
-                extend=extend,
-            )
-            out.append(wkb_dumps(r) if r is not None else None)
-        return pd.Series(out)
-
-    return _ud(wkb_col)
+    return row_udf(
+        lambda g: _centerline_kernel(
+            g,
+            densify_distance=densify_distance,
+            min_branch_length=min_branch_length,
+            simplifytolerance=simplifytolerance,
+            extend=extend,
+        ),
+        BinaryType(),
+    )(wkb_col)
 
 
 ENDPOINTS_SCHEMA = StructType(
@@ -58,43 +47,17 @@ ENDPOINTS_SCHEMA = StructType(
 )
 
 
+def _endpoints(g):
+    c = get_coordinates(g)
+    return None if len(c) == 0 else (c[0, 0], c[0, 1], c[-1, 0], c[-1, 1])
+
+
 def line_endpoints_col(wkb_col: Column | str) -> Column:
     """First/last coordinate of a linestring result (for oracle-able
-    numeric checks on centerlines)."""
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-
-    @F.pandas_udf(ENDPOINTS_SCHEMA)
-    def _ud(wkbs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in wkbs:
-            if b is None:
-                rows.append((None, None, None, None))
-                continue
-            g = wkb_loads(bytes(b))
-            from pygeoops_spark.geom.wkb import get_coordinates
-
-            c = get_coordinates(g)
-            if len(c) == 0:
-                rows.append((None, None, None, None))
-            else:
-                rows.append((c[0, 0], c[0, 1], c[-1, 0], c[-1, 1]))
-        return pd.DataFrame(rows, columns=["x_start", "y_start", "x_end", "y_end"])
-
-    return _ud(wkb_col)
+    numeric checks on centerlines); all-null for a null or empty
+    geometry."""
+    return row_udf(_endpoints, ENDPOINTS_SCHEMA)(wkb_col)
 
 
 def buffer_by_m_col(wkb_col: Column | str, quad_segs: int = 8) -> Column:
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-
-    @F.pandas_udf(BinaryType())
-    def _ud(wkbs: pd.Series) -> pd.Series:
-        out = []
-        for b in wkbs:
-            if b is None:
-                out.append(None)
-                continue
-            r = _buffer_kernel(wkb_loads(bytes(b)), quad_segs=quad_segs)
-            out.append(wkb_dumps(r) if r is not None else None)
-        return pd.Series(out)
-
-    return _ud(wkb_col)
+    return row_udf(lambda g: _buffer_kernel(g, quad_segs=quad_segs), BinaryType())(wkb_col)

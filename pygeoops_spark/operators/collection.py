@@ -9,7 +9,7 @@ two-phase variant: per-partition collect then re-collect).
 
 The scalar ops (collection_extract / get_primitivetype_id /
 get_parts_recursive explode / remove_inner_rings / extend_line) are
-Arrow-batched pandas UDFs over WKB.
+per-row WKB columns built by pygeoops_spark/udf.py:row_udf.
 """
 
 from __future__ import annotations
@@ -19,7 +19,6 @@ from typing import Sequence
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, IntegerType, StructField, StructType
 
 from pygeoops_spark.geom.extend_line import (
@@ -34,6 +33,7 @@ from pygeoops_spark.geom.general import (
 )
 from pygeoops_spark.geom.kernels import get_primitivetype_id as _pid_kernel
 from pygeoops_spark.geom.wkb import wkb_dumps, wkb_loads
+from pygeoops_spark.udf import row_udf
 
 
 def collect_agg(
@@ -82,21 +82,6 @@ def collect_agg(
     )
 
 
-def _scalar_wkb_udf(fn):
-    @F.pandas_udf(BinaryType())
-    def _ud(wkbs: pd.Series) -> pd.Series:
-        out = []
-        for b in wkbs:
-            if b is None:
-                out.append(None)
-                continue
-            g = fn(wkb_loads(bytes(b)))
-            out.append(wkb_dumps(g) if g is not None else None)
-        return pd.Series(out)
-
-    return _ud
-
-
 def collection_extract_col(
     wkb_col: Column | str, primitivetype_id: "int | Column | str"
 ) -> Column:
@@ -106,63 +91,29 @@ def collection_extract_col(
     Column/column name of per-row type codes — the Spark mapping of the
     reference's zipped arraylike form (geometry array + primitivetype
     array 1:1, /root/reference/pygeoops/_general.py:137-164)."""
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
     if isinstance(primitivetype_id, int):
-        return _scalar_wkb_udf(lambda g: _extract_kernel(g, primitivetype_id))(wkb_col)
+        return row_udf(lambda g: _extract_kernel(g, primitivetype_id), BinaryType())(wkb_col)
 
-    tcol = (
-        F.col(primitivetype_id) if isinstance(primitivetype_id, str) else primitivetype_id
-    )
+    def extract(g, t):
+        if t is None or pd.isna(t):
+            raise ValueError("Invalid value for primitivetype: None")
+        return _extract_kernel(g, int(t))
 
-    @F.pandas_udf(BinaryType())
-    def _ud(wkbs: pd.Series, types: pd.Series) -> pd.Series:
-        out = []
-        for b, t in zip(wkbs, types):
-            if b is None:
-                out.append(None)
-                continue
-            if t is None or pd.isna(t):
-                raise ValueError("Invalid value for primitivetype: None")
-            g = _extract_kernel(wkb_loads(bytes(b)), int(t))
-            out.append(wkb_dumps(g) if g is not None else None)
-        return pd.Series(out, dtype=object)
-
-    return _ud(wkb_col, tcol)
+    return row_udf(extract, BinaryType())(wkb_col, primitivetype_id)
 
 
 def primitivetype_id_col(wkb_col: Column | str) -> Column:
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-
-    @F.pandas_udf(IntegerType())
-    def _ud(wkbs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [0 if b is None else _pid_kernel(wkb_loads(bytes(b))) for b in wkbs]
-        )
-
-    return _ud(wkb_col)
+    return row_udf(_pid_kernel, IntegerType(), null=0)(wkb_col)
 
 
 def parts_recursive_col(wkb_col: Column | str) -> Column:
     """Array of simple-geometry WKBs (explode downstream = the
     reference's deprecated `explode`)."""
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-
-    @F.pandas_udf(ArrayType(BinaryType()))
-    def _ud(wkbs: pd.Series) -> pd.Series:
-        out = []
-        for b in wkbs:
-            if b is None:
-                out.append(None)
-                continue
-            out.append([wkb_dumps(p) for p in _parts_kernel(wkb_loads(bytes(b)))])
-        return pd.Series(out)
-
-    return _ud(wkb_col)
+    return row_udf(_parts_kernel, ArrayType(BinaryType()))(wkb_col)
 
 
 def remove_inner_rings_col(wkb_col: Column | str, min_area_to_keep: float) -> Column:
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-    return _scalar_wkb_udf(lambda g: _rings_kernel(g, min_area_to_keep))(wkb_col)
+    return row_udf(lambda g: _rings_kernel(g, min_area_to_keep), BinaryType())(wkb_col)
 
 
 def make_valid_col(
@@ -176,38 +127,24 @@ def make_valid_col(
     collections (geom/validity.py)."""
     from pygeoops_spark.geom.validity import make_valid as _mv_kernel
 
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-    return _scalar_wkb_udf(
+    return row_udf(
         lambda g: _mv_kernel(
             g, keep_collapsed=keep_collapsed, only_if_invalid=only_if_invalid
-        )
+        ),
+        BinaryType(),
     )(wkb_col)
 
 
 def extend_line_by_distance_col(
     wkb_col: Column | str, start_distance: float, end_distance: float
 ) -> Column:
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-    return _scalar_wkb_udf(
-        lambda g: _extend_dist_kernel(g, start_distance, end_distance)
+    return row_udf(
+        lambda g: _extend_dist_kernel(g, start_distance, end_distance), BinaryType()
     )(wkb_col)
 
 
 def extend_line_to_geometry_col(
     wkb_col: Column | str, extend_to_wkb: bytes
 ) -> Column:
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-    target_bytes = extend_to_wkb
-
-    @F.pandas_udf(BinaryType())
-    def _ud(wkbs: pd.Series) -> pd.Series:
-        target = wkb_loads(target_bytes)  # decode once per batch
-        out = []
-        for b in wkbs:
-            if b is None:
-                out.append(None)
-                continue
-            out.append(wkb_dumps(_extend_geom_kernel(wkb_loads(bytes(b)), target)))
-        return pd.Series(out)
-
-    return _ud(wkb_col)
+    target = wkb_loads(extend_to_wkb)  # broadcast constant: decoded once, on the driver
+    return row_udf(lambda g: _extend_geom_kernel(g, target), BinaryType())(wkb_col)

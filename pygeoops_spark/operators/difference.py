@@ -2,9 +2,10 @@
 
 Scale design (reference semantics from _difference.py re-expressed on
 Spark primitives):
-  * the subtrahend set is broadcast once per executor (sc.broadcast of
-    WKB bytes) — the analog of the reference's prepared-geometry reuse;
-  * per-row scalar pandas UDFs run the numpy kernels over Arrow batches;
+  * the subtrahend set is decoded once on the driver and shipped with
+    the UDF — the analog of the reference's prepared-geometry reuse;
+  * per-row UDFs (pygeoops_spark/udf.py:row_udf) run the numpy kernels
+    over Arrow batches;
   * the tiled variant explodes a geometry into subdivision tiles
     (rows), repartitions on tile id (this IS the reference's
     ThreadPoolExecutor, but elastic), differences per tile, and unions
@@ -14,17 +15,16 @@ Spark primitives):
 
 from __future__ import annotations
 
-
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, DoubleType, IntegerType
 
 from pygeoops_spark.geom.difference import difference_all
 from pygeoops_spark.geom.general import subdivide as subdivide_kernel
+from pygeoops_spark.geom.kernels import polygon_area
 from pygeoops_spark.geom.overlay import dissolve_partition
-from pygeoops_spark.geom.wkb import wkb_dumps, wkb_loads
+from pygeoops_spark.geom.wkb import POLYGON, get_parts, wkb_loads
+from pygeoops_spark.udf import row_udf
 
 
 def difference_all_col(
@@ -33,76 +33,40 @@ def difference_all_col(
     keep_geom_type: bool | int = False,
 ) -> Column:
     """Subtract a broadcast set of polygons from each row's geometry."""
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-    subs_bytes = list(subtrahend_wkbs)
-
-    @F.pandas_udf(BinaryType())
-    def _ud(wkbs: pd.Series) -> pd.Series:
-        subs = [wkb_loads(b) for b in subs_bytes]  # decode once per batch
-        out = []
-        for b in wkbs:
-            if b is None:
-                out.append(None)
-                continue
-            r = difference_all(
-                wkb_loads(bytes(b)), subs, keep_geom_type=keep_geom_type, check_intersects=True
-            )
-            out.append(wkb_dumps(r) if r is not None else None)
-        return pd.Series(out)
-
-    return _ud(wkb_col)
+    subs = [wkb_loads(b) for b in subtrahend_wkbs]  # decoded once, on the driver
+    return row_udf(
+        lambda g: difference_all(g, subs, keep_geom_type=keep_geom_type, check_intersects=True),
+        BinaryType(),
+    )(wkb_col)
 
 
 def subdivide_col(wkb_col: Column | str, num_coords_max: int = 1000) -> Column:
     """Array of subdivision tiles (WKB) per row — explode downstream to
     fan out; this is how a huge geometry becomes partition-parallel."""
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-
-    @F.pandas_udf(ArrayType(BinaryType()))
-    def _ud(wkbs: pd.Series) -> pd.Series:
-        out = []
-        for b in wkbs:
-            if b is None:
-                out.append(None)
-                continue
-            parts = subdivide_kernel(wkb_loads(bytes(b)), num_coords_max)
-            out.append([wkb_dumps(p) for p in parts])
-        return pd.Series(out)
-
-    return _ud(wkb_col)
+    return row_udf(lambda g: subdivide_kernel(g, num_coords_max), ArrayType(BinaryType()))(wkb_col)
 
 
 def area_col(wkb_col: Column | str) -> Column:
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-
-    @F.pandas_udf(DoubleType())
-    def _ud(wkbs: pd.Series) -> pd.Series:
-        from pygeoops_spark.geom.kernels import polygon_area
-
-        return pd.Series(
-            [0.0 if b is None else polygon_area(wkb_loads(bytes(b))) for b in wkbs]
-        )
-
-    return _ud(wkb_col)
+    return row_udf(polygon_area, DoubleType(), null=0.0)(wkb_col)
 
 
 def num_rings_col(wkb_col: Column | str) -> Column:
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
+    return row_udf(
+        lambda g: sum(len(p.data) for p in get_parts(g) if p.type_id == POLYGON),
+        IntegerType(),
+        null=0,
+    )(wkb_col)
 
-    @F.pandas_udf(IntegerType())
-    def _ud(wkbs: pd.Series) -> pd.Series:
-        from pygeoops_spark.geom.wkb import POLYGON, get_parts
 
-        out = []
-        for b in wkbs:
-            if b is None:
-                out.append(0)
-                continue
-            g = wkb_loads(bytes(b))
-            out.append(sum(len(p.data) for p in get_parts(g) if p.type_id == POLYGON))
-        return pd.Series(out)
-
-    return _ud(wkb_col)
+def _union_tiles(tiles: list):
+    # subdivide tiles are interior-disjoint with axis-aligned shared
+    # cuts: signed-coverage dissolve is O(E log E) vs polygon_union's
+    # pairwise noding (and falls back to it if the partition property
+    # ever fails its area check)
+    geoms = [g for g in tiles if g is not None]
+    if len(geoms) < 2:
+        return geoms[0] if geoms else None
+    return dissolve_partition(geoms)
 
 
 def difference_all_tiled_distributed(
@@ -146,24 +110,10 @@ def difference_all_tiled_distributed(
         difference_all_col("_tile", subtrahend_wkbs, keep_geom_type).alias("_diff"),
     ).where(F.col("_diff").isNotNull())
 
-    # union via collect_list + scalar Arrow UDF: a plain aggregate plus
+    # union via collect_list + a scalar row UDF: a plain aggregate plus
     # a batched map beats per-group grouped-map machinery (measured
     # ~25% faster; the agg is map-side partial like any collect_list)
-    @F.pandas_udf(BinaryType())
-    def union_arr(arrs: pd.Series) -> pd.Series:
-        out = []
-        for lst in arrs:
-            geoms = [wkb_loads(bytes(b)) for b in lst if b is not None]
-            if not geoms:
-                out.append(None)
-                continue
-            # subdivide tiles are interior-disjoint with axis-aligned
-            # shared cuts: signed-coverage dissolve is O(E log E) vs
-            # polygon_union's pairwise noding (and falls back to it if
-            # the partition property ever fails its area check)
-            u = dissolve_partition(geoms) if len(geoms) > 1 else geoms[0]
-            out.append(wkb_dumps(u) if u else None)
-        return pd.Series(out, dtype=object)
+    union_arr = row_udf(_union_tiles, BinaryType())
 
     # explicit repartition(id) feeds the groupBy: hash partitioning on
     # id already satisfies the agg's clustering requirement, so Catalyst

@@ -46,12 +46,7 @@ def geodesic_distance_col(
         )
         return pd.Series(s12)
 
-    return _dist(
-        F.col(lon1) if isinstance(lon1, str) else lon1,
-        F.col(lat1) if isinstance(lat1, str) else lat1,
-        F.col(lon2) if isinstance(lon2, str) else lon2,
-        F.col(lat2) if isinstance(lat2, str) else lat2,
-    )
+    return _dist(lon1, lat1, lon2, lat2)
 
 
 def geodesic_azimuth_col(
@@ -77,12 +72,7 @@ def geodesic_azimuth_col(
         )
         return pd.Series(az)
 
-    return _az(
-        F.col(lon1) if isinstance(lon1, str) else lon1,
-        F.col(lat1) if isinstance(lat1, str) else lat1,
-        F.col(lon2) if isinstance(lon2, str) else lon2,
-        F.col(lat2) if isinstance(lat2, str) else lat2,
-    )
+    return _az(lon1, lat1, lon2, lat2)
 
 
 def geodesic_destination_cols(
@@ -110,9 +100,4 @@ def geodesic_destination_cols(
         )
         return pd.DataFrame({"lon2": lon2, "lat2": lat2})
 
-    return _dest(
-        F.col(lon1) if isinstance(lon1, str) else lon1,
-        F.col(lat1) if isinstance(lat1, str) else lat1,
-        F.col(azimuth_rad) if isinstance(azimuth_rad, str) else azimuth_rad,
-        F.col(distance_m) if isinstance(distance_m, str) else distance_m,
-    )
+    return _dest(lon1, lat1, azimuth_rad, distance_m)

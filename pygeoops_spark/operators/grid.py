@@ -10,15 +10,17 @@ behaviors).
 
 from __future__ import annotations
 
-from typing import Sequence
-
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType
+from pyspark.sql.types import ArrayType, BinaryType, DoubleType
 
-from pygeoops_spark.geom.grid import Bounds, grid_shape_squarish, split_tile_bboxes
+from pygeoops_spark.geom.grid import (
+    Bounds,
+    grid_shape_squarish,
+    split_tile_bboxes,
+    split_tile_geometry,
+)
+from pygeoops_spark.udf import row_udf
 
 
 def create_grid(
@@ -115,9 +117,6 @@ def assign_to_grid(
     return df.withColumn("tile_col", c).withColumn("tile_row", r).withColumn("tile_id", t)
 
 
-_split_children_udf_schema = ArrayType(ArrayType(DoubleType()))
-
-
 def split_tiles(
     tiles: DataFrame, nb_tiles_wanted: int, wkb_col: str | None = None
 ) -> DataFrame:
@@ -134,8 +133,8 @@ def split_tiles(
       split_tile_geometry — shapely.ops.split semantics).
 
     The per-tile split is a deterministic function of (tile, global
-    ratio); children are produced by a vectorized pandas UDF returning
-    an array that is exploded — rows fan out in place, no shuffle.
+    ratio); children are produced by a per-row UDF (udf.py:row_udf)
+    returning an array that is exploded — rows fan out in place, no shuffle.
     The single `count()` action mirrors the reference's len(input) and
     is metadata-scale (tiles, not data rows).
     """
@@ -145,36 +144,16 @@ def split_tiles(
     ratio = nb_tiles_wanted / nb_tiles
 
     if wkb_col is not None:
-        from pyspark.sql.types import ArrayType as _AT, BinaryType as _BT
-
-        from pygeoops_spark.geom.grid import split_tile_geometry
-        from pygeoops_spark.geom.wkb import wkb_dumps, wkb_loads
-
-        @F.pandas_udf(_AT(_BT()))
-        def children_wkb(wkbs: pd.Series) -> pd.Series:
-            out = []
-            for b in wkbs:
-                if b is None:
-                    out.append(None)
-                    continue
-                parts = split_tile_geometry(wkb_loads(bytes(b)), ratio)
-                out.append([wkb_dumps(p) for p in parts])
-            return pd.Series(out)
-
+        children_wkb = row_udf(lambda g: split_tile_geometry(g, ratio), ArrayType(BinaryType()))
         attrs = [c for c in tiles.columns if c != wkb_col]
         return tiles.withColumn("_child", F.explode(children_wkb(wkb_col))).select(
             *attrs, F.col("_child").alias(wkb_col)
         )
 
-    @F.pandas_udf(_split_children_udf_schema)
-    def children(
-        xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series
-    ) -> pd.Series:
-        out = []
-        for x0, y0, x1, y1 in zip(xmin, ymin, xmax, ymax):
-            out.append([list(c) for c in split_tile_bboxes(x0, y0, x1, y1, ratio)])
-        return pd.Series(out)
-
+    children = row_udf(
+        lambda x0, y0, x1, y1: [list(c) for c in split_tile_bboxes(x0, y0, x1, y1, ratio)],
+        ArrayType(ArrayType(DoubleType())),
+    )
     attrs = [c for c in tiles.columns if c not in ("xmin", "ymin", "xmax", "ymax")]
     exploded = tiles.withColumn(
         "_child", F.explode(children("xmin", "ymin", "xmax", "ymax"))
@@ -187,11 +166,3 @@ def split_tiles(
         F.col("_child")[3].alias("ymax"),
     )
 
-
-def subdivide_bboxes(num_coords: Column, bounds_cols: Sequence[Column], num_coords_max: int):
-    """Squarish tile count for subdividing a geometry by coord count —
-    reference subdivide parameterization (ceil(n/max)); the actual
-    clip runs in the difference kernel."""
-    import math  # noqa: F401
-
-    return F.ceil(num_coords / F.lit(num_coords_max))

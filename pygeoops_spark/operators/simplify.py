@@ -1,7 +1,7 @@
 """simplify as a Spark operator (lang / lang+ / rdp / vw).
 
-Scalar Arrow-batched pandas UDF over WKB; the geometry-level dispatch
-lives in geom/simplify_geom.py (reference semantics
+A per-row WKB column (pygeoops_spark/udf.py:row_udf); the
+geometry-level dispatch lives in geom/simplify_geom.py (reference semantics
 /root/reference/pygeoops/_simplify.py:29-219 incl. keep_points_on and
 preserve_topology). The cross-feature topology-preserving variant is
 operators/simplify_topo.py (a genuinely distributed pipeline).
@@ -9,14 +9,12 @@ operators/simplify_topo.py (a genuinely distributed pipeline).
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, IntegerType
 
 from pygeoops_spark.geom.simplify_geom import simplify_geometry
-from pygeoops_spark.geom.wkb import wkb_dumps, wkb_loads
+from pygeoops_spark.geom.wkb import get_coordinates, wkb_loads
+from pygeoops_spark.udf import row_udf
 
 
 def simplify(
@@ -99,69 +97,17 @@ def simplify_col(
     constant (bytes) shared by every row, or a per-row WKB Column
     (the SURVEY §2.1 'second WKB column' mapping of the reference's
     arraylike keep_points_on)."""
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
+
+    def kernel(g, kpo):
+        return simplify_geometry(g, tolerance, algorithm, lookahead, preserve_topology, kpo)
+
     if isinstance(keep_points_on_wkb, (Column, str)):
-        kcol = (
-            F.col(keep_points_on_wkb)
-            if isinstance(keep_points_on_wkb, str)
-            else keep_points_on_wkb
-        )
-
-        @F.pandas_udf(BinaryType())
-        def _ud_pairs(wkbs: pd.Series, keeps: pd.Series) -> pd.Series:
-            out = []
-            for b, kb in zip(wkbs, keeps):
-                if b is None:
-                    out.append(None)
-                    continue
-                kpo = wkb_loads(bytes(kb)) if kb is not None else None
-                g = simplify_geometry(
-                    wkb_loads(bytes(b)),
-                    tolerance,
-                    algorithm,
-                    lookahead,
-                    preserve_topology,
-                    kpo,
-                )
-                out.append(wkb_dumps(g) if g is not None else None)
-            return pd.Series(out, dtype=object)
-
-        return _ud_pairs(wkb_col, kcol)
-    kpo_bytes = keep_points_on_wkb
-
-    @F.pandas_udf(BinaryType())
-    def _ud(wkbs: pd.Series) -> pd.Series:
-        kpo = wkb_loads(kpo_bytes) if kpo_bytes is not None else None
-        out = []
-        for b in wkbs:
-            if b is None:
-                out.append(None)
-                continue
-            g = simplify_geometry(
-                wkb_loads(bytes(b)),
-                tolerance,
-                algorithm,
-                lookahead,
-                preserve_topology,
-                kpo,
-            )
-            out.append(wkb_dumps(g) if g is not None else None)
-        return pd.Series(out)
-
-    return _ud(wkb_col)
+        return row_udf(kernel, BinaryType())(wkb_col, keep_points_on_wkb)
+    kpo = None if keep_points_on_wkb is None else wkb_loads(keep_points_on_wkb)
+    return row_udf(lambda g: kernel(g, kpo), BinaryType())(wkb_col)
 
 
 def num_coords_col(wkb_col: Column | str) -> Column:
     """Coordinate count of each WKB geometry (diagnostics / subdivide
     parameterization)."""
-    from pygeoops_spark.geom.wkb import get_coordinates
-
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-
-    @F.pandas_udf(IntegerType())
-    def _ud(wkbs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [0 if b is None else len(get_coordinates(wkb_loads(bytes(b)))) for b in wkbs]
-        )
-
-    return _ud(wkb_col)
+    return row_udf(lambda g: len(get_coordinates(g)), IntegerType(), null=0)(wkb_col)

@@ -1,64 +1,38 @@
 """view_angles as a Spark operator.
 
-Scalar Arrow-batched pandas UDF over a WKB geometry column; returns
+A per-row WKB column (pygeoops_spark/udf.py:row_udf); returns
 struct<angle_start double, angle_end double> (reference semantics:
 /root/reference/pygeoops/_view_angles.py — see geom/view_angles.py).
 """
 
 from __future__ import annotations
 
-import math
-
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from pygeoops_spark.geom.view_angles import view_angles as _va_kernel
-from pygeoops_spark.geom.wkb import wkb_loads
+from pygeoops_spark.udf import row_udf
 
 ANGLES_SCHEMA = StructType(
     [StructField("angle_start", DoubleType()), StructField("angle_end", DoubleType())]
 )
 
 
-def view_angles_col(vx: float, vy: float, wkb_col: Column | str) -> Column:
-    """View angles from a fixed viewpoint to each row's geometry."""
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-
-    @F.pandas_udf(ANGLES_SCHEMA)
-    def _ud(wkbs: pd.Series) -> pd.DataFrame:
-        starts, ends = [], []
-        for b in wkbs:
-            if b is None:
-                starts.append(math.nan)
-                ends.append(math.nan)
-                continue
-            s, e = _va_kernel((vx, vy), wkb_loads(bytes(b)))
-            starts.append(s)
-            ends.append(e)
-        return pd.DataFrame({"angle_start": starts, "angle_end": ends})
-
-    return _ud(wkb_col)
+def view_angles_col(
+    vx: "float | Column | str", vy: "float | Column | str", wkb_col: Column | str
+) -> Column:
+    """View angles from a viewpoint to each row's geometry; the
+    viewpoint is a fixed (vx, vy) or a per-row pair of columns. A null
+    geometry gives null angles."""
+    vx, vy = (v if isinstance(v, (Column, str)) else F.lit(float(v)) for v in (vx, vy))
+    return row_udf(lambda g, x, y: _va_kernel((float(x), float(y)), g), ANGLES_SCHEMA)(
+        wkb_col, vx, vy
+    )
 
 
 def view_angles_pairs(
     df: DataFrame, vx_col: str, vy_col: str, wkb_col: str
 ) -> DataFrame:
     """Per-row (viewpoint, geometry) pairs variant."""
-
-    @F.pandas_udf(ANGLES_SCHEMA)
-    def _ud(vx: pd.Series, vy: pd.Series, wkbs: pd.Series) -> pd.DataFrame:
-        starts, ends = [], []
-        for x, y, b in zip(vx, vy, wkbs):
-            if b is None:
-                starts.append(math.nan)
-                ends.append(math.nan)
-                continue
-            s, e = _va_kernel((float(x), float(y)), wkb_loads(bytes(b)))
-            starts.append(s)
-            ends.append(e)
-        return pd.DataFrame({"angle_start": starts, "angle_end": ends})
-
-    return df.withColumn("view_angles", _ud(F.col(vx_col), F.col(vy_col), F.col(wkb_col)))
+    return df.withColumn("view_angles", view_angles_col(vx_col, vy_col, wkb_col))

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -69,3 +69,18 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def checkpoint_and_release(result: DataFrame, caches: list) -> DataFrame:
+    """The one cache scope of the engine's multi-pass operators (the
+    dedup pair functions, exact kNN): eagerly localCheckpoint the
+    (comparatively small) result, then unpersist the intermediate
+    caches it was built from, so repeated calls in a long session do
+    not accumulate storage. The checkpoint itself is GC-cleaned when
+    the returned DataFrame is dropped. No caches: ``result`` as is."""
+    if not caches:
+        return result
+    out = result.localCheckpoint(eager=True)
+    for c in caches:
+        c.unpersist()
+    return out

@@ -6,9 +6,9 @@ benchmark/benchmarks/testdata.py:25-61); this engine's equivalent is
 the text-based one that actually scales on a cluster: one GeoJSON
 Feature per line (RFC 7946 geometries), read/written with Spark's
 distributed text source/sink — each partition parses/serializes its
-own lines inside an Arrow-batched pandas UDF, so the format rides the
-normal scan path (predicate pushdown on properties after parsing,
-partitioned output directories).
+own lines inside an Arrow-batched row UDF (udf.py:row_udf), so the
+format rides the normal scan path (predicate pushdown on properties
+after parsing, partitioned output directories).
 
 Geometry interchange is WKB inside the DataFrame (the engine's native
 column encoding); properties become top-level columns.
@@ -19,10 +19,10 @@ from __future__ import annotations
 import json
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from pygeoops_spark.geom.wkb import (
     GEOMETRYCOLLECTION,
@@ -38,9 +38,8 @@ from pygeoops_spark.geom.wkb import (
     multi,
     point,
     polygon,
-    wkb_dumps,
-    wkb_loads,
 )
+from pygeoops_spark.udf import row_udf
 
 _TYPE_NAMES = {
     POINT: "Point",
@@ -127,37 +126,12 @@ def geojson_to_geometry(obj: dict | str | None) -> Geometry | None:
 
 def geojson_geometry_col(json_col: Column | str) -> Column:
     """WKB from a GeoJSON geometry-object JSON string column."""
-    json_col = F.col(json_col) if isinstance(json_col, str) else json_col
-
-    @F.pandas_udf("binary")
-    def _parse(s: pd.Series) -> pd.Series:
-        out = []
-        for v in s:
-            if v is None:
-                out.append(None)
-                continue
-            g = geojson_to_geometry(v)
-            out.append(wkb_dumps(g) if g is not None else None)
-        return pd.Series(out, dtype=object)
-
-    return _parse(json_col)
+    return row_udf(geojson_to_geometry, BinaryType())(json_col)
 
 
 def wkb_to_geojson_col(wkb_col: Column | str) -> Column:
     """GeoJSON geometry-object JSON string from a WKB column."""
-    wkb_col = F.col(wkb_col) if isinstance(wkb_col, str) else wkb_col
-
-    @F.pandas_udf("string")
-    def _ser(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if b is None else geometry_to_geojson(wkb_loads(bytes(b)))
-                for b in s
-            ],
-            dtype=object,
-        )
-
-    return _ser(wkb_col)
+    return row_udf(geometry_to_geojson, StringType())(wkb_col)
 
 
 def read_geojson_seq(
@@ -172,8 +146,6 @@ def read_geojson_seq(
     incompatible `coordinates` nestings of mixed geometry types
     (Point vs Polygon) into garbage. Features without a properties
     object (or with null properties) yield a geometry-only frame."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     inferred = spark.read.json(path).schema
     fields = []
     props_struct = None

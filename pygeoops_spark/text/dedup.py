@@ -23,29 +23,11 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pygeoops_spark.session import checkpoint_and_release
+
 # Deterministic affine hash family for MinHash: h_j(x) = (a_j*x+b_j) % P
 MERSENNE_P = (1 << 61) - 1
 
-
-
-def _materialize_and_release(result: DataFrame, caches, lazy: bool = False) -> DataFrame:
-    """Eagerly localCheckpoint the (comparatively small) result frame,
-    then unpersist the O(corpus) intermediate caches, so repeated calls
-    in a long session do not accumulate cached shingle/signature
-    tables.  The checkpoint itself is GC-cleaned when the returned
-    DataFrame is dropped (unlike a persist, which would need an
-    explicit unpersist by the caller).
-
-    ``lazy=True`` (ADVICE r03): skip the checkpoint and hand the raw
-    lazy plan back with its intermediate persists still registered —
-    for callers that compose the result into a larger plan and manage
-    cache lifecycle themselves."""
-    if lazy:
-        return result
-    out = result.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
 
 def _spread_input(df: DataFrame) -> DataFrame:
     """Round-robin the input over the cluster's cores when the source
@@ -226,7 +208,6 @@ def jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.2,
-    lazy: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity join (PPJoin-style, result
     identical to the naive all-pairs join).
@@ -255,11 +236,10 @@ def jaccard_pairs(
     Output: id_a < id_b, jaccard (rounded 1e-6; threshold applied to
     the unrounded value, matching the SQL oracle).
 
-    EAGER by default (ADVICE r03): the call runs a full Spark job at
-    call time (localCheckpoint) and truncates lineage — bounded cache
-    lifecycle, but an action, not a transformation, and the result is
-    not recomputable on executor loss.  Pass ``lazy=True`` to get the
-    raw lazy plan and manage the intermediate caches yourself.
+    EAGER (ADVICE r03): the call runs a full Spark job at call time
+    (session.py:checkpoint_and_release) and truncates lineage — bounded
+    cache lifecycle, but an action, not a transformation, and the
+    result is not recomputable on executor loss.
     """
     from pyspark import StorageLevel
 
@@ -283,12 +263,11 @@ def jaccard_pairs(
         .withColumn("common", F.size(F.array_intersect("_sa", "_sb")))
     )
     jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return _materialize_and_release(
+    return checkpoint_and_release(
         common.where(jac >= threshold)
         .withColumn("jaccard", F.round(jac, 6))
         .select("id_a", "id_b", "jaccard"),
         caches,
-        lazy,
     )
 
 
@@ -344,17 +323,14 @@ def minhash_lsh_pairs(
     k: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    lazy: bool = False,
 ) -> DataFrame:
     """Near-dup candidate pairs via LSH banding, verified with exact
     Jaccard on the candidates only. The shingle-hash array is computed
     ONCE and cached — signatures are a projection of it (no shuffle)
     and verification reuses it; the only shuffles left are the band
     bucket-join and the two candidate joins.
-    
 
-    Eager by default; see jaccard_pairs — ``lazy=True`` returns the
-    raw plan with caller-managed caches (ADVICE r03).
+    Eager, like jaccard_pairs.
     """
     rows_per_band = k // bands
     arr = shingle_hash_arrays(_spread_input(df), id_col, text_col, n).cache()
@@ -411,12 +387,11 @@ def minhash_lsh_pairs(
         .withColumn("common", F.size(F.array_intersect("_sa", "_sb")))
     )
     jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return _materialize_and_release(
+    return checkpoint_and_release(
         sized.where(jac >= threshold)
         .withColumn("jaccard", F.round(jac, 6))
         .select("id_a", "id_b", "jaccard"),
         [arr, stacked],
-        lazy,
     )
 
 
@@ -508,14 +483,12 @@ def simhash_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 8,
-    lazy: bool = False,
 ) -> DataFrame:
     """Pairs within Hamming distance via 16-bit-chunk banding (pigeonhole:
     distance<=3 guarantees a shared chunk; larger distances are found
     with high probability). Output: id_a, id_b, hamming.
 
-    Eager by default; see jaccard_pairs — ``lazy=True`` returns the
-    raw plan with caller-managed caches (ADVICE r03).
+    Eager, like jaccard_pairs.
     """
     sig = simhash_signatures(df, id_col, text_col).cache()
     chunks = sig.select(
@@ -546,12 +519,11 @@ def simhash_pairs(
         .distinct()
     )
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return _materialize_and_release(
+    return checkpoint_and_release(
         cand.withColumn("hamming", hamming)
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming"),
         [sig],
-        lazy,
     )
 
 

@@ -215,3 +215,154 @@ def test_tiled_difference_shared_boundary_subtrahends(spark):
         h = 150.0 + (i * 7) % 80
         expected = (w - 30.0) * h  # left strip shares the full left edge
         assert abs(rows[i] - expected) < 1e-5, (i, rows[i], expected)
+
+
+# -- every per-row WKB column op on a valid row, a null row, and a null
+# second argument: the valid rows equal the kernel applied directly to
+# the decoded geometry; the null row gives the op's null output.
+def _ops():
+    from pygeoops_spark.geom import linestring, point, wkt_loads
+    from pygeoops_spark.geom.buffer_by_m import buffer_by_m
+    from pygeoops_spark.geom.centerline import centerline
+    from pygeoops_spark.geom.difference import difference_all
+    from pygeoops_spark.geom.extend_line import (
+        extend_line_by_distance,
+        extend_line_to_geometry,
+    )
+    from pygeoops_spark.geom.general import (
+        collection_extract,
+        get_parts_recursive,
+        remove_inner_rings,
+        subdivide,
+    )
+    from pygeoops_spark.geom.kernels import get_primitivetype_id
+    from pygeoops_spark.geom.simplify_geom import simplify_geometry
+    from pygeoops_spark.geom.validity import make_valid
+    from pygeoops_spark.geom.view_angles import view_angles
+    from pygeoops_spark.geom.wkb import collection, get_coordinates
+    from pygeoops_spark.operators import centerline as oc, collection as ocol
+    from pygeoops_spark.operators import difference as od, simplify as osim
+    from pygeoops_spark.operators import view_angles as ova
+    from pygeoops_spark.sources import geojson as gj
+
+    dense = mk_poly(
+        [(float(i), 0.0) for i in range(10)]
+        + [(10.0, float(i)) for i in range(10)]
+        + [(10.0 - i, 10.0) for i in range(10)]
+        + [(0.0, 10.0 - i) for i in range(10)]
+    )
+    holed = mk_poly(
+        [(0, 0), (10, 0), (10, 10), (0, 10)], [[(2, 2), (3, 2), (3, 3), (2, 3)]]
+    )
+    gc = collection([point(0.0, 0.0), box(1, 1, 2, 2)])
+    line = linestring([(2.0, 5.0), (4.0, 5.0), (6.0, 6.0)])
+    frame, hole_box, keep = box(0, 0, 10, 10), box(4, 4, 6, 6), linestring([(0, 0), (10, 0)])
+
+    def col(make):
+        return lambda df: df.select("gid", make().alias("out"))
+
+    def ends(g, k):
+        c = get_coordinates(g)
+        return (c[0, 0], c[0, 1], c[-1, 0], c[-1, 1])
+
+    return [
+        ("collection_extract_col", gc, col(lambda: ocol.collection_extract_col("wkb", 3)),
+         lambda g, k: collection_extract(g, 3), None),
+        ("collection_extract_col[per-row type]", gc,
+         col(lambda: ocol.collection_extract_col("wkb", "ptype")),
+         lambda g, k: collection_extract(g, 3), None),
+        ("collection_extract_col[null type]", gc,
+         col(lambda: ocol.collection_extract_col("wkb", F.lit(None).cast("int"))),
+         ValueError, None),
+        ("primitivetype_id_col", holed, col(lambda: ocol.primitivetype_id_col("wkb")),
+         lambda g, k: get_primitivetype_id(g), 0),
+        ("parts_recursive_col", gc, col(lambda: ocol.parts_recursive_col("wkb")),
+         lambda g, k: get_parts_recursive(g), None),
+        ("remove_inner_rings_col", holed, col(lambda: ocol.remove_inner_rings_col("wkb", 2.0)),
+         lambda g, k: remove_inner_rings(g, 2.0), None),
+        ("make_valid_col", mk_poly([(0, 0), (10, 10), (10, 0), (0, 10)]),
+         col(lambda: ocol.make_valid_col("wkb")), lambda g, k: make_valid(g), None),
+        ("extend_line_by_distance_col", line,
+         col(lambda: ocol.extend_line_by_distance_col("wkb", 1.0, 2.0)),
+         lambda g, k: extend_line_by_distance(g, 1.0, 2.0), None),
+        ("extend_line_to_geometry_col", line,
+         col(lambda: ocol.extend_line_to_geometry_col("wkb", wkb_dumps(frame))),
+         lambda g, k: extend_line_to_geometry(g, frame), None),
+        ("simplify_col", dense, col(lambda: osim.simplify_col("wkb", 0.5)),
+         lambda g, k: simplify_geometry(g, 0.5, "rdp", 8, True, None), None),
+        ("simplify_col[bytes keep]", dense,
+         col(lambda: osim.simplify_col("wkb", 0.5, keep_points_on_wkb=wkb_dumps(keep))),
+         lambda g, k: simplify_geometry(g, 0.5, "rdp", 8, True, keep), None),
+        ("simplify_col[Column keep]", dense,
+         col(lambda: osim.simplify_col("wkb", 0.5, "lang", keep_points_on_wkb="keep")),
+         lambda g, k: simplify_geometry(g, 0.5, "lang", 8, True, k), None),
+        ("num_coords_col", dense, col(lambda: osim.num_coords_col("wkb")),
+         lambda g, k: len(get_coordinates(g)), 0),
+        ("centerline_col", box(0, 0, 20, 4), col(lambda: oc.centerline_col("wkb")),
+         lambda g, k: centerline(g), None),
+        ("line_endpoints_col", line, col(lambda: oc.line_endpoints_col("wkb")), ends,
+         (None, None, None, None)),
+        ("buffer_by_m_col", wkt_loads("LINESTRING M (0 0 1, 10 0 2)"),
+         col(lambda: oc.buffer_by_m_col("wkb")), lambda g, k: buffer_by_m(g, quad_segs=8), None),
+        ("difference_all_col", holed,
+         col(lambda: od.difference_all_col("wkb", [wkb_dumps(hole_box)])),
+         lambda g, k: difference_all(g, [hole_box], keep_geom_type=False, check_intersects=True),
+         None),
+        ("subdivide_col", dense, col(lambda: od.subdivide_col("wkb", 12)),
+         lambda g, k: subdivide(g, 12), None),
+        ("area_col", holed, col(lambda: od.area_col("wkb")), lambda g, k: polygon_area(g), 0.0),
+        ("num_rings_col", holed, col(lambda: od.num_rings_col("wkb")), lambda g, k: 2, 0),
+        # Spark reads the kernel's NaN angles back as NULL
+        ("view_angles_col", box(1, 1, 2, 2), col(lambda: ova.view_angles_col(-5.0, -5.0, "wkb")),
+         lambda g, k: view_angles((-5.0, -5.0), g), (None, None)),
+        ("view_angles_pairs", box(1, 1, 2, 2),
+         lambda df: ova.view_angles_pairs(df, "vx", "vy", "wkb").select(
+             "gid", F.col("view_angles").alias("out")
+         ),
+         lambda g, k: view_angles((-5.0, -5.0), g), (None, None)),
+        ("wkb_to_geojson_col", holed, col(lambda: gj.wkb_to_geojson_col("wkb")),
+         lambda g, k: gj.geometry_to_geojson(g), None),
+        ("geojson_geometry_col", holed,
+         col(lambda: gj.geojson_geometry_col(gj.wkb_to_geojson_col("wkb"))),
+         lambda g, k: gj.geojson_to_geometry(gj.geometry_to_geojson(g)), None),
+    ]
+
+
+_ROW_OPS = _ops()
+
+
+@pytest.mark.parametrize(
+    "geom,build,kernel,null", [c[1:] for c in _ROW_OPS], ids=[c[0] for c in _ROW_OPS]
+)
+def test_row_udf_ops_null_and_kernel_equivalence(spark, geom, build, kernel, null):
+    from pygeoops_spark.geom.wkb import Geometry, linestring
+
+    keep = linestring([(0, 0), (10, 0)])
+    b, kb = wkb_dumps(geom), wkb_dumps(keep)
+    df = spark.createDataFrame(
+        [(1, b, kb, 3), (2, None, kb, None), (3, b, None, 3)],
+        "gid int, wkb binary, keep binary, ptype int",
+    ).withColumns({"vx": F.lit(-5.0), "vy": F.lit(-5.0)})
+    out = build(df)
+    if kernel is ValueError:
+        # input validation stays: a valid geometry with a null type raises
+        assert out.where("gid = 2").collect()[0]["out"] is None
+        with pytest.raises(Exception, match="Invalid value for primitivetype: None"):
+            out.where("gid = 1").collect()
+        return
+
+    def encoded(v):
+        if isinstance(v, Geometry):
+            return wkb_dumps(v)
+        if isinstance(v, list):
+            return [encoded(x) for x in v]
+        return v
+
+    got = {r["gid"]: r["out"] for r in out.collect()}
+    assert got[2] == null
+    for gid, k in ((1, keep), (3, None)):
+        want = encoded(kernel(geom, k))
+        assert want != null
+        v = got[gid]
+        v = [bytes(x) for x in v] if isinstance(v, list) else v
+        assert (bytes(v) if isinstance(v, (bytes, bytearray)) else v) == want, gid
