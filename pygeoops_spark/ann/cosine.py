@@ -1,14 +1,17 @@
 """Similarity search over an embedding column (array<float>).
 
-* ``cosine_topk_bruteforce`` — exact top-k per query via broadcast
-  cross-join; the dot product is `F.zip_with` + `F.aggregate` in double
-  precision (JVM-side, no Python). Baseline and correctness oracle.
+* ``cosine_topk_bruteforce`` — exact top-k per query: the query set is
+  closed over as a matrix and the targets stream through one matmul
+  per Arrow batch. Baseline and correctness oracle.
 * ``cosine_topk_lsh`` — the scale path: sign-random-projection (SRP)
   buckets from deterministic hyperplanes; candidates share >= 1 band of
   the bit signature; exact cosine re-ranks candidates. At 10^9+ rows
   the bucket join replaces the cross-join's O(N*Q) with ~O(Q * bucket).
 * ``cosine_topk_ivf`` — IVF-style: targets assigned to the nearest of
   C centroid rows (broadcast), probes scan only `nprobe` closest lists.
+
+The candidate machinery (bands, small-side scorer, top-k window) is the
+pair core shared with text dedup: ``pygeoops_spark/pairs.py``.
 """
 
 from __future__ import annotations
@@ -16,8 +19,17 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pygeoops_spark.pairs import (
+    band_table,
+    batch_topk,
+    cosine_block,
+    small_side,
+    topk_window,
+    vec_matrix,
+)
 
 
 def _dot(a, b) -> F.Column:
@@ -36,6 +48,24 @@ def _norm(a) -> F.Column:
             lambda acc, v: acc + v,
         )
     )
+
+
+def _rerank(cand: DataFrame) -> DataFrame:
+    """Exact cosine (rounded 1e-6) of (_queryv, _neighborv) candidates,
+    in double precision on the JVM side."""
+    sim = _dot(F.col("_queryv"), F.col("_neighborv")) / (
+        _norm(F.col("_queryv")) * _norm(F.col("_neighborv"))
+    )
+    return cand.withColumn("cos_sim", F.round(sim, 6))
+
+
+def _topk_schema(df: DataFrame, id_col: str) -> str:
+    id_dtype = df.schema[id_col].dataType.simpleString()
+    return f"query_id {id_dtype}, neighbor_id {id_dtype}, cos_sim double"
+
+
+def _empty_topk(spark, schema: str) -> DataFrame:
+    return spark.createDataFrame([], schema + ", ann_rank int")
 
 
 def cosine_topk_bruteforce(
@@ -61,61 +91,26 @@ def cosine_topk_bruteforce(
 
     Output: query_id, neighbor_id, cos_sim (rounded 1e-6), ann_rank.
     """
-    # the query set is collected driver-side BY DESIGN (it is the small
-    # side); guard the assumption so a mistakenly-large query frame
-    # fails loudly instead of OOMing the driver (VERDICT r01)
-    qpd = (
-        queries.select(F.col(q_id).alias("qid"), F.col(q_vec).alias("qv"))
-        .limit(max_query_rows + 1)
-        .toPandas()
+    small = small_side(
+        queries, q_id, q_vec, max_query_rows,
+        f"cosine_topk_bruteforce collects the query set driver-side; "
+        f"got > {max_query_rows} query rows. Raise max_query_rows "
+        f"explicitly if intended, or use cosine_topk_lsh/ivf.",
     )
-    if len(qpd) > max_query_rows:
-        raise ValueError(
-            f"cosine_topk_bruteforce collects the query set driver-side; "
-            f"got > {max_query_rows} query rows. Raise max_query_rows "
-            f"explicitly if intended, or use cosine_topk_lsh/ivf."
-        )
-    id_dtype = targets.schema[t_id].dataType.simpleString()
-    schema = f"query_id {id_dtype}, neighbor_id {id_dtype}, cos_sim double"
-    if len(qpd) == 0:
-        empty = queries.sparkSession.createDataFrame([], schema)
-        return empty.withColumn("ann_rank", F.lit(0).cast("int"))
-    q_ids = qpd["qid"].to_numpy()
-    qmat = np.array([np.asarray(v, dtype=np.float64) for v in qpd["qv"]])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = 1.0
+    schema = _topk_schema(targets, t_id)
+    if small is None:
+        return _empty_topk(queries.sparkSession, schema)
+    q_ids, qmat, qnorm = small
 
     def score(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            tmat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[t_vec]])
-            tnorm = np.linalg.norm(tmat, axis=1)
-            tnorm[tnorm == 0] = 1.0
-            sims = (tmat @ qmat.T) / tnorm[:, None] / qnorm[None, :]
-            t_ids = pdf[t_id].to_numpy()
-            rows = {"query_id": [], "neighbor_id": [], "cos_sim": []}
-            for j in range(len(q_ids)):
-                col = sims[:, j]
-                mask = t_ids != q_ids[j]
-                idx = np.nonzero(mask)[0]
-                if len(idx) == 0:
-                    continue
-                # order by (-sim, id) so batch-local pruning agrees with
-                # the global tie-break
-                order = idx[np.lexsort((t_ids[idx], -col[idx]))][:k]
-                rows["query_id"].extend([q_ids[j]] * len(order))
-                rows["neighbor_id"].extend(t_ids[order])
-                rows["cos_sim"].extend(col[order])
-            yield pd.DataFrame(rows)
+            sims = cosine_block(pdf[t_vec], qmat, qnorm)
+            yield pd.DataFrame(batch_topk(sims, pdf[t_id].to_numpy(), q_ids, k))
 
     cand = targets.select(t_id, t_vec).mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("ann_rank", F.row_number().over(w))
-        .where(F.col("ann_rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "ann_rank")
-    )
+    return topk_window(cand, k).withColumn("cos_sim", F.round("cos_sim", 6))
 
 
 def cosine_dup_pairs(
@@ -136,33 +131,22 @@ def cosine_dup_pairs(
 
     Output: id_a, id_b, cos_sim (rounded 1e-6; threshold applied
     unrounded)."""
-    qpd = (
-        df.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-        .limit(max_rows + 1)
-        .toPandas()
+    small = small_side(
+        df, id_col, vec_col, max_rows,
+        f"cosine_dup_pairs closes over the full vector set; got > "
+        f"{max_rows} rows. Use the LSH-candidate path at scale.",
     )
-    if len(qpd) > max_rows:
-        raise ValueError(
-            f"cosine_dup_pairs closes over the full vector set; got > "
-            f"{max_rows} rows. Use the LSH-candidate path at scale."
-        )
     id_dtype = df.schema[id_col].dataType.simpleString()
     schema = f"id_a {id_dtype}, id_b {id_dtype}, cos_sim double"
-    if len(qpd) == 0:
+    if small is None:
         return df.sparkSession.createDataFrame([], schema)
-    q_ids = qpd["qid"].to_numpy()
-    qmat = np.array([np.asarray(v, dtype=np.float64) for v in qpd["qv"]])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = 1.0
+    q_ids, qmat, qnorm = small
 
     def pairs(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            tmat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            tnorm = np.linalg.norm(tmat, axis=1)
-            tnorm[tnorm == 0] = 1.0
-            sims = (tmat @ qmat.T) / tnorm[:, None] / qnorm[None, :]
+            sims = cosine_block(pdf[vec_col], qmat, qnorm)
             t_ids = pdf[id_col].to_numpy()
             # id_a < id_b avoids self pairs and emits each pair once
             ti, qi = np.nonzero((sims >= threshold) & (t_ids[:, None] < q_ids[None, :]))
@@ -198,8 +182,7 @@ def _srp_sig(vec_col: str, planes: np.ndarray) -> F.Column:
 
         if len(vecs) == 0:
             return pdl.Series([], dtype="int64")
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        bits = (mat @ planes_t) > 0
+        bits = (vec_matrix(vecs)[0] @ planes_t) > 0
         return pdl.Series((bits @ weights).astype(np.int64))
 
     return _sig(F.col(vec_col))
@@ -219,30 +202,14 @@ def cosine_topk_lsh(
 ) -> DataFrame:
     """SRP-LSH approximate top-k: candidates share at least one band of
     the `n_bits`-bit signature; exact cosine re-ranks. Recall improves
-    with bands; candidates per query ~ N * bands / 2^(n_bits/bands)."""
+    with bands; candidates per query ~ N * bands / 2^(n_bits/bands).
+    ValueError when bands > n_bits or n_bits > 64 (see band_table)."""
     planes = _srp_planes(dim, n_bits)
-    bits_per_band = n_bits // bands
 
     def banded(df: DataFrame, idc: str, vecc: str, role: str) -> DataFrame:
         sig = _srp_sig(vecc, planes).alias("_sig")
         d = df.select(F.col(idc).alias(f"{role}_id"), F.col(vecc).alias(f"_{role}v"), sig)
-        return d.select(
-            f"{role}_id",
-            f"_{role}v",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("b"),
-                            F.shiftright(F.col("_sig"), b * bits_per_band)
-                            .bitwiseAND(F.lit((1 << bits_per_band) - 1))
-                            .alias("v"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("band"),
-        ).select(f"{role}_id", f"_{role}v", "band.b", "band.v")
+        return band_table(d, [f"{role}_id", f"_{role}v"], "_sig", n_bits, bands)
 
     qb = banded(queries, q_id, q_vec, "query")
     tb = banded(targets, t_id, t_vec, "neighbor")
@@ -252,16 +219,7 @@ def cosine_topk_lsh(
         .select("query_id", "_queryv", "neighbor_id", "_neighborv")
         .distinct()
     )
-    sim = _dot(F.col("_queryv"), F.col("_neighborv")) / (
-        _norm(F.col("_queryv")) * _norm(F.col("_neighborv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("cos_sim", F.round(sim, 6))
-        .withColumn("ann_rank", F.row_number().over(w))
-        .where(F.col("ann_rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "ann_rank")
-    )
+    return topk_window(_rerank(cand), k)
 
 
 def _train_centroids(
@@ -306,9 +264,7 @@ def _train_centroids(
     pdf = cand.sort_values(["_h", "_id"]).head(sample_rows)
     if len(pdf) == 0:
         return np.zeros((0, 0))
-    X = np.array([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-    nrm = np.linalg.norm(X, axis=1)
-    nrm[nrm == 0] = 1.0
+    X, nrm = vec_matrix(pdf["_v"])
     X = X / nrm[:, None]
     C = X[: min(n_cells, len(X))].copy()
     for _ in range(iters):
@@ -332,9 +288,7 @@ def _cells_udf(C: np.ndarray, n_lists: int):
     def _cells(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        nrm = np.linalg.norm(mat, axis=1)
-        nrm[nrm == 0] = 1.0
+        mat, nrm = vec_matrix(vecs)
         sims = (mat / nrm[:, None]) @ Ct
         order = np.argsort(-sims, axis=1, kind="stable")[:, :n_lists].astype(np.int32)
         return pd.Series([list(r) for r in order])
@@ -372,10 +326,7 @@ def cosine_topk_ivf(
     C = _train_centroids(targets, t_id, t_vec, n_cells, iters=train_iters)
     if len(C) == 0:
         # empty target table: no lists, no neighbors
-        id_dtype = targets.schema[t_id].dataType.simpleString()
-        return targets.sparkSession.createDataFrame(
-            [], f"query_id {id_dtype}, neighbor_id {id_dtype}, cos_sim double, ann_rank int"
-        )
+        return _empty_topk(targets.sparkSession, _topk_schema(targets, t_id))
     t_cells = _cells_udf(C, min(t_assign, len(C)))
     q_cells = _cells_udf(C, nprobe)
 
@@ -391,20 +342,7 @@ def cosine_topk_ivf(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "_queryv", "neighbor_id", "_neighborv")
     )
-    sim = _dot(F.col("_queryv"), F.col("_neighborv")) / (
-        _norm(F.col("_queryv")) * _norm(F.col("_neighborv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("cos_sim", F.round(sim, 6))
-        # duplicates of a (query, neighbor) pair sort adjacently (same
-        # cos_sim, same neighbor_id): keep the first of each run
-        .withColumn("_prev_nn", F.lag("neighbor_id").over(w))
-        .where(F.col("_prev_nn").isNull() | (F.col("_prev_nn") != F.col("neighbor_id")))
-        .withColumn("ann_rank", F.row_number().over(w))
-        .where(F.col("ann_rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "ann_rank")
-    )
+    return topk_window(_rerank(cand), k, repeats=True)
 
 
 # -- persisted IVF index (build once, query many) --------------------------
@@ -490,25 +428,15 @@ def ivf_query_index(
 
     meta = _json.loads(spark.read.text(path + "_meta").first()["value"])
     C = np.asarray(meta["centroids"], dtype=np.float64)
-    qpd = (
-        queries.select(F.col(q_id).alias("qid"), F.col(q_vec).alias("qv"))
-        .limit(max_query_rows + 1)
-        .toPandas()
+    small = small_side(
+        queries, q_id, q_vec, max_query_rows,
+        "ivf_query_index collects the query set driver-side; got > "
+        f"{max_query_rows} rows. Raise max_query_rows if intended.",
     )
-    if len(qpd) > max_query_rows:
-        raise ValueError(
-            "ivf_query_index collects the query set driver-side; got > "
-            f"{max_query_rows} rows. Raise max_query_rows if intended."
-        )
-    id_dtype = queries.schema[q_id].dataType.simpleString()
-    schema = f"query_id {id_dtype}, neighbor_id {id_dtype}, cos_sim double"
-    if len(qpd) == 0 or len(C) == 0:
-        empty = spark.createDataFrame([], schema)
-        return empty.withColumn("ann_rank", F.lit(0).cast("int"))
-    q_ids = qpd["qid"].to_numpy()
-    qmat = np.array([np.asarray(v, dtype=np.float64) for v in qpd["qv"]])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = 1.0
+    schema = _topk_schema(queries, q_id)
+    if small is None or len(C) == 0:
+        return _empty_topk(spark, schema)
+    q_ids, qmat, qnorm = small
     # driver-side probe assignment — the same ordering as _cells_udf
     sims_c = (qmat / qnorm[:, None]) @ C.T
     nprobe = min(nprobe, len(C))
@@ -527,35 +455,12 @@ def ivf_query_index(
                 qi = cell_to_q.get(int(cell))
                 if qi is None or len(qi) == 0:
                     continue
-                tmat = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in grp["embedding"]]
-                )
-                tnorm = np.linalg.norm(tmat, axis=1)
-                tnorm[tnorm == 0] = 1.0
-                sims = (tmat @ qmat[qi].T) / tnorm[:, None] / qnorm[qi][None, :]
-                t_ids = grp["vec_id"].to_numpy()
-                for jj, j in enumerate(qi):
-                    col = sims[:, jj]
-                    mask = t_ids != q_ids[j]
-                    idx = np.nonzero(mask)[0]
-                    if len(idx) == 0:
-                        continue
-                    order = idx[np.lexsort((t_ids[idx], -col[idx]))][:k]
-                    rows["query_id"].extend([q_ids[j]] * len(order))
-                    rows["neighbor_id"].extend(t_ids[order])
-                    rows["cos_sim"].extend(col[order])
+                sims = cosine_block(grp["embedding"], qmat[qi], qnorm[qi])
+                batch_topk(sims, grp["vec_id"].to_numpy(), q_ids[qi], k, rows)
             yield pd.DataFrame(rows)
 
     scan = spark.read.parquet(path).where(
         F.col("cell").isin([int(c) for c in cells_needed])
     )
     cand = scan.mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("cos_sim", F.round("cos_sim", 6))
-        .withColumn("_prev_nn", F.lag("neighbor_id").over(w))
-        .where(F.col("_prev_nn").isNull() | (F.col("_prev_nn") != F.col("neighbor_id")))
-        .withColumn("ann_rank", F.row_number().over(w))
-        .where(F.col("ann_rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "ann_rank")
-    )
+    return topk_window(cand.withColumn("cos_sim", F.round("cos_sim", 6)), k, repeats=True)

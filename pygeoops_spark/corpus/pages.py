@@ -23,7 +23,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 WORDS = (
@@ -138,15 +138,13 @@ def synth_pages(spark: SparkSession, n: int, partitions: int | None = None) -> D
     h = (i * 2654435761) % 2147483647  # Knuth multiplicative mix
     h2 = (h * 48271) % 2147483647
     url = F.concat(F.lit("https://site"), (i % 1000), F.lit(".example/p/"), i)
-    text = F.concat_ws(
+    vocab = F.array(*[F.lit(w) for w in WORDS])
+    text = F.array_join(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(23)),
+            lambda j: F.element_at(vocab, ((h + j * 101) % len(WORDS) + 1).cast("int")),
+        ),
         " ",
-        *[
-            F.element_at(
-                F.array(*[F.lit(w) for w in WORDS]),
-                ((h + F.lit(j * 101)) % len(WORDS) + 1).cast("int"),
-            )
-            for j in range(24)
-        ],
     )
     # 20% of pages snap near the (500,500) hotspot => Zipf-ish cell skew
     hot = (h % 5) == 0
@@ -194,20 +192,23 @@ def synth_docs(
     is_dup = (i % 10) == F.lit(9)
     base = F.when(is_dup, i - 1).otherwise(i)
 
-    def word_at(j: int):
+    def word_at(j: Column) -> Column:
         seed = F.when(
-            is_dup & F.lit(j < 2), F.xxhash64(i, F.lit(j), F.lit("mut"))
-        ).otherwise(F.xxhash64(base, F.lit(j)))
+            is_dup & (j < 2), F.xxhash64(i, j, F.lit("mut"))
+        ).otherwise(F.xxhash64(base, j))
         common = F.element_at(
             vocab, (F.pmod(seed, F.lit(len(WORDS))) + 1).cast("int")
         )
         tail = F.concat(F.lit("t"), F.pmod(seed, F.lit(tail_size)))
         return F.when(F.pmod(seed, F.lit(2)) == 0, common).otherwise(tail)
 
-    words = [word_at(j) for j in range(words_per_doc)]
+    # one lambda over the word index, not a Python-unrolled column per
+    # word: the analyzed plan is ~1.7k characters at any length (the
+    # unrolled 40-word forest was ~27k, ~1 s of Catalyst per call)
+    words = F.transform(F.sequence(F.lit(0), F.lit(words_per_doc - 1)), word_at)
     return df.select(
         i.alias("doc_id"),
-        F.concat_ws(" ", *words).alias("text"),
+        F.array_join(words, " ").alias("text"),
         F.element_at(
             F.array(F.lit("en"), F.lit("es"), F.lit("zh"), F.lit("de"), F.lit("fr")),
             (F.pmod(F.xxhash64(base), F.lit(5)) + 1).cast("int"),

@@ -24,6 +24,7 @@ from pygeoops_spark.geom.general import subdivide as subdivide_kernel
 from pygeoops_spark.geom.kernels import polygon_area
 from pygeoops_spark.geom.overlay import dissolve_partition
 from pygeoops_spark.geom.wkb import POLYGON, get_parts, wkb_loads
+from pygeoops_spark.operators.partitioning import cpu_partitions
 from pygeoops_spark.udf import row_udf
 
 
@@ -100,7 +101,7 @@ def difference_all_tiled_distributed(
     window).
     """
     if target_partitions is None:
-        target_partitions = df.sparkSession.sparkContext.defaultParallelism * 4
+        target_partitions = cpu_partitions(df, 4)
     tiles = (
         df.select(id_col, F.explode(subdivide_col(wkb_col, subdivide_coords)).alias("_tile"))
         .repartition(target_partitions, F.col(id_col), F.col("_tile"))

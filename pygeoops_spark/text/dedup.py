@@ -13,7 +13,8 @@ Scale notes (the design target is ~10^12 docs):
     hash array (array_min of k permutations / per-bit majority counts)
     — the signature stages move zero rows at any scale. LSH bands then
     bucket-join candidates; exact Jaccard verifies over the same
-    cached arrays.
+    cached arrays (both in the pair core shared with ANN,
+    pygeoops_spark/pairs.py).
 """
 
 from __future__ import annotations
@@ -23,43 +24,12 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pygeoops_spark.operators.partitioning import cpu_partitions, spread_input
+from pygeoops_spark.pairs import band_table, jaccard_verify
 from pygeoops_spark.session import checkpoint_and_release
 
 # Deterministic affine hash family for MinHash: h_j(x) = (a_j*x+b_j) % P
 MERSENNE_P = (1 << 61) - 1
-
-
-def _spread_input(df: DataFrame) -> DataFrame:
-    """Round-robin the input over the cluster's cores when the source
-    has fewer partitions (a single-row-group parquet file arrives as
-    ONE scan task, serializing the shingle/signature projections on a
-    single core — measured 2.5 s vs 0.2 s for the sf0.1 shingle build).
-    At scale inputs already carry >= defaultParallelism partitions and
-    this is a no-op; when it does fire, the shuffle moves only the
-    bytes the projection was about to scan anyway (guide §2.5 input
-    skew: repartition immediately after a too-coarse read)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover — exotic un-plannable frames
-        return df
-    return df.repartition(target) if n < target else df
-
-
-def _cpu_partitions(df: DataFrame) -> int:
-    """Partition count for CPU-bound array-kernel stages (exact-verify
-    array_intersect, prefix windows): AQE's byte-based coalescing is
-    blind to per-row kernel CPU on compact rows (CLAUDE.md skew note),
-    so these stages pin an explicit count — the cluster's core count,
-    floored by the configured shuffle parallelism so cluster-sized
-    deployments keep their byte-safe partition counts."""
-    ss = df.sparkSession
-    try:
-        sp = int(ss.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # pragma: no cover
-        sp = 0
-    return max(ss.sparkContext.defaultParallelism, sp)
 
 
 def _hash_family(k: int) -> list[tuple[int, int]]:
@@ -142,9 +112,9 @@ def _jaccard_candidates(
     prefix_len = F.col("_n_sh") - F.ceil(F.lit(float(threshold)) * F.col("_n_sh")) + 1
     # explicit partition count for the window's exchange: the rank pass
     # is per-row CPU over compact rows, which AQE byte-coalescing would
-    # serialize onto one task (see _cpu_partitions)
+    # serialize onto one task (see operators/partitioning.py)
     pref = (
-        sh2.repartition(_cpu_partitions(arr), id_col)
+        sh2.repartition(cpu_partitions(arr), id_col)
         .withColumn("_pos", F.row_number().over(w))
         .where((F.col("_pos") <= prefix_len) & (F.col("_df") > 1))
         .select(id_col, "_n_sh", "_sh", "_pos")
@@ -176,7 +146,7 @@ def _jaccard_candidates(
         # map-side partial mins — and the downstream array_intersect
         # verify (CPU-heavy) runs on cores-many tasks instead of one
         # AQE-coalesced one
-        .repartition(_cpu_partitions(arr), "id_a", "id_b")
+        .repartition(cpu_partitions(arr), "id_a", "id_b")
         .groupBy("id_a", "id_b", "na", "nb")
         .agg(F.min("_pa").alias("_mpa"), F.min("_pb").alias("_mpb"))
     )
@@ -245,30 +215,15 @@ def jaccard_pairs(
 
     # ONE shingle-hash array table feeds both the prefix index (via
     # explode) and the verification joins — the text is split and
-    # hashed once, not three times (and in parallel: _spread_input)
-    arr = shingle_hash_arrays(_spread_input(df), id_col, text_col, n).persist(
+    # hashed once, not three times (and in parallel: spread_input)
+    arr = shingle_hash_arrays(spread_input(df), id_col, text_col, n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     caches: list = [arr]
     cands = _jaccard_candidates(arr, id_col, threshold, caches=caches)
-    # verification via per-doc hash-set arrays + array_intersect: one
-    # row per candidate pair instead of exploding each pair by |A|
-    # (the r01-style explode-join shuffled |cands| x |A| rows — the
-    # dominant cost). Singletons may stay in the arrays: they cannot
-    # be shared, so they never change the intersection size.
-    arrs = arr.select(F.col(id_col).alias("_aid"), "_aset")
-    common = (
-        cands.join(arrs.select(F.col("_aid").alias("id_a"), F.col("_aset").alias("_sa")), "id_a")
-        .join(arrs.select(F.col("_aid").alias("id_b"), F.col("_aset").alias("_sb")), "id_b")
-        .withColumn("common", F.size(F.array_intersect("_sa", "_sb")))
-    )
-    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return checkpoint_and_release(
-        common.where(jac >= threshold)
-        .withColumn("jaccard", F.round(jac, 6))
-        .select("id_a", "id_b", "jaccard"),
-        caches,
-    )
+    # singletons may stay in the arrays: they cannot be shared, so they
+    # never change the intersection size
+    return jaccard_verify(cands, arr, id_col, threshold, caches)
 
 
 def shingle_hash_arrays(
@@ -294,7 +249,7 @@ def minhash_signatures(
     explode, no groupBy — at 10^12 docs the signature stage moves zero
     rows (the r01/r02 design shuffled an exploded shingle table through
     a k-min aggregate). Same values: min over the same multiset."""
-    arr = shingle_hash_arrays(_spread_input(df), id_col, text_col, n)
+    arr = shingle_hash_arrays(spread_input(df), id_col, text_col, n)
     return arr.select(F.col(id_col), *_signature_cols(k))
 
 
@@ -328,71 +283,31 @@ def minhash_lsh_pairs(
     Jaccard on the candidates only. The shingle-hash array is computed
     ONCE and cached — signatures are a projection of it (no shuffle)
     and verification reuses it; the only shuffles left are the band
-    bucket-join and the two candidate joins.
+    bucket-join and the two candidate joins. ValueError when bands > k
+    (a band without rows).
 
     Eager, like jaccard_pairs.
     """
-    rows_per_band = k // bands
-    arr = shingle_hash_arrays(_spread_input(df), id_col, text_col, n).cache()
+    arr = shingle_hash_arrays(spread_input(df), id_col, text_col, n).cache()
     sig = arr.select(F.col(id_col), *_signature_cols(k))
-    band_cols = [
-        F.hash(*[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]).alias(
-            f"band_{b}"
-        )
-        for b in range(bands)
-    ]
-    banded = sig.select(F.col(id_col), *band_cols)
-    stacked = banded.select(
-        id_col,
-        F.explode(
-            F.array(*[F.struct(F.lit(b).alias("b"), F.col(f"band_{b}").alias("v")) for b in range(bands)])
-        ).alias("band"),
-    ).select(id_col, "band.b", "band.v")
     # persist: the band table feeds BOTH sides of the self-join and
     # Catalyst does not share the subplan — unpersisted, the 32-way
     # min-hash signature projection ran twice (r07 plan audit)
-    stacked = stacked.persist()
+    stacked = band_table(
+        sig, [id_col], lambda lo, w: F.hash(*[F.col(f"mh_{lo + r}") for r in range(w)]), k, bands
+    ).persist()
     cands = (
         stacked.alias("l")
         .join(stacked.alias("r"), ["b", "v"])
         .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
         .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
         # explicit partition count so the downstream array_intersect
-        # verify is not AQE-coalesced onto one task (see _cpu_partitions)
-        .repartition(_cpu_partitions(arr), "id_a", "id_b")
+        # verify is not AQE-coalesced onto one task
+        .repartition(cpu_partitions(arr), "id_a", "id_b")
         .dropDuplicates()
     )
-    # verify candidates with exact jaccard via the SAME cached
-    # shingle-hash arrays + array_intersect: one row per candidate pair
-    # instead of exploding each pair by |A| (same rewrite as
-    # jaccard_pairs)
-    arrs = arr.select(F.col(id_col).alias("_aid"), "_aset")
-    sized = (
-        cands.join(
-            arrs.select(
-                F.col("_aid").alias("id_a"),
-                F.col("_aset").alias("_sa"),
-                F.size("_aset").alias("na"),
-            ),
-            "id_a",
-        )
-        .join(
-            arrs.select(
-                F.col("_aid").alias("id_b"),
-                F.col("_aset").alias("_sb"),
-                F.size("_aset").alias("nb"),
-            ),
-            "id_b",
-        )
-        .withColumn("common", F.size(F.array_intersect("_sa", "_sb")))
-    )
-    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return checkpoint_and_release(
-        sized.where(jac >= threshold)
-        .withColumn("jaccard", F.round(jac, 6))
-        .select("id_a", "id_b", "jaccard"),
-        [arr, stacked],
-    )
+    # verify via the SAME cached shingle-hash arrays as jaccard_pairs
+    return jaccard_verify(cands, arr, id_col, threshold, [arr, stacked])
 
 
 def simhash_signatures(
@@ -404,7 +319,7 @@ def simhash_signatures(
     PROJECTION over the per-row word-hash array (bit b set iff
     2*count_set_b > n), replacing the r02 explode + 64-conditional-sum
     groupBy: at 10^12 docs the signature stage moves zero rows."""
-    d = _spread_input(df.where(F.col(text_col).isNotNull())).select(
+    d = spread_input(df.where(F.col(text_col).isNotNull())).select(
         F.col(id_col),
         word_hash_array(text_col).alias("_hs"),
     ).withColumn("_n", F.size("_hs"))
@@ -491,24 +406,10 @@ def simhash_pairs(
     Eager, like jaccard_pairs.
     """
     sig = simhash_signatures(df, id_col, text_col).cache()
-    chunks = sig.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("c"),
-                        F.shiftright(F.col("simhash"), 16 * c).bitwiseAND(F.lit(0xFFFF)).alias("v"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("ch"),
-    ).select(id_col, "simhash", "ch.c", "ch.v")
+    chunks = band_table(sig, [id_col, "simhash"], "simhash", 64, 4)
     cand = (
         chunks.alias("l")
-        .join(chunks.alias("r"), ["c", "v"])
+        .join(chunks.alias("r"), ["b", "v"])
         .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
         .select(
             F.col(f"l.{id_col}").alias("id_a"),
