@@ -24,7 +24,6 @@ from pygeoops_spark.geom.kernels import (
     points_in_polygon,
     polygon_area,
     ring_signed_area,
-    segment_intersects_coords,
     segments_cross_chain_batch,
 )
 from pygeoops_spark.geom.linemerge import _key, line_merge, normalize_lines
@@ -83,16 +82,6 @@ def _dedup_ring(ring: np.ndarray, tol: float = 1e-8) -> np.ndarray:
     if not np.array_equal(arr[0], arr[-1]):
         arr = np.vstack([arr, arr[:1]])
     return arr
-
-
-def _edge_contained(a: np.ndarray, b: np.ndarray, poly: Geometry, boundary_rings) -> bool:
-    """Is segment ab contained in the polygon? Midpoint+endpoints inside
-    and no crossing of the boundary."""
-    for ring in boundary_rings:
-        if segment_intersects_coords(a, b, ring):
-            return False
-    mids = np.array([a, (a + b) / 2, b])
-    return bool(points_in_polygon(mids[:, 0], mids[:, 1], poly).all())
 
 
 def _prune_short_branches(

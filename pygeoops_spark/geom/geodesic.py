@@ -51,7 +51,7 @@ adaptive Simpson fallback that resolves the near-polar peak of
 fixed point is known to oscillate because the shortest geodesic turns
 near-meridional over a pole — are detected by the iteration residual
 and solved exactly by SHOOTING the geodesic ODE on the departure
-azimuth (_edge_area_shoot: bracket + bisect + fine secant polish,
+azimuth (_shoot_inverse: bracket + bisect + fine secant polish,
 in-step crossing refinement; ~1e-11 relative, a few seconds per such
 edge — they are pathological ~20,000 km ring edges).  Tests validate
 against an independent exact geodesic ODE integrator (RK4 on the
@@ -318,6 +318,74 @@ def _shoot_crossing(phi1, alphas, L, a, f, n_steps, refine=True):
     return cross_phi, cross_s
 
 
+def _shoot_inverse(
+    phi1: float, phi2: float, L: float, a: float, f: float, n_steps: int = 4096
+) -> tuple[float, float]:
+    """Shortest-geodesic ``(distance, departure azimuth)`` from latitude
+    phi1 to (phi2, longitude offset L) by SHOOTING the exact geodesic
+    ODE on the departure azimuth — the exact fallback for pairs where
+    the auxiliary-sphere fixed point does not converge (near-antipodal
+    endpoints, where the shortest geodesic is near-meridional over a
+    pole).  Brackets sign changes of phi(at longitude L) - phi2 over a
+    97-azimuth grid, bisects each bracket, keeps the shortest crossing
+    and secant-polishes its azimuth.  Raises if no azimuth brackets the
+    target."""
+    sgn = 1.0 if L >= 0 else -1.0
+    # bracket and bisect on a coarse integrator (RK4 at ~40 km steps is
+    # already ~1e-9 rad accurate — bracketing and bisection need far
+    # less), measure crossings at full resolution
+    n_coarse = max(n_steps // 8, 256)
+
+    def miss(al: float, fine: bool) -> tuple[float, float]:
+        n = n_steps if fine else n_coarse
+        p, sc = _shoot_crossing(phi1, np.array([al]), L, a, f, n, refine=fine)
+        return float(p[0]) - phi2, float(sc[0])
+
+    grid = sgn * np.linspace(1e-6, math.pi - 1e-6, 97)
+    g = _shoot_crossing(phi1, grid, L, a, f, n_coarse, refine=False)[0] - phi2
+    roots = []
+    for i in range(len(grid) - 1):
+        if np.isnan(g[i]) or np.isnan(g[i + 1]) or g[i] * g[i + 1] > 0:
+            continue
+        lo, hi, glo = grid[i], grid[i + 1], g[i]
+        # bisection only needs to land inside the fine secant's basin
+        for _ in range(20):
+            mid = 0.5 * (lo + hi)
+            gm = miss(mid, False)[0]
+            if math.isnan(gm):
+                break
+            if glo * gm <= 0:
+                hi = mid
+            else:
+                lo, glo = mid, gm
+        alpha = 0.5 * (lo + hi)
+        s_cross = miss(alpha, True)[1]
+        if not math.isnan(s_cross):
+            roots.append((s_cross, alpha))
+    if not roots:
+        raise ValueError(
+            "geodesic inverse failed: no shooting bracket for the "
+            "near-antipodal pair"
+        )
+    alpha1 = min(roots)[1]  # shortest geodesic
+
+    # polish the azimuth on the FULL-resolution integrator: the
+    # coarse-model root lands ~1e-7 rad off at fine resolution, and
+    # the area error is landing-offset x edge-length; secant brings
+    # the landing to ~1e-12 rad in 2-3 steps
+    g0, s_cross = miss(alpha1, True)
+    da = 1e-8
+    for _ in range(4):
+        if abs(g0) < 1e-12 or math.isnan(g0):
+            break
+        deriv = (miss(alpha1 + da, True)[0] - g0) / da
+        if deriv == 0 or math.isnan(deriv):
+            break
+        alpha1 -= g0 / deriv
+        g0, s_cross = miss(alpha1, True)
+    return s_cross, alpha1
+
+
 def _edge_area_shoot(
     phi1: float,
     phi2: float,
@@ -326,74 +394,12 @@ def _edge_area_shoot(
     f: float,
     n_steps: int = 4096,
 ) -> float:
-    """Exact fallback for edges where the auxiliary-sphere fixed point
-    does not converge (near-antipodal endpoints, where the shortest
-    geodesic is near-meridional over a pole).  Solves the inverse
-    problem by SHOOTING the exact geodesic ODE on the departure
-    azimuth — bracketing sign changes of phi(at longitude L) - phi2
-    over an azimuth grid, bisecting, and picking the shortest
-    crossing — then Simpson-integrates Z(phi) dlambda along the
-    converged path.  Self-validating: raises if no azimuth lands on
-    the target vertex."""
-    sgn = 1.0 if L >= 0 else -1.0
-    # bracket on a coarse integrator (RK4 at ~40 km steps is already
-    # ~1e-9 rad accurate — bracketing and bisection need far less),
-    # integrate the chosen root at full resolution
-    n_coarse = max(n_steps // 8, 256)
-    grid = sgn * np.linspace(1e-6, math.pi - 1e-6, 97)
-    gphi, gs = _shoot_crossing(phi1, grid, L, a, f, n_coarse, refine=False)
-    g = gphi - phi2
-    roots = []
-    for i in range(len(grid) - 1):
-        if np.isnan(g[i]) or np.isnan(g[i + 1]) or g[i] * g[i + 1] > 0:
-            continue
-        lo, hi = grid[i], grid[i + 1]
-        glo = g[i]
-        # bisection only needs to land inside the fine secant's basin
-        for _ in range(20):
-            mid = 0.5 * (lo + hi)
-            mphi, ms = _shoot_crossing(
-                phi1, np.array([mid]), L, a, f, n_coarse, refine=False
-            )
-            gm = float(mphi[0]) - phi2
-            if math.isnan(gm):
-                break
-            if glo * gm <= 0:
-                hi = mid
-            else:
-                lo, glo = mid, gm
-        alpha = 0.5 * (lo + hi)
-        _p, s_cross = _shoot_crossing(
-            phi1, np.array([alpha]), L, a, f, n_steps
-        )
-        if not math.isnan(float(s_cross[0])):
-            roots.append((float(s_cross[0]), float(alpha)))
-    if not roots:
-        raise ValueError(
-            "geodesic edge inverse failed: near-antipodal endpoints with "
-            "no shooting bracket; densify the ring"
-        )
-    s_cross, alpha1 = min(roots)  # shortest geodesic
-
-    # polish the azimuth on the FULL-resolution integrator: the
-    # coarse-model root lands ~1e-7 rad off at fine resolution, and
-    # the area error is landing-offset x edge-length; secant brings
-    # the landing to ~1e-12 rad in 2-3 steps
-    def _g_fine(al):
-        p, sc = _shoot_crossing(phi1, np.array([al]), L, a, f, n_steps)
-        return float(p[0]) - phi2, float(sc[0])
-
-    g0, s_cross = _g_fine(alpha1)
-    da = 1e-8
-    for _ in range(4):
-        if abs(g0) < 1e-12:
-            break
-        g1, _sc = _g_fine(alpha1 + da)
-        deriv = (g1 - g0) / da
-        if deriv == 0 or math.isnan(deriv):
-            break
-        alpha1 -= g0 / deriv
-        g0, s_cross = _g_fine(alpha1)
+    """Exact area fallback for edges where the auxiliary-sphere fixed
+    point does not converge: takes the shortest geodesic from
+    _shoot_inverse and Simpson-integrates Z(phi) dlambda along it.
+    Self-validating: raises if the path does not land on the target
+    vertex."""
+    s_cross, alpha1 = _shoot_inverse(phi1, phi2, L, a, f, n_steps)
 
     # final pass: uniform steps ending exactly at the crossing, with
     # Simpson over Z(phi) * dlambda/ds (needs even step count)
@@ -404,7 +410,6 @@ def _edge_area_shoot(
     lam = np.array([0.0])
     alpha = np.array([alpha1])
     vals = []
-    phis = [phi1]
 
     def integrand(p, al):
         w = math.sqrt(1.0 - e2 * math.sin(p) ** 2)
@@ -415,7 +420,6 @@ def _edge_area_shoot(
     for _ in range(n):
         phi, lam, alpha = _rk4_geodesic_vec(phi, lam, alpha, h, a, f)
         vals.append(integrand(float(phi[0]), float(alpha[0])))
-        phis.append(float(phi[0]))
     # landing check: the path must end on the target vertex
     end_err = math.hypot(float(phi[0]) - phi2, float(lam[0]) - L)
     if end_err > 1e-9:
@@ -588,7 +592,7 @@ def geodesic_inverse(
     az1 = np.where(degen, 0.0, az1)
     # near-antipodal pairs: exact shooting fallback (rare, scalar)
     for i in np.nonzero(~degen & (resid > 1e-9))[0]:
-        s_i, az_i = _inverse_shoot(
+        s_i, az_i = _shoot_inverse(
             float(phi1[i]), float(phi2[i]), float(L[i]), a, f
         )
         s12[i] = s_i
@@ -682,59 +686,6 @@ def geodesic_direct(
     lon2 = np.where(zero, lon1, lon2)
     lat2 = np.where(zero, lat1, lat2)
     return lon2, lat2
-
-
-def _inverse_shoot(phi1: float, phi2: float, L: float, a: float, f: float):
-    """Shortest-geodesic (distance, departure azimuth) by ODE shooting
-    — the same bracket/bisect/secant machinery as _edge_area_shoot."""
-    sgn = 1.0 if L >= 0 else -1.0
-    n_coarse, n_fine = 512, 4096
-    grid = sgn * np.linspace(1e-6, math.pi - 1e-6, 97)
-    gphi, _gs = _shoot_crossing(phi1, grid, L, a, f, n_coarse, refine=False)
-    g = gphi - phi2
-    roots = []
-    for i in range(len(grid) - 1):
-        if np.isnan(g[i]) or np.isnan(g[i + 1]) or g[i] * g[i + 1] > 0:
-            continue
-        lo, hi, glo = grid[i], grid[i + 1], g[i]
-        for _ in range(20):
-            mid = 0.5 * (lo + hi)
-            mp, _ms = _shoot_crossing(
-                phi1, np.array([mid]), L, a, f, n_coarse, refine=False
-            )
-            gm = float(mp[0]) - phi2
-            if math.isnan(gm):
-                break
-            if glo * gm <= 0:
-                hi = mid
-            else:
-                lo, glo = mid, gm
-        alpha = 0.5 * (lo + hi)
-
-        def g_fine(al):
-            p, sc = _shoot_crossing(phi1, np.array([al]), L, a, f, n_fine)
-            return float(p[0]) - phi2, float(sc[0])
-
-        g0, sc = g_fine(alpha)
-        da = 1e-8
-        for _ in range(4):
-            if abs(g0) < 1e-12 or math.isnan(g0):
-                break
-            g1, _s = g_fine(alpha + da)
-            deriv = (g1 - g0) / da
-            if deriv == 0 or math.isnan(deriv):
-                break
-            alpha -= g0 / deriv
-            g0, sc = g_fine(alpha)
-        if not math.isnan(sc):
-            roots.append((sc, alpha))
-    if not roots:
-        raise ValueError(
-            "geodesic inverse failed: no shooting bracket for "
-            "near-antipodal pair"
-        )
-    s_cross, alpha1 = min(roots)
-    return s_cross, alpha1
 
 
 # -- exact ODE ground truth (tests only) ----------------------------------

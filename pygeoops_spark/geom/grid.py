@@ -209,8 +209,3 @@ def split_tile_geometry(geom, ratio: float) -> list:
         pieces = nxt
     return pieces
 
-
-def subdivide_num_tiles(num_coords: int, num_coords_max: int) -> int:
-    """Number of squarish tiles used by subdivide (reference
-    _general.py:567-602): ceil(n / max)."""
-    return math.ceil(num_coords / num_coords_max)

@@ -112,21 +112,6 @@ def ring_area_geodesic(
     return excess * radius * radius
 
 
-def polygon_area_geodesic(
-    geom: Geometry, radius: float = WGS84_AUTHALIC_RADIUS_M
-) -> float:
-    """Unsigned geodesic area: |shell| minus |holes| summed over parts
-    (lon/lat degrees input), in radius^2 units."""
-    total = 0.0
-    for part in get_parts(geom):
-        if part.type_id != POLYGON or not part.data:
-            continue
-        total += ring_area_geodesic(np.asarray(part.data[0]), radius)
-        for hole in part.data[1:]:
-            total -= ring_area_geodesic(np.asarray(hole), radius)
-    return total
-
-
 def line_length(coords: np.ndarray) -> float:
     if len(coords) < 2:
         return 0.0
@@ -237,22 +222,6 @@ def point_segment_distance(
             1.0,
         )
     return np.hypot(px - (ax + t * dx), py - (ay + t * dy))
-
-
-def point_line_distance(
-    px: np.ndarray, py: np.ndarray, ax, ay, bx, by
-) -> np.ndarray:
-    """Orthogonal distance to the infinite line AB; +inf when A==B.
-
-    Same contract as the reference's Lang helper
-    (/root/reference/pygeoops/_simplify_lang.py:188-220): degenerate
-    window => infinite distance so the point is always kept.
-    """
-    dx, dy = bx - ax, by - ay
-    denom = np.hypot(dx, dy)
-    if denom == 0:
-        return np.full(np.shape(px) or (1,), np.inf)[()] if np.ndim(px) else np.inf
-    return np.abs(dx * (ay - py) - (ax - px) * dy) / denom
 
 
 def segments_intersect(p1, p2, q1, q2) -> bool:

@@ -13,7 +13,10 @@ Approach (noding + classification + stitching):
        intersection: edges strictly inside the other input (or shared)
        difference:   A-edges outside B  +  B-edges inside A (reversed)
     shared edges (same undirected segment in both inputs) are kept once
-    for union/intersection when co-directed, dropped when anti-directed
+    for union/intersection when co-directed, dropped when anti-directed.
+    The binary ops run one pipeline (_binary_overlay); each op is only
+    a _Rule row — the class each operand keeps, whether B's kept edges
+    are reversed, the empty-operand result and the retry area bound.
  5. stitch directed edges into rings (at multi-way vertices take the
     sharpest counter-clockwise turn), classify shells/holes by signed
     area, assign holes to shells by point-in-polygon.
@@ -65,6 +68,7 @@ from __future__ import annotations
 
 import math
 from collections import defaultdict
+from typing import Callable, NamedTuple
 
 import numpy as np
 
@@ -123,7 +127,7 @@ def _snap_geometry(g: Geometry | None, grid: float) -> Geometry | None:
             if len(r) >= 4 and abs(ring_signed_area(r)) > 0:
                 rings.append(r)
         if rings:
-            parts_out.append(Geometry(POLYGON, rings, p.dims))
+            parts_out.append(Geometry(POLYGON, rings))
     if not parts_out:
         return None
     if len(parts_out) == 1:
@@ -141,6 +145,25 @@ def _area_of(g: Geometry | None) -> float:
     from pygeoops_spark.geom.kernels import polygon_area
 
     return 0.0 if g is None else polygon_area(g)
+
+
+def _retry_on_coarse_grid(result, lost, snap, bound, geoms, rerun, suspect=None):
+    """The one retry ladder under every polygon op: rerun once on the
+    inputs snapped to ``200*snap`` when the boundary graph was
+    classification-inconsistent (material edge loss), when the result
+    exceeds ``bound()`` — the op's area upper bound: |A| for A \\ B,
+    min(|A|, |B|) for A ∩ B, the hull for a union (double-counted
+    near-duplicate rings survive the clean walk undetected) — or when
+    the op's own ``suspect()`` check fires. ``rerun`` takes the snapped
+    operands (None where one collapsed) and must not retry again."""
+    if not (
+        lost > _LOST_RETRY_FRAC
+        or _area_of(result) > bound() * (1 + 1e-7) + snap
+        or (suspect is not None and suspect())
+    ):
+        return result
+    grid = snap * 200
+    return rerun([_snap_geometry(g, grid) for g in geoms])
 
 
 def _hull_area(polys: list[Geometry]) -> float:
@@ -172,45 +195,6 @@ def _poly_edges(poly: Geometry) -> list[tuple[np.ndarray, np.ndarray]]:
             if a[0] != b[0] or a[1] != b[1]:
                 edges.append((a, b))
     return edges
-
-
-def _seg_intersections(a1, a2, b1, b2) -> list[np.ndarray]:
-    """Intersection points of segment a with segment b (0, 1 or 2 for
-    collinear overlap endpoints)."""
-    r = a2 - a1
-    s = b2 - b1
-    denom = r[0] * s[1] - r[1] * s[0]
-    qp = b1 - a1
-    if denom == 0:
-        if qp[0] * r[1] - qp[1] * r[0] != 0:
-            return []
-        rr = float(r @ r)
-        if rr == 0:
-            return []
-        out = []
-        for q in (b1, b2):
-            t = float((q - a1) @ r) / rr
-            if 0.0 < t < 1.0:
-                out.append(a1 + t * r)
-        return out
-    # segments sharing an endpoint cannot cross anywhere else: straight
-    # lines meet at most once, so with the shared point already a node
-    # a float "interior" crossing of two near-parallel pieces is
-    # spurious — the ulp-scale angle between noded pieces of the SAME
-    # original edge puts it arbitrarily far away (lever-arm effect; a
-    # 0.006-offset phantom node ate a 4e-4 face in the union of two
-    # difference outputs, caught by the exact-oracle soak). True
-    # collinear overlap takes the denom == 0 branch above.
-    for ea in (a1, a2):
-        for eb in (b1, b2):
-            if ea[0] == eb[0] and ea[1] == eb[1]:
-                return []
-    t = (qp[0] * s[1] - qp[1] * s[0]) / denom
-    u = (qp[0] * r[1] - qp[1] * r[0]) / denom
-    if 0.0 <= t <= 1.0 and 0.0 <= u <= 1.0:
-        if 0.0 < t < 1.0:
-            return [a1 + t * r]
-    return []
 
 
 def _edges_arrays(
@@ -402,31 +386,42 @@ def _poly_segments(poly: Geometry) -> np.ndarray | None:
     return np.vstack(seg_arrays) if seg_arrays else None
 
 
-def _min_boundary_dist(mids: np.ndarray, segs: np.ndarray) -> np.ndarray:
-    """Per-midpoint min distance to any segment — one broadcast
-    distance matrix per segment block (a per-segment python loop was
-    the profiled hot spot), blocked so memory stays bounded for very
-    large polygons."""
+def _seg_array(edges: list[tuple[np.ndarray, np.ndarray]]) -> np.ndarray:
+    """Edges as an (m, 4) array [x1 y1 x2 y2]."""
+    return np.array([np.concatenate(e) for e in edges])
+
+
+def _nearest_segment(mids: np.ndarray, segs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per-midpoint ``(distance, index)`` of the nearest of the (m, 4)
+    segments — one broadcast distance matrix per segment block (a
+    per-segment python loop was the profiled hot spot), blocked so
+    memory stays bounded for very large polygons. ``segs`` must not be
+    empty; ties keep the lowest index."""
     from pygeoops_spark.geom.kernels import point_segment_distance
 
+    n = len(mids)
     px, py = mids[:, 0][:, None], mids[:, 1][:, None]
-    block = max(int(4_000_000 / max(len(mids), 1)), 16)
-    min_d = np.full(len(mids), np.inf)
+    rows = np.arange(n)
+    block = max(int(4_000_000 / max(n, 1)), 16)
     for s0 in range(0, len(segs), block):
         sb = segs[s0 : s0 + block]
         d = point_segment_distance(
             px, py, sb[None, :, 0], sb[None, :, 1], sb[None, :, 2], sb[None, :, 3]
         )
-        min_d = np.minimum(min_d, d.min(axis=1))
-    return min_d
+        loc = d.argmin(axis=1)
+        dm = d[rows, loc]
+        if s0 == 0:
+            best, jmin = dm, loc
+        else:
+            upd = dm < best
+            best, jmin = np.where(upd, dm, best), np.where(upd, loc + s0, jmin)
+    return best, jmin
 
 
 def _onb_verdict(
     edges: list[tuple[np.ndarray, np.ndarray]],
     other: Geometry,
-    snap: float,
-    other_edges: list[tuple[np.ndarray, np.ndarray]] | None = None,
-    segs_arr: np.ndarray | None = None,
+    segs: np.ndarray,
     inside: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Keep/drop evidence for edges lying in ``other``'s coincidence
@@ -438,13 +433,13 @@ def _onb_verdict(
       segment below ``scale * 1e-13`` with the projection inside the
       segment. Only here is point-in-polygon undefined. Coincidence
       MUST be judged against the same arrangement the stitcher walks:
-      pass ``other_edges`` (other's NODED chain) whenever available —
-      vertex-on-edge noding detours chains onto the opposite set's
-      vertices (up to 10*snap off the original boundary), and a piece
-      that is bit-identical to a detoured chain segment reads as
-      "strictly inside by 5e-10" against the original segments,
-      producing a spurious keep, a dangling spur, and a spurious
-      coarse retry (the round-6 driver `difference` v2 regression).
+      ``segs`` is other's NODED chain (_seg_array) — vertex-on-edge
+      noding detours chains onto the opposite set's vertices (up to
+      10*snap off the original boundary), and a piece that is
+      bit-identical to a detoured chain segment reads as "strictly
+      inside by 5e-10" against the original segments, producing a
+      spurious keep, a dangling spur, and a spurious coarse retry (the
+      round-6 driver `difference` v2 regression).
     * ``codir`` — the edge runs the same way as that nearest segment.
       Since both edge sets are normalized interior-left (shell CCW,
       holes CW), co-direction means the interiors lie on the SAME side
@@ -461,49 +456,16 @@ def _onb_verdict(
     100*snap sample, and a 14-degree corner wedge through a
     quarter-edge-length one.
 
-    ``segs_arr`` (precomputed (m, 4) chain array) and ``inside``
-    (precomputed raw midpoint PIP) let hot callers — polygon_union
-    evaluates one verdict per (polygon, neighbor) onb subset — skip
-    the rebuild/re-test; semantics are identical.
+    ``inside`` (precomputed raw midpoint PIP) lets polygon_union, which
+    evaluates one verdict per (polygon, neighbor) onb subset, skip the
+    re-test; semantics are identical.
     """
     n = len(edges)
     empty = np.zeros(n, dtype=bool)
-    if n == 0:
-        return empty, empty, empty
-    if segs_arr is not None:
-        segs = segs_arr
-    else:
-        if other_edges is not None:
-            seg_rows = [np.concatenate([e[0], e[1]]) for e in other_edges]
-        else:
-            seg_rows = [
-                np.concatenate([e[0], e[1]])
-                for p in _as_polys(other)
-                for e in _poly_edges(p)
-            ]
-        if not seg_rows:
-            return empty, empty, empty
-        segs = np.vstack(seg_rows)
-    if not len(segs):
+    if n == 0 or not len(segs):
         return empty, empty, empty
     mids = _midpoints(edges)
-    px, py = mids[:, 0][:, None], mids[:, 1][:, None]
-    from pygeoops_spark.geom.kernels import point_segment_distance
-
-    jmin = np.zeros(n, dtype=int)
-    best = np.full(n, np.inf)
-    block = max(int(4_000_000 / n), 16)
-    for s0 in range(0, len(segs), block):
-        sb = segs[s0 : s0 + block]
-        d = point_segment_distance(
-            px, py, sb[None, :, 0], sb[None, :, 1], sb[None, :, 2], sb[None, :, 3]
-        )
-        loc = d.argmin(axis=1)
-        dm = d[np.arange(n), loc]
-        upd = dm < best
-        best[upd] = dm[upd]
-        jmin[upd] = loc[upd] + s0
-    near = segs[jmin]
+    near = segs[_nearest_segment(mids, segs)[1]]
     dx, dy = near[:, 2] - near[:, 0], near[:, 3] - near[:, 1]
     vx, vy = mids[:, 0] - near[:, 0], mids[:, 1] - near[:, 1]
     seg_len2 = dx * dx + dy * dy
@@ -537,7 +499,7 @@ def _classify(
     res = np.where(points_in_polygon(mids[:, 0], mids[:, 1], poly), 1, -1)
     segs = _poly_segments(poly)
     if segs is not None:
-        res = np.where(_min_boundary_dist(mids, segs) <= snap * 10, 0, res)
+        res = np.where(_nearest_segment(mids, segs)[0] <= snap * 10, 0, res)
     return res
 
 
@@ -737,21 +699,7 @@ def _stitch_core(
             end_key = edge_keys[cur][1]
             i0 = node_pos.get(end_key)
             if i0 is not None:
-                cycle = stack[i0:]
-                ring = [edges[e][0] for e in cycle] + [edges[cycle[-1]][1]]
-                if len(cycle) >= 3:
-                    rings.append(np.array(ring))
-                    emitted_len += sum(
-                        math.hypot(
-                            edges[e][1][0] - edges[e][0][0],
-                            edges[e][1][1] - edges[e][0][1],
-                        )
-                        for e in cycle
-                    )
-                del stack[i0:]
-                for nk in nodes[i0:]:
-                    node_pos.pop(nk, None)
-                del nodes[i0:]
+                emitted_len += _pinch_off(edges, stack, nodes, node_pos, i0, rings)
                 continue
             cands = [i for i in out_map[end_key] if not used[i]]
             if not cands and not robust:
@@ -784,21 +732,7 @@ def _stitch_core(
                     not used[i] for i in out_map.get(best_key, ())
                 ):
                     i0 = node_pos[best_key]
-                    cycle = stack[i0:]
-                    ring = [edges[e][0] for e in cycle] + [edges[cycle[-1]][1]]
-                    if len(cycle) >= 3:
-                        rings.append(np.array(ring))
-                        emitted_len += sum(
-                            math.hypot(
-                                edges[e][1][0] - edges[e][0][0],
-                                edges[e][1][1] - edges[e][0][1],
-                            )
-                            for e in cycle
-                        )
-                    del stack[i0:]
-                    for nk in nodes[i0:]:
-                        node_pos.pop(nk, None)
-                    del nodes[i0:]
+                    emitted_len += _pinch_off(edges, stack, nodes, node_pos, i0, rings)
                     continue
                 cands = [i for i in out_map[best_key] if not used[i]]
             if len(cands) == 1:
@@ -831,9 +765,36 @@ def _stitch_core(
     return rings, clean, lost_frac
 
 
-def _rings_to_polygons(
-    rings: list[np.ndarray], dims: str = "xy", snap: float = 0.0
-) -> Geometry | None:
+def _pinch_off(
+    edges: list[tuple[np.ndarray, np.ndarray]],
+    stack: list[int],
+    nodes: list[tuple],
+    node_pos: dict[tuple, int],
+    i0: int,
+    rings: list[np.ndarray],
+) -> float:
+    """Pinch the sub-cycle ``stack[i0:]`` off the stitch walk's path:
+    emit it as a ring when it has >= 3 edges, drop it and its nodes
+    from the path, and return the edge length emitted."""
+    cycle = stack[i0:]
+    emitted = 0.0
+    if len(cycle) >= 3:
+        rings.append(np.array([edges[e][0] for e in cycle] + [edges[cycle[-1]][1]]))
+        emitted = sum(
+            math.hypot(edges[e][1][0] - edges[e][0][0], edges[e][1][1] - edges[e][0][1])
+            for e in cycle
+        )
+    del stack[i0:]
+    for nk in nodes[i0:]:
+        node_pos.pop(nk, None)
+    del nodes[i0:]
+    return emitted
+
+
+def _rings_to_polygons(rings: list[np.ndarray], snap: float = 0.0) -> Geometry | None:
+    """Shells (CCW) and holes (CW) of the stitched rings as a
+    (multi)polygon. Rings are 2-D, so the result is tagged ``xy``
+    whatever the inputs carried: overlay results drop Z/M."""
     shells, holes = [], []
     for r in rings:
         if len(r) < 4:
@@ -866,17 +827,19 @@ def _rings_to_polygons(
         for i, s in enumerate(shells):
             a = abs(ring_signed_area(s))
             if a < best_area and points_in_polygon(
-                np.array([cx]), np.array([cy]), Geometry(POLYGON, [s], dims)
+                np.array([cx]), np.array([cy]), Geometry(POLYGON, [s])
             )[0]:
                 best, best_area = i, a
         if best is not None:
             polys[best].append(h)
     if len(polys) == 1:
-        return Geometry(POLYGON, polys[0], dims)
-    return multi(MULTIPOLYGON, [Geometry(POLYGON, p, dims) for p in polys])
+        return Geometry(POLYGON, polys[0])
+    return multi(MULTIPOLYGON, [Geometry(POLYGON, p) for p in polys])
 
 
-def _as_polys(geom: Geometry) -> list[Geometry]:
+def _as_polys(geom: Geometry | None) -> list[Geometry]:
+    if geom is None:
+        return []
     return [p for p in get_parts(geom) if p.type_id == POLYGON and p.data]
 
 
@@ -924,144 +887,111 @@ def _codirected_near_duplicate(
     return False
 
 
-def polygon_difference(
-    a: Geometry, b: Geometry, _snapped: bool = False
+class _Rule(NamedTuple):
+    """A binary boolean op as an edge-selection rule over _binary_overlay.
+
+    ``sides`` holds, for A then B, the class of the noded edges kept
+    (1 strictly inside the other operand, -1 strictly outside) and
+    whether they are kept reversed. The same pair decides the edges ON
+    the other operand's boundary: a kept edge bounds the result on its
+    left, so the side that must lie inside the other operand is the
+    edge's left (its right when reversed) exactly when the strict class
+    kept is 1. ``b_empty_keeps_a``: the result is A when B has no
+    polygon (else None). ``bound(|A|, |B|)``: the retry's area upper
+    bound. ``dedupe``: a shared edge is kept once by its snapped key.
+    ``near_dup``: co-directed near-duplicate shared edges from both
+    operands force the coarse retry."""
+
+    sides: tuple[tuple[int, bool], tuple[int, bool]]
+    b_empty_keeps_a: bool
+    bound: Callable[[float, float], float]
+    dedupe: bool
+    near_dup: bool
+
+
+# A \ B: A-edges outside B, plus B-edges inside A reversed (they bound
+# holes). Both shared-edge rules bounding the SAME tolerance strip
+# double-subtract when each survives as a complete ring (a plug hugging
+# a hole at sub-tolerance offset: the result is SMALLER than A, which
+# the area bound cannot see) — hence the near-duplicate trigger.
+_DIFFERENCE = _Rule(((-1, False), (1, True)), True, lambda aa, ab: aa, False, True)
+# A ∩ B: edges of either operand inside the other; co-directed shared
+# edges count once.
+_INTERSECTION = _Rule(((1, False), (1, False)), False, min, True, False)
+
+
+def _binary_overlay(
+    a: Geometry | None, b: Geometry | None, rule: _Rule, snapped: bool = False
 ) -> Geometry | None:
-    """A \\ B for (multi)polygons; None when empty."""
+    """The one binary overlay pipeline: snap scale, node both ways,
+    classify both ways, strict keeps, on-boundary keeps, stitch, rings
+    to polygons, then the coarse-grid retry (skipped when ``snapped``)."""
     pa, pb = _as_polys(a), _as_polys(b)
     if not pa:
         return None
     if not pb:
-        return a
-    snap = _op_snap([a, b])
-    ea = [e for p in pa for e in _poly_edges(p)]
-    eb = [e for p in pb for e in _poly_edges(p)]
-    na = _node_edges(ea, [eb], snap)
-    nb = _node_edges(eb, [ea], snap)
-    ca = _classify(na, b, snap)
-    cb = _classify(nb, a, snap)
-    keep: list[tuple[np.ndarray, np.ndarray]] = []
-    for (p, q), c in zip(na, ca):
-        if c == -1:
-            keep.append((p, q))
-    for (p, q), c in zip(nb, cb):
-        if c == 1:
-            keep.append((q, p))  # reversed: B boundary inside A bounds a hole
-    # shared boundary edges: A-edge on B's boundary. Keep it only when
-    # the A-interior side (left) is outside B: for a midpoint strictly
-    # off B's boundary that is exact point-in-polygon of the midpoint
-    # itself; for a bit-coincident midpoint it is anti-direction with
-    # the underlying B segment (interiors on opposite sides).
-    onb_a = [na[i] for i in np.nonzero(ca == 0)[0]]
-    kept_shared_a: list[tuple[np.ndarray, np.ndarray]] = []
-    coin_a, codir_a, in_a = _onb_verdict(onb_a, b, snap, other_edges=nb)
-    for (p, q), coin, cod, ins in zip(onb_a, coin_a, codir_a, in_a):
-        left_in_b = cod if coin else ins
-        if not left_in_b:
-            keep.append((p, q))
-            kept_shared_a.append((p, q))
-    # B-edges on A's boundary: the result can be bounded by B's own
-    # boundary inside a sub-tolerance strip (B's edge hugging A's edge
-    # from inside, classified 0 rather than 1). Keep reversed iff B's
-    # RIGHT side (its exterior) lies inside A — that is where A \ B
-    # lives: midpoint-in-A when strictly off A's boundary,
-    # anti-direction when coincident. Exact-shared duplicates collapse
-    # in _stitch; tolerance-zone double-keeps are removed by its
-    # degree repair.
-    onb_b = [nb[i] for i in np.nonzero(cb == 0)[0]]
-    kept_shared_b: list[tuple[np.ndarray, np.ndarray]] = []
-    coin_b, codir_b, in_b = _onb_verdict(onb_b, a, snap, other_edges=na)
-    for (p, q), coin, cod, ins in zip(onb_b, coin_b, codir_b, in_b):
-        right_in_a = (not cod) if coin else ins
-        if right_in_a:
-            keep.append((q, p))
-            kept_shared_b.append((q, p))
+        return a if rule.b_empty_keeps_a else None
+    ops = (a, b)
+    snap = _op_snap(ops)
+    edges = [[e for p in ps for e in _poly_edges(p)] for ps in (pa, pb)]
+    noded = [_node_edges(edges[i], [edges[1 - i]], snap) for i in (0, 1)]
+    cls = [_classify(noded[i], ops[1 - i], snap) for i in (0, 1)]
+    keep = [
+        (q, p) if rev else (p, q)
+        for (want, rev), side, c in zip(rule.sides, noded, cls)
+        for (p, q), ci in zip(side, c)
+        if ci == want
+    ]
+    seen = {(_key(p, snap), _key(q, snap)) for p, q in keep} if rule.dedupe else None
+    # edges on the other operand's boundary, in the off->0 limit: exact
+    # midpoint point-in-polygon when strictly off the other boundary,
+    # co-direction with the underlying segment when bit-coincident
+    # (interiors on the same side — the arrangement rule). B-edges
+    # hugging A's boundary from inside bound a sub-tolerance strip of
+    # the result; exact-shared duplicates collapse in _stitch and
+    # tolerance-zone double-keeps fall to its degree repair.
+    shared: tuple[list, list] = ([], [])
+    for i, (want, rev) in enumerate(rule.sides):
+        onb = [e for e, c in zip(noded[i], cls[i]) if c == 0]
+        if not onb:
+            continue
+        coin, cod, ins = _onb_verdict(onb, ops[1 - i], _seg_array(noded[1 - i]))
+        for (p, q), co, cd, n in zip(onb, coin, cod, ins):
+            if ((cd != rev) if co else n) != (want == 1):
+                continue
+            e = (q, p) if rev else (p, q)
+            if seen is not None:
+                k = (_key(e[0], snap), _key(e[1], snap))
+                if k in seen:
+                    continue
+                seen.add(k)
+            keep.append(e)
+            shared[i].append(e)
     rings, lost = _stitch(keep, snap)
-    result = _rings_to_polygons(rings, a.dims, snap)
-    if not _snapped:
-        # retry with exactly-coincident inputs when the boundary graph
-        # was classification-inconsistent (material edge loss) or the
-        # result violates A \ B <= A (double-counted near-duplicate
-        # rings survive the clean walk undetected)
-        aa = sum(_area_of(p) for p in pa)
-        bad = lost > _LOST_RETRY_FRAC or _area_of(result) > aa * (1 + 1e-7) + snap
-        # both shared-edge rules bounding the SAME tolerance strip
-        # double-subtract when each survives as a complete ring (e.g. a
-        # plug hugging a hole at sub-tolerance offset: A's hole ring
-        # AND B's reversed boundary both kept, co-directed, a few snap
-        # cells apart — complete cycles pass the clean fast-path walk,
-        # so neither dedup nor degree repair fires, and the result is
-        # SMALLER than A, which the area trigger above cannot see).
-        # Exactly-coincident pairs collapse in _stitch and are skipped.
-        if not bad and kept_shared_a and kept_shared_b:
-            bad = _codirected_near_duplicate(kept_shared_a, kept_shared_b, snap)
-        if bad:
-            grid = snap * 200
-            a2 = _snap_geometry(a, grid)
-            b2 = _snap_geometry(b, grid)
-            if a2 is None:
-                return None
-            if b2 is None:
-                return a2
-            return polygon_difference(a2, b2, _snapped=True)
-    return result
+    result = _rings_to_polygons(rings, snap)
+    if snapped:
+        return result
+    return _retry_on_coarse_grid(
+        result,
+        lost,
+        snap,
+        lambda: rule.bound(sum(_area_of(p) for p in pa), sum(_area_of(p) for p in pb)),
+        ops,
+        lambda g: _binary_overlay(g[0], g[1], rule, snapped=True),
+        suspect=lambda: rule.near_dup
+        and bool(shared[0] and shared[1])
+        and _codirected_near_duplicate(shared[0], shared[1], snap),
+    )
 
 
-def polygon_intersection(
-    a: Geometry, b: Geometry, _snapped: bool = False
-) -> Geometry | None:
-    pa, pb = _as_polys(a), _as_polys(b)
-    if not pa or not pb:
-        return None
-    snap = _op_snap([a, b])
-    ea = [e for p in pa for e in _poly_edges(p)]
-    eb = [e for p in pb for e in _poly_edges(p)]
-    na = _node_edges(ea, [eb], snap)
-    nb = _node_edges(eb, [ea], snap)
-    ca = _classify(na, b, snap)
-    cb = _classify(nb, a, snap)
-    keep = [(p, q) for (p, q), c in zip(na, ca) if c == 1]
-    keep += [(p, q) for (p, q), c in zip(nb, cb) if c == 1]
-    # co-directed shared edges count once. An A-edge on B's boundary
-    # bounds A ∩ B iff its left (A-interior) side is inside B: exact
-    # midpoint point-in-polygon when strictly off B's boundary,
-    # co-direction with the underlying B segment when bit-coincident
-    # (interiors on the same side — the arrangement rule).
-    seen = {(_key(p, snap), _key(q, snap)) for p, q in keep}
-    onb_a = [e for e, c in zip(na, ca) if c == 0]
-    coin_a, codir_a, in_a = _onb_verdict(onb_a, b, snap, other_edges=nb)
-    for (p, q), coin, cod, ins in zip(onb_a, coin_a, codir_a, in_a):
-        if (_key(p, snap), _key(q, snap)) in seen:
-            continue
-        if cod if coin else ins:
-            keep.append((p, q))
-            seen.add((_key(p, snap), _key(q, snap)))
-    # B-edges on A's boundary bounding a sub-tolerance strip of A ∩ B:
-    # keep as-is iff B's interior side (left) lies inside A — same
-    # limit rule against A. Mirrors the B-side rule in
-    # polygon_difference; duplicates cleaned by _stitch (key dedupe +
-    # degree repair).
-    onb_b = [e for e, c in zip(nb, cb) if c == 0]
-    coin_b, codir_b, in_b = _onb_verdict(onb_b, a, snap, other_edges=na)
-    for (p, q), coin, cod, ins in zip(onb_b, coin_b, codir_b, in_b):
-        if (_key(p, snap), _key(q, snap)) in seen:
-            continue
-        if cod if coin else ins:
-            keep.append((p, q))
-            seen.add((_key(p, snap), _key(q, snap)))
-    rings, lost = _stitch(keep, snap)
-    result = _rings_to_polygons(rings, a.dims, snap)
-    if not _snapped:
-        bound = min(sum(_area_of(p) for p in pa), sum(_area_of(p) for p in pb))
-        bad = lost > _LOST_RETRY_FRAC or _area_of(result) > bound * (1 + 1e-7) + snap
-        if bad:
-            grid = snap * 200
-            a2 = _snap_geometry(a, grid)
-            b2 = _snap_geometry(b, grid)
-            if a2 is None or b2 is None:
-                return None
-            return polygon_intersection(a2, b2, _snapped=True)
-    return result
+def polygon_difference(a: Geometry, b: Geometry) -> Geometry | None:
+    """A \\ B for (multi)polygons; None when empty."""
+    return _binary_overlay(a, b, _DIFFERENCE)
+
+
+def polygon_intersection(a: Geometry, b: Geometry) -> Geometry | None:
+    """A ∩ B for (multi)polygons; None when empty."""
+    return _binary_overlay(a, b, _INTERSECTION)
 
 
 def polygon_union(
@@ -1144,7 +1074,7 @@ def polygon_union(
                     seg_cache[j] = s if s is not None else False
                 segs = seg_cache[j]
                 if segs is not False:
-                    onb_j = _min_boundary_dist(mids, segs) <= snap * 10
+                    onb_j = _nearest_segment(mids, segs)[0] <= snap * 10
                 else:
                     onb_j = np.zeros(len(noded), dtype=bool)
                 pip_j = np.asarray(
@@ -1184,15 +1114,12 @@ def polygon_union(
                         covered[s] |= pip_j[k]
                 if sel:
                     if noded_segs[j] is None:
-                        noded_segs[j] = np.array(
-                            [np.concatenate(e) for e in noded_all[j]]
-                        )
+                        noded_segs[j] = _seg_array(noded_all[j])
                     sub = [noded[onb_idx[s]] for s in sel]
                     coin, cod, ins = _onb_verdict(
                         sub,
                         flat[j],
-                        snap,
-                        segs_arr=noded_segs[j],
+                        noded_segs[j],
                         inside=pip_j[[onb_idx[s] for s in sel]],
                     )
                     cov_sub = np.where(coin, ~cod, ins)
@@ -1205,18 +1132,17 @@ def polygon_union(
             if not inside_any[k] and not onb_any[k]:
                 keep.append((p1, p2))
     rings, lost = _stitch(keep, snap)
-    result = _rings_to_polygons(rings, flat[0].dims, snap)
-    if not _snapped:
-        bad = lost > _LOST_RETRY_FRAC
-        if not bad and result is not None:
-            bad = _area_of(result) > _hull_area(flat) * (1 + 1e-7) + snap
-        if bad:
-            grid = snap * 200
-            snapped = [g for g in (_snap_geometry(p, grid) for p in flat) if g is not None]
-            if not snapped:
-                return None
-            return polygon_union(snapped, _snapped=True)
-    return result
+    result = _rings_to_polygons(rings, snap)
+    if _snapped:
+        return result
+    return _retry_on_coarse_grid(
+        result,
+        lost,
+        snap,
+        lambda: _hull_area(flat),
+        flat,
+        lambda g: polygon_union(g, _snapped=True),
+    )
 
 
 def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
@@ -1315,7 +1241,7 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
         return True
 
     ok = _emit(vert, True) and _emit(horiz, False)
-    result = _rings_to_polygons(_stitch(keep)[0], flat[0].dims) if ok else None
+    result = _rings_to_polygons(_stitch(keep)[0]) if ok else None
     target = sum(polygon_area(p) for p in flat)
     if (
         result is None
@@ -1347,7 +1273,7 @@ def line_difference(
     noded = _node_edges(edges, [pedges])
     if not noded:
         return []
-    mids = np.array([(a + b) / 2 for a, b in noded])
+    mids = _midpoints(noded)
     inside = points_in_polygon(mids[:, 0], mids[:, 1], poly)
     outside = ~inside if keep_outside else inside
     chains: list[list[np.ndarray]] = []

@@ -51,7 +51,7 @@ import math
 import numpy as np
 
 from pygeoops_spark.geom.kernels import points_in_polygon, ring_signed_area
-from pygeoops_spark.geom.overlay import _key, _node_edges, _rings_to_polygons
+from pygeoops_spark.geom.overlay import _key, _node_edges
 from pygeoops_spark.geom.wkb import (
     Geometry,
     GEOMETRYCOLLECTION,
@@ -176,6 +176,9 @@ def make_valid(
         if len(parts) == 1:
             return parts[0]
         if all(p.type_id == POLYGON for p in parts):
+            if any(p.dims != parts[0].dims for p in parts):
+                # a repaired part came back 2-D: drop Z/M from all parts
+                parts = [Geometry(POLYGON, [r[:, :2] for r in p.data]) for p in parts]
             return multi(MULTIPOLYGON, parts)
         return multi(GEOMETRYCOLLECTION, parts)
     if t == LINESTRING:
@@ -233,7 +236,7 @@ def _make_valid_line(line: Geometry, keep_collapsed: bool = True) -> Geometry | 
     if len(uniq) >= 2:
         return line
     # ndarray payload (wkb_dumps packs point coords via .reshape)
-    return Geometry(POINT, arr[0].copy()) if keep_collapsed else None
+    return Geometry(POINT, arr[0].copy(), line.dims) if keep_collapsed else None
 
 
 def _loop_interior_point(loop: np.ndarray) -> np.ndarray:
@@ -455,6 +458,11 @@ def _make_valid_polygon(poly: Geometry, keep_collapsed: bool = True) -> Geometry
             ]
             if cand:
                 polys[min(cand, key=lambda i: shell_areas[i])].append(h)
+    dims = poly.dims
+    if any(r.shape[1] != poly.ndim for p in polys for r in p):
+        # repaired rings come back 2-D from the arrangement: drop Z/M
+        polys = [[r[:, :2] for r in p] for p in polys]
+        dims = "xy"
     if len(polys) == 1:
-        return Geometry(POLYGON, polys[0], poly.dims)
-    return multi(MULTIPOLYGON, [Geometry(POLYGON, p, poly.dims) for p in polys])
+        return Geometry(POLYGON, polys[0], dims)
+    return multi(MULTIPOLYGON, [Geometry(POLYGON, p, dims) for p in polys])

@@ -421,12 +421,6 @@ def _skip_ws(text: str, pos: int) -> int:
     return pos
 
 
-def _find_open(text: str, pos: int) -> int:
-    while text[pos] != "(":
-        pos += 1
-    return pos
-
-
 def _match_paren(text: str, open_pos: int) -> int:
     """Index of the ')' matching text[open_pos]=='('."""
     depth = 0

@@ -45,15 +45,10 @@ def get_spark(
         # M x R shuffle-block growth). 64m default rather than the
         # guide's 256m because the engine ships compact rows into
         # CPU-heavy Arrow kernels (AQE bytes are blind to kernel CPU —
-        # see CLAUDE.md skew note); raise via env for pure-ETL shuffles.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m"),
-        )
+        # see CLAUDE.md skew note); override via extra_conf for
+        # pure-ETL shuffles.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -427,10 +427,3 @@ def simhash_pairs(
         [sig],
     )
 
-
-def dedup_keep_first(
-    df: DataFrame, key: F.Column, id_col: str = "doc_id"
-) -> DataFrame:
-    """Generic survivor selection: first id per key (window, one shuffle)."""
-    w = Window.partitionBy(key).orderBy(F.col(id_col).asc())
-    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")

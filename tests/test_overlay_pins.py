@@ -1,0 +1,336 @@
+"""Byte-level pins for the overlay kernel (geom/overlay.py) and its
+callers.
+
+A seeded numpy corpus covering the shape families of
+tests/test_exact_oracle.py (box vs L-shape, convex pairs, parcel pairs
+under eps jitter, holed plugs, n-ary box unions, axis-aligned tile
+partitions, bowties, lines, the driver `difference` corpus) plus the
+retry-ladder counterexamples of tests/test_overlay.py is run through
+every overlay entry point. Each op is pinned by its case count and one
+sha256 over the concatenated result WKB, so any change to ring order,
+start vertex, part order or a single coordinate bit shows here.
+
+The exact-oracle tests grade areas; these pins grade bytes. A refactor
+of the overlay core must leave every digest unchanged.
+"""
+
+import hashlib
+import math
+
+import numpy as np
+import pytest
+
+from pygeoops_spark.geom import polygon
+from pygeoops_spark.geom.clip import clip_polygon_rect
+from pygeoops_spark.geom.difference import difference_all, difference_all_tiled
+from pygeoops_spark.geom.overlay import (
+    dissolve_partition,
+    line_difference,
+    line_intersection,
+    polygon_difference,
+    polygon_intersection,
+    polygon_union,
+)
+from pygeoops_spark.geom.validity import make_valid
+from pygeoops_spark.geom.wkb import LINESTRING, Geometry, wkb_dumps
+
+
+def _box(x0, y0, w, h):
+    return polygon([(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h)])
+
+
+def _rand_box(rng):
+    x0, y0 = (int(v) for v in rng.integers(0, 41, 2))
+    w, h = (int(v) for v in rng.integers(1, 16, 2))
+    return _box(x0, y0, w, h)
+
+
+def _l_shape(rng):
+    x0, y0 = (int(v) for v in rng.integers(0, 41, 2))
+    w, h = (int(v) for v in rng.integers(2, 13, 2))
+    nw, nh = int(rng.integers(1, w)), int(rng.integers(1, h))
+    return polygon(
+        [
+            (x0, y0),
+            (x0 + w, y0),
+            (x0 + w, y0 + nh),
+            (x0 + nw, y0 + nh),
+            (x0 + nw, y0 + h),
+            (x0, y0 + h),
+        ]
+    )
+
+
+def _convex(rng):
+    cx, cy = rng.integers(5, 36, 2)
+    k = int(rng.integers(3, 9))
+    rad = int(rng.integers(2, 10))
+    angles = np.sort(rng.uniform(0.0, 2 * np.pi - 1e-3, k))
+    return polygon([(cx + rad * np.cos(t), cy + rad * np.sin(t)) for t in angles])
+
+
+def _parcel_pair(rng, eps, offset=0.0):
+    w, h = (int(v) for v in rng.integers(6, 21, 2))
+    cut1, cut2 = (int(v) for v in rng.integers(1, w, 2))
+    d = eps * float(rng.choice([-1.0, 1.0]))
+    a = [(0, 0), (cut1, 0), (cut2, h), (0, h)]
+    b = [(cut1 + d, 0.0), (w, 0.0), (w, h), (cut2 + d, float(h))]
+    return tuple(
+        polygon([(x + offset, y + offset) for x, y in ring]) for ring in (a, b)
+    )
+
+
+def _holed_plug(rng, eps):
+    w, h = (int(v) for v in rng.integers(8, 21, 2))
+    hx, hy = int(rng.integers(2, w - 4)), int(rng.integers(2, h - 4))
+    hw, hh = int(rng.integers(2, w - hx - 1)), int(rng.integers(2, h - hy - 1))
+    d = eps * float(rng.choice([-1.0, 1.0]))
+    holed = polygon(
+        [(0, 0), (w, 0), (w, h), (0, h)],
+        holes=[[(hx, hy), (hx + hw, hy), (hx + hw, hy + hh), (hx, hy + hh)]],
+    )
+    plug = polygon(
+        [
+            (hx + d, hy + d),
+            (hx + hw - d, hy + d),
+            (hx + hw - d, hy + hh - d),
+            (hx + d, hy + hh - d),
+        ]
+    )
+    return holed, plug
+
+
+def _pie_slices(n, eps):
+    cx, cy, r = 10.0, 10.0, 5.0
+    out = []
+    for k in range(n):
+        a0, a1 = 2 * math.pi * k / n, 2 * math.pi * (k + 1) / n
+        c = (cx + (k % 3 - 1) * eps, cy + (k % 2) * eps)
+        out.append(
+            polygon(
+                [
+                    c,
+                    (cx + r * math.cos(a0), cy + r * math.sin(a0)),
+                    (cx + r * math.cos(a1), cy + r * math.sin(a1)),
+                ]
+            )
+        )
+    return out
+
+
+def _pairs():
+    """(A, B) operand pairs for the binary polygon ops."""
+    rng = np.random.default_rng(20261017)
+    pairs = [(_rand_box(rng), _l_shape(rng)) for _ in range(60)]
+    pairs += [(_convex(rng), _convex(rng)) for _ in range(60)]
+    for eps in (0.0, 1e-12, 1e-9, 1e-7):
+        pairs += [_parcel_pair(rng, eps) for _ in range(12)]
+        pairs += [_parcel_pair(rng, eps, offset=5e5) for _ in range(4)]
+        pairs += [_holed_plug(rng, eps) for _ in range(10)]
+    for eps in (0.0, 1e-9, 1e-8, 1e-7):
+        a = polygon([(0, 0), (7, 0), (9, 6), (2, 8)])
+        b = polygon([(eps, 0), (7, -eps), (9 - eps, 6), (2, 8 + eps)])
+        pairs.append((a, b))
+    for n, eps in ((6, 1e-9), (6, 1e-7), (12, 1e-7)):
+        s = _pie_slices(n, eps)
+        pairs.append((s[0], polygon_union(s[1:])))
+    # near-identical triangles: the jitter that sends intersection and
+    # union onto the coarse-grid retry
+    for eps in (2e-8, 3e-8, 4e-8):
+        for _ in range(40):
+            pts = rng.uniform(0, 40, (3, 2))
+            pairs.append((polygon(pts), polygon(pts + rng.uniform(-eps, eps, pts.shape))))
+    # both operand orders: the two rules of each op are not symmetric
+    return pairs + [(b, a) for a, b in pairs]
+
+
+def _union_sets():
+    rng = np.random.default_rng(7)
+    sets = [[_rand_box(rng) for _ in range(int(rng.integers(2, 5)))] for _ in range(40)]
+    sets += [[a, b] for a, b in _pairs()]
+    sets += [_pie_slices(n, eps) for n, eps in ((4, 0.0), (6, 1e-9), (8, 1e-7))]
+    # three jittered copies of one polygon: the n-ary retry trigger
+    for eps in (1e-8, 2e-8):
+        for _ in range(20):
+            pts = np.asarray(_convex(rng).data[0])[:-1]
+            sets.append(
+                [polygon(pts)]
+                + [polygon(pts + rng.uniform(-eps, eps, pts.shape)) for _ in range(2)]
+            )
+    return sets
+
+
+def _tile_partitions():
+    """Interior-disjoint tile pieces of one polygon, cut on an
+    axis-aligned grid (the shape subdivide + per-tile difference
+    produces)."""
+    rng = np.random.default_rng(3)
+    out = []
+    for i in range(30):
+        g = _l_shape(rng) if i % 2 else _convex(rng)
+        xs = np.asarray(g.data[0])[:, 0]
+        ys = np.asarray(g.data[0])[:, 1]
+        nx, ny = int(rng.integers(2, 5)), int(rng.integers(2, 5))
+        gx = np.linspace(xs.min() - 0.5, xs.max() + 0.5, nx + 1)
+        gy = np.linspace(ys.min() - 0.5, ys.max() + 0.5, ny + 1)
+        pieces = [
+            clip_polygon_rect(g, gx[c], gy[r], gx[c + 1], gy[r + 1])
+            for c in range(nx)
+            for r in range(ny)
+        ]
+        out.append([p for p in pieces if p is not None])
+    # not partitions: overlapping pieces take the polygon_union fallback
+    out += [[_rand_box(rng) for _ in range(3)] for _ in range(10)]
+    out.append([_box(0, 0, 4, 4), _box(0, 0, 4, 4)])
+    out.append([polygon([(0, 0), (4, 0), (0, 4)]), polygon([(4, 0), (4, 4), (0, 4)])])
+    return out
+
+
+def _bowties():
+    rng = np.random.default_rng(5)
+    out = [
+        polygon([(0, 0), (4, 4), (4, 0), (0, 4)]),
+        polygon([(0, 0), (10, 0), (10, 10), (0, 10)], holes=[[(2, 2), (8, 8), (8, 2), (2, 8)]]),
+    ]
+    for _ in range(40):
+        k = int(rng.integers(4, 9))
+        out.append(polygon([tuple(p) for p in rng.integers(0, 20, (k, 2)).astype(float)]))
+    return out
+
+
+def _lines():
+    rng = np.random.default_rng(9)
+    out = []
+    for i in range(60):
+        poly = _l_shape(rng) if i % 2 else _convex(rng)
+        k = int(rng.integers(2, 5))
+        line = rng.integers(-5000, 45001, (k, 2)) / 1000 + 0.0002718
+        out.append((line, poly))
+    holed = polygon(
+        [(0, 0), (10, 0), (10, 10), (0, 10)], holes=[[(4, 4), (6, 4), (6, 6), (4, 6)]]
+    )
+    out.append((np.array([(-1.0, -1.0), (11.0, 11.0)]), holed))
+    out.append((np.array([(-5.0, 5.0), (15.0, 5.0)]), _box(0, 0, 10, 10)))
+    return out
+
+
+def _driver_difference_corpus():
+    out = []
+    for zid in range(64):
+        zcol, zrow = zid % 8, zid // 8
+        x0 = zcol * 125 + (zid * 37) % 20 - 10.0
+        y0 = zrow * 125 + (zid * 53) % 20 - 10.0
+        x1 = x0 + 100 + (zid * 29) % 40
+        y1 = y0 + 100 + (zid * 41) % 40
+        zone = polygon([(x0, y0), (x1, y0), (x1, y1), (x0, y1)])
+        out.append((zone, [_box(x0 + 10, y0 + 10, 20, 20), _box(x1 - 30, y1 - 30, 20, 20)]))
+        out.append(
+            (
+                zone,
+                [
+                    polygon([(x0, y0), (x0 + 20, y0), (x0 + 20, y1), (x0, y1)]),
+                    polygon([(x1 - 40, y0), (x1, y0), (x1 - 1e-9, y0 + 30)]),
+                ],
+            )
+        )
+    return out
+
+
+def _tiled_cases():
+    rng = np.random.default_rng(13)
+    out = []
+    for _ in range(10):
+        k = 40
+        ang = np.sort(rng.uniform(0, 2 * np.pi, k))
+        rad = rng.uniform(6, 10, k)
+        g = polygon([(20 + r * np.cos(t), 20 + r * np.sin(t)) for r, t in zip(rad, ang)])
+        out.append((g, [_convex(rng), _rand_box(rng)]))
+    return out
+
+
+def _enc(result) -> bytes:
+    if result is None:
+        return b"None;"
+    if isinstance(result, list):
+        return b"".join(wkb_dumps(Geometry(LINESTRING, np.asarray(c))) for c in result) + b";"
+    return wkb_dumps(result) + b";"
+
+
+def _cases(op: str) -> list:
+    if op == "polygon_difference":
+        return [lambda a=a, b=b: polygon_difference(a, b) for a, b in _pairs()]
+    if op == "polygon_intersection":
+        return [lambda a=a, b=b: polygon_intersection(a, b) for a, b in _pairs()]
+    if op == "polygon_union":
+        return [lambda s=s: polygon_union(s) for s in _union_sets()]
+    if op == "dissolve_partition":
+        return [lambda s=s: dissolve_partition(s) for s in _tile_partitions()]
+    if op == "make_valid":
+        return [lambda g=g: make_valid(g) for g in _bowties()]
+    if op == "line_difference":
+        return [lambda ln=ln, p=p: line_difference(ln, p) for ln, p in _lines()]
+    if op == "line_intersection":
+        return [lambda ln=ln, p=p: line_intersection(ln, p) for ln, p in _lines()]
+    if op == "difference_all":
+        return [lambda z=z, s=s: difference_all(z, s) for z, s in _driver_difference_corpus()]
+    if op == "difference_all_tiled":
+        return [
+            lambda g=g, s=s: difference_all_tiled(g, s, subdivide_coords=12)
+            for g, s in _tiled_cases()
+        ]
+    raise KeyError(op)
+
+
+# (case count, sha256 over the concatenated result WKB), recorded on
+# the tree before the overlay core was factored out of the ops
+PINS = {
+    "polygon_difference": (
+        702,
+        "70e5fae3ea9c861746a36061b708359db0a454e34ae8f32160bcc36f6934224c",
+    ),
+    "polygon_intersection": (
+        702,
+        "6b0c74437baaffefc360ea15ca3cd0e84199e5c0b673e10b1d92c2eb30996a10",
+    ),
+    "polygon_union": (
+        785,
+        "79fb061a350478099d5f9936039b20e34841a20841cd32c45170fafb00dd5c30",
+    ),
+    "dissolve_partition": (
+        42,
+        "5485b0cfc4aea611fef63b427ef0e823793ba65175827baea88aed33e4df434e",
+    ),
+    "make_valid": (
+        42,
+        "b0679f51ce66d3d953c11181fa6d3d91bdffddb9c364f9ab55caca864efc609e",
+    ),
+    "line_difference": (
+        62,
+        "c010a67de015d2829425493ebbf3f99127f2a75dd8da69461afba3c7337f677a",
+    ),
+    "line_intersection": (
+        62,
+        "97c0fc30fade4cdf31bddd74eb92227f4ac82001460847679d5a12cb2e6cdeb6",
+    ),
+    "difference_all": (
+        128,
+        "e8cd477208d9bb09274a352480591cd5a09ac8f5d88e93796fde3f6b20817622",
+    ),
+    "difference_all_tiled": (
+        10,
+        "d8dc6c9d86696c487db6d3b9fd34e19c2de7c1b307a446ee1709d2498bb3f303",
+    ),
+}
+
+
+def _digest(op: str) -> tuple[int, str]:
+    cases = _cases(op)
+    h = hashlib.sha256()
+    for run in cases:
+        h.update(_enc(run()))
+    return len(cases), h.hexdigest()
+
+
+@pytest.mark.parametrize("op", sorted(PINS))
+def test_overlay_result_bytes_pinned(op):
+    assert _digest(op) == PINS[op]
