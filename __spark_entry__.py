@@ -1429,9 +1429,8 @@ def _q_geodesic_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # level=None → auto level 2 (45-degree cells) for the 16-hub
     # target density (auto_level_knn over the geographic scheme; pinned by
-    # tests/test_auto_level.py): most probes resolve at radius 1-2 and
-    # the doubling recursion exact-stops at radius 4 = nlat (measured
-    # 3.6 s vs 7.4 s at level 3)
+    # tests/test_auto_level.py); 16 targets fit the radius-1 ring's
+    # capacity 3 * 9, so the exact call takes the brute-force escape
     out = geodesic_knn_join(
         probes, targets, "pid", "tid", k=3, level=None, radius=1,
         guarantee_exact=True,

@@ -59,12 +59,13 @@ def cell_size(level: int) -> float:
 
 
 def cell_coord(v: Column | str, level: int) -> Column:
-    """Integer cell coordinate along one axis, clamped to the world."""
+    """Integer cell coordinate along one axis, clamped to the world; null
+    for a null coordinate (``greatest``/``least`` alone skip nulls)."""
     v = _col(v)
     n = 1 << level
     s = cell_size(level)
     ix = F.floor((v - F.lit(WORLD_MIN)) / F.lit(s)).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), ix))
+    return F.when(ix.isNotNull(), F.greatest(F.lit(0), F.least(F.lit(n - 1), ix)))
 
 
 def cell_id(x: Column | str, y: Column | str, level: int) -> Column:
@@ -99,16 +100,17 @@ def _block(ix0: Column, ix1: Column, iy0: Column, iy1: Column, level: int) -> Co
     )
 
 
-def ring_cells(x: Column | str, y: Column | str, level: int, radius: int) -> Column:
+def ring_cells(x: Column | str, y: Column | str, level: int, radius: int | Column) -> Column:
     """Array of cell ids in the (2r+1)^2 Chebyshev neighborhood of the
-    point's cell, clamped to the world — the kNN candidate generator."""
+    point's cell, clamped to the world — the kNN candidate generator.
+    ``radius`` may be a per-row Column; a null coordinate gives null."""
     n = 1 << level
     ix, iy = cell_coord(x, level), cell_coord(y, level)
     lo = F.lit(0)
     hi = F.lit(n - 1)
     ix0, ix1 = F.greatest(lo, ix - radius), F.least(hi, ix + radius)
     iy0, iy1 = F.greatest(lo, iy - radius), F.least(hi, iy + radius)
-    return _block(ix0, ix1, iy0, iy1, level)
+    return F.when(ix.isNotNull() & iy.isNotNull(), _block(ix0, ix1, iy0, iy1, level))
 
 
 def parent_cell(cell: Column | str, level: int) -> Column:
@@ -153,7 +155,7 @@ def geo_cell_ix(lon: Column | str, level: int) -> Column:
     nlon, _ = _ncells(level)
     step = 360.0 / nlon
     ix = F.floor(F.pmod(lon + F.lit(180.0), F.lit(360.0)) / F.lit(step)).cast("long")
-    return F.least(F.lit(nlon - 1), ix)
+    return F.when(ix.isNotNull(), F.least(F.lit(nlon - 1), ix))
 
 
 def geo_cell_iy(lat: Column | str, level: int) -> Column:
@@ -162,7 +164,7 @@ def geo_cell_iy(lat: Column | str, level: int) -> Column:
     _, nlat = _ncells(level)
     step = 180.0 / nlat
     iy = F.floor((lat + F.lit(90.0)) / F.lit(step)).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit(nlat - 1), iy))
+    return F.when(iy.isNotNull(), F.greatest(F.lit(0), F.least(F.lit(nlat - 1), iy)))
 
 
 def geo_cell_id(lon: Column | str, lat: Column | str, level: int) -> Column:
@@ -178,12 +180,13 @@ def _ring_rows(iy: Column, nlat: int, radius: int) -> tuple[Column, Column, Colu
 
 
 def geo_ring_cells(
-    lon: Column | str, lat: Column | str, level: int, radius: int
+    lon: Column | str, lat: Column | str, level: int, radius: int | Column
 ) -> Column:
     """Array of candidate cell ids around the point's cell: +-radius
     latitude rows, each widened in longitude by rx = ceil(radius /
     cos(extreme row latitude)) with date-line wrap; full-wrap rows when
-    the ring touches a pole.  Pure SQL (codegen)."""
+    the ring touches a pole.  Pure SQL (codegen). ``radius`` may be a
+    per-row Column; a null coordinate gives null."""
     lon, lat = _col(lon), _col(lat)
     nlon, nlat = _ncells(level)
     dlat = 180.0 / nlat
@@ -200,14 +203,15 @@ def geo_ring_cells(
         rx = F.when(
             touches_pole | (cos_min <= F.lit(1e-12)), F.lit(half)
         ).otherwise(
-            F.least(F.lit(half), F.ceil(F.lit(float(radius)) / cos_min).cast("int"))
+            F.least(F.lit(half), F.ceil(F.lit(radius).cast("double") / cos_min).cast("int"))
         )
         return F.transform(
             F.sequence(-rx, rx),
             lambda dx: F.pmod(ix + dx, F.lit(nlon)) * F.lit(nlat) + iyr,
         )
 
-    return F.array_distinct(F.flatten(F.transform(F.sequence(iy0, iy1), row_cells)))
+    cells = F.array_distinct(F.flatten(F.transform(F.sequence(iy0, iy1), row_cells)))
+    return F.when(ix.isNotNull() & iy.isNotNull(), cells)
 
 
 def geo_cover_cells_bbox(
@@ -279,11 +283,11 @@ class CellScheme:
         per axis (planar) or latitude rows (geographic)."""
         return radius >= (1 << level)
 
-    def safe_radius(self, level: int, radius: int, x: str, y: str) -> float | Column:
+    def safe_radius(self, level: int, radius: int | Column, x: str, y: str) -> float | Column:
         """Lower bound on the distance from the probe at (x, y) to any
         target OUTSIDE its ring — the k-th neighbour is exact within it.
         Planar: the inradius of the ring box from the probe's own cell."""
-        return float(radius) * cell_size(level)
+        return radius * cell_size(level)
 
     def zone_cover(self, level: int) -> Column:
         """Cover of a PIP zone's bbox columns."""
@@ -417,9 +421,9 @@ def auto_level_knn(
     """Coarsest level whose initial (2r+1)^2 ring window holds ≥ k
     targets in expectation (``scheme.n_cells(L)`` ≤ n_targets*(2r+1)^2/k,
     floored, so the expectation is a guarantee, not a coin flip) —
-    too-fine grids multiply whole-join ring-expansion passes (measured
-    2x on the 16-hub geographic driver shape: level 2 beats level 3).
-    Reproduces the hand-picked geographic level 2 for 16 hubs at k=3,
-    radius=1."""
+    too-fine grids leave more probes short of k or outside their first
+    ring's safe radius, so more of them take the wider second pass or
+    the brute force. Reproduces the hand-picked geographic level 2 for
+    16 hubs at k=3, radius=1."""
     w = (2 * radius + 1) ** 2
     return max(lo, min(scheme.max_level, int(_raw_level(n_targets * w / max(1, k), scheme))))

@@ -10,7 +10,9 @@ the same ring-expansion core over the lon/lat ``GeoScheme``
   distance is below a lower bound on the distance to anything OUTSIDE
   the covered region (``GeoScheme.safe_radius``: latitude-circle and
   meridian edges of the guaranteed-covered sub-box).  Probes that fail
-  re-run with doubled radius, exactly like the planar knn_join.
+  at the initial radius re-join once at the smallest doubled radius
+  whose bound holds their pass-1 k-th distance, chosen per probe in
+  SQL, exactly like the planar knn_join.
 * **Spheroid mode**: ranking by the true WGS84 geodesic (Arrow-batched
   kernel, geom/geodesic.py) keeps the sphere-based bound valid via a
   conservative shrink: s_ellipsoid >= (1-f) * (s_sphere(a) - 2 a f)
@@ -60,14 +62,13 @@ def geodesic_knn_join(
     spheroid: bool = False,
     a: float | None = None,
     f: float | None = None,
-    _caches: list | None = None,
 ) -> DataFrame:
     """Top-k nearest targets per probe by great-circle (default) or
     true WGS84 geodesic (``spheroid=True``) distance; deterministic
     tie-break on target key.
 
     Output: probe columns + ``<target_key>_nn`` + ``dist_m`` + ``knn_rank``.
-    Cache lifecycle: see join/knn.py:_knn.
+    Exactness passes and cache lifecycle: see join/knn.py:_knn.
     """
     from pygeoops_spark.geom.geodesic import WGS84_A, WGS84_F
 
@@ -86,5 +87,4 @@ def geodesic_knn_join(
     return _knn(
         scheme, probes, targets, probe_key, target_key, k, level, radius,
         (plon, plat), (tlon, tlat), broadcast_targets, guarantee_exact, dist, "dist_m",
-        _caches,
     )

@@ -9,18 +9,24 @@ are cell ids (candidate join) and probe ids (top-k) — both well
 distributed when salting is applied to hotspots; AQE skew-join covers
 the rest.
 
-Exactness: ring radius r is exact iff the k-th neighbor lies within the
-scheme's safe radius of the probe (planar: r * cell_size Chebyshev
-distance of the probe's cell); ``guarantee_exact`` verifies via that
-guaranteed lower bound and re-queries stragglers at a doubled radius
-(driver-side loop over a shrinking probe set — the distributed analog
-of iterative ring expansion).
+Exactness (``guarantee_exact``) takes a fixed number of passes whatever
+the density skew, after the two-job distance-bound kNN join of Lu et
+al., *Efficient Processing of k Nearest Neighbor Joins using MapReduce*
+(PVLDB 2012). Pass 1, the ring at the initial radius, gives each probe
+an upper bound ``_kth`` on its k-th distance. A ring of radius r holds
+every target closer than the scheme's safe radius (planar: r * cell
+size), so one SQL expression over the doubling radii picks per probe the
+smallest ring that provably holds its k nearest; pass 2 re-joins only
+the probes that need a wider ring than the first, with that per-probe
+radius. Probes short of k candidates take the brute-force pass. Rows
+with a null coordinate take no part on either side.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -43,109 +49,96 @@ def _rank(cand, probes, probe_key, target_key, k, p, t, dist: Dist, dist_col):
     )
 
 
+def _target_cols(scheme: CellScheme, target_key: str, t: tuple[str, str]):
+    """(alias names, columns) of the target key and coordinates."""
+    ta = tuple("_t" + ax for ax in scheme.axes)
+    cols = [F.col(target_key).alias("_tkey"), F.col(t[0]).alias(ta[0]), F.col(t[1]).alias(ta[1])]
+    return ta, cols
+
+
+def _brute(scheme, probes, targets, probe_key, target_key, k, p, t, dist, dist_col):
+    """Exact top-k of ``probes`` over every target: the broadcast cross
+    join, ranked like the ring path. Null-coordinate rows take no part."""
+    ta, tsel = _target_cols(scheme, target_key, t)
+    ts = targets.dropna(subset=list(t)).select(*tsel)
+    cand = probes.dropna(subset=list(p)).crossJoin(F.broadcast(ts))
+    return _rank(cand, probes, probe_key, target_key, k, p, ta, dist, dist_col)
+
+
+def _escape(n_targets: int, k: int, radius: int, scheme: CellScheme, level: int) -> bool:
+    """Whether an exact kNN takes the brute force outright: the target
+    table is no bigger than the initial ring's own capacity (k targets
+    per cell x (2r+1)^2 cells — the occupancy auto_level_knn aims the
+    ring at), so cell pruning cannot pay for the exactness passes, or
+    the initial ring already holds the whole grid."""
+    return n_targets <= k * (2 * radius + 1) ** 2 or scheme.ring_covers_grid(level, radius)
+
+
 def _knn(
     scheme: CellScheme, probes: DataFrame, targets: DataFrame, probe_key: str,
     target_key: str, k: int, level: int | None, radius: int, p: tuple[str, str],
     t: tuple[str, str], broadcast_targets: bool, guarantee_exact: bool, dist: Dist,
-    dist_col: str, _caches: list | None = None,
+    dist_col: str,
 ) -> DataFrame:
     """The ring-expansion core. ``dist`` maps (probe x, probe y, target
     x, target y) columns to the ranking distance named ``dist_col``.
 
-    Cache lifecycle (guarantee_exact): every radius-doubling level
-    persists its probes x k `ranked` frame for the exactness check; the
-    TOP-level call hands the final union and every level's cache to
-    session.py:checkpoint_and_release, so repeated exact kNN joins in a
-    long session no longer accumulate storage.
+    Exact calls persist pass 1 once and hand the union of the passes
+    with that cache to session.py:checkpoint_and_release. Probes short
+    of k ring candidates scan the whole target set through a broadcast,
+    also under ``broadcast_targets=False``.
     """
-    ta = tuple("_t" + ax for ax in scheme.axes)
-    tsel = [F.col(target_key).alias("_tkey"), F.col(t[0]).alias(ta[0]), F.col(t[1]).alias(ta[1])]
-    n_targets = None
+    if radius < 0:
+        raise ValueError(f"radius must be >= 0, got {radius}")
+    args = (probe_key, target_key, k, p, t, dist, dist_col)
+    n_targets = targets.count() if level is None or guarantee_exact else None
     if level is None:
-        n_targets = targets.count()
         level = auto_level_knn(n_targets, k, radius, scheme)
-    top_level = _caches is None
-    if _caches is None:
-        _caches = []
+    if guarantee_exact and _escape(n_targets, k, radius, scheme, level):
+        return _brute(scheme, probes, targets, *args)
 
-    # Brute-force escape (r07, guide §1.2 "remove unnecessary passes"):
-    # when the target table is no bigger than the initial ring's own
-    # capacity (k targets per cell x (2r+1)^2 cells — the occupancy
-    # auto_level_knn aims the ring at), cell pruning cannot drop more
-    # than a small constant factor of candidates per probe, while the
-    # exactness machinery still costs a persist, a kth-distance
-    # aggregate, an isEmpty() action and possibly whole re-join passes
-    # at doubled radius PER LEVEL. The broadcast cross join computes
-    # the identical top-k (same distance expression, same tie-break)
-    # in one window pass regardless of probe count, so the trade is
-    # probe-scale-independent. Only taken under guarantee_exact —
-    # without it the ring join's approximate candidate set is the
-    # documented semantics and must stay.
-    if top_level and guarantee_exact:
-        if n_targets is None:
-            n_targets = targets.count()
-        if n_targets <= k * (2 * radius + 1) ** 2:
-            cand = probes.crossJoin(F.broadcast(targets.select(*tsel)))
-            return _rank(cand, probes, probe_key, target_key, k, p, ta, dist, dist_col)
-
-    def _finish(df: DataFrame) -> DataFrame:
-        return checkpoint_and_release(df, _caches) if top_level else df
-
+    ta, tsel = _target_cols(scheme, target_key, t)
     tc = targets.select(*tsel, scheme.cell_id(t[0], t[1], level).alias("_cell"))
     if broadcast_targets:
         tc = F.broadcast(tc)
-    pc = probes.withColumn("_cell", F.explode(scheme.ring(p[0], p[1], level, radius)))
-    cand = pc.join(tc, "_cell").drop("_cell")
-    ranked = _rank(cand, probes, probe_key, target_key, k, p, ta, dist, dist_col)
-    if not guarantee_exact:
-        return _finish(ranked)
-    if scheme.ring_covers_grid(level, radius):
-        # the ring already covers the whole grid: candidates were ALL
-        # targets, so `ranked` is exact (probes still short of k rows
-        # genuinely have fewer than k targets in existence)
-        return _finish(ranked)
-    # Exactness check: k-th distance must be <= the scheme's safe
-    # radius. Probes failing it re-run with doubled radius.
-    # `ranked` is persisted first: it is only probes x k rows (the
-    # candidate explosion and window are already reduced), but the
-    # check's isEmpty() action and the final output would otherwise
-    # both recompute that expensive plan from scratch. The handle is
-    # collected in _caches and unpersisted by the top-level _finish
-    # once the final result is checkpointed.
-    from pyspark import StorageLevel
 
+    def ring_rank(pr: DataFrame, r: int | Column) -> DataFrame:
+        cand = pr.withColumn("_cell", F.explode(scheme.ring(p[0], p[1], level, r)))
+        cand = cand.join(tc, "_cell").drop("_cell")
+        return _rank(cand, probes, probe_key, target_key, k, p, ta, dist, dist_col)
+
+    ranked = ring_rank(probes, radius)
+    if not guarantee_exact:
+        return ranked
     ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
-    _caches.append(ranked)
-    kth = ranked.groupBy(probe_key).agg(
-        F.max(dist_col).alias("_kth"), F.count("*").alias("_n")
-    )
+    kth = ranked.groupBy(probe_key).agg(F.max(dist_col).alias("_kth"), F.count("*").alias("_n"))
+    # _need: the smallest ring of the doubling ladder whose safe radius
+    # holds the pass-1 k-th distance (radius itself: pass 1 is exact);
+    # null when pass 1 found fewer than k candidates or no ring below
+    # the whole grid suffices — those probes take the brute force. The
+    # safe radius sits once in a lambda over the ladder: the geographic
+    # one is ~420 expression nodes, so one copy per rung would grow the
+    # plan with the ladder
+    ladder = [radius]
+    while not scheme.ring_covers_grid(level, max(1, 2 * ladder[-1])):
+        ladder.append(max(1, 2 * ladder[-1]))
     pa = tuple("_p" + ax for ax in scheme.axes)
-    safe = scheme.safe_radius(level, radius, *pa)
-    checked = kth
-    if isinstance(safe, Column):
-        # a per-probe bound: attach it to the probe's kth row
-        pk = probes.select(
-            probe_key, F.col(p[0]).alias(pa[0]), F.col(p[1]).alias(pa[1])
-        ).select(probe_key, safe.alias("_safe"))
-        checked, safe = kth.join(pk, probe_key), F.col("_safe")
-    bad = checked.where((F.col("_kth") > safe) | (F.col("_n") < k)).select(probe_key)
-    # probes whose initial ring held ZERO candidates never appear in
-    # `ranked`/`kth` at all — they are also inexact and must be
-    # re-queried at the doubled radius (ADVICE r01)
-    missing = probes.select(probe_key).join(
-        kth.select(probe_key), probe_key, "left_anti"
+    fits = F.filter(
+        F.array(*map(F.lit, ladder)),
+        lambda r: F.col("_kth") <= scheme.safe_radius(level, r, *pa),
     )
-    bad = bad.unionByName(missing)
-    if bad.isEmpty():
-        return _finish(ranked)
-    good = ranked.join(bad, probe_key, "left_anti")
-    redo = probes.join(bad, probe_key, "left_semi")
-    return _finish(good.unionByName(
-        _knn(
-            scheme, redo, targets, probe_key, target_key, k, level, radius * 2,
-            p, t, broadcast_targets, True, dist, dist_col, _caches,
-        )
-    ))
+    tagged = (
+        probes.select(probe_key, F.col(p[0]).alias(pa[0]), F.col(p[1]).alias(pa[1]))
+        .join(kth, probe_key, "left")
+        .select(probe_key, F.when(F.col("_n") >= k, F.array_min(fits)).alias("_need"))
+    )
+    tag = F.col("_need")
+    done = ranked.join(tagged.where(tag == radius), probe_key, "left_semi")
+    wide = ring_rank(probes.join(tagged.where(tag > radius), probe_key), tag)
+    short = _brute(
+        scheme, probes.join(tagged.where(tag.isNull()), probe_key, "left_semi"), targets, *args
+    )
+    return checkpoint_and_release(done.unionByName(wide).unionByName(short), [ranked])
 
 
 def _euclid(px: Column, py: Column, tx: Column, ty: Column) -> Column:
@@ -168,15 +161,13 @@ def knn_join(
     ty: str = "y",
     broadcast_targets: bool = True,
     guarantee_exact: bool = False,
-    _caches: list | None = None,
 ) -> DataFrame:
     """Top-k nearest targets per probe (Euclidean), deterministic
     tie-break on target key. Output: probe columns + target_key + dist + knn_rank.
-    Cache lifecycle: see _knn (``_caches`` marks a non-top-level call)."""
+    Exactness passes and cache lifecycle: see _knn."""
     return _knn(
         PLANAR, probes, targets, probe_key, target_key, k, level, radius,
         (px, py), (tx, ty), broadcast_targets, guarantee_exact, _euclid, "dist",
-        _caches,
     )
 
 
@@ -193,12 +184,6 @@ def knn_join_bruteforce(
 ) -> DataFrame:
     """Exact baseline: broadcast cross join + window. Only for small
     target sets / correctness oracles."""
-    t = F.broadcast(
-        targets.select(
-            F.col(target_key).alias("_tkey"), F.col(tx).alias("_tx"), F.col(ty).alias("_ty")
-        )
-    )
-    return _rank(
-        probes.crossJoin(t), probes, probe_key, target_key, k,
-        (px, py), ("_tx", "_ty"), _euclid, "dist",
+    return _brute(
+        PLANAR, probes, targets, probe_key, target_key, k, (px, py), (tx, ty), _euclid, "dist"
     )

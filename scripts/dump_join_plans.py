@@ -13,6 +13,10 @@ It dumps:
   flagship ``entry`` frame, and the joined frame of the perfbench
   ``pip_tile`` op (``pip_join_polygons(level=None, ship="auto")`` over
   its seeded inputs);
+- the kNN ring path on the two ring shapes of tests/test_join_jobs.py
+  (planar 300 x 200, geographic 200 x 120, k=3, level=None), each
+  without (``*_approx``) and with (``*_exact``) ``guarantee_exact`` —
+  the ``knn_join`` and ``geodesic_knn`` queries take the brute-force escape;
 - the similarity driver queries jaccard_pairs, minhash_lsh, simhash,
   ann_cosine, ann_lsh, ann_ivf and dedup_embedding, ``simhash_pairs``
   over the same documents, the two ANN operators behind ann_ivf
@@ -28,7 +32,8 @@ receives, as ``<frame>_ckpt<i>``. Compare ignores RDD ids too: the
 plans of checkpointed and driver-built frames name their source RDD by
 a session-wide counter.  It prints the Spark jobs each
 frame's construction started (auto level, auto ship, the kNN exactness
-actions, the checkpoints) and each frame's row count.
+actions, the checkpoints), each frame's row count, and the size in
+characters of the analyzed plan of each frame and checkpointed frame.
 
 Run:  PYTHONPATH=<tree> python scripts/dump_join_plans.py dump <tree> <out_dir> <tag>
       python scripts/dump_join_plans.py compare <out_dir> <tag_a> <tag_b>
@@ -69,6 +74,10 @@ def _plan(df, tmp: str) -> str:
     return plan.replace(tmp, "<tmp>").replace(SF_DIR, "<sf_dir>")
 
 
+def _analyzed_chars(df) -> int:
+    return len(df._jdf.queryExecution().analyzed().toString())
+
+
 def _wrap_checkpoints(captured: list, tmp: str) -> None:
     """Record the plan of each frame handed to checkpoint_and_release,
     in every loaded pygeoops_spark module that imported it. The plan is
@@ -80,7 +89,7 @@ def _wrap_checkpoints(captured: list, tmp: str) -> None:
     orig = session.checkpoint_and_release
 
     def checkpoint_and_release(result, caches):
-        captured.append(_plan(result, tmp))
+        captured.append((_plan(result, tmp), _analyzed_chars(result)))
         return orig(result, caches)
 
     for mod in ("text.dedup", "ann.cosine", "join.knn", "pairs"):
@@ -93,6 +102,24 @@ def _wrap_checkpoints(captured: list, tmp: str) -> None:
             m.checkpoint_and_release = checkpoint_and_release
 
 
+def _ring_shape(spark, n_probes: int, n_targets: int, ax: tuple[str, str]):
+    """The probe and target frames of the kNN ring shapes in
+    tests/test_join_jobs.py: planar (x, y) or geographic (lon, lat)."""
+    from pyspark.sql import functions as F
+
+    i = F.col("id")
+    if ax == ("x", "y"):
+        x, y = (i * 37 % 997).cast("double"), (i * 61 % 983).cast("double")
+        t_x = x * 0.5 + 100.0
+    else:
+        x = (i * 37 % 360 - 180).cast("double") + F.lit(0.25)
+        y = (i * 23 % 160 - 80).cast("double") + F.lit(0.125)
+        t_x = x * 0.5
+    probes = spark.range(n_probes).select(i.alias("pid"), x.alias(ax[0]), y.alias(ax[1]))
+    targets = spark.range(n_targets).select(i.alias("tid"), t_x.alias(ax[0]), y.alias(ax[1]))
+    return probes, targets
+
+
 def dump(root: str, out_dir: str, tag: str) -> None:
     sys.path.insert(0, root)
     sys.path.insert(0, os.path.join(root, "perfbench"))
@@ -102,6 +129,8 @@ def dump(root: str, out_dir: str, tag: str) -> None:
     from pyspark.sql import functions as F
 
     from pygeoops_spark.ann.cosine import cosine_topk_ivf, ivf_build_index, ivf_query_index
+    from pygeoops_spark.join.geo_knn import geodesic_knn_join
+    from pygeoops_spark.join.knn import knn_join
     from pygeoops_spark.join.pip import pip_join_polygons
     from pygeoops_spark.session import get_spark
     from pygeoops_spark.text.dedup import jaccard_pairs, minhash_lsh_pairs, simhash_pairs
@@ -137,6 +166,16 @@ def dump(root: str, out_dir: str, tag: str) -> None:
             queries, emb, k=5, n_cells=16, nprobe=7, t_assign=3, train_iters=8
         )
         builders["ann_ivf_index"] = ivf_index
+        for mode in ("approx", "exact"):
+            exact = mode == "exact"
+            builders[f"knn_ring_{mode}"] = lambda exact=exact: knn_join(
+                *_ring_shape(spark, 300, 200, ("x", "y")), "pid", "tid", k=3, level=None,
+                guarantee_exact=exact,
+            )
+            builders[f"geo_knn_ring_{mode}"] = lambda exact=exact: geodesic_knn_join(
+                *_ring_shape(spark, 200, 120, ("lon", "lat")), "pid", "tid", k=3, level=None,
+                guarantee_exact=exact,
+            )
         builders["perfbench_text_dedup_jaccard"] = lambda: jaccard_pairs(
             text_docs, threshold=workloads.TEXT_THRESHOLD
         )
@@ -157,9 +196,13 @@ def dump(root: str, out_dir: str, tag: str) -> None:
                 sc.setLocalProperty("spark.jobGroup.id", None)
             jobs = len(sc.statusTracker().getJobIdsForGroup(group))
             write(name, _plan(df, tmp))
-            for i, plan in enumerate(captured):
+            for i, (plan, _) in enumerate(captured):
                 write(f"{name}_ckpt{i}", plan)
-            print(f"{name}: plan-time jobs={jobs} checkpoints={len(captured)} rows={df.count()}")
+            print(
+                f"{name}: plan-time jobs={jobs} checkpoints={len(captured)} rows={df.count()} "
+                f"analyzed_chars={_analyzed_chars(df)} "
+                f"checkpoint_analyzed_chars={[n for _, n in captured]}"
+            )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
         spark.stop()

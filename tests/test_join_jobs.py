@@ -1,11 +1,12 @@
 """Plan-time Spark jobs of the cell joins.
 
-Auto level, auto ship and the exact-kNN checks run eager actions while
-the join's plan is being built. Each count in PINNED is pinned at the
-value of the joins before they shared one cell-join core, so a change
-that splits the fused zone-side aggregate (one job for level=None and
-ship='auto' together) or adds a pass to the kNN exactness recursion
-fails here.
+Auto level, auto ship and the exact-kNN checkpoint run eager actions
+while the join's plan is being built. The PIP and kNN-escape counts are
+pinned at the value of the joins before they shared one cell-join core,
+so a change that splits the fused zone-side aggregate (one job for
+level=None and ship='auto' together) fails here. The exact kNN ring
+counts are pinned at the fixed passes of join/knn.py:_knn, so a change
+that adds a pass or an action to them fails here.
 """
 
 import uuid
@@ -18,9 +19,9 @@ PINNED = {
     "pip_join_polygons": 4,
     "geo_pip_join": 5,
     "knn_join_20": 2,
-    "knn_join_200": 81,
+    "knn_join_200": 16,
     "geodesic_knn_join_12": 2,
-    "geodesic_knn_join_120": 68,
+    "geodesic_knn_join_120": 17,
 }
 
 
@@ -98,7 +99,7 @@ def test_geo_pip_join_auto_jobs(spark):
 
 @pytest.mark.parametrize("n_targets", [20, 200])
 def test_knn_join_exact_auto_jobs(spark, n_targets):
-    """20 targets take the brute-force escape, 200 the ring recursion."""
+    """20 targets take the brute-force escape, 200 the ring passes."""
     from pygeoops_spark import knn_join
 
     probes, targets = _planar_points(spark, 300), _planar_points(spark, n_targets, "tid")
@@ -114,7 +115,7 @@ def test_knn_join_exact_auto_jobs(spark, n_targets):
 
 @pytest.mark.parametrize("n_targets", [12, 120])
 def test_geodesic_knn_join_exact_auto_jobs(spark, n_targets):
-    """12 targets take the brute-force escape, 120 the ring recursion."""
+    """12 targets take the brute-force escape, 120 the ring passes."""
     from pygeoops_spark import geodesic_knn_join
 
     probes, targets = _geo_points(spark, 200), _geo_points(spark, n_targets, "tid")

@@ -16,12 +16,12 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_knn_brute_escape_matches_ring_path(spark):
+def test_knn_brute_escape_matches_ring_path(spark, monkeypatch):
     """guarantee_exact with a small target set takes the broadcast
-    brute-force escape; forcing the ring+recursion machinery (via the
-    internal _caches seam, which marks the call non-top-level) must
-    give the identical rows — both are 'exact top-k', so any
-    difference is a bug in one of them."""
+    brute-force escape; forcing the ring passes (escape predicate
+    patched off) must give the identical rows — both are 'exact
+    top-k', so any difference is a bug in one of them."""
+    from pygeoops_spark.join import knn
     from pygeoops_spark.join.knn import knn_join
 
     i = F.col("id")
@@ -37,16 +37,13 @@ def test_knn_brute_escape_matches_ring_path(spark):
     )
     kw = dict(k=3, level=3, radius=2, guarantee_exact=True)
     fast = knn_join(probes, targets, "pid", "tid", **kw)  # 20 <= 3*25 -> escape
-    caches: list = []
-    ring = knn_join(probes, targets, "pid", "tid", _caches=caches, **kw)
-    try:
-        assert _rows(fast) == _rows(ring)
-    finally:
-        for c in caches:
-            c.unpersist()
+    monkeypatch.setattr(knn, "_escape", lambda *a: False)
+    ring = knn_join(probes, targets, "pid", "tid", **kw)
+    assert _rows(fast) == _rows(ring)
 
 
-def test_geo_knn_brute_escape_matches_ring_path(spark):
+def test_geo_knn_brute_escape_matches_ring_path(spark, monkeypatch):
+    from pygeoops_spark.join import knn
     from pygeoops_spark.join.geo_knn import geodesic_knn_join
 
     i = F.col("id")
@@ -62,13 +59,9 @@ def test_geo_knn_brute_escape_matches_ring_path(spark):
     )
     kw = dict(k=3, level=2, radius=1, guarantee_exact=True)
     fast = geodesic_knn_join(probes, targets, "pid", "tid", **kw)  # 12 <= 27
-    caches: list = []
-    ring = geodesic_knn_join(probes, targets, "pid", "tid", _caches=caches, **kw)
-    try:
-        assert _rows(fast) == _rows(ring)
-    finally:
-        for c in caches:
-            c.unpersist()
+    monkeypatch.setattr(knn, "_escape", lambda *a: False)
+    ring = geodesic_knn_join(probes, targets, "pid", "tid", **kw)
+    assert _rows(fast) == _rows(ring)
 
 
 def test_cc_gate_matches_distributed_rounds(spark, monkeypatch):
