@@ -166,17 +166,24 @@ def points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarr
     return inside
 
 
-def points_in_polygon(px: np.ndarray, py: np.ndarray, poly: Geometry) -> np.ndarray:
-    """Points strictly inside polygon (shell minus holes), any part."""
-    res = np.zeros(len(px), dtype=bool)
-    for part in get_parts(poly):
+def polygon_rings(geom: Geometry | None) -> list[tuple[np.ndarray, bool]]:
+    """Decode a polygon/multipolygon into [(ring, is_hole), ...] for
+    point_in_polygon_prepared; [] for a null or empty geometry."""
+    rings: list[tuple[np.ndarray, bool]] = []
+    if geom is None:
+        return rings
+    for part in get_parts(geom):
         if part.type_id != POLYGON or not part.data:
             continue
-        m = points_in_ring(px, py, np.asarray(part.data[0]))
+        rings.append((np.asarray(part.data[0]), False))
         for hole in part.data[1:]:
-            m &= ~points_in_ring(px, py, np.asarray(hole))
-        res |= m
-    return res
+            rings.append((np.asarray(hole), True))
+    return rings
+
+
+def points_in_polygon(px: np.ndarray, py: np.ndarray, poly: Geometry) -> np.ndarray:
+    """Points strictly inside polygon (shell minus holes), any part."""
+    return point_in_polygon_prepared(polygon_rings(poly))(px, py)
 
 
 def point_in_polygon_prepared(rings: list[tuple[np.ndarray, bool]]):
@@ -224,63 +231,6 @@ def point_segment_distance(
     return np.hypot(px - (ax + t * dx), py - (ay + t * dy))
 
 
-def segments_intersect(p1, p2, q1, q2) -> bool:
-    """Do segments [p1,p2] and [q1,q2] intersect (inclusive)?"""
-
-    def orient(a, b, c):
-        v = (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])
-        if v > 0:
-            return 1
-        if v < 0:
-            return -1
-        return 0
-
-    def on_seg(a, b, c):
-        return (
-            min(a[0], b[0]) <= c[0] <= max(a[0], b[0])
-            and min(a[1], b[1]) <= c[1] <= max(a[1], b[1])
-        )
-
-    o1, o2 = orient(p1, p2, q1), orient(p1, p2, q2)
-    o3, o4 = orient(q1, q2, p1), orient(q1, q2, p2)
-    if o1 != o2 and o3 != o4:
-        return True
-    if o1 == 0 and on_seg(p1, p2, q1):
-        return True
-    if o2 == 0 and on_seg(p1, p2, q2):
-        return True
-    if o3 == 0 and on_seg(q1, q2, p1):
-        return True
-    if o4 == 0 and on_seg(q1, q2, p2):
-        return True
-    return False
-
-
-def segment_intersects_coords(seg_a, seg_b, coords: np.ndarray) -> bool:
-    """Does segment [seg_a, seg_b] intersect any edge of a coordinate
-    chain? Vectorized orientation pre-filter, exact check on hits."""
-    if len(coords) < 2:
-        return False
-    a = np.asarray(seg_a, dtype=np.float64)
-    b = np.asarray(seg_b, dtype=np.float64)
-    p = coords[:-1, :2]
-    q = coords[1:, :2]
-    d = b - a
-    cross_p = d[0] * (p[:, 1] - a[1]) - d[1] * (p[:, 0] - a[0])
-    cross_q = d[0] * (q[:, 1] - a[1]) - d[1] * (q[:, 0] - a[0])
-    e = q - p
-    cross_a = e[:, 0] * (a[1] - p[:, 1]) - e[:, 1] * (a[0] - p[:, 0])
-    cross_b = e[:, 0] * (b[1] - p[:, 1]) - e[:, 1] * (b[0] - p[:, 0])
-    candidate = (np.sign(cross_p) != np.sign(cross_q)) & (
-        np.sign(cross_a) != np.sign(cross_b)
-    )
-    collinear = (cross_p == 0) | (cross_q == 0) | (cross_a == 0) | (cross_b == 0)
-    for idx in np.nonzero(candidate | collinear)[0]:
-        if segments_intersect(tuple(a), tuple(b), tuple(p[idx]), tuple(q[idx])):
-            return True
-    return False
-
-
 def segments_cross_chain_batch(edges: np.ndarray, chain: np.ndarray) -> np.ndarray:
     """(E,) bool: does each edge (edges[(E,2,2)]) intersect any segment
     of the coordinate chain? Fully vectorized (E x S broadcast),
@@ -326,30 +276,20 @@ def geom_intersects_segment(geom: Geometry, seg_a, seg_b) -> bool:
     """Does geometry intersect segment? For polygons: boundary crossing
     or either endpoint inside (sufficient because the segment is a
     connected set)."""
+    edge = np.array([[seg_a[:2], seg_b[:2]]], dtype=np.float64)
     for part in get_parts(geom):
         if part.type_id == POINT:
-            if part.data is None:
-                continue
-            d = point_segment_distance(
-                np.array([part.data[0]]),
-                np.array([part.data[1]]),
-                seg_a[0],
-                seg_a[1],
-                seg_b[0],
-                seg_b[1],
-            )
-            if d[0] == 0:
+            if part.data is not None and point_segment_distance(
+                part.data[0], part.data[1], seg_a[0], seg_a[1], seg_b[0], seg_b[1]
+            ) == 0:
                 return True
-        elif part.type_id == LINESTRING:
-            if segment_intersects_coords(seg_a, seg_b, np.asarray(part.data)):
+        elif part.type_id in (LINESTRING, POLYGON):
+            chains = [part.data] if part.type_id == LINESTRING else part.data
+            if any(segments_cross_chain_batch(edge, np.asarray(c))[0] for c in chains):
                 return True
-        elif part.type_id == POLYGON:
-            for ring in part.data:
-                if segment_intersects_coords(seg_a, seg_b, np.asarray(ring)):
-                    return True
-            ax = np.array([seg_a[0], seg_b[0]])
-            ay = np.array([seg_a[1], seg_b[1]])
-            if points_in_polygon(ax, ay, part).any():
+            if part.type_id == POLYGON and points_in_polygon(
+                edge[0, :, 0], edge[0, :, 1], part
+            ).any():
                 return True
     return False
 

@@ -29,16 +29,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
-from pygeoops_spark.geom.kernels import (
-    point_in_polygon_prepared,
-    points_in_polygon,
-)
-from pygeoops_spark.geom.wkb import POLYGON, get_parts, wkb_loads
+from pygeoops_spark.geom.kernels import point_in_polygon_prepared, polygon_rings
+from pygeoops_spark.geom.wkb import wkb_loads
 from pygeoops_spark.join.cells import GEO, PLANAR, CellScheme, auto_level
 
-# prepared-broadcast cap: total zone WKB above this stays on the
-# ship='wkb' column path (driver collect + executor broadcast memory)
+# prepared-broadcast cap on the decoded zone size, estimated as 3x the
+# total zone WKB: zones above it stay on the ship='wkb' column path
+# (driver collect + executor broadcast memory)
 PREPARED_MAX_BYTES = 256 * 1024 * 1024
+_SHIPS = ("auto", "prepared", "wkb")
 
 
 def _resolve(points, zones, scheme: CellScheme, level, ship=None, zone_geom=None):
@@ -50,8 +49,8 @@ def _resolve(points, zones, scheme: CellScheme, level, ship=None, zone_geom=None
     level=None → density-derived default: points-per-cell ≈ 16, capped
     so cells never shrink below median-zone-span/8 (one parquet footer
     count + the tiny zones-side aggregate). ship='auto' → 'prepared'
-    unless the zones' total WKB exceeds PREPARED_MAX_BYTES; explicit
-    'prepared'/'wkb' pass through."""
+    unless 3x the zones' total WKB (the decoded-size estimate) exceeds
+    PREPARED_MAX_BYTES; explicit 'prepared'/'wkb' pass through."""
     aggs = []
     if ship == "auto":
         aggs.append(F.sum(F.length(F.col(zone_geom))).alias("b"))
@@ -138,35 +137,27 @@ def pip_join_rects(
     )
 
 
-def _prepare_rings(wkb_bytes: bytes) -> list[tuple[np.ndarray, bool]]:
-    """Decode a polygon/multipolygon WKB into [(ring, is_hole), ...]
-    for point_in_polygon_prepared."""
-    rings: list[tuple[np.ndarray, bool]] = []
-    for part in get_parts(wkb_loads(wkb_bytes)):
-        if part.type_id != POLYGON or not part.data:
-            continue
-        rings.append((np.asarray(part.data[0]), False))
-        for hole in part.data[1:]:
-            rings.append((np.asarray(hole), True))
-    return rings
+def _wkb_rings(b) -> list[tuple[np.ndarray, bool]]:
+    """Rings of a zone WKB value; [] for a null zone (matches no point)."""
+    return polygon_rings(None if b is None else wkb_loads(b))
 
 
 def _pip_join(
     points, zones, x, y, zone_geom, zone_id, level, broadcast_zones, ship,
-    scheme: CellScheme = PLANAR, n_salt: int = 1, salt_key=None, sort: bool = True,
+    scheme: CellScheme = PLANAR, n_salt: int = 1, salt_key=None,
 ) -> DataFrame:
     """The PIP core: cell equi-join of points against the zones' bbox
     cover, the cheap SQL bbox pre-filter, then the kernel. ``ship=None``
-    (rectangle zones) stops at the bbox test, which is then exact;
-    ``sort=False`` skips the zone-purity sort (streaming)."""
+    (rectangle zones) stops at the bbox test, which is then exact; a
+    streaming point side skips the zone-purity sort."""
+    if zone_geom is not None and ship not in _SHIPS:
+        raise ValueError(f"ship must be one of {_SHIPS}, got {ship!r}")
     level, ship = _resolve(points, zones, scheme, level, ship, zone_geom)
     if ship == "prepared":
         # decode zone geometries ONCE on the driver and ship them to
         # executors as a Spark broadcast variable keyed by zone id
         rows = zones.select(zone_id, zone_geom).collect()
-        bc = zones.sparkSession.sparkContext.broadcast(
-            {r[0]: _prepare_rings(bytes(r[1])) for r in rows}
-        )
+        bc = zones.sparkSession.sparkContext.broadcast({r[0]: _wkb_rings(r[1]) for r in rows})
         zones = zones.drop(zone_geom)
     pts, zc, key = _cell_sides(
         points, zones, x, y, level, scheme, broadcast_zones, n_salt, salt_key
@@ -180,19 +171,23 @@ def _pip_join(
         cand, drop = cand.withColumn(x, px), [x]
     cand = cand.where(_in_bbox(F.col(x), F.col(y), scheme))
     if ship == "prepared":
-        if sort:
+        if not points.isStreaming:
             # shuffle-free local sort: Arrow batches become zone-pure, so
             # the kernel runs one big vectorized call per zone instead of
             # shattering across interleaved zones (the broadcast plan joins
-            # in input-row order; measured ~2x on kernel-bound zones)
+            # in input-row order; measured ~2x on kernel-bound zones).
+            # Skipped on a stream: micro-batches are small and a
+            # per-batch sort adds latency for no measurable kernel win.
             cand = cand.sortWithinPartitions(zone_id)
-        cand = cand.where(_pip_prepared_udf(bc)(F.col(x), F.col(y), F.col(zone_id)))
+        cand = cand.where(
+            _pip_udf(lambda z: bc.value[z])(F.col(x), F.col(y), F.col(zone_id))
+        )
     elif ship is not None:
         # drop the geometry column on the wkb path too, so ship='auto'
         # yields ONE output schema regardless of which side of the size
         # threshold the zones landed on (ADVICE r06: a schema that flips
         # with data volume breaks downstream selects only at scale)
-        cand = cand.where(_pip_udf(F.col(x), F.col(y), F.col(zone_geom)))
+        cand = cand.where(_pip_udf(_wkb_rings)(F.col(x), F.col(y), F.col(zone_geom)))
         drop.append(zone_geom)
     return cand.drop(*drop) if drop else cand
 
@@ -219,17 +214,19 @@ def pip_join_polygons(
     level from point density (see _resolve). ``n_salt``/``salt_key``
     salt the join key for hotspots on the shuffle plan (see _cell_sides).
 
-    ship='auto' (default) resolves to 'prepared' while the zones'
-    total WKB fits PREPARED_MAX_BYTES: zone geometries are decoded
-    ONCE on the driver and shipped to executors as a Spark broadcast
-    variable keyed by ``zone_id``; only the 8-byte id rides the
-    candidate rows. ship='wkb' replicates the WKB bytes onto every
+    ship='auto' (default) resolves to 'prepared' while 3x the zones'
+    total WKB (the decoded-size estimate) fits PREPARED_MAX_BYTES: zone
+    geometries are decoded ONCE on the driver and shipped to executors
+    as a Spark broadcast variable keyed by ``zone_id``; only the 8-byte
+    id rides the candidate rows. ship='wkb' replicates the WKB bytes onto every
     candidate row through the Arrow transfer — at V-vertex zones that
     is 16·V bytes PER CANDIDATE PAIR (measured un-runnable at 4096
     vertices x 200k points) — so it is only for zones tables too large
     to collect, where it pairs with broadcast_zones=False (bucketed
     shuffle join). The prepared output omits the ``zone_geom`` column
-    (never needed by callers; keeps the plan narrow).
+    (never needed by callers; keeps the plan narrow). A zone with a
+    null geometry matches no point; any other ``ship`` value raises
+    ValueError.
     """
     return _pip_join(
         points, zones, x, y, zone_geom, zone_id, level, broadcast_zones, ship,
@@ -261,36 +258,22 @@ def geo_pip_join(
     )
 
 
-def _pip_prepared_udf(bc):
-    """Arrow-batched PIP against a broadcast {zone_id: rings} dict —
-    candidate rows carry only the zone id, never geometry bytes."""
+def _pip_udf(rings_of):
+    """Arrow-batched PIP: rows are grouped by key so each zone's rings
+    are fetched once per batch (prepared-geometry behavior), then the
+    prepared ring walk tests the group's points. ``rings_of(key)``
+    maps a key to its rings: a zone id into the broadcast dict on the
+    prepared path, the WKB bytes through the decoder on the wkb path.
+    A null key matches no point."""
 
     @F.pandas_udf(BooleanType())
-    def _pip(px: pd.Series, py: pd.Series, zid: pd.Series) -> pd.Series:
+    def _pip_udf(px: pd.Series, py: pd.Series, key: pd.Series) -> pd.Series:
         out = np.zeros(len(px), dtype=bool)
         pxv, pyv = px.to_numpy(np.float64), py.to_numpy(np.float64)
-        zv = zid.to_numpy()
-        prepared = bc.value
-        for z in pd.unique(zv):
-            ii = np.nonzero(zv == z)[0]
-            out[ii] = point_in_polygon_prepared(prepared[z])(pxv[ii], pyv[ii])
+        codes, keys = pd.factorize(key)
+        for j, k in enumerate(keys):
+            ii = np.flatnonzero(codes == j)
+            out[ii] = point_in_polygon_prepared(rings_of(k))(pxv[ii], pyv[ii])
         return pd.Series(out)
 
-    return _pip
-
-
-@F.pandas_udf(BooleanType())
-def _pip_udf(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
-    """Crossing-number point-in-polygon over an Arrow batch; rows are
-    grouped by polygon bytes so each polygon is decoded once
-    (prepared-geometry behavior)."""
-    out = np.zeros(len(px), dtype=bool)
-    pxv, pyv = px.to_numpy(np.float64), py.to_numpy(np.float64)
-    groups: dict[bytes, list[int]] = {}
-    for i, b in enumerate(wkb):
-        groups.setdefault(bytes(b), []).append(i)
-    for b, idxs in groups.items():
-        geom = wkb_loads(b)
-        ii = np.asarray(idxs)
-        out[ii] = points_in_polygon(pxv[ii], pyv[ii], geom)
-    return pd.Series(out)
+    return _pip_udf

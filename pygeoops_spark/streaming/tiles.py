@@ -130,12 +130,8 @@ def geofence_stream(
     equi-join, so no streaming state at all — then the bbox prefilter
     and the Arrow-batched crossing-number kernel filter each
     micro-batch. Events outside every zone bbox never reach the
-    kernel. The zone-purity sort is skipped: micro-batches are small
-    and a per-batch sort adds latency for no measurable kernel win at
-    streaming batch sizes.
+    kernel. The core skips its zone-purity sort on a streaming input.
     """
     from pygeoops_spark.join.pip import _pip_join
 
-    return _pip_join(
-        stream, zones, x, y, zone_geom, zone_id, level, True, "prepared", sort=False
-    )
+    return _pip_join(stream, zones, x, y, zone_geom, zone_id, level, True, "prepared")
