@@ -132,37 +132,43 @@ def geom_length(geom: Geometry) -> float:
 
 
 # -- point-in-polygon -----------------------------------------------------
+# pair budget of points_in_ring: the edges run in chunks of at most
+# _MAX_PAIRS (point, edge) pairs, or one edge's span where that is larger,
+# so a chunk's arrays stay cache-sized whatever the ring and batch sizes
+_MAX_PAIRS = 1 << 16
+
+
 def points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
     """Vectorized crossing-number test of many points vs one closed ring.
 
-    Boundary points may report either side; join recipes that need
-    boundary-inclusive semantics add an explicit on-edge test.
+    The points are sorted by y, so each edge's half-open y-span
+    [min(y1, y2), max(y1, y2)) is one slice of them, and the crossing
+    test runs only on the (point, spanning edge) pairs: cost is the pair
+    count, and comb-like rings whose every edge spans every point are
+    the worst case. Boundary points may report either side; join
+    recipes that need boundary-inclusive semantics add an explicit
+    on-edge test.
     """
     x1, y1 = ring[:-1, 0], ring[:-1, 1]
     x2, y2 = ring[1:, 0], ring[1:, 1]
-    m, n = len(px), len(x1)
-    # 2D broadcast path: one (points x edges) crossing matrix beats the
-    # per-edge Python loop by ~10x for the overlay-classify shapes
-    # (tens of midpoints x tens of edges); capped so a big PIP batch
-    # against a huge ring can't allocate an m*n monster
-    if 64 <= m * n <= 2_000_000:
-        cond = (y1[None, :] > py[:, None]) != (y2[None, :] > py[:, None])
-        dy = y2 - y1
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xs = (x2 - x1)[None, :] * (py[:, None] - y1[None, :]) / dy[
-                None, :
-            ] + x1[None, :]
-        # cond is False wherever dy == 0, masking the inf/nan xs there
-        cross = cond & (px[:, None] < xs)
-        return (cross.sum(axis=1) & 1).astype(bool)
-    inside = np.zeros(m, dtype=bool)
-    # For each edge: does a ray cast in +x from the point cross it?
-    for j in range(n):
-        cond = (y1[j] > py) != (y2[j] > py)
-        if not cond.any():
-            continue
-        xs = (x2[j] - x1[j]) * (py - y1[j]) / (y2[j] - y1[j]) + x1[j]
-        inside ^= cond & (px < xs)
+    dx, dy = x2 - x1, y2 - y1
+    order = py.argsort()
+    sx, sy = px[order], py[order]
+    lo, hi = sy.searchsorted(np.minimum(y1, y2)), sy.searchsorted(np.maximum(y1, y2))
+    cnt = hi - lo
+    end = cnt.cumsum()
+    off = hi - end  # the k-th pair overall, on edge e, is point off[e] + k
+    hits = np.zeros(len(sy), dtype=np.intp)
+    k = e1 = 0
+    while e1 < len(end):
+        e0, e1 = e1, max(end.searchsorted(k + _MAX_PAIRS, "right"), e1 + 1)
+        e = np.arange(e0, e1).repeat(cnt[e0:e1])
+        p = off[e] + np.arange(k, k + len(e))
+        k += len(e)
+        cross = sx[p] < dx[e] * (sy[p] - y1[e]) / dy[e] + x1[e]
+        hits += np.bincount(p[cross], minlength=len(sy))
+    inside = np.empty(len(sy), dtype=bool)
+    inside[order] = hits & 1
     return inside
 
 

@@ -173,11 +173,12 @@ def _pip_join(
     if ship == "prepared":
         if not points.isStreaming:
             # shuffle-free local sort: Arrow batches become zone-pure, so
-            # the kernel runs one big vectorized call per zone instead of
-            # shattering across interleaved zones (the broadcast plan joins
-            # in input-row order; measured ~2x on kernel-bound zones).
-            # Skipped on a stream: micro-batches are small and a
-            # per-batch sort adds latency for no measurable kernel win.
+            # a batch makes one kernel call per zone it holds, not one per
+            # zone the broadcast join interleaves into it (thousands on a
+            # many-zone table: measured 2-21% slower end to end at 4,096
+            # zones without it, plans/r12/README.md). Skipped on a
+            # stream: micro-batches are small and a per-batch sort adds
+            # latency for no measurable kernel win.
             cand = cand.sortWithinPartitions(zone_id)
         cand = cand.where(
             _pip_udf(lambda z: bc.value[z])(F.col(x), F.col(y), F.col(zone_id))
@@ -271,8 +272,11 @@ def _pip_udf(rings_of):
         out = np.zeros(len(px), dtype=bool)
         pxv, pyv = px.to_numpy(np.float64), py.to_numpy(np.float64)
         codes, keys = pd.factorize(key)
-        for j, k in enumerate(keys):
-            ii = np.flatnonzero(codes == j)
+        # one stable sort groups the batch: row indices of key j are the
+        # j-th run (null keys, code -1, sort first and are skipped)
+        rows = np.argsort(codes, kind="stable")
+        groups = np.split(rows, codes[rows].searchsorted(np.arange(len(keys))))[1:]
+        for k, ii in zip(keys, groups):
             out[ii] = point_in_polygon_prepared(rings_of(k))(pxv[ii], pyv[ii])
         return pd.Series(out)
 

@@ -21,6 +21,23 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from pygeoops_spark.geom.geodesic import WGS84_A, WGS84_F, geodesic_direct, geodesic_inverse
+
+
+def _geodesic_udf(kernel, pick, returns, a: float | None, f: float | None):
+    """Arrow UDF over four double columns: ``kernel`` on the whole batch
+    (WGS84 unless ``a``/``f`` are given), its result tuple mapped to the
+    output by ``pick``."""
+    ell_a = WGS84_A if a is None else float(a)
+    ell_f = WGS84_F if f is None else float(f)
+
+    @F.pandas_udf(returns)
+    def _udf(c1: pd.Series, c2: pd.Series, c3: pd.Series, c4: pd.Series) -> pd.Series:
+        cols = (c.to_numpy() for c in (c1, c2, c3, c4))
+        return pick(*kernel(*cols, a=ell_a, f=ell_f))
+
+    return _udf
+
 
 def geodesic_distance_col(
     lon1, lat1, lon2, lat2, a: float | None = None, f: float | None = None
@@ -29,24 +46,8 @@ def geodesic_distance_col(
     coordinate pairs (degrees). Defaults to WGS84; pass ``f=0`` for the
     exact sphere limit (where the kernel must agree with the
     great-circle closed form — the independent oblique oracle)."""
-    from pygeoops_spark.geom.geodesic import WGS84_A, WGS84_F
-
-    ell_a = WGS84_A if a is None else float(a)
-    ell_f = WGS84_F if f is None else float(f)
-
-    @F.pandas_udf(DoubleType())
-    def _dist(
-        a: pd.Series, b: pd.Series, c: pd.Series, d: pd.Series
-    ) -> pd.Series:
-        from pygeoops_spark.geom.geodesic import geodesic_inverse
-
-        s12, _az = geodesic_inverse(
-            a.to_numpy(), b.to_numpy(), c.to_numpy(), d.to_numpy(),
-            a=ell_a, f=ell_f,
-        )
-        return pd.Series(s12)
-
-    return _dist(lon1, lat1, lon2, lat2)
+    udf = _geodesic_udf(geodesic_inverse, lambda s12, _az: pd.Series(s12), DoubleType(), a, f)
+    return udf(lon1, lat1, lon2, lat2)
 
 
 def geodesic_azimuth_col(
@@ -55,24 +56,8 @@ def geodesic_azimuth_col(
     """Forward azimuth in radians (clockwise from north) of the
     geodesic from point 1 to point 2.  Defaults to WGS84; ``f=0`` is
     the exact sphere limit (initial great-circle bearing)."""
-    from pygeoops_spark.geom.geodesic import WGS84_A, WGS84_F
-
-    ell_a = WGS84_A if a is None else float(a)
-    ell_f = WGS84_F if f is None else float(f)
-
-    @F.pandas_udf(DoubleType())
-    def _az(
-        a: pd.Series, b: pd.Series, c: pd.Series, d: pd.Series
-    ) -> pd.Series:
-        from pygeoops_spark.geom.geodesic import geodesic_inverse
-
-        _s12, az = geodesic_inverse(
-            a.to_numpy(), b.to_numpy(), c.to_numpy(), d.to_numpy(),
-            a=ell_a, f=ell_f,
-        )
-        return pd.Series(az)
-
-    return _az(lon1, lat1, lon2, lat2)
+    udf = _geodesic_udf(geodesic_inverse, lambda _s12, az: pd.Series(az), DoubleType(), a, f)
+    return udf(lon1, lat1, lon2, lat2)
 
 
 def geodesic_destination_cols(
@@ -83,21 +68,11 @@ def geodesic_destination_cols(
     (start degrees, azimuth radians clockwise from north, metres).
     Defaults to WGS84; ``f=0`` is the exact sphere limit (great-circle
     waypoint)."""
-    from pygeoops_spark.geom.geodesic import WGS84_A, WGS84_F
-
-    ell_a = WGS84_A if a is None else float(a)
-    ell_f = WGS84_F if f is None else float(f)
-
-    @F.pandas_udf("struct<lon2:double,lat2:double>")
-    def _dest(
-        a: pd.Series, b: pd.Series, c: pd.Series, d: pd.Series
-    ) -> pd.DataFrame:
-        from pygeoops_spark.geom.geodesic import geodesic_direct
-
-        lon2, lat2 = geodesic_direct(
-            a.to_numpy(), b.to_numpy(), c.to_numpy(), d.to_numpy(),
-            a=ell_a, f=ell_f,
-        )
-        return pd.DataFrame({"lon2": lon2, "lat2": lat2})
-
-    return _dest(lon1, lat1, azimuth_rad, distance_m)
+    udf = _geodesic_udf(
+        geodesic_direct,
+        lambda lon2, lat2: pd.DataFrame({"lon2": lon2, "lat2": lat2}),
+        "struct<lon2:double,lat2:double>",
+        a,
+        f,
+    )
+    return udf(lon1, lat1, azimuth_rad, distance_m)

@@ -53,6 +53,41 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.where(F.col("u") != F.col("v")).distinct()
 
 
+def _star_components(e: DataFrame, max_iter: int) -> tuple[int, DataFrame]:
+    """(rounds, (node, component)) of the distributed path of
+    connected_components: alternating-star rounds to the fixed point,
+    whose edges are (node, root); the labels are those plus the roots."""
+
+    def sig(df: DataFrame):
+        return tuple(
+            df.agg(
+                F.count("*").alias("n"), F.expr("bit_xor(xxhash64(u, v))").alias("h")
+            ).first()
+        )
+
+    prev = sig(e)
+    for rounds in range(1, max_iter + 1):
+        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        cur = sig(e)
+        if cur == prev:
+            break
+        prev = cur
+    else:
+        # reading labels off a non-star edge set would emit conflicting
+        # component rows per node — fail loudly instead (O(log n)
+        # rounds means max_iter=25 covers graphs far beyond 10^7 nodes;
+        # raise max_iter for adversarial shapes)
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} "
+            f"alternating-star rounds; raise max_iter"
+        )
+    labels = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
+    roots = e.select(F.col("v").alias("node")).distinct().withColumn(
+        "component", F.col("node")
+    )
+    return rounds, labels.unionByName(roots)
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "id_a",
@@ -126,53 +161,14 @@ def connected_components(
                 {"node": list(parent), "component": [find(x) for x in parent]}
             )
 
-        if stats is not None:
-            stats["rounds"] = 0
+        rounds = 0
         out = e.coalesce(1).mapInPandas(
             _union_find, "node long, component long"
         )
-        singles = (
-            selfers.join(out.select(F.col("node").alias("u")), "u", "left_anti")
-            .select(F.col("u").alias("node"), F.col("u").alias("component"))
-        )
-        return out.unionByName(singles)
-
-    def sig(df: DataFrame):
-        return tuple(
-            df.agg(
-                F.count("*").alias("n"), F.expr("bit_xor(xxhash64(u, v))").alias("h")
-            ).first()
-        )
-
-    prev = sig(e)
-    converged = False
-    rounds = 0
-    for _ in range(max_iter):
-        e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        rounds += 1
-        cur = sig(e2)
-        e = e2
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
+    else:
+        rounds, out = _star_components(e, max_iter)
     if stats is not None:
         stats["rounds"] = rounds
-    if not converged:
-        # reading labels off a non-star edge set would emit conflicting
-        # component rows per node — fail loudly instead (O(log n)
-        # rounds means max_iter=25 covers graphs far beyond 10^7 nodes;
-        # raise max_iter for adversarial shapes)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            f"alternating-star rounds; raise max_iter"
-        )
-    # star edges: (node, root) for every non-root node; add the roots
-    labels = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = e.select(F.col("v").alias("node")).distinct().withColumn(
-        "component", F.col("node")
-    )
-    out = labels.unionByName(roots)
     # self-pair-only nodes: singleton components (anti-join keeps the
     # broadcastable small side on the right only when selfers is small;
     # at scale this is one extra shuffle over the self-pair subset)
