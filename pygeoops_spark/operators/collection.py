@@ -2,10 +2,9 @@
 
 `collect` is the reference's only aggregation operator
 (/root/reference/pygeoops/_general.py:16-91): list of geometries ->
-narrowest multitype. Distributed as groupBy().applyInPandas with
-map-side-combinable pre-aggregation left to Spark (the WKB payloads
-are small relative to the group fan-in; for huge groups use the
-two-phase variant: per-partition collect then re-collect).
+narrowest multitype. Distributed as a hash repartition on the group
+keys, a collect_list per group, and one row kernel over each group's
+array (the WKB payloads are small relative to the group fan-in).
 
 The scalar ops (collection_extract / get_primitivetype_id /
 get_parts_recursive explode / remove_inner_rings / extend_line) are
@@ -19,6 +18,7 @@ from typing import Sequence
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, IntegerType, StructField, StructType
 
 from pygeoops_spark.geom.extend_line import (
@@ -32,8 +32,16 @@ from pygeoops_spark.geom.general import (
     remove_inner_rings as _rings_kernel,
 )
 from pygeoops_spark.geom.kernels import get_primitivetype_id as _pid_kernel
-from pygeoops_spark.geom.wkb import wkb_dumps, wkb_loads
+from pygeoops_spark.geom.wkb import wkb_loads
+from pygeoops_spark.operators.partitioning import repartition_for_cpu
 from pygeoops_spark.udf import row_udf
+
+
+def _collected(geoms):
+    g = _collect_kernel(geoms)
+    if g is None:
+        return None
+    return g, len(g.data) if g.type_id >= 4 else 1, g.type_id
 
 
 def collect_agg(
@@ -43,42 +51,26 @@ def collect_agg(
 
     Output: group cols + collected_wkb + n_parts + geom_type_id.
     """
-    gdf = df.select(*group_cols, wkb_col)
-    fields = [StructField(c, gdf.schema[c].dataType) for c in group_cols]
-    schema = StructType(
-        fields
-        + [
-            StructField("collected_wkb", BinaryType()),
-            StructField("n_parts", IntegerType()),
-            StructField("geom_type_id", IntegerType()),
-        ]
+    collected = row_udf(
+        _collected,
+        StructType(
+            [
+                StructField("collected_wkb", BinaryType()),
+                StructField("n_parts", IntegerType()),
+                StructField("geom_type_id", IntegerType()),
+            ]
+        ),
+        null=(None, 0, 0),
     )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        geoms = [wkb_loads(bytes(b)) for b in pdf[wkb_col] if b is not None]
-        g = _collect_kernel(geoms)
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        if g is None:
-            row.update({"collected_wkb": [None], "n_parts": [0], "geom_type_id": [0]})
-        else:
-            n = len(g.data) if g.type_id >= 4 else 1
-            row.update(
-                {
-                    "collected_wkb": [wkb_dumps(g)],
-                    "n_parts": [n],
-                    "geom_type_id": [g.type_id],
-                }
-            )
-        return pd.DataFrame(row)
-
-    # CPU-bound grouped-map over tiny WKB: pin the partition count so
-    # AQE can't serialize it (see operators/partitioning.py)
-    from pygeoops_spark.operators.partitioning import repartition_for_cpu
-
+    # CPU-bound kernel over tiny WKB: pin the partition count so AQE
+    # can't serialize it (see operators/partitioning.py); the hash
+    # partitioning already satisfies the aggregate, so no second exchange
     return (
-        repartition_for_cpu(gdf, *group_cols)
+        repartition_for_cpu(df.select(*group_cols, wkb_col), *group_cols)
         .groupBy(*group_cols)
-        .applyInPandas(run, schema)
+        .agg(F.collect_list(wkb_col).alias("_wkbs"))
+        .select(*group_cols, collected("_wkbs").alias("_c"))
+        .select(*group_cols, "_c.*")
     )
 
 

@@ -10,17 +10,17 @@ tests/test_simplify_topo.py:12-38).
 Distributed pipeline (the only reference operator that is inherently
 multi-row — a genuine shuffle DAG, not a scalar UDF):
 
- 1. explode features into directed ring segments            (narrow)
+ 1. explode features into directed ring segments: one row
+    kernel per feature returns its segments, exploded in SQL  (narrow)
  2. node: join other features' vertices into segments by
-    cell id; split segments at interior on-segment points.
-    SHORT-CIRCUITED when the vertex/segment cell join yields
-    zero hits — the common case for already-noded layers
-    skips three exchanges                                    (shuffle 1)
+    cell id; split segments at interior on-segment points
+    (a segment with no such point stays one sub-segment)     (shuffle 1)
  3. shared-segment signature = sorted fid set per canonical
     segment key, via ONE window exchange (r01 used a groupBy
     + join-back = two)                                       (shuffle 2)
- 4. per-feature arc assembly + simplification + rebuild in a
-    single groupBy(fid): arcs are canonically oriented and
+ 4. per-feature arc assembly + simplification + rebuild: the
+    segments are collected per fid and one row kernel per
+    feature rebuilds it; arcs are canonically oriented and
     the simplify kernel is DETERMINISTIC, so two features
     sharing an arc compute byte-identical simplified coords
     independently — cross-feature consistency without the
@@ -28,25 +28,29 @@ multi-row — a genuine shuffle DAG, not a scalar UDF):
     and the per-arc sha1 key deleted)                        (shuffle 3)
 
 All shuffles key on compact values; geometry bytes move only into the
-final per-feature groupBy.
+final per-feature aggregate. Both kernels go through the row-UDF
+factory (pygeoops_spark/udf.py:row_udf).
 """
 
 from __future__ import annotations
 
+from itertools import groupby
+from operator import itemgetter
+
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
-    LongType,
     StructField,
     StructType,
 )
 
+from pygeoops_spark.geom.general import get_parts_recursive
 from pygeoops_spark.geom.simplify_geom import _simplify_ring_idx
 from pygeoops_spark.geom.wkb import (
     GEOMETRYCOLLECTION,
@@ -55,11 +59,13 @@ from pygeoops_spark.geom.wkb import (
     MULTILINESTRING,
     MULTIPOLYGON,
     POLYGON,
-    get_parts,
     multi,
-    wkb_dumps,
     wkb_loads,
 )
+from pygeoops_spark.join.cells import cell_id, cover_cells_bbox
+from pygeoops_spark.operators.partitioning import repartition_for_cpu
+from pygeoops_spark.session import checkpoint_and_release
+from pygeoops_spark.udf import row_udf
 
 _SNAP = 1e-9
 
@@ -68,62 +74,122 @@ def _k(v: float) -> int:
     return round(v / _SNAP)
 
 
-_SEG_SCHEMA = StructType(
-    [
-        StructField("fid", LongType()),
-        StructField("part", IntegerType()),
-        StructField("ring", IntegerType()),
-        StructField("seq", IntegerType()),
-        StructField("ax", DoubleType()),
-        StructField("ay", DoubleType()),
-        StructField("bx", DoubleType()),
-        StructField("by", DoubleType()),
-    ]
+_SEGMENTS = ArrayType(
+    StructType(
+        [StructField(c, IntegerType()) for c in ("part", "ring", "seq")]
+        + [StructField(c, DoubleType()) for c in ("ax", "ay", "bx", "by")]
+    )
 )
 
 
-def _explode_segments(df: DataFrame, id_col: str, wkb_col: str) -> DataFrame:
-    """Directed segments of every polygon ring (ring >= 0) and every
-    linestring part (ring == -1, open chain) — the reference's
-    topology covers mixed poly/line inputs (tests/test_simplify_topo.py
-    :141-167), and a line sharing a polygon boundary must pick up the
-    polygon's vertices as junctions."""
-    from pygeoops_spark.geom.general import get_parts_recursive
-
-    def run(pdf: pd.DataFrame):
-        rows = []
-        for fid, b in zip(pdf[id_col], pdf[wkb_col]):
-            if b is None:
+def _segments(g: Geometry) -> list[tuple]:
+    """Directed segments (part, ring, seq, ax, ay, bx, by) of every
+    polygon ring (ring >= 0) and every linestring part (ring == -1,
+    open chain) — the reference's topology covers mixed poly/line
+    inputs (tests/test_simplify_topo.py:141-167), and a line sharing a
+    polygon boundary must pick up the polygon's vertices as junctions.
+    Other parts yield no segment."""
+    out = []
+    for part_no, part in enumerate(get_parts_recursive(g)):
+        if part.type_id == POLYGON:
+            chains = enumerate(part.data)
+        elif part.type_id == LINESTRING:
+            chains = [(-1, part.data)]
+        else:
+            continue
+        for ring_no, r in chains:
+            a = np.asarray(r, dtype=float)
+            n = len(a) - 1
+            if n < 1:
                 continue
-            g = wkb_loads(bytes(b))
-            for part_no, part in enumerate(get_parts_recursive(g)):
-                if part.type_id == POLYGON:
-                    chains = [(ring_no, np.asarray(r, dtype=float)) for ring_no, r in enumerate(part.data)]
-                elif part.type_id == LINESTRING:
-                    chains = [(-1, np.asarray(part.data, dtype=float))]
-                else:
-                    continue
-                for ring_no, arr in chains:
-                    for i in range(len(arr) - 1):
-                        rows.append(
-                            (
-                                int(fid),
-                                part_no,
-                                ring_no,
-                                i,
-                                arr[i, 0],
-                                arr[i, 1],
-                                arr[i + 1, 0],
-                                arr[i + 1, 1],
-                            )
-                        )
-        return pd.DataFrame(
-            rows, columns=["fid", "part", "ring", "seq", "ax", "ay", "bx", "by"]
-        )
+            out.extend(
+                zip(
+                    [part_no] * n, [ring_no] * n, range(n),
+                    a[:-1, 0].tolist(), a[:-1, 1].tolist(), a[1:, 0].tolist(), a[1:, 1].tolist(),
+                )
+            )
+    return out
 
-    return df.select(id_col, wkb_col).mapInPandas(
-        lambda it: (run(pdf) for pdf in it), _SEG_SCHEMA
-    )
+
+def _chain(segs_l: np.ndarray, sigs: list, is_line: bool, simplify) -> np.ndarray:
+    """One ring or line of a feature from its (seq, sub)-ordered
+    segments: split into arcs at signature changes, simplify each arc
+    on its canonical orientation, and join the arcs back."""
+    n = len(segs_l)
+    if is_line:
+        order = list(range(n))  # open chain: no rotation
+    else:
+        # rotate so the ring starts at a signature change
+        start = 0
+        for i in range(n):
+            if sigs[i] != sigs[i - 1]:
+                start = i
+                break
+        else:
+            # uniform signature (e.g. an island whose whole shell
+            # coincides with another feature's hole): both owners must
+            # build the IDENTICAL arc, so rotate to the
+            # lexicographically smallest snapped vertex instead of this
+            # ring's arbitrary first vertex (ADVICE r02)
+            start = min(range(n), key=lambda i: (_k(segs_l[i][0]), _k(segs_l[i][1])))
+        order = list(range(start, n)) + list(range(0, start))
+    # group consecutive equal signatures into arcs
+    arcs: list[list[int]] = []
+    for idx in order:
+        if arcs and sigs[idx] == sigs[arcs[-1][-1]]:
+            arcs[-1].append(idx)
+        else:
+            arcs.append([idx])
+    pts: list[list[float]] = []
+    for arc in arcs:
+        coords = [segs_l[arc[0]][:2].tolist()] + [segs_l[i][2:].tolist() for i in arc]
+        carr = np.array(coords)
+        fwd = [(_k(x), _k(y)) for x, y in carr]
+        rev = fwd[::-1]
+        flip = not (fwd <= rev)
+        canon = carr[::-1] if flip else carr
+        simplified = canon[simplify(canon)]
+        if flip:
+            simplified = simplified[::-1]
+        chunk = simplified if not pts else simplified[1:]
+        pts.extend(chunk.tolist())
+    return np.array(pts)
+
+
+def _feature(segs: list, simplify) -> Geometry | None:
+    """Rebuild one feature from its collected noded segments (dicts of
+    part, ring, seq, sub, ax, ay, bx, by, fids)."""
+    segs = sorted(segs, key=itemgetter("part", "ring", "seq", "sub"))
+    parts: list[Geometry] = []
+    for _, in_part in groupby(segs, key=itemgetter("part")):
+        rings_out = []
+        lines_out = []
+        for ring, chain in groupby(in_part, key=itemgetter("ring")):
+            chain = list(chain)
+            xy = np.array([[s["ax"], s["ay"], s["bx"], s["by"]] for s in chain], dtype=float)
+            arr = _chain(xy, [tuple(s["fids"]) for s in chain], ring == -1, simplify)
+            if ring == -1:
+                if len(arr) >= 2:
+                    lines_out.append(arr)
+                continue
+            if len(arr) and not np.array_equal(arr[0], arr[-1]):
+                arr = np.vstack([arr, arr[:1]])
+            if len(arr) >= 4:
+                rings_out.append(arr)
+        if rings_out:
+            # ring 0 = shell, rest holes (within one polygon part)
+            parts.append(Geometry(POLYGON, rings_out))
+        for larr in lines_out:
+            parts.append(Geometry(LINESTRING, larr))
+    if not parts:
+        return None
+    if len(parts) == 1:
+        return parts[0]
+    if all(p.type_id == POLYGON for p in parts):
+        return multi(MULTIPOLYGON, parts)
+    if all(p.type_id == LINESTRING for p in parts):
+        return multi(MULTILINESTRING, parts)
+    return multi(GEOMETRYCOLLECTION, parts)
 
 
 def simplify_topo(
@@ -136,15 +202,28 @@ def simplify_topo(
     cell_level: int = 6,
     keep_points_on_wkb: bytes | None = None,
 ) -> DataFrame:
-    """Returns (id_col, simplified_wkb). Features must be (multi)polygons.
+    """Returns (id_col, simplified_wkb). Features are (multi)polygons and
+    (multi)linestrings; a row with no ring or line part (null, points)
+    comes back as NULL.
 
     ``keep_points_on_wkb``: optional broadcast WKB geometry whose points
     are never removed (reference simplify_topo's keep_points_on,
     _simplify_topo.py:23-47) — merged into each arc's keep set on the
-    canonical orientation, so shared-arc consistency is preserved."""
-    from pygeoops_spark.join.cells import cell_id, cover_cells_bbox
+    canonical orientation, so shared-arc consistency is preserved.
 
-    segs = _explode_segments(df, id_col, wkb_col).cache()
+    Eager, like jaccard_pairs: the result is checkpointed before it is
+    returned and the persisted segments are released."""
+    kpo = wkb_loads(keep_points_on_wkb) if keep_points_on_wkb else None  # decoded once, on the driver
+
+    def simplify(canon):
+        return _simplify_ring_idx(canon, tolerance, algorithm, lookahead, kpo)
+
+    # --- 1. segments; scanned four times below, so persisted ----------
+    segs = (
+        df.select(F.col(id_col).alias("fid"), F.explode(row_udf(_segments, _SEGMENTS)(wkb_col)).alias("s"))
+        .select("fid", "s.*")
+        .cache()
+    )
 
     # --- 2. noding: other features' vertices that lie ON a segment ----
     # segment STARTS cover every ring vertex; open line chains also
@@ -175,57 +254,40 @@ def simplify_topo(
     seg_len2 = dxe * dxe + dye * dye
     cross = dxe * dyv - dye * dxv
     t = (dxv * dxe + dyv * dye) / seg_len2
-    splits = (
+    split_map = (
         joined.where(seg_len2 > 0)
         .where((F.abs(cross) / F.sqrt(seg_len2)) < 1e-9)
         .where((t > 1e-12) & (t < 1 - 1e-12))
         .select("fid", "part", "ring", "seq", t.alias("t"), "vx", "vy")
         .distinct()
-        .cache()  # consumed twice: the isEmpty probe + the split agg
+        .groupBy("fid", "part", "ring", "seq")
+        .agg(F.sort_array(F.collect_list(F.struct("t", "vx", "vy"))).alias("pts"))
     )
-    # short-circuit (VERDICT r01): when no vertex lies on another
-    # feature's edge — the usual case for cleanly noded inputs — skip
-    # the split aggregation, the left join and the re-explode entirely
-    if splits.isEmpty():
-        noded = segs.withColumn("sub", F.lit(0))
-    else:
-        split_map = splits.groupBy("fid", "part", "ring", "seq").agg(
-            F.sort_array(F.collect_list(F.struct("t", "vx", "vy"))).alias("pts")
+    # a segment with no split point is one sub-segment (sub 0)
+    noded = (
+        segs.join(split_map, ["fid", "part", "ring", "seq"], "left")
+        .withColumn(
+            "chain",
+            F.concat(
+                F.array(F.struct(F.lit(-1.0).alias("t"), F.col("ax").alias("vx"), F.col("ay").alias("vy"))),
+                F.coalesce("pts", F.array()),
+                F.array(F.struct(F.lit(2.0).alias("t"), F.col("bx").alias("vx"), F.col("by").alias("vy"))),
+            ),
         )
-        noded = (
-            segs.join(split_map, ["fid", "part", "ring", "seq"], "left")
-            .withColumn(
-                "chain",
-                F.concat(
-                    F.array(F.struct(F.lit(-1.0).alias("t"), F.col("ax").alias("vx"), F.col("ay").alias("vy"))),
-                    F.coalesce("pts", F.array()),
-                    F.array(F.struct(F.lit(2.0).alias("t"), F.col("bx").alias("vx"), F.col("by").alias("vy"))),
-                ),
-            )
-            .select(
-                "fid",
-                "part",
-                "ring",
-                "seq",
-                F.posexplode(
-                    F.expr(
-                        "transform(slice(chain, 1, size(chain)-1), (c, i) -> "
-                        "struct(c.vx as ax, c.vy as ay, chain[i+1].vx as bx, chain[i+1].vy as by))"
-                    )
-                ).alias("sub", "s"),
-            )
-            .select(
-                "fid",
-                "part",
-                "ring",
-                "seq",
-                "sub",
-                F.col("s.ax").alias("ax"),
-                F.col("s.ay").alias("ay"),
-                F.col("s.bx").alias("bx"),
-                F.col("s.by").alias("by"),
-            )
+        .select(
+            "fid",
+            "part",
+            "ring",
+            "seq",
+            F.posexplode(
+                F.expr(
+                    "transform(slice(chain, 1, size(chain)-1), (c, i) -> "
+                    "struct(c.vx as ax, c.vy as ay, chain[i+1].vx as bx, chain[i+1].vy as by))"
+                )
+            ).alias("sub", "s"),
         )
+        .select("fid", "part", "ring", "seq", "sub", "s.*")
+    )
 
     # --- 3. shared-segment signature: ONE exchange (window over the
     # canonical segment key), not groupBy + join-back ------------------
@@ -244,116 +306,25 @@ def simplify_topo(
         "fids", F.sort_array(F.collect_set("fid").over(Window.partitionBy("skey")))
     )
 
-    # --- 4. arcs + simplify + rebuild, one groupBy(fid) ---------------
+    # --- 4. arcs + simplify + rebuild, one aggregate per fid ----------
     # Shared-boundary consistency WITHOUT a global distinct-arc pass:
     # every feature orients each arc canonically (lexicographic snapped
     # coords) and runs the deterministic simplify kernel on the
     # canonical orientation, so the two owners of a shared arc produce
-    # byte-identical simplified coordinates independently.
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("simplified_wkb", BinaryType()),
-        ]
-    )
-
-    def simplify_feature(pdf: pd.DataFrame) -> pd.DataFrame:
-        kpo = wkb_loads(keep_points_on_wkb) if keep_points_on_wkb else None
-        fid = int(pdf["fid"].iloc[0])
-        parts: list[Geometry] = []
-        for _part, pgrp in pdf.groupby("part"):
-            rings_out = []
-            lines_out = []
-            for _ring, grp in pgrp.groupby("ring"):
-                is_line = _ring == -1
-                grp = grp.sort_values(["seq", "sub"])
-                segs_l = grp[["ax", "ay", "bx", "by"]].to_numpy()
-                sigs = [tuple(s) for s in grp["fids"]]
-                n = len(segs_l)
-                if n == 0:
-                    continue
-                if is_line:
-                    order = list(range(n))  # open chain: no rotation
-                else:
-                    # rotate so the ring starts at a signature change
-                    start = 0
-                    for i in range(n):
-                        if sigs[i] != sigs[i - 1]:
-                            start = i
-                            break
-                    else:
-                        # uniform signature (e.g. an island whose whole
-                        # shell coincides with another feature's hole):
-                        # both owners must build the IDENTICAL arc, so
-                        # rotate to the lexicographically smallest
-                        # snapped vertex instead of this ring's
-                        # arbitrary first vertex (ADVICE r02)
-                        start = min(
-                            range(n),
-                            key=lambda i: (_k(segs_l[i][0]), _k(segs_l[i][1])),
-                        )
-                    order = list(range(start, n)) + list(range(0, start))
-                # group consecutive equal signatures into arcs
-                arcs: list[list[int]] = []
-                for idx in order:
-                    if arcs and sigs[idx] == sigs[arcs[-1][-1]]:
-                        arcs[-1].append(idx)
-                    else:
-                        arcs.append([idx])
-                pts: list[list[float]] = []
-                for arc in arcs:
-                    coords = [segs_l[arc[0]][:2].tolist()] + [
-                        segs_l[i][2:].tolist() for i in arc
-                    ]
-                    carr = np.array(coords)
-                    fwd = [(_k(x), _k(y)) for x, y in carr]
-                    rev = fwd[::-1]
-                    flip = not (fwd <= rev)
-                    canon = carr[::-1] if flip else carr
-                    keep = _simplify_ring_idx(
-                        canon, tolerance, algorithm, lookahead, kpo
-                    )
-                    simplified = canon[keep]
-                    if flip:
-                        simplified = simplified[::-1]
-                    chunk = simplified if not pts else simplified[1:]
-                    pts.extend(chunk.tolist())
-                arr = np.array(pts)
-                if is_line:
-                    if len(arr) >= 2:
-                        lines_out.append(arr)
-                    continue
-                if len(arr) and not np.array_equal(arr[0], arr[-1]):
-                    arr = np.vstack([arr, arr[:1]])
-                if len(arr) >= 4:
-                    rings_out.append(arr)
-            if rings_out:
-                # ring 0 = shell, rest holes (within one polygon part)
-                parts.append(Geometry(POLYGON, rings_out))
-            for larr in lines_out:
-                parts.append(Geometry(LINESTRING, larr))
-        if not parts:
-            return pd.DataFrame({id_col: [fid], "simplified_wkb": [None]})
-        if len(parts) == 1:
-            g = parts[0]
-        elif all(p.type_id == POLYGON for p in parts):
-            g = multi(MULTIPOLYGON, parts)
-        elif all(p.type_id == LINESTRING for p in parts):
-            g = multi(MULTILINESTRING, parts)
-        else:
-            g = multi(GEOMETRYCOLLECTION, parts)
-        return pd.DataFrame({id_col: [fid], "simplified_wkb": [wkb_dumps(g)]})
-
-    # CPU-bound grouped-map over tiny segment rows: pin the partition
-    # count so AQE can't serialize it (see operators/partitioning.py)
-    from pygeoops_spark.operators.partitioning import repartition_for_cpu
-
+    # byte-identical simplified coordinates independently. The segment
+    # rows are tiny and the kernel is CPU-bound: pin the partition
+    # count so AQE can't serialize it (see operators/partitioning.py).
+    seg_struct = F.struct("part", "ring", "seq", "sub", "ax", "ay", "bx", "by", "fids")
     out = (
         repartition_for_cpu(noded, "fid")
         .groupBy("fid")
-        .applyInPandas(simplify_feature, out_schema)
+        .agg(F.collect_list(seg_struct).alias("segs"))
+        .select(
+            F.col("fid").alias(id_col),
+            row_udf(lambda rows: _feature(rows, simplify), BinaryType())("segs").alias("simplified_wkb"),
+        )
     )
     # preserve input rows: None / empty / unsupported-type features
     # produce no segments but must come back as NULL, not vanish
     # (reference: simplify_topo([None]) == [None])
-    return df.select(id_col).join(out, id_col, "left")
+    return checkpoint_and_release(df.select(id_col).join(out, id_col, "left"), [segs])

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from pygeoops_spark.geom.grid import Bounds
 from pygeoops_spark.join.cells import cell_id
-from pygeoops_spark.operators.grid import tile_cols
+from pygeoops_spark.operators.grid import assign_to_grid
 
 
 def assign_stream_to_grid(
@@ -29,9 +29,9 @@ def assign_stream_to_grid(
     nb_rows: int,
     cell_level: int | None = None,
 ) -> DataFrame:
-    """Stateless per-event tile (and optional cell) assignment."""
-    c, r, t = tile_cols(x, y, total_bounds, nb_columns, nb_rows)
-    out = stream.withColumn("tile_col", c).withColumn("tile_row", r).withColumn("tile_id", t)
+    """Stateless per-event tile (and optional cell) assignment: the
+    batch operators/grid.py:assign_to_grid, plus ``cell_id``."""
+    out = assign_to_grid(stream, x, y, total_bounds, nb_columns, nb_rows)
     if cell_level is not None:
         out = out.withColumn("cell_id", cell_id(x, y, cell_level))
     return out

@@ -111,16 +111,15 @@ def connected_components(
     rounds grow O(log n))."""
     # ONE materialization of the caller's (possibly expensive) pairs
     # plan: both the edge set and the self-pair node set derive from
-    # the same checkpoint, so the plan is never evaluated twice
-    raw = pairs.select(
-        F.col(a_col).alias("u"), F.col(b_col).alias("v")
-    ).localCheckpoint(eager=True)
-    e = (
-        raw.where(F.col("u") != F.col("v"))
+    # the same checkpoint of the distinct pairs, so the plan is never
+    # evaluated twice
+    uv = (
+        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    selfers = raw.where(F.col("u") == F.col("v")).select("u").distinct()
+    e = uv.where(F.col("u") != F.col("v"))
+    selfers = uv.where(F.col("u") == F.col("v")).select("u")
 
     # Small-graph fast path (r07, guide §1.2): the alternating-star
     # loop costs ~8 shuffle stages + a localCheckpoint + a convergence
@@ -128,8 +127,8 @@ def connected_components(
     # edge set fits one task. Below the gate, a single-task union-find
     # (coalesce(1) + mapInPandas — no driver collect, no shuffle)
     # computes the identical min-label components in one pass. The gate
-    # reads the count off the just-checkpointed edges (a metadata-cheap
-    # job), so at corpus scale the distributed O(log n)-round algorithm
+    # counts the edges off the just-checkpointed pairs (a cheap job), so
+    # at corpus scale the distributed O(log n)-round algorithm
     # — the one that matters at 10^12 docs — runs unchanged.
     n_edges = e.count()
     if n_edges <= CC_LOCAL_MAX_EDGES:

@@ -6,6 +6,13 @@ columns. The boundary work — WKB decode of binary arguments, the null
 rule, WKB encode of geometry results, struct assembly — is written
 here once; an operator supplies only its kernel.
 
+Grouped and mapped bodies go through it too: a grouped operator
+collects each group's rows into an array column (``collect_list``) and
+runs one row kernel per group (operators/collection.py collect_agg,
+the per-feature rebuild of operators/simplify_topo.py), and a row that
+fans out returns an array that is exploded in SQL (simplify_topo's
+segments) — no mapInPandas/applyInPandas body decodes WKB itself.
+
 UDFs whose batch loop is numpy rather than per row
 (join/pip.py:_pip_udf, operators/geodesic.py, corpus/pages.py
 with_point_wkb, the simhash kernel in text/dedup.py) stay vectorized
@@ -45,9 +52,11 @@ def row_udf(kernel, returns: DataType | str, null=None):
 
     * arguments: binary values (and arrays of them) arrive decoded as
       ``Geometry``; everything else (coordinates, type codes, GeoJSON
-      strings, nulls in later arguments) is passed through as is.
+      strings, arrays of structs as dicts, nulls in later arguments) is
+      passed through as is.
     * results: a ``Geometry`` or list of them is WKB-encoded; for a
-      ``StructType`` the kernel returns a tuple per row.
+      ``StructType`` the kernel returns a tuple per row, whose fields
+      are encoded the same way.
     * nulls: the first argument is the row's geometry (or what it is
       built from) — a null there, or a ``None`` kernel result, emits
       ``null`` (default: SQL NULL; an all-null struct for structs).
@@ -64,7 +73,7 @@ def row_udf(kernel, returns: DataType | str, null=None):
         out = []
         for row in zip(*cols):
             r = None if row[0] is None else kernel(*map(_decode, row))
-            out.append(null if r is None else _encode(r))
+            out.append(null if r is None else tuple(map(_encode, r)) if struct else _encode(r))
         return pd.DataFrame(out, columns=returns.names) if struct else pd.Series(out)
 
     return _rows

@@ -18,24 +18,28 @@ It dumps:
   without (``*_approx``) and with (``*_exact``) ``guarantee_exact`` —
   the ``knn_join`` and ``geodesic_knn`` queries take the brute-force escape;
 - the similarity driver queries jaccard_pairs, minhash_lsh, simhash,
-  ann_cosine, ann_lsh, ann_ivf and dedup_embedding, ``simhash_pairs``
+  ann_cosine, ann_lsh, ann_ivf, dedup_embedding and dedup_components,
+  ``simhash_pairs``
   over the same documents, the two ANN operators behind ann_ivf
   (``cosine_topk_ivf`` and a persisted ``ivf_query_index``), and the
   two pair calls of the perfbench ``text_dedup`` op over its seed-1
-  corpus.
+  corpus;
+- the grouped geometry driver queries simplify_topo, collect and
+  explode_parts.
 
-The pair functions are eager: they hand their result to
-``checkpoint_and_release`` and return a scan of the checkpoint.  The
+The pair functions and simplify_topo are eager: they hand their result
+to ``checkpoint_and_release`` and return a scan of the checkpoint.  The
 script wraps ``checkpoint_and_release`` in every ``pygeoops_spark``
 module that imports it and also dumps the plan of each frame it
 receives, as ``<frame>_ckpt<i>``. Compare ignores RDD ids too: the
 plans of checkpointed and driver-built frames name their source RDD by
 a session-wide counter.  It prints the Spark jobs each
 frame's construction started (auto level, auto ship, the kNN exactness
-actions, the checkpoints), each frame's row count, and the size in
-characters of the analyzed plan of each frame and checkpointed frame.
+actions, the checkpoints), each frame's row count and the jobs of that
+count, and the size in characters of the analyzed plan of each frame
+and checkpointed frame.
 
-Run:  PYTHONPATH=<tree> python scripts/dump_join_plans.py dump <tree> <out_dir> <tag>
+Run:  PYTHONPATH=<tree> python scripts/dump_join_plans.py dump <tree> <out_dir> <tag> [frame ...]
       python scripts/dump_join_plans.py compare <out_dir> <tag_a> <tag_b>
 Env:  SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01, the
       verify_local.py scale)
@@ -55,7 +59,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 QUERIES = (
     "pip_join", "pip_join_poly", "bbox_join", "geo_bbox_join", "knn_join", "geodesic_knn",
     "jaccard_pairs", "minhash_lsh", "simhash", "ann_cosine", "ann_lsh", "ann_ivf",
-    "dedup_embedding",
+    "dedup_embedding", "dedup_components", "simplify_topo", "collect", "explode_parts",
 )
 
 
@@ -92,7 +96,7 @@ def _wrap_checkpoints(captured: list, tmp: str) -> None:
         captured.append((_plan(result, tmp), _analyzed_chars(result)))
         return orig(result, caches)
 
-    for mod in ("text.dedup", "ann.cosine", "join.knn", "pairs"):
+    for mod in ("text.dedup", "ann.cosine", "join.knn", "pairs", "operators.simplify_topo"):
         try:
             importlib.import_module("pygeoops_spark." + mod)
         except ImportError:  # a tree without that module
@@ -120,7 +124,7 @@ def _ring_shape(spark, n_probes: int, n_targets: int, ax: tuple[str, str]):
     return probes, targets
 
 
-def dump(root: str, out_dir: str, tag: str) -> None:
+def dump(root: str, out_dir: str, tag: str, *only: str) -> None:
     sys.path.insert(0, root)
     sys.path.insert(0, os.path.join(root, "perfbench"))
     import __spark_entry__ as entry
@@ -186,20 +190,25 @@ def dump(root: str, out_dir: str, tag: str) -> None:
             with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
                 fh.write(plan)
 
-        for name, build in builders.items():
-            group = f"dump-{name}"
-            captured.clear()
+        def jobs_of(group, action):
             sc.setJobGroup(group, group)
             try:
-                df = build()
+                return action(), len(sc.statusTracker().getJobIdsForGroup(group))
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
-            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+        for name, build in builders.items():
+            if only and name not in only:
+                continue
+            captured.clear()
+            df, jobs = jobs_of(f"dump-{name}", build)
             write(name, _plan(df, tmp))
             for i, (plan, _) in enumerate(captured):
                 write(f"{name}_ckpt{i}", plan)
+            rows, count_jobs = jobs_of(f"dump-{name}-count", df.count)
             print(
-                f"{name}: plan-time jobs={jobs} checkpoints={len(captured)} rows={df.count()} "
+                f"{name}: plan-time jobs={jobs} checkpoints={len(captured)} rows={rows} "
+                f"count jobs={count_jobs} "
                 f"analyzed_chars={_analyzed_chars(df)} "
                 f"checkpoint_analyzed_chars={[n for _, n in captured]}"
             )
@@ -226,6 +235,6 @@ def compare(out_dir: str, tag_a: str, tag_b: str) -> int:
 
 if __name__ == "__main__":
     if sys.argv[1] == "dump":
-        dump(*sys.argv[2:5])
+        dump(*sys.argv[2:])
     else:
         sys.exit(compare(*sys.argv[2:5]))
