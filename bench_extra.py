@@ -55,6 +55,17 @@ def _cpu_probe_ms() -> float:
     return round(best, 1)
 
 
+def timed_action(df):
+    """The one-row aggregate a leaf is timed as: a bit_xor over the
+    xxhash64 of every output column. It reads every column, so Catalyst
+    cannot prune a Python UDF whose output the leaf would not consume
+    (a bare ``count()`` does exactly that). bit_xor, unlike a sum, cannot
+    overflow under ANSI arithmetic."""
+    from pyspark.sql import functions as F
+
+    return df.agg(F.bit_xor(F.xxhash64(*[df[c] for c in df.columns])))
+
+
 def main() -> None:
     args = sys.argv[1:]
     reps = 3
@@ -89,7 +100,7 @@ def main() -> None:
             probes.append(_cpu_probe_ms())
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
             t0 = time.time()
-            qs[name](spark, SF_DIR).count()
+            timed_action(qs[name](spark, SF_DIR)).collect()
             times.append(round(time.time() - t0, 3))
             spark.sparkContext.setJobDescription(None)
         out[name] = {

@@ -1,10 +1,16 @@
 """Polygon boolean operations (union / intersection / difference) from
 scratch — no GEOS available in this environment.
 
-Approach (noding + classification + stitching):
- 1. collect the directed boundary segments of all input polygons
- 2. node: split every segment at its intersections with segments of the
-    other input(s) (bbox-prefiltered pairwise tests)
+Approach (noding + classification + stitching). An edge set is ONE
+(n, 4) float64 array, a row ``[x1 y1 x2 y2]`` per directed edge, from
+the moment a ring is cut into edges (_chain_edges) until _stitch walks
+it; every step below takes and returns that array, in order, and picks
+edges with boolean masks or concatenations:
+ 1. collect the directed boundary edges of all input polygons
+    (_poly_edges: one _chain_edges call over the oriented rings)
+ 2. node: split every edge at its intersections with edges of the
+    other input(s) (bbox-prefiltered pairwise tests); each edge's
+    pieces replace it in place, in order along the edge
  3. classify every noded edge by where its midpoint lies relative to
     each input (strictly inside / outside, on-boundary handled via the
     edge-ownership rules below)
@@ -17,9 +23,9 @@ Approach (noding + classification + stitching):
     The binary ops run one pipeline (_binary_overlay); each op is only
     a _Rule row — the class each operand keeps, whether B's kept edges
     are reversed, the empty-operand result and the retry area bound.
- 5. stitch directed edges into rings (at multi-way vertices take the
-    sharpest counter-clockwise turn), classify shells/holes by signed
-    area, assign holes to shells by point-in-polygon.
+ 5. stitch the kept edge array into rings (at multi-way vertices take
+    the sharpest counter-clockwise turn), classify shells/holes by
+    signed area, assign holes to shells by point-in-polygon.
 
 This is the kernel behind difference_all / difference_all_tiled
 (reference semantics: /root/reference/pygeoops/_difference.py — union
@@ -84,8 +90,11 @@ from pygeoops_spark.geom.wkb import (
 SNAP = 1e-9
 
 
-def _key(p, snap: float = SNAP) -> tuple[int, int]:
-    return (round(p[0] / snap), round(p[1] / snap))
+def _cell_keys(arr: np.ndarray, snap: float) -> list[tuple]:
+    """Each row's snapped grid cells as one hashable key: a vertex's
+    cell for (n, 2) points, an edge's (start, end) cells for an edge
+    array."""
+    return list(map(tuple, np.round(arr / snap).tolist()))
 
 
 def _op_snap(geoms) -> float:
@@ -181,46 +190,37 @@ def _hull_area(polys: list[Geometry]) -> float:
     return abs(ring_signed_area(np.asarray(hull)))
 
 
-def _poly_edges(poly: Geometry) -> list[tuple[np.ndarray, np.ndarray]]:
-    """Directed edges of all rings (shell CCW, holes CW normalized)."""
-    edges = []
-    for ri, ring in enumerate(poly.data):
-        arr = np.asarray(ring, dtype=float)[:, :2]
-        area = ring_signed_area(arr)
-        want_ccw = ri == 0
-        if (area > 0) != want_ccw and area != 0:
-            arr = arr[::-1]
-        for i in range(len(arr) - 1):
-            a, b = arr[i], arr[i + 1]
-            if a[0] != b[0] or a[1] != b[1]:
-                edges.append((a, b))
+def _chain_edges(chains, skip_zero: bool = True) -> np.ndarray:
+    """The one way an edge set is made: the consecutive vertex pairs
+    of every coordinate chain as one (n, 4) float64 array
+    ``[x1 y1 x2 y2]``, in chain order (x/y only). ``skip_zero`` drops
+    bit-exact zero-length edges (repeated vertices)."""
+    coords = [np.asarray(c, dtype=float)[:, :2] for c in chains]
+    edges = np.vstack([np.empty((0, 4))] + [np.hstack([c[:-1], c[1:]]) for c in coords])
+    if skip_zero:
+        edges = edges[(edges[:, 0] != edges[:, 2]) | (edges[:, 1] != edges[:, 3])]
     return edges
 
 
-def _edges_arrays(
-    edges: list[tuple[np.ndarray, np.ndarray]]
-) -> tuple[np.ndarray, np.ndarray]:
-    """(starts, ends) as (n,2) float arrays — the vectorized form of an
-    edge list. Hoisted out of _node_edges (r07): an n-ary union calls
-    _node_edges once per polygon with the other polygons as neighbors,
-    so without caching every polygon's list was re-converted once per
-    appearance in a neighbor set (~5x redundant array builds for the
-    buffer-chain shapes; pure conversion, no geometric change)."""
-    if not edges:
-        z = np.empty((0, 2))
-        return z, z
-    return np.array([e[0] for e in edges]), np.array([e[1] for e in edges])
+def _poly_edges(polys: list[Geometry]) -> np.ndarray:
+    """Directed edges of all rings of ``polys`` (shell CCW, holes CW
+    normalized)."""
+    rings = []
+    for poly in polys:
+        for ri, ring in enumerate(poly.data):
+            arr = np.asarray(ring, dtype=float)[:, :2]
+            area = ring_signed_area(arr)
+            want_ccw = ri == 0
+            if (area > 0) != want_ccw and area != 0:
+                arr = arr[::-1]
+            rings.append(arr)
+    return _chain_edges(rings)
 
 
-def _node_edges(
-    edges: list[tuple[np.ndarray, np.ndarray]],
-    others: list[list[tuple[np.ndarray, np.ndarray]]],
-    snap: float = SNAP,
-    edges_arr: tuple[np.ndarray, np.ndarray] | None = None,
-    others_arr: list[tuple[np.ndarray, np.ndarray]] | None = None,
-) -> list[tuple[np.ndarray, np.ndarray]]:
-    """Split each edge at intersections with edges of the other sets,
-    and at other-set vertices lying within ``10*snap`` of it.
+def _node_edges(edges: np.ndarray, others: np.ndarray, snap: float = SNAP) -> np.ndarray:
+    """Split each edge at intersections with the ``others`` edges, and
+    at their vertices lying within ``10*snap`` of it. Each cut edge is
+    replaced in place by its pieces, in order along the edge.
 
     Per edge, the general-position intersection test against ALL bbox
     candidates is one vectorized numpy pass (block size caps the bool
@@ -230,37 +230,25 @@ def _node_edges(
     two sides of an overlay always agree on cut coordinates. Crossings
     closer than ``snap`` to any of the four endpoints are left to the
     vertex pass (the endpoint itself is the node there)."""
-    if not others:
+    if not len(others):
         return edges
-    if others_arr is not None:
-        if sum(len(a) for a, _ in others_arr) == 0:
-            return edges
-        o1 = np.concatenate([a for a, _ in others_arr])
-        o2 = np.concatenate([b for _, b in others_arr])
-    else:
-        all_other = [e for o in others for e in o]
-        if not all_other:
-            return edges
-        o1 = np.array([e[0] for e in all_other])
-        o2 = np.array([e[1] for e in all_other])
+    o1, o2 = others[:, :2], others[:, 2:]
     ob_lo = np.minimum(o1, o2)
     ob_hi = np.maximum(o1, o2)
     s_all = o2 - o1
     n_e, n_o = len(edges), len(o1)
-    e1, e2 = edges_arr if edges_arr is not None else _edges_arrays(edges)
+    e1, e2 = edges[:, :2], edges[:, 2:]
     d_all = e2 - e1
     eb_lo = np.minimum(e1, e2)
     eb_hi = np.maximum(e1, e2)
     len_d_all = np.hypot(d_all[:, 0], d_all[:, 1])
     len_s_all = np.hypot(s_all[:, 0], s_all[:, 1])
-    # cut list per edge: (t, x, y) — the POINT is authoritative (vertex
-    # cuts carry the vertex's exact coordinates), t only orders them.
-    cuts_per_edge: list[list[tuple[float, float, float]] | None] = [None] * n_e
-
-    def _add_cut(i_e: int, t_v: float, px: float, py: float) -> None:
-        if cuts_per_edge[i_e] is None:
-            cuts_per_edge[i_e] = []
-        cuts_per_edge[i_e].append((t_v, px, py))
+    # cuts per pass block: edge index, t, point — the POINT is
+    # authoritative (vertex cuts carry the vertex's exact coordinates),
+    # t only orders them along the edge
+    cut_e: list[np.ndarray] = []
+    cut_t: list[np.ndarray] = []
+    cut_p: list[np.ndarray] = []
 
     blk = max(1, 4_000_000 // max(n_o, 1))
     for b0 in range(0, n_e, blk):
@@ -314,11 +302,9 @@ def _node_edges(
                 um = u[m]
                 pe = e1[ig] + tm[:, None] * d_all[ig]
                 po = o1[jg] + um[:, None] * s_all[jg]
-                pavg = (pe + po) / 2.0
-                for i_e, t_v, px, py in zip(
-                    ig.tolist(), tm.tolist(), pavg[:, 0].tolist(), pavg[:, 1].tolist()
-                ):
-                    _add_cut(i_e, t_v, px, py)
+                cut_e.append(ig)
+                cut_t.append(tm)
+                cut_p.append((pe + po) / 2.0)
     # vertex-on-edge pass: other-set endpoints within 10*snap of an
     # edge's interior become cuts AT THE VERTEX COORDINATES. Covers
     # (near-)collinear partial overlap, T-junctions and near-incident
@@ -351,44 +337,43 @@ def _node_edges(
         dist = np.hypot(v[:, 0] - proj[:, 0], v[:, 1] - proj[:, 1])
         ld = len_d_all[ii]
         m = (dist <= vtol) & (t * ld > vtol) & ((1.0 - t) * ld > vtol)
-        if m.any():
-            for i_e, t_v, px, py in zip(
-                ii[m].tolist(), t[m].tolist(), v[m, 0].tolist(), v[m, 1].tolist()
-            ):
-                _add_cut(i_e, t_v, px, py)
-    out = []
-    for i, (a, b) in enumerate(edges):
-        cuts = cuts_per_edge[i]
-        if not cuts:
-            out.append((a, b))
-            continue
-        pts = [a] + [np.array([px, py]) for _t, px, py in sorted(cuts)] + [b]
-        for p, q in zip(pts[:-1], pts[1:]):
-            if _key(p, snap) != _key(q, snap):
-                out.append((p, q))
-    return out
+        cut_e.append(ii[m])
+        cut_t.append(t[m])
+        cut_p.append(v[m])
+    ie = np.concatenate([np.empty(0, dtype=np.intp)] + cut_e)
+    if not len(ie):
+        return edges
+    # each edge's cuts sorted by (t, x, y) — stable, so exact ties keep
+    # pass order — then laid out as one point run per edge: start, cuts,
+    # end. Consecutive points within a run are the pieces; on a cut
+    # edge, pieces whose ends share a snap cell are dropped.
+    t_c = np.concatenate(cut_t)
+    p_c = np.vstack(cut_p)
+    order = np.lexsort((p_c[:, 1], p_c[:, 0], t_c, ie))
+    ie = ie[order]
+    k = np.bincount(ie, minlength=n_e)
+    first = 2 * np.arange(n_e) + np.cumsum(k) - k
+    pts = np.empty((2 * n_e + len(ie), 2))
+    pts[first] = e1
+    pts[first + k + 1] = e2
+    pts[2 * ie + np.arange(len(ie)) + 1] = p_c[order]
+    piece = np.ones(len(pts) - 1, dtype=bool)
+    piece[(first + k + 1)[:-1]] = False
+    cells = np.round(pts / snap)
+    distinct = (cells[:-1] != cells[1:]).any(axis=1)[piece]
+    out = np.hstack([pts[:-1], pts[1:]])[piece]
+    return out[(np.repeat(k, k + 1) == 0) | distinct]
 
 
-def _midpoints(edges: list[tuple[np.ndarray, np.ndarray]]) -> np.ndarray:
-    a = np.array([e[0] for e in edges])
-    b = np.array([e[1] for e in edges])
-    return (a + b) / 2
+def _midpoints(edges: np.ndarray) -> np.ndarray:
+    return (edges[:, :2] + edges[:, 2:]) / 2
 
 
-def _poly_segments(poly: Geometry) -> np.ndarray | None:
-    """All boundary segments as an (m, 4) array [x1 y1 x2 y2]."""
-    seg_arrays = []
-    for part in get_parts(poly):
-        for ring in part.data:
-            arr = np.asarray(ring, dtype=float)[:, :2]
-            if len(arr) >= 2:
-                seg_arrays.append(np.hstack([arr[:-1], arr[1:]]))
-    return np.vstack(seg_arrays) if seg_arrays else None
-
-
-def _seg_array(edges: list[tuple[np.ndarray, np.ndarray]]) -> np.ndarray:
-    """Edges as an (m, 4) array [x1 y1 x2 y2]."""
-    return np.array([np.concatenate(e) for e in edges])
+def _poly_segments(poly: Geometry) -> np.ndarray:
+    """All boundary segments in raw ring orientation, zero-length ones
+    included: the on-boundary distance reference of _classify and of
+    polygon_union's per-neighbor test."""
+    return _chain_edges([r for part in get_parts(poly) for r in part.data], skip_zero=False)
 
 
 def _nearest_segment(mids: np.ndarray, segs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -419,7 +404,7 @@ def _nearest_segment(mids: np.ndarray, segs: np.ndarray) -> tuple[np.ndarray, np
 
 
 def _onb_verdict(
-    edges: list[tuple[np.ndarray, np.ndarray]],
+    edges: np.ndarray,
     other: Geometry,
     segs: np.ndarray,
     inside: np.ndarray | None = None,
@@ -433,7 +418,7 @@ def _onb_verdict(
       segment below ``scale * 1e-13`` with the projection inside the
       segment. Only here is point-in-polygon undefined. Coincidence
       MUST be judged against the same arrangement the stitcher walks:
-      ``segs`` is other's NODED chain (_seg_array) — vertex-on-edge
+      ``segs`` is other's NODED edge array — vertex-on-edge
       noding detours chains onto the opposite set's vertices (up to
       10*snap off the original boundary), and a piece that is
       bit-identical to a detoured chain segment reads as "strictly
@@ -481,24 +466,22 @@ def _onb_verdict(
     coincident = (
         (np.abs(s) <= thr) & (t >= -tpad) & (t <= 1 + tpad) & (seg_len > 0)
     )
-    edir = np.array([q - p for p, q in edges], dtype=float)
+    edir = edges[:, 2:] - edges[:, :2]
     codir = edir[:, 0] * dx + edir[:, 1] * dy > 0
     if inside is None:
         inside = points_in_polygon(mids[:, 0], mids[:, 1], other)
     return coincident, codir, np.asarray(inside, dtype=bool)
 
 
-def _classify(
-    edges: list[tuple[np.ndarray, np.ndarray]], poly: Geometry, snap: float = SNAP
-) -> np.ndarray:
+def _classify(edges: np.ndarray, poly: Geometry, snap: float = SNAP) -> np.ndarray:
     """For each edge: 1 inside poly, 0 on boundary, -1 outside (by
     midpoint; on-boundary detected via distance test)."""
-    if not edges:
+    if not len(edges):
         return np.empty(0, dtype=int)
     mids = _midpoints(edges)
     res = np.where(points_in_polygon(mids[:, 0], mids[:, 1], poly), 1, -1)
     segs = _poly_segments(poly)
-    if segs is not None:
+    if len(segs):
         res = np.where(_nearest_segment(mids, segs)[0] <= snap * 10, 0, res)
     return res
 
@@ -541,11 +524,10 @@ def _cluster_nodes(uniq: np.ndarray, radius: int) -> np.ndarray:
     return np.array([find(i) for i in range(n)])
 
 
-def _stitch(
-    edges: list[tuple[np.ndarray, np.ndarray]], snap: float = SNAP
-) -> tuple[list[np.ndarray], float]:
-    """Assemble directed edges into closed rings. At branching vertices
-    pick the most counter-clockwise continuation (keeps minimal rings).
+def _stitch(edges: np.ndarray, snap: float = SNAP) -> tuple[list[np.ndarray], float]:
+    """Assemble a directed edge array into closed rings. At branching
+    vertices pick the most counter-clockwise continuation (keeps
+    minimal rings).
 
     Two-phase: the fast path uses raw grid keys and NO degenerate-input
     machinery — a clean overlay (the overwhelming majority, e.g. every
@@ -571,7 +553,7 @@ def _stitch(
 
 
 def _stitch_core(
-    edges: list[tuple[np.ndarray, np.ndarray]], snap: float, robust: bool
+    edges: np.ndarray, snap: float, robust: bool
 ) -> tuple[list[np.ndarray], bool, float]:
     # dedupe identical directed edges, then drop anti-parallel pairs
     # entirely (BOTH members): an edge traversed in both directions is
@@ -585,37 +567,20 @@ def _stitch_core(
     # crossing, classified as shared boundary and absorbed by the other
     # operand) would otherwise leave a gap wider than one grid cell and
     # the walk would discard the whole ring as an open chain.
-    if not edges:
+    if not len(edges):
         return [], True, 0.0
-    a_arr = np.array([e[0] for e in edges])
-    b_arr = np.array([e[1] for e in edges])
-    ka_all = np.round(a_arr / snap).astype(np.int64)
-    kb_all = np.round(b_arr / snap).astype(np.int64)
-    n_edge = len(edges)
+    ka = np.round(edges[:, :2] / snap).astype(np.int64)
+    kb = np.round(edges[:, 2:] / snap).astype(np.int64)
     if robust:
-        uniq, inv = np.unique(
-            np.vstack([ka_all, kb_all]), axis=0, return_inverse=True
-        )
+        n_edge = len(edges)
+        uniq, inv = np.unique(np.vstack([ka, kb]), axis=0, return_inverse=True)
         canon = _cluster_nodes(uniq, radius=10)
-        ca_idx = canon[inv[:n_edge]]
-        cb_idx = canon[inv[n_edge:]]
-        keys = [
-            ((int(uniq[ca_idx[i], 0]), int(uniq[ca_idx[i], 1])),
-             (int(uniq[cb_idx[i], 0]), int(uniq[cb_idx[i], 1])))
-            for i in range(n_edge)
-        ]
-    else:
-        ka_l = ka_all.tolist()
-        kb_l = kb_all.tolist()
-        keys = [
-            ((ka_l[i][0], ka_l[i][1]), (kb_l[i][0], kb_l[i][1]))
-            for i in range(n_edge)
-        ]
+        ka, kb = uniq[canon[inv[:n_edge]]], uniq[canon[inv[n_edge:]]]
     # degenerate: both endpoints on one node (zero-length after snap /
     # collapsed cluster)
-    live = [i for i in range(n_edge) if keys[i][0] != keys[i][1]]
-    edges = [edges[i] for i in live]
-    keys = [keys[i] for i in live]
+    live = (ka != kb).any(axis=1)
+    edges = edges[live]
+    keys = [(tuple(a), tuple(b)) for a, b in zip(ka[live].tolist(), kb[live].tolist())]
     seen = set(keys)
     kept_idx: list[int] = []
     emitted: set[tuple] = set()
@@ -627,13 +592,12 @@ def _stitch_core(
         emitted.add(k)
         kept_idx.append(i)
     edge_keys = [keys[i] for i in kept_idx]
-    edges = [edges[i] for i in kept_idx]
+    # the walk reads the kept rows [x1, y1, x2, y2] as python floats
+    edges = edges[kept_idx].tolist()
     # loss accounting (robust mode): reference length BEFORE repair;
     # everything not emitted into a ring (repair removals + dangling
     # chains) counts as lost — the caller's catastrophic-loss signal
-    total_len = sum(
-        math.hypot(b[0] - a[0], b[1] - a[1]) for a, b in edges
-    )
+    total_len = sum(math.hypot(x2 - x1, y2 - y1) for x1, y1, x2, y2 in edges)
     emitted_len = 0.0
 
     # degree repair (robust mode): in a clean overlay every node has
@@ -668,9 +632,7 @@ def _stitch_core(
             return [], False, 0.0
         drop = min(
             cands,
-            key=lambda i: math.hypot(
-                edges[i][1][0] - edges[i][0][0], edges[i][1][1] - edges[i][0][1]
-            ),
+            key=lambda i: math.hypot(edges[i][2] - edges[i][0], edges[i][3] - edges[i][1]),
         )
         del edges[drop]
         del edge_keys[drop]
@@ -741,13 +703,12 @@ def _stitch_core(
                 # rightmost (sharpest clockwise) turn relative to the
                 # incoming direction keeps each simple loop separate at
                 # figure-eight vertices (touching rings stay two rings)
-                a, b = edges[cur]
-                din = b - a
-                ain = math.atan2(din[1], din[0])
+                x1, y1, x2, y2 = edges[cur]
+                ain = math.atan2(y2 - y1, x2 - x1)
 
                 def turn(i):
-                    dv = edges[i][1] - edges[i][0]
-                    ang = math.atan2(dv[1], dv[0]) - (ain + math.pi)
+                    e = edges[i]
+                    ang = math.atan2(e[3] - e[1], e[2] - e[0]) - (ain + math.pi)
                     while ang <= 0:
                         ang += 2 * math.pi
                     while ang > 2 * math.pi:
@@ -766,7 +727,7 @@ def _stitch_core(
 
 
 def _pinch_off(
-    edges: list[tuple[np.ndarray, np.ndarray]],
+    edges: list[list[float]],
     stack: list[int],
     nodes: list[tuple],
     node_pos: dict[tuple, int],
@@ -775,14 +736,14 @@ def _pinch_off(
 ) -> float:
     """Pinch the sub-cycle ``stack[i0:]`` off the stitch walk's path:
     emit it as a ring when it has >= 3 edges, drop it and its nodes
-    from the path, and return the edge length emitted."""
+    from the path, and return the edge length emitted. ``edges`` are
+    the walk's rows [x1, y1, x2, y2]."""
     cycle = stack[i0:]
     emitted = 0.0
     if len(cycle) >= 3:
-        rings.append(np.array([edges[e][0] for e in cycle] + [edges[cycle[-1]][1]]))
+        rings.append(np.array([edges[e][:2] for e in cycle] + [edges[cycle[-1]][2:]]))
         emitted = sum(
-            math.hypot(edges[e][1][0] - edges[e][0][0], edges[e][1][1] - edges[e][0][1])
-            for e in cycle
+            math.hypot(edges[e][2] - edges[e][0], edges[e][3] - edges[e][1]) for e in cycle
         )
     del stack[i0:]
     for nk in nodes[i0:]:
@@ -843,25 +804,21 @@ def _as_polys(geom: Geometry | None) -> list[Geometry]:
     return [p for p in get_parts(geom) if p.type_id == POLYGON and p.data]
 
 
-def _codirected_near_duplicate(
-    kept_a: list[tuple[np.ndarray, np.ndarray]],
-    kept_b: list[tuple[np.ndarray, np.ndarray]],
-    snap: float,
-) -> bool:
+def _codirected_near_duplicate(kept_a: np.ndarray, kept_b: np.ndarray, snap: float) -> bool:
     """True when some kept B-side shared edge lies within the noding
     tolerance of a CO-DIRECTED kept A-side shared edge without being
     bit-identical to it: the double-keep signature of a sub-tolerance
     strip bounded twice (once per rule). Distance is point-to-segment
-    (the two chains may be cut at different nodes). Both lists are
-    boundary-scale small, so the pairwise scan is cheap."""
+    (the two chains may be cut at different nodes). Both edge arrays
+    are boundary-scale small, so the pairwise scan is cheap."""
     tol = snap * 20
-    for p2, q2 in kept_b:
+    for p2, q2 in zip(kept_b[:, :2], kept_b[:, 2:]):
         m2 = (p2 + q2) / 2
         d2 = q2 - p2
         l2 = math.hypot(d2[0], d2[1])
         if l2 == 0:
             continue
-        for p1, q1 in kept_a:
+        for p1, q1 in zip(kept_a[:, :2], kept_a[:, 2:]):
             d1 = q1 - p1
             l1 = math.hypot(d1[0], d1[1])
             if l1 == 0:
@@ -885,6 +842,11 @@ def _codirected_near_duplicate(
                 continue
             return True
     return False
+
+
+def _directed(edges: np.ndarray, rev: bool) -> np.ndarray:
+    """``edges``, each reversed when ``rev``."""
+    return edges[:, [2, 3, 0, 1]] if rev else edges
 
 
 class _Rule(NamedTuple):
@@ -933,16 +895,13 @@ def _binary_overlay(
         return a if rule.b_empty_keeps_a else None
     ops = (a, b)
     snap = _op_snap(ops)
-    edges = [[e for p in ps for e in _poly_edges(p)] for ps in (pa, pb)]
-    noded = [_node_edges(edges[i], [edges[1 - i]], snap) for i in (0, 1)]
+    edges = [_poly_edges(pa), _poly_edges(pb)]
+    noded = [_node_edges(edges[i], edges[1 - i], snap) for i in (0, 1)]
     cls = [_classify(noded[i], ops[1 - i], snap) for i in (0, 1)]
     keep = [
-        (q, p) if rev else (p, q)
-        for (want, rev), side, c in zip(rule.sides, noded, cls)
-        for (p, q), ci in zip(side, c)
-        if ci == want
+        _directed(side[c == want], rev) for (want, rev), side, c in zip(rule.sides, noded, cls)
     ]
-    seen = {(_key(p, snap), _key(q, snap)) for p, q in keep} if rule.dedupe else None
+    seen = set(_cell_keys(np.vstack(keep), snap)) if rule.dedupe else None
     # edges on the other operand's boundary, in the off->0 limit: exact
     # midpoint point-in-polygon when strictly off the other boundary,
     # co-direction with the underlying segment when bit-coincident
@@ -950,23 +909,20 @@ def _binary_overlay(
     # hugging A's boundary from inside bound a sub-tolerance strip of
     # the result; exact-shared duplicates collapse in _stitch and
     # tolerance-zone double-keeps fall to its degree repair.
-    shared: tuple[list, list] = ([], [])
+    shared = []
     for i, (want, rev) in enumerate(rule.sides):
-        onb = [e for e, c in zip(noded[i], cls[i]) if c == 0]
-        if not onb:
-            continue
-        coin, cod, ins = _onb_verdict(onb, ops[1 - i], _seg_array(noded[1 - i]))
-        for (p, q), co, cd, n in zip(onb, coin, cod, ins):
-            if ((cd != rev) if co else n) != (want == 1):
-                continue
-            e = (q, p) if rev else (p, q)
-            if seen is not None:
-                k = (_key(e[0], snap), _key(e[1], snap))
-                if k in seen:
-                    continue
-                seen.add(k)
-            keep.append(e)
-            shared[i].append(e)
+        onb = noded[i][cls[i] == 0]
+        coin, cod, ins = _onb_verdict(onb, ops[1 - i], noded[1 - i])
+        e = _directed(onb[np.where(coin, cod != rev, ins) == (want == 1)], rev)
+        if seen is not None:
+            fresh = np.zeros(len(e), dtype=bool)
+            for j, k in enumerate(_cell_keys(e, snap)):
+                if k not in seen:
+                    seen.add(k)
+                    fresh[j] = True
+            e = e[fresh]
+        shared.append(e)
+    keep = np.vstack(keep + shared)
     rings, lost = _stitch(keep, snap)
     result = _rings_to_polygons(rings, snap)
     if snapped:
@@ -979,7 +935,7 @@ def _binary_overlay(
         ops,
         lambda g: _binary_overlay(g[0], g[1], rule, snapped=True),
         suspect=lambda: rule.near_dup
-        and bool(shared[0] and shared[1])
+        and bool(len(shared[0]) and len(shared[1]))
         and _codirected_near_duplicate(shared[0], shared[1], snap),
     )
 
@@ -1007,7 +963,7 @@ def polygon_union(
     if len(flat) == 1:
         return flat[0]
     snap = _op_snap(flat)
-    per_poly_edges = [_poly_edges(p) for p in flat]
+    per_poly_edges = [_poly_edges([p]) for p in flat]
     # bbox prefilter (exact): a polygon whose bbox is disjoint from
     # polygon i's bbox can neither cut i's edges nor contain any of
     # them — skip both the noding input and the classify pass. Turns
@@ -1027,53 +983,35 @@ def polygon_union(
             a[2] < b[0] - eps or b[2] < a[0] - eps or a[3] < b[1] - eps or b[3] < a[1] - eps
         )
 
-    keep: list[tuple[np.ndarray, np.ndarray]] = []
-    seg_cache = [None] * len(flat)
-    noded_segs: list[np.ndarray | None] = [None] * len(flat)
-    # noded chains for ALL polygons first: onb verdicts below must be
-    # judged against the NODED arrangement (chains detour onto the
-    # opposite set's vertices), not the original boundaries
     near_all = [
         [j for j in range(len(flat)) if j != i and _bbox_overlap(boxes[i], boxes[j])]
         for i in range(len(flat))
     ]
-    # per-polygon edge arrays built ONCE and shared across every
-    # _node_edges call this polygon appears in (self or neighbor) —
-    # see _edges_arrays
-    edge_arrs = [_edges_arrays(e) for e in per_poly_edges]
+    # noded edges for ALL polygons first: onb verdicts below must be
+    # judged against the NODED arrangement (chains detour onto the
+    # opposite set's vertices), not the original boundaries
     noded_all = [
-        _node_edges(
-            per_poly_edges[i],
-            [per_poly_edges[j] for j in near_all[i]],
-            snap,
-            edges_arr=edge_arrs[i],
-            others_arr=[edge_arrs[j] for j in near_all[i]],
-        )
-        if near_all[i]
+        _node_edges(per_poly_edges[i], np.vstack([per_poly_edges[j] for j in near]), snap)
+        if near
         else per_poly_edges[i]
-        for i in range(len(flat))
+        for i, near in enumerate(near_all)
     ]
-    for i, p in enumerate(flat):
-        near = near_all[i]
-        noded = noded_all[i]
+    raw_segs = [_poly_segments(p) for p in flat]
+    keep = []
+    for near, noded in zip(near_all, noded_all):
         inside_any = np.zeros(len(noded), dtype=bool)
         onb_any = np.zeros(len(noded), dtype=bool)
         per_j: list[tuple[int, np.ndarray, np.ndarray]] = []  # (j, raw pip, onb mask)
-        if near and noded:
-            # one midpoint build shared across the per-neighbor passes
-            # (rebuilding it for every j was the profiled union hot
-            # spot); segments cached per polygon across the outer loop.
+        if near and len(noded):
+            # one midpoint build shared across the per-neighbor passes.
             # Per-j semantics preserved: a midpoint ON j's boundary is
             # NOT inside j even when the crossing test says so. The raw
             # PIP and onb masks are kept per neighbor so the onb-keep
             # phase below can reuse them instead of re-testing.
             mids = _midpoints(noded)
             for j in near:
-                if seg_cache[j] is None:
-                    s = _poly_segments(flat[j])
-                    seg_cache[j] = s if s is not None else False
-                segs = seg_cache[j]
-                if segs is not False:
+                segs = raw_segs[j]
+                if len(segs):
                     onb_j = _nearest_segment(mids, segs)[0] <= snap * 10
                 else:
                     onb_j = np.zeros(len(noded), dtype=bool)
@@ -1083,54 +1021,39 @@ def polygon_union(
                 per_j.append((j, pip_j, onb_j))
                 inside_any |= pip_j & ~onb_j
                 onb_any |= onb_j
-        # shared/near-shared boundary edges: keep iff the RIGHT side
-        # (this polygon's own exterior — interior is left of a CCW
-        # shell / normalized hole edge) is not covered by any other
-        # polygon, evaluated in the off->0 limit per neighbor: exact
-        # midpoint point-in-polygon when strictly off j's boundary,
-        # anti-direction with j's underlying segment when
+        # shared/near-shared boundary edges of positive length: keep iff
+        # the RIGHT side (this polygon's own exterior — interior is left
+        # of a CCW shell / normalized hole edge) is not covered by any
+        # other polygon, evaluated in the off->0 limit per neighbor:
+        # exact midpoint point-in-polygon when strictly off j's
+        # boundary, anti-direction with j's underlying segment when
         # bit-coincident (anti-directed shared CHAINS cancel even when
         # the two sides were noded at different cut points — edge-level
         # key matching cannot pair those). Exact co-directed duplicates
         # both survive and collapse via _stitch's directed-key dedupe,
         # near-identical ones via its degree repair.
-        onb_keep = onb_any & ~inside_any
-        if onb_keep.any():
-            onb_idx = [
-                k
-                for k in np.nonzero(onb_keep)[0]
-                if math.hypot(*(noded[k][1] - noded[k][0])) > 0
-            ]
-            covered = np.zeros(len(onb_idx), dtype=bool)
-            for j, pip_j, onb_j in per_j:
-                # edges >= the 10*snap band away from j's boundary can
-                # never be coincident with its noded chain (detours are
-                # bounded by the band): the off->0 limit is just the
-                # raw midpoint PIP already computed above. Only the
-                # true onb-vs-j subset needs the coincidence test.
-                sel = [s for s, k in enumerate(onb_idx) if onb_j[k]]
-                for s, k in enumerate(onb_idx):
-                    if not onb_j[k]:
-                        covered[s] |= pip_j[k]
-                if sel:
-                    if noded_segs[j] is None:
-                        noded_segs[j] = _seg_array(noded_all[j])
-                    sub = [noded[onb_idx[s]] for s in sel]
-                    coin, cod, ins = _onb_verdict(
-                        sub,
-                        flat[j],
-                        noded_segs[j],
-                        inside=pip_j[[onb_idx[s] for s in sel]],
-                    )
-                    cov_sub = np.where(coin, ~cod, ins)
-                    for s, c in zip(sel, cov_sub):
-                        covered[s] |= c
-            for k, cov in zip(onb_idx, covered):
-                if not cov:
-                    keep.append(noded[k])
-        for k, (p1, p2) in enumerate(noded):
-            if not inside_any[k] and not onb_any[k]:
-                keep.append((p1, p2))
+        onb_idx = np.nonzero(
+            onb_any
+            & ~inside_any
+            & ((noded[:, 0] != noded[:, 2]) | (noded[:, 1] != noded[:, 3]))
+        )[0]
+        covered = np.zeros(len(onb_idx), dtype=bool)
+        for j, pip_j, onb_j in per_j:
+            # edges >= the 10*snap band away from j's boundary can
+            # never be coincident with its noded chain (detours are
+            # bounded by the band): the off->0 limit is just the raw
+            # midpoint PIP already computed above. Only the true
+            # onb-vs-j subset needs the coincidence test.
+            sel = onb_j[onb_idx]
+            covered |= ~sel & pip_j[onb_idx]
+            if sel.any():
+                sub = onb_idx[sel]
+                coin, cod, ins = _onb_verdict(
+                    noded[sub], flat[j], noded_all[j], inside=pip_j[sub]
+                )
+                covered[sel] |= np.where(coin, ~cod, ins)
+        keep += [noded[onb_idx[~covered]], noded[~inside_any & ~onb_any]]
+    keep = np.vstack(keep)
     rings, lost = _stitch(keep, snap)
     result = _rings_to_polygons(rings, snap)
     if _snapped:
@@ -1182,22 +1105,20 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
     if len(flat) == 1:
         return flat[0]
 
-    keep: list[tuple[np.ndarray, np.ndarray]] = []
+    edges = _poly_edges(flat)
+    is_vert = edges[:, 0] == edges[:, 2]
+    is_horiz = ~is_vert & (edges[:, 1] == edges[:, 3])
+    emitted: list[list[float]] = []  # surviving axis-aligned rows
     # line buckets: snapped coordinate -> list of (lo, hi, sign, coord)
     vert: dict[int, list] = defaultdict(list)
     horiz: dict[int, list] = defaultdict(list)
-    for p in flat:
-        for a, b in _poly_edges(p):
-            if a[0] == b[0]:
-                sign = 1 if b[1] > a[1] else -1
-                lo, hi = (a[1], b[1]) if sign == 1 else (b[1], a[1])
-                vert[round(a[0] / SNAP)].append((lo, hi, sign, a[0]))
-            elif a[1] == b[1]:
-                sign = 1 if b[0] > a[0] else -1
-                lo, hi = (a[0], b[0]) if sign == 1 else (b[0], a[0])
-                horiz[round(a[1] / SNAP)].append((lo, hi, sign, a[1]))
-            else:
-                keep.append((a, b))
+    for bucket, mask, c in ((vert, is_vert, 0), (horiz, is_horiz, 1)):
+        along = 1 - c
+        for e in edges[mask].tolist():
+            a, b = e[along], e[along + 2]
+            sign = 1 if b > a else -1
+            lo, hi = (a, b) if sign == 1 else (b, a)
+            bucket[round(e[c] / SNAP)].append((lo, hi, sign, e[c]))
 
     def _emit(bucket: dict[int, list], vertical: bool) -> bool:
         for ivals in bucket.values():
@@ -1205,7 +1126,7 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
                 lo, hi, sign, c = ivals[0]
                 pts = ((c, lo), (c, hi)) if vertical else ((lo, c), (hi, c))
                 a, b = (pts if sign == 1 else pts[::-1])
-                keep.append((np.array(a), np.array(b)))
+                emitted.append([*a, *b])
                 continue
             # elementary breakpoints (snap-deduped, keep representative float)
             reps: dict[int, float] = {}
@@ -1227,10 +1148,7 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
                 if run_sign and (i == len(keys) - 1 or net != run_sign):
                     a = (c, run_start) if vertical else (run_start, c)
                     b = (c, v) if vertical else (v, c)
-                    if run_sign == 1:
-                        keep.append((np.array(a), np.array(b)))
-                    else:
-                        keep.append((np.array(b), np.array(a)))
+                    emitted.append([*a, *b] if run_sign == 1 else [*b, *a])
                     run_sign = 0
                 if net != 0 and run_sign == 0 and i < len(keys) - 1:
                     if abs(net) > 1:
@@ -1241,7 +1159,11 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
         return True
 
     ok = _emit(vert, True) and _emit(horiz, False)
-    result = _rings_to_polygons(_stitch(keep)[0]) if ok else None
+    if ok:
+        keep = np.vstack([edges[~is_vert & ~is_horiz], np.reshape(emitted, (-1, 4))])
+        result = _rings_to_polygons(_stitch(keep)[0])
+    else:
+        result = None
     target = sum(polygon_area(p) for p in flat)
     if (
         result is None
@@ -1264,32 +1186,22 @@ def line_difference(
     line_coords: np.ndarray, poly: Geometry, keep_outside: bool = True
 ) -> list[np.ndarray]:
     """Line minus polygon: split at boundary crossings, keep pieces
-    whose midpoint is outside (or inside when keep_outside=False)."""
-    edges = [
-        (line_coords[i, :2].astype(float), line_coords[i + 1, :2].astype(float))
-        for i in range(len(line_coords) - 1)
-    ]
-    pedges = [e for p in _as_polys(poly) for e in _poly_edges(p)]
-    noded = _node_edges(edges, [pedges])
-    if not noded:
+    whose midpoint is outside (or inside when keep_outside=False).
+    Consecutive kept pieces whose ends share a snap cell form one
+    chain."""
+    noded = _node_edges(
+        _chain_edges([line_coords], skip_zero=False), _poly_edges(_as_polys(poly))
+    )
+    if not len(noded):
         return []
     mids = _midpoints(noded)
     inside = points_in_polygon(mids[:, 0], mids[:, 1], poly)
-    outside = ~inside if keep_outside else inside
-    chains: list[list[np.ndarray]] = []
-    cur: list[np.ndarray] = []
-    for (a, b), keep in zip(noded, outside):
-        if not keep:
-            if len(cur) >= 2:
-                chains.append(cur)
-            cur = []
-            continue
-        if cur and _key(cur[-1]) == _key(a):
-            cur.append(b)
-        else:
-            if len(cur) >= 2:
-                chains.append(cur)
-            cur = [a, b]
-    if len(cur) >= 2:
-        chains.append(cur)
-    return [np.array(c) for c in chains]
+    keep = ~inside if keep_outside else inside
+    cells = np.round(noded / SNAP)
+    joined = np.zeros(len(noded), dtype=bool)
+    joined[1:] = keep[1:] & keep[:-1] & (cells[:-1, 2:] == cells[1:, :2]).all(axis=1)
+    kept = np.nonzero(keep)[0]
+    if not len(kept):
+        return []
+    runs = np.split(kept, np.nonzero(~joined[kept])[0][1:])
+    return [np.vstack([noded[r[0], :2], noded[r, 2:]]) for r in runs]

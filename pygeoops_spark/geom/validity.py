@@ -8,7 +8,8 @@ recurse per part.
 
 A non-simple shell ring is resolved by the NONZERO-WINDING rule over
 its full planar arrangement (_nonzero_region): node the ring against
-itself, walk the half-edge faces, propagate winding numbers from the
+itself (once, _self_noded: the loop split reads the same edge array),
+walk the half-edge faces, propagate winding numbers from the
 unbounded face, keep faces with winding != 0, and re-assemble the kept
 region's boundary rings.  One rule covers all the shapes the reference
 test-suite exercises (tests/test_simplify.py:181-251) and beyond:
@@ -51,7 +52,7 @@ import math
 import numpy as np
 
 from pygeoops_spark.geom.kernels import points_in_polygon, ring_signed_area
-from pygeoops_spark.geom.overlay import _key, _node_edges
+from pygeoops_spark.geom.overlay import SNAP, _cell_keys, _chain_edges, _node_edges
 from pygeoops_spark.geom.wkb import (
     Geometry,
     GEOMETRYCOLLECTION,
@@ -85,43 +86,48 @@ def _collapsed_geometry(coords: np.ndarray) -> Geometry | None:
     return Geometry(LINESTRING, arr)
 
 
+def _self_noded(ring: np.ndarray) -> np.ndarray:
+    """A closed ring's edge array noded against itself (crossing points
+    inserted), in ring order with each edge's cuts sorted along it. The
+    one arrangement of a ring: the validity check, the loop split and
+    the nonzero region all read it, so a ring is noded once."""
+    edges = _chain_edges([ring])
+    return _node_edges(edges, edges)
+
+
 def _ring_loops(ring: np.ndarray) -> list[np.ndarray]:
     """Split a (possibly self-touching/crossing) closed ring into simple
-    loops via the vertex-revisit stack walk: node the ring against
-    itself (insert crossing points), then walk in ring order popping a
-    loop whenever a vertex repeats. Returns [ring] when already simple.
-    """
-    arr = np.asarray(ring, dtype=float)[:, :2]
-    edges = [
-        (arr[i], arr[i + 1])
-        for i in range(len(arr) - 1)
-        if arr[i, 0] != arr[i + 1, 0] or arr[i, 1] != arr[i + 1, 1]
-    ]
-    noded = _node_edges(edges, [edges])  # keeps ring order; cuts sorted
-    if not noded:
-        return []
-    verts = [noded[0][0]] + [b for _a, b in noded]
+    loops (see _noded_loops). Returns [ring] when already simple."""
+    return _noded_loops(_self_noded(ring))
 
+
+def _noded_loops(noded: np.ndarray) -> list[np.ndarray]:
+    """The simple loops of a self-noded ring (_self_noded), by the
+    vertex-revisit stack walk: walk in ring order popping a loop
+    whenever a vertex repeats."""
+    if not len(noded):
+        return []
+    verts = np.vstack([noded[:1, :2], noded[:, 2:]])
+    keys = _cell_keys(verts, SNAP)
     loops: list[np.ndarray] = []
-    path: list[np.ndarray] = []
+    path: list[int] = []  # vertex indices
     index: dict[tuple, int] = {}
-    for v in verts:
-        k = _key(v)
+    for v, k in enumerate(keys):
         if k in index:
             i = index[k]
             loop = path[i:] + [v]
             if len(loop) >= 4:
-                lp = np.array(loop)
+                lp = verts[loop]
                 if abs(ring_signed_area(lp)) > 1e-12:
                     loops.append(lp)
             for p in path[i + 1 :]:
-                index.pop(_key(p), None)
+                index.pop(keys[p], None)
             path = path[: i + 1]
         else:
             index[k] = len(path)
             path.append(v)
     if len(path) >= 3:
-        lp = np.vstack([np.array(path), [path[0]]])
+        lp = verts[path + path[:1]]
         if abs(ring_signed_area(lp)) > 1e-12:
             loops.append(lp)
     return loops
@@ -150,27 +156,19 @@ def make_valid(
     if geom is None:
         return None
     t = geom.type_id
-    if only_if_invalid and t in (POLYGON, MULTIPOLYGON):
-        parts = [geom] if t == POLYGON else list(geom.data)
-
-        def _shell_ok(p: Geometry) -> bool:
-            # exactly ONE simple loop: a zero-area (collapsed) shell
-            # yields 0 loops and is INVALID — it must fall through to
-            # the repair path so keep_collapsed semantics apply
-            if not p.data:
-                return True
-            return len(_ring_loops(np.asarray(p.data[0]))) == 1
-
-        if all(_shell_ok(p) for p in parts):
+    if t in (POLYGON, MULTIPOLYGON):
+        polys = [geom] if t == POLYGON else list(geom.data)
+        # each shell is noded once, for the check and the repair alike
+        shells = [_self_noded(p.data[0]) if p.data else None for p in polys]
+        # valid: every shell is exactly ONE simple loop. A zero-area
+        # (collapsed) shell yields 0 loops and is INVALID — it must
+        # fall through to the repair path so keep_collapsed applies
+        if only_if_invalid and all(s is None or len(_noded_loops(s)) == 1 for s in shells):
             return geom
-    if t == POLYGON:
-        return _make_valid_polygon(geom, keep_collapsed)
-    if t == MULTIPOLYGON:
-        parts = []
-        for p in geom.data:
-            r = _make_valid_polygon(p, keep_collapsed)
-            if r is not None:
-                parts.extend(get_parts(r))
+        repaired = [_make_valid_polygon(p, s, keep_collapsed) for p, s in zip(polys, shells)]
+        if t == POLYGON:
+            return repaired[0]
+        parts = [q for r in repaired if r is not None for q in get_parts(r)]
         if not parts:
             return None
         if len(parts) == 1:
@@ -261,11 +259,12 @@ def _loop_interior_point(loop: np.ndarray) -> np.ndarray:
     return c
 
 
-def _nonzero_region(ring: np.ndarray):
-    """Planar-arrangement resolution of a self-intersecting closed ring
-    under the NONZERO-WINDING rule.
+def _nonzero_region(noded: np.ndarray):
+    """Planar-arrangement resolution of a self-intersecting closed ring,
+    given noded against itself (_self_noded), under the NONZERO-WINDING
+    rule.
 
-    Classical algorithm: node the ring against itself, build the
+    Classical algorithm: from the self-noded ring, build the
     half-edge arrangement, walk faces (face-on-the-left rule: the next
     half-edge is the clockwise-next outgoing edge after the twin),
     propagate winding numbers from the unbounded face across edges
@@ -278,25 +277,18 @@ def _nonzero_region(ring: np.ndarray):
     Returns (shells, holes) as lists of closed coordinate arrays:
     shells CCW-walked, holes CW-walked (as produced by the left-hand
     boundary walk)."""
-    arr = np.asarray(ring, dtype=float)[:, :2]
-    edges = [
-        (arr[i], arr[i + 1])
-        for i in range(len(arr) - 1)
-        if arr[i, 0] != arr[i + 1, 0] or arr[i, 1] != arr[i + 1, 1]
-    ]
-    noded = _node_edges(edges, [edges])
-    if not noded:
+    if not len(noded):
         return [], []
 
     pts: dict[tuple, np.ndarray] = {}
     # traversal list as vertex keys; net winding delta per undirected edge
     delta: dict[tuple, int] = {}
-    for a, b in noded:
-        ka, kb = _key(a), _key(b)
+    for cells, e in zip(_cell_keys(noded, SNAP), noded):
+        ka, kb = cells[:2], cells[2:]
         if ka == kb:
             continue
-        pts.setdefault(ka, np.asarray(a, float))
-        pts.setdefault(kb, np.asarray(b, float))
+        pts.setdefault(ka, e[:2])
+        pts.setdefault(kb, e[2:])
         und = (ka, kb) if ka <= kb else (kb, ka)
         delta[und] = delta.get(und, 0) + (1 if ka <= kb else -1)
 
@@ -404,11 +396,12 @@ def _nonzero_region(ring: np.ndarray):
     return shells, holes
 
 
-def _classify_loops(ring: np.ndarray):
-    """Resolve a non-simple shell ring into (shells, holes-per-shell)
-    under the nonzero rule via the planar arrangement, then nest the
-    CW boundary rings into the CCW ones (smallest containing shell)."""
-    shells, hole_rings = _nonzero_region(ring)
+def _classify_loops(noded: np.ndarray):
+    """Resolve a self-noded non-simple shell ring into (shells,
+    holes-per-shell) under the nonzero rule via the planar arrangement,
+    then nest the CW boundary rings into the CCW ones (smallest
+    containing shell)."""
+    shells, hole_rings = _nonzero_region(noded)
     shells.sort(key=lambda lp: -abs(ring_signed_area(lp)))
     absa = [abs(ring_signed_area(s)) for s in shells]
     geoms = [Geometry(POLYGON, [s]) for s in shells]
@@ -425,10 +418,14 @@ def _classify_loops(ring: np.ndarray):
     return shells, holes
 
 
-def _make_valid_polygon(poly: Geometry, keep_collapsed: bool = True) -> Geometry | None:
+def _make_valid_polygon(
+    poly: Geometry, noded: np.ndarray | None, keep_collapsed: bool
+) -> Geometry | None:
+    """Repair one polygon whose shell ``noded`` is already self-noded
+    (None when the polygon is empty)."""
     if not poly.data:
         return poly
-    loops = _ring_loops(np.asarray(poly.data[0]))
+    loops = _noded_loops(noded)
     if not loops:
         # the whole shell is zero-area: a collapse to line/point
         return _collapsed_geometry(np.asarray(poly.data[0])) if keep_collapsed else None
@@ -437,7 +434,7 @@ def _make_valid_polygon(poly: Geometry, keep_collapsed: bool = True) -> Geometry
         shells = [np.asarray(poly.data[0], dtype=float)]
         polys: list[list[np.ndarray]] = [[shells[0]]]
     else:
-        shells, shell_holes = _classify_loops(np.asarray(poly.data[0]))
+        shells, shell_holes = _classify_loops(noded)
         if not shells:  # arrangement degenerated: fall back to loops
             shells = sorted(loops, key=lambda lp: -abs(ring_signed_area(lp)))
             shell_holes = [[] for _ in shells]

@@ -168,11 +168,13 @@ def connected_components(
         rounds, out = _star_components(e, max_iter)
     if stats is not None:
         stats["rounds"] = rounds
-    # self-pair-only nodes: singleton components (anti-join keeps the
-    # broadcastable small side on the right only when selfers is small;
-    # at scale this is one extra shuffle over the self-pair subset)
+    # self-pair-only nodes: singleton components. `out` labels exactly
+    # the endpoints of `e`, so the anti-join reads those endpoints off
+    # the checkpointed edges — joining against `out` itself would run
+    # the components plan (the union-find task) a second time
+    endpoints = e.select("u").union(e.select(F.col("v").alias("u")))
     singles = (
-        selfers.join(out.select(F.col("node").alias("u")), "u", "left_anti")
+        selfers.join(endpoints, "u", "left_anti")
         .select(F.col("u").alias("node"), F.col("u").alias("component"))
     )
     return out.unionByName(singles)

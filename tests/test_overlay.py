@@ -158,18 +158,11 @@ def test_difference_all_tiled_complex():
 def test_stitch_drops_anti_parallel_duplicate_pair():
     from pygeoops_spark.geom.overlay import _stitch
 
-    sq = [
-        (np.array([0.0, 0.0]), np.array([1.0, 0.0])),
-        (np.array([1.0, 0.0]), np.array([1.0, 1.0])),
-        (np.array([1.0, 1.0]), np.array([0.0, 1.0])),
-        (np.array([0.0, 1.0]), np.array([0.0, 0.0])),
-    ]
-    # inject an interior seam traversed both ways from the (0,0) corner
-    seam = [
-        (np.array([0.0, 0.0]), np.array([0.5, 0.5])),
-        (np.array([0.5, 0.5]), np.array([0.0, 0.0])),
-    ]
-    rings, _lost = _stitch(sq + seam)
+    # one edge array [x1 y1 x2 y2]: the unit square, then an interior
+    # seam traversed both ways from the (0,0) corner
+    sq = [[0.0, 0.0, 1.0, 0.0], [1.0, 0.0, 1.0, 1.0], [1.0, 1.0, 0.0, 1.0], [0.0, 1.0, 0.0, 0.0]]
+    seam = [[0.0, 0.0, 0.5, 0.5], [0.5, 0.5, 0.0, 0.0]]
+    rings, _lost = _stitch(np.array(sq + seam))
     assert len(rings) == 1
     ring = rings[0]
     # the square survives intact; the seam vertex never appears

@@ -81,6 +81,17 @@ def test_overlay_repeats_exist_once():
         assert body_calls == {"_binary_overlay"}, op
 
 
+def test_overlay_edge_set_is_one_array():
+    """An edge set in the overlay core is one (n, 4) array from ring to
+    stitcher: no tuple-list converters or array side-parameters remain."""
+    for path in ("pygeoops_spark/geom/overlay.py", "pygeoops_spark/geom/validity.py"):
+        src = (ROOT / path).read_text()
+        for gone in ("_edges_arrays", "_seg_array", "edges_arr", "others_arr", "noded_segs"):
+            assert gone not in src, (path, gone)
+    args = [a.arg for a in _function("pygeoops_spark/geom/overlay.py", "_node_edges").args.args]
+    assert args == ["edges", "others", "snap"]
+
+
 def test_geodesic_shooting_root_finder_once():
     calls = _calls("pygeoops_spark/geom/geodesic.py")
     assert calls.get("linspace") == 1  # one azimuth bracket grid

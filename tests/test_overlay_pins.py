@@ -32,7 +32,14 @@ from pygeoops_spark.geom.overlay import (
     polygon_union,
 )
 from pygeoops_spark.geom.validity import make_valid
-from pygeoops_spark.geom.wkb import LINESTRING, Geometry, wkb_dumps
+from pygeoops_spark.geom.wkb import (
+    LINESTRING,
+    MULTIPOLYGON,
+    Geometry,
+    multi,
+    wkb_dumps,
+    wkt_loads,
+)
 
 
 def _box(x0, y0, w, h):
@@ -198,6 +205,60 @@ def _bowties():
     return out
 
 
+def _invalid_shapes():
+    """The make_valid families of tests/test_validity.py: figure-eight,
+    a hole made by self-touch, an island inside that hole, a spiral, a
+    pentagram, collapsed rings, non-simple holes, multi-part and
+    collection inputs, Z/M lifts, valid shapes (the only_if_invalid
+    pass-through) and seeded random self-intersecting rings."""
+    figure8 = polygon([(0, 0), (4, 0), (2, 2), (4, 4), (0, 4), (2, 2)])
+    annulus = wkt_loads(
+        "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0, 2 2, 2 8, 8 8, 8 2, 2 2, 0 0))"
+    )
+    island = wkt_loads(
+        "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0, 2 2, 2 8, 8 8, 8 2, 2 2, "
+        "0 0, 4 4, 6 4, 6 6, 4 6, 4 4, 0 0))"
+    )
+    t = np.linspace(0.0, 4 * np.pi, 33)[:-1]
+    spiral = polygon(np.column_stack([(10 - 0.6 * t) * np.cos(t), (10 - 0.6 * t) * np.sin(t)]))
+    star = polygon(
+        [
+            (math.cos(math.radians(90 + 144 * i)), math.sin(math.radians(90 + 144 * i)))
+            for i in range(5)
+        ]
+    )
+    flat = polygon([(0, 0), (2, 0), (5, 0)])
+    dot = polygon([(3, 4), (3, 4), (3, 4)])
+    square = _box(0, 0, 4, 4)
+    holed = polygon(
+        [(0, 0), (10, 0), (10, 10), (0, 10)], holes=[[(2, 2), (2, 8), (8, 8), (8, 2)]]
+    )
+    bad_hole = polygon(
+        [(0, 0), (10, 0), (10, 10), (0, 10)], holes=[[(2, 2), (8, 8), (8, 2), (2, 8)]]
+    )
+    bowtie = polygon([(0, 0), (4, 4), (4, 0), (0, 4)])
+    out = [figure8, annulus, island, spiral, star, flat, dot, square, holed, bad_hole]
+    out.append(multi(MULTIPOLYGON, [square, polygon([(10, 0), (12, 0), (14, 0)])]))
+    out.append(multi(MULTIPOLYGON, [bowtie, polygon([(10, 10), (11, 10), (11, 11)])]))
+    out.append(
+        wkt_loads(
+            "GEOMETRYCOLLECTION (POLYGON ((0 0, 10 10, 10 0, 0 10, 0 0)), "
+            "LINESTRING (3 3, 3 3), POINT (7 7))"
+        )
+    )
+    for g in (figure8, bowtie, square, island):
+        for dims in ("xyz", "xym"):
+            rings = [
+                np.column_stack([np.asarray(r), np.full(len(r), 7.0)]) for r in g.data
+            ]
+            out.append(polygon(rings[0], rings[1:], dims=dims))
+    rng = np.random.default_rng(42)
+    for _ in range(30):
+        pts = rng.uniform(0.0, 10.0, (int(rng.choice([4, 6, 8])), 2)).round(3)
+        out.append(polygon([tuple(p) for p in pts]))
+    return out
+
+
 def _lines():
     rng = np.random.default_rng(9)
     out = []
@@ -267,6 +328,13 @@ def _cases(op: str) -> list:
         return [lambda s=s: dissolve_partition(s) for s in _tile_partitions()]
     if op == "make_valid":
         return [lambda g=g: make_valid(g) for g in _bowties()]
+    if op == "make_valid_shapes":
+        return [
+            lambda g=g, k=k, o=o: make_valid(g, keep_collapsed=k, only_if_invalid=o)
+            for g in _invalid_shapes()
+            for k in (True, False)
+            for o in (False, True)
+        ]
     if op == "line_difference":
         return [lambda ln=ln, p=p: line_difference(ln, p) for ln, p in _lines()]
     if op == "line_intersection":
@@ -303,6 +371,11 @@ PINS = {
     "make_valid": (
         42,
         "b0679f51ce66d3d953c11181fa6d3d91bdffddb9c364f9ab55caca864efc609e",
+    ),
+    # recorded on the tree whose overlay edge sets were tuple lists
+    "make_valid_shapes": (
+        204,
+        "52f152f78fff373279cf78fee08a587a32b17fc5bc1093b8819ba6f0dc578b99",
     ),
     "line_difference": (
         62,

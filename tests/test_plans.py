@@ -251,3 +251,20 @@ def test_pip_join_polygons_prepared_plan_is_narrow(spark, sf_dir):
         if "Exchange" in line and "BroadcastExchange" not in line
     )
     assert n_exchanges == 0, physical
+
+
+def test_connected_components_self_pairs_run_union_find_once(spark):
+    """Self-pair-only nodes are found by anti-joining against the
+    endpoints of the checkpointed edges, so the executed plan runs the
+    single-task union-find (one MapInPandas) once, not twice."""
+    from pygeoops_spark.text.pipeline import connected_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 4), (6, 6), (6, 7)], "id_a long, id_b long"
+    )
+    cc = connected_components(pairs)
+    got = {r["node"]: r["component"] for r in cc.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 6: 6, 7: 6}
+    plan = cc._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]  # AQE prints both plans
+    assert final.count("MapInPandas") == 1, plan

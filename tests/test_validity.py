@@ -407,3 +407,28 @@ def test_make_valid_collection_only_if_invalid_fast_path():
     np.testing.assert_array_equal(
         np.asarray(parts[1].data[0]), np.asarray(big.data[0])
     )
+
+
+@pytest.mark.parametrize("only_if_invalid", [False, True])
+def test_make_valid_nodes_each_shell_once(monkeypatch, only_if_invalid):
+    """A shell ring is self-noded once per make_valid: the validity
+    check (only_if_invalid), the loop split and the nonzero region all
+    read that one edge array."""
+    from pygeoops_spark.geom import validity
+
+    calls = []
+    real = validity._node_edges
+
+    def spy(edges, others, *args):
+        calls.append(len(edges))
+        return real(edges, others, *args)
+
+    monkeypatch.setattr(validity, "_node_edges", spy)
+    bowtie = polygon([(0, 0), (4, 4), (4, 0), (0, 4)])
+    out = make_valid(bowtie, only_if_invalid=only_if_invalid)
+    assert polygon_area(out) == pytest.approx(8.0)
+    assert calls == [4]
+    calls.clear()
+    square = polygon([(0, 0), (4, 0), (4, 4), (0, 4)])
+    assert polygon_area(make_valid(square, only_if_invalid=only_if_invalid)) == 16.0
+    assert calls == [4]
