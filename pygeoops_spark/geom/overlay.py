@@ -844,11 +844,6 @@ def _codirected_near_duplicate(kept_a: np.ndarray, kept_b: np.ndarray, snap: flo
     return False
 
 
-def _directed(edges: np.ndarray, rev: bool) -> np.ndarray:
-    """``edges``, each reversed when ``rev``."""
-    return edges[:, [2, 3, 0, 1]] if rev else edges
-
-
 class _Rule(NamedTuple):
     """A binary boolean op as an edge-selection rule over _binary_overlay.
 
@@ -898,9 +893,8 @@ def _binary_overlay(
     edges = [_poly_edges(pa), _poly_edges(pb)]
     noded = [_node_edges(edges[i], edges[1 - i], snap) for i in (0, 1)]
     cls = [_classify(noded[i], ops[1 - i], snap) for i in (0, 1)]
-    keep = [
-        _directed(side[c == want], rev) for (want, rev), side, c in zip(rule.sides, noded, cls)
-    ]
+    keep = [side[c == want] for (want, _), side, c in zip(rule.sides, noded, cls)]
+    keep = [e[:, [2, 3, 0, 1]] if rev else e for (_, rev), e in zip(rule.sides, keep)]
     seen = set(_cell_keys(np.vstack(keep), snap)) if rule.dedupe else None
     # edges on the other operand's boundary, in the off->0 limit: exact
     # midpoint point-in-polygon when strictly off the other boundary,
@@ -913,7 +907,9 @@ def _binary_overlay(
     for i, (want, rev) in enumerate(rule.sides):
         onb = noded[i][cls[i] == 0]
         coin, cod, ins = _onb_verdict(onb, ops[1 - i], noded[1 - i])
-        e = _directed(onb[np.where(coin, cod != rev, ins) == (want == 1)], rev)
+        e = onb[np.where(coin, cod != rev, ins) == (want == 1)]
+        if rev:
+            e = e[:, [2, 3, 0, 1]]
         if seen is not None:
             fresh = np.zeros(len(e), dtype=bool)
             for j, k in enumerate(_cell_keys(e, snap)):
@@ -996,7 +992,8 @@ def polygon_union(
         else per_poly_edges[i]
         for i, near in enumerate(near_all)
     ]
-    raw_segs = [_poly_segments(p) for p in flat]
+    # raw boundaries only of polygons that are some polygon's neighbour
+    raw_segs = {j: _poly_segments(flat[j]) for j in sorted(set().union(*near_all))}
     keep = []
     for near, noded in zip(near_all, noded_all):
         inside_any = np.zeros(len(noded), dtype=bool)
