@@ -160,21 +160,20 @@ def connected_components(
                 {"node": list(parent), "component": [find(x) for x in parent]}
             )
 
-        rounds = 0
-        out = e.coalesce(1).mapInPandas(
-            _union_find, "node long, component long"
-        )
-    else:
-        rounds, out = _star_components(e, max_iter)
+        if stats is not None:
+            stats["rounds"] = 0
+        # the self-pairs go in too: a node seen only in self-pairs is
+        # its own root, so the one task labels every node and no
+        # anti-join (nor a second run of this plan) is needed
+        return uv.coalesce(1).mapInPandas(_union_find, "node long, component long")
+    rounds, out = _star_components(e, max_iter)
     if stats is not None:
         stats["rounds"] = rounds
-    # self-pair-only nodes: singleton components. `out` labels exactly
-    # the endpoints of `e`, so the anti-join reads those endpoints off
-    # the checkpointed edges — joining against `out` itself would run
-    # the components plan (the union-find task) a second time
-    endpoints = e.select("u").union(e.select(F.col("v").alias("u")))
+    # self-pair-only nodes: singleton components (anti-join keeps the
+    # broadcastable small side on the right only when selfers is small;
+    # at scale this is one extra shuffle over the self-pair subset)
     singles = (
-        selfers.join(endpoints, "u", "left_anti")
+        selfers.join(out.select(F.col("node").alias("u")), "u", "left_anti")
         .select(F.col("u").alias("node"), F.col("u").alias("component"))
     )
     return out.unionByName(singles)

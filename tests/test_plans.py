@@ -254,9 +254,9 @@ def test_pip_join_polygons_prepared_plan_is_narrow(spark, sf_dir):
 
 
 def test_connected_components_self_pairs_run_union_find_once(spark):
-    """Self-pair-only nodes are found by anti-joining against the
-    endpoints of the checkpointed edges, so the executed plan runs the
-    single-task union-find (one MapInPandas) once, not twice."""
+    """On the single-task path the self-pairs go into the union-find
+    with the edges, so the executed plan runs it (one MapInPandas) once,
+    not twice, and needs no anti-join."""
     from pygeoops_spark.text.pipeline import connected_components
 
     pairs = spark.createDataFrame(
@@ -268,3 +268,4 @@ def test_connected_components_self_pairs_run_union_find_once(spark):
     plan = cc._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]  # AQE prints both plans
     assert final.count("MapInPandas") == 1, plan
+    assert "Join" not in final, plan
