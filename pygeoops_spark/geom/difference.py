@@ -140,22 +140,29 @@ def difference_all_tiled(
     if geometry.is_empty:
         return geometry
     pid = _keep_geom_type_to_pid(keep_geom_type, geometry)
-    tiles = subdivide(geometry, subdivide_coords)
-    results = []
-    for tile in tiles:
-        r = difference_all(
-            tile, geometries_to_subtract, keep_geom_type=pid, check_intersects=True
-        )
-        if r is not None and not r.is_empty:
-            results.append(r)
+    return merge_tiles(
+        [
+            difference_all(tile, geometries_to_subtract, keep_geom_type=pid, check_intersects=True)
+            for tile in subdivide(geometry, subdivide_coords)
+        ],
+        geometry.type_id,
+    )
+
+
+def merge_tiles(pieces: list[Geometry | None], type_id: int) -> Geometry:
+    """The merge step of the tiled difference, for the kernel above and
+    the distributed operator alike: ``pieces`` are the per-tile results
+    in tile order (None or empty where a tile was subtracted away). No
+    surviving piece gives an empty geometry of the input's ``type_id``;
+    polygonal pieces dissolve back together (tile pieces are
+    interior-disjoint with axis-aligned shared cuts — the signed-
+    coverage dissolve is O(E log E) and falls back to polygon_union on
+    any contract violation); other types collect."""
+    results = [r for r in pieces if r is not None and not r.is_empty]
     if not results:
-        return empty(geometry.type_id)
+        return empty(type_id)
     if len(results) == 1:
         return results[0]
-    # merge tile results: polygons dissolve back together (tile pieces
-    # are interior-disjoint with axis-aligned shared cuts — the signed-
-    # coverage dissolve is O(E log E) and falls back to polygon_union
-    # on any contract violation); other types collect
     if all(p.type_id in (POLYGON, MULTIPOLYGON) for p in results):
         return dissolve_partition(results)
     return collect(results)

@@ -5,7 +5,9 @@ union, symmetric-difference and (via inclusion-exclusion) small-N union
 areas — EXACTLY over arbitrary (multi)polygons with float coordinates.
 ``Fraction(float)`` is exact (floats are dyadic rationals), so every
 intermediate quantity below is a closed-form rational and the returned
-areas carry zero rounding error.
+areas carry zero rounding error. Areas cannot tell which shell owns a
+hole, so hole_nesting_faults adds that one structural check, in the
+same exact arithmetic.
 
 This module is deliberately structure-independent of geom/overlay.py:
 no noding, no boundary classification, no ring stitching, no snapping.
@@ -60,6 +62,7 @@ __all__ = [
     "exact_union_area",
     "exact_line_clip_length",
     "exact_line_difference_length",
+    "hole_nesting_faults",
 ]
 
 _F = Fraction
@@ -310,3 +313,50 @@ def exact_union_area(geoms: list[Geometry | None], max_n: int = 6) -> Fraction:
         for combo in combinations(gs, k):
             total += (-1) ** (k + 1) * exact_intersection_area(*combo)
     return total
+
+
+def _ring_probe(ring: list[tuple[Fraction, Fraction]]) -> tuple[Fraction, Fraction]:
+    """A point strictly inside a simple ring: the ear centroid at its
+    rightmost (then lowest) vertex, a strictly convex corner, halved
+    toward that vertex until the even-odd test holds."""
+    m = max(range(len(ring)), key=lambda m: (ring[m][0], -ring[m][1]))
+    (px, py), (vx, vy), (nx, ny) = ring[m - 1], ring[m], ring[(m + 1) % len(ring)]
+    dx, dy = (px + nx - 2 * vx) / 3, (py + ny - 2 * vy) / 3
+    for _ in range(64):
+        if _pip_even_odd(vx + dx, vy + dy, [ring]):
+            break
+        dx, dy = dx / 2, dy / 2
+    return vx + dx, vy + dy
+
+
+def hole_nesting_faults(geom: Geometry | None) -> list[tuple[int, int]]:
+    """(part, ring) indices of the holes of a (multi)polygon that break
+    the OGC nesting rule (ISO 19125-1 §6.1.11): a point strictly inside
+    the hole lies inside its own shell and outside every other part,
+    save islands inside the hole (parts whose shell encloses less area
+    than the hole). Every area above is blind to which shell owns a
+    hole — a frame's hole moved onto an island inside it leaves each
+    area unchanged — so structure has its own check. Exact arithmetic
+    throughout, like the areas."""
+    if geom is None:
+        return []
+    parts = [
+        [(_frac_rings(Geometry(POLYGON, [ring])) or [[]])[0] for ring in p.data]
+        for p in get_parts(geom)
+        if p.type_id == POLYGON and p.data
+    ]
+    shell_area = [abs(_shoelace2(rings[0])) if rings[0] else 0 for rings in parts]
+    faults = []
+    for i, rings in enumerate(parts):
+        for k, hole in enumerate(rings[1:], 1):
+            if not hole:
+                continue
+            x, y = _ring_probe(hole)
+            hole_area = abs(_shoelace2(hole))
+            if not _pip_even_odd(x, y, rings[:1]) or any(
+                shell_area[j] >= hole_area and _pip_even_odd(x, y, [r for r in q if r])
+                for j, q in enumerate(parts)
+                if j != i
+            ):
+                faults.append((i, k))
+    return faults

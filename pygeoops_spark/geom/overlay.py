@@ -25,7 +25,10 @@ edges with boolean masks or concatenations:
     are reversed, the empty-operand result and the retry area bound.
  5. stitch the kept edge array into rings (at multi-way vertices take
     the sharpest counter-clockwise turn), classify shells/holes by
-    signed area, assign holes to shells by point-in-polygon.
+    signed area and nest the holes (_assemble_polygons, the one
+    hole-nesting step, which make_valid shares): a hole goes to the
+    smallest shell that contains a point strictly inside the hole and
+    encloses more area than it, never to an island inside the hole.
 
 This is the kernel behind difference_all / difference_all_tiled
 (reference semantics: /root/reference/pygeoops/_difference.py — union
@@ -778,24 +781,66 @@ def _rings_to_polygons(rings: list[np.ndarray], snap: float = 0.0) -> Geometry |
         if abs(area) < max(SNAP, snap * perim):
             continue
         (shells if area > 0 else holes).append(r)
+    return _assemble_polygons(shells, holes)
+
+
+def _loop_interior_point(loop: np.ndarray) -> np.ndarray:
+    """A point strictly inside a simple closed loop: start from the ear
+    centroid at the rightmost (then lowest) vertex — a strictly convex
+    corner — and walk geometrically toward that vertex until the
+    even-odd test confirms interiority. Repeated consecutive vertices
+    are skipped: a repeat next to that corner flattens its ear onto an
+    edge."""
+    arr = np.asarray(loop, dtype=float)[:, :2]
+    arr = arr[np.any(arr != np.roll(arr, 1, axis=0), axis=1)]
+    n = len(arr)
+    i = int(np.lexsort((arr[:, 1], -arr[:, 0]))[0])  # max x, then min y
+    P, V, N = arr[(i - 1) % n], arr[i], arr[(i + 1) % n]
+    c = (P + V + N) / 3.0
+    g = Geometry(POLYGON, [np.vstack([arr, arr[:1]])])
+    t = 1.0
+    for _ in range(50):
+        p = V + t * (c - V)
+        if points_in_polygon(np.array([p[0]]), np.array([p[1]]), g)[0]:
+            return p
+        t *= 0.5
+    return c
+
+
+def _assemble_polygons(
+    shells: list[np.ndarray], holes: list[np.ndarray], dims: str = "xy"
+) -> Geometry | None:
+    """The (multi)polygon of closed ``shells`` and ``holes``: the one
+    hole-nesting step of the geometry core. Shell order is kept; each
+    hole, in input order, goes to the smallest shell that contains a
+    point strictly inside the hole (_loop_interior_point) and encloses
+    more area than the hole — an island inside the hole is smaller
+    than it, so the hole never lands on the island. A hole no shell
+    contains is dropped. Rings narrower than ``dims`` (repaired rings
+    come back 2-D) drop every ring to 2-D, tagged ``xy``."""
     if not shells:
         return None
+    areas = [abs(ring_signed_area(s)) for s in shells]
     polys = [[s] for s in shells]
     for h in holes:
-        # assign to the smallest shell containing it
-        cx, cy = h[:-1, 0].mean(), h[:-1, 1].mean()
-        best, best_area = None, np.inf
+        h_area = abs(ring_signed_area(h))
+        px, py = _loop_interior_point(h)
+        best = None
         for i, s in enumerate(shells):
-            a = abs(ring_signed_area(s))
-            if a < best_area and points_in_polygon(
-                np.array([cx]), np.array([cy]), Geometry(POLYGON, [s])
-            )[0]:
-                best, best_area = i, a
+            if (
+                h_area < areas[i]
+                and (best is None or areas[i] < areas[best])
+                and points_in_polygon(np.array([px]), np.array([py]), Geometry(POLYGON, [s]))[0]
+            ):
+                best = i
         if best is not None:
             polys[best].append(h)
+    if any(r.shape[1] != len(dims) for p in polys for r in p):
+        polys = [[r[:, :2] for r in p] for p in polys]
+        dims = "xy"
     if len(polys) == 1:
-        return Geometry(POLYGON, polys[0])
-    return multi(MULTIPOLYGON, [Geometry(POLYGON, p) for p in polys])
+        return Geometry(POLYGON, polys[0], dims)
+    return multi(MULTIPOLYGON, [Geometry(POLYGON, p, dims) for p in polys])
 
 
 def _as_polys(geom: Geometry | None) -> list[Geometry]:

@@ -26,9 +26,12 @@ test-suite exercises (tests/test_simplify.py:181-251) and beyond:
   loops cross each other at shared nodes) -> the exact union region,
   which a pure loop-nesting classification cannot produce.
 
-Pre-existing interior rings are loop-split the same way and each
-sub-loop is assigned to the smallest kept shell containing it; hole
-loops outside every shell are dropped.
+The kept region's holes and the input's interior rings (loop-split
+the same way) are nested by the geometry core's one hole-nesting step,
+overlay._assemble_polygons: each goes to the smallest kept shell that
+contains a point strictly inside it and encloses more area than it (an
+island inside a hole never takes the hole); holes outside every shell
+are dropped.
 
 Semantics note vs GEOS: shapely.make_valid's default "linework" method
 classifies faces even-odd, which differs from the nonzero rule only
@@ -51,8 +54,14 @@ import math
 
 import numpy as np
 
-from pygeoops_spark.geom.kernels import points_in_polygon, ring_signed_area
-from pygeoops_spark.geom.overlay import SNAP, _cell_keys, _chain_edges, _node_edges
+from pygeoops_spark.geom.kernels import ring_signed_area
+from pygeoops_spark.geom.overlay import (
+    SNAP,
+    _assemble_polygons,
+    _cell_keys,
+    _chain_edges,
+    _node_edges,
+)
 from pygeoops_spark.geom.wkb import (
     Geometry,
     GEOMETRYCOLLECTION,
@@ -237,28 +246,6 @@ def _make_valid_line(line: Geometry, keep_collapsed: bool = True) -> Geometry | 
     return Geometry(POINT, arr[0].copy(), line.dims) if keep_collapsed else None
 
 
-def _loop_interior_point(loop: np.ndarray) -> np.ndarray:
-    """A point strictly inside a simple closed loop: start from the ear
-    centroid at the rightmost (then lowest) vertex — a strictly convex
-    corner — and walk geometrically toward that vertex until the
-    even-odd test confirms interiority."""
-    arr = np.asarray(loop, dtype=float)[:, :2]
-    if np.array_equal(arr[0], arr[-1]):
-        arr = arr[:-1]
-    n = len(arr)
-    i = int(np.lexsort((arr[:, 1], -arr[:, 0]))[0])  # max x, then min y
-    P, V, N = arr[(i - 1) % n], arr[i], arr[(i + 1) % n]
-    c = (P + V + N) / 3.0
-    g = Geometry(POLYGON, [np.vstack([arr, arr[:1]])])
-    t = 1.0
-    for _ in range(50):
-        p = V + t * (c - V)
-        if points_in_polygon(np.array([p[0]]), np.array([p[1]]), g)[0]:
-            return p
-        t *= 0.5
-    return c
-
-
 def _nonzero_region(noded: np.ndarray):
     """Planar-arrangement resolution of a self-intersecting closed ring,
     given noded against itself (_self_noded), under the NONZERO-WINDING
@@ -396,28 +383,6 @@ def _nonzero_region(noded: np.ndarray):
     return shells, holes
 
 
-def _classify_loops(noded: np.ndarray):
-    """Resolve a self-noded non-simple shell ring into (shells,
-    holes-per-shell) under the nonzero rule via the planar arrangement,
-    then nest the CW boundary rings into the CCW ones (smallest
-    containing shell)."""
-    shells, hole_rings = _nonzero_region(noded)
-    shells.sort(key=lambda lp: -abs(ring_signed_area(lp)))
-    absa = [abs(ring_signed_area(s)) for s in shells]
-    geoms = [Geometry(POLYGON, [s]) for s in shells]
-    holes: list[list[np.ndarray]] = [[] for _ in shells]
-    for h in hole_rings:
-        rep = _loop_interior_point(h)
-        cand = [
-            i
-            for i, g in enumerate(geoms)
-            if points_in_polygon(np.array([rep[0]]), np.array([rep[1]]), g)[0]
-        ]
-        if cand:
-            holes[min(cand, key=lambda i: absa[i])].append(h)
-    return shells, holes
-
-
 def _make_valid_polygon(
     poly: Geometry, noded: np.ndarray | None, keep_collapsed: bool
 ) -> Geometry | None:
@@ -429,37 +394,18 @@ def _make_valid_polygon(
     if not loops:
         # the whole shell is zero-area: a collapse to line/point
         return _collapsed_geometry(np.asarray(poly.data[0])) if keep_collapsed else None
+    holes: list[np.ndarray] = []
     if len(loops) == 1:
         # keep the original shell coords (repair is a no-op)
         shells = [np.asarray(poly.data[0], dtype=float)]
-        polys: list[list[np.ndarray]] = [[shells[0]]]
     else:
-        shells, shell_holes = _classify_loops(noded)
+        shells, holes = _nonzero_region(noded)
         if not shells:  # arrangement degenerated: fall back to loops
-            shells = sorted(loops, key=lambda lp: -abs(ring_signed_area(lp)))
-            shell_holes = [[] for _ in shells]
-        polys = [[s] + hs for s, hs in zip(shells, shell_holes)]
-    shell_geoms = [Geometry(POLYGON, [s]) for s in shells]
-    shell_areas = [abs(ring_signed_area(s)) for s in shells]
+            shells, holes = loops, []
+        shells.sort(key=lambda lp: -abs(ring_signed_area(lp)))
     for hole in poly.data[1:]:
-        hloops = _ring_loops(np.asarray(hole, dtype=float))
-        simple = len(hloops) == 1
-        for hl in hloops:
-            # keep original coords when the hole was already simple
-            h = np.asarray(hole, dtype=float) if simple else hl
-            rep = _loop_interior_point(hl)
-            cand = [
-                i
-                for i, g in enumerate(shell_geoms)
-                if points_in_polygon(np.array([rep[0]]), np.array([rep[1]]), g)[0]
-            ]
-            if cand:
-                polys[min(cand, key=lambda i: shell_areas[i])].append(h)
-    dims = poly.dims
-    if any(r.shape[1] != poly.ndim for p in polys for r in p):
-        # repaired rings come back 2-D from the arrangement: drop Z/M
-        polys = [[r[:, :2] for r in p] for p in polys]
-        dims = "xy"
-    if len(polys) == 1:
-        return Geometry(POLYGON, polys[0], dims)
-    return multi(MULTIPOLYGON, [Geometry(POLYGON, p, dims) for p in polys])
+        hole = np.asarray(hole, dtype=float)
+        hloops = _ring_loops(hole)
+        # keep original coords when the hole was already simple
+        holes += [hole] if len(hloops) == 1 else hloops
+    return _assemble_polygons(shells, holes, poly.dims)

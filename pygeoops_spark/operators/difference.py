@@ -8,21 +8,28 @@ Spark primitives):
     over Arrow batches;
   * the tiled variant explodes a geometry into subdivision tiles
     (rows), repartitions on tile id (this IS the reference's
-    ThreadPoolExecutor, but elastic), differences per tile, and unions
-    back with groupBy().applyInPandas — two shuffles total, both on
-    compact ids.
+    ThreadPoolExecutor, but elastic), differences per tile, and merges
+    each feature's pieces with the kernel's own merge step
+    (geom/difference.py:merge_tiles) over a collect_list — two shuffles
+    total, both on compact ids, and the kernel's result bytes.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BinaryType, DoubleType, IntegerType
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
-from pygeoops_spark.geom.difference import difference_all
+from pygeoops_spark.geom.difference import difference_all, merge_tiles
 from pygeoops_spark.geom.general import subdivide as subdivide_kernel
 from pygeoops_spark.geom.kernels import polygon_area
-from pygeoops_spark.geom.overlay import dissolve_partition
 from pygeoops_spark.geom.wkb import POLYGON, get_parts, wkb_loads
 from pygeoops_spark.operators.partitioning import cpu_partitions
 from pygeoops_spark.udf import row_udf
@@ -59,15 +66,9 @@ def num_rings_col(wkb_col: Column | str) -> Column:
     )(wkb_col)
 
 
-def _union_tiles(tiles: list):
-    # subdivide tiles are interior-disjoint with axis-aligned shared
-    # cuts: signed-coverage dissolve is O(E log E) vs polygon_union's
-    # pairwise noding (and falls back to it if the partition property
-    # ever fails its area check)
-    geoms = [g for g in tiles if g is not None]
-    if len(geoms) < 2:
-        return geoms[0] if geoms else None
-    return dissolve_partition(geoms)
+_SPLIT = StructType(
+    [StructField("_type", IntegerType()), StructField("_tiles", ArrayType(BinaryType()))]
+)
 
 
 def difference_all_tiled_distributed(
@@ -82,8 +83,10 @@ def difference_all_tiled_distributed(
     """Distributed difference_all_tiled over a table of geometries.
 
     subdivide-explode (fan out) -> repartition(tile) -> per-tile
-    difference kernel -> repartition(id) + collect_list union. Output:
-    (id_col, result_wkb).
+    difference kernel -> repartition(id) + collect_list -> merge_tiles.
+    Output: (id_col, result_wkb), the bytes of difference_all_tiled for
+    every non-null input row (an empty geometry of the input's type
+    where every tile is subtracted away); null rows give no output row.
 
     Both repartitions use an EXPLICIT partition count (the CPU-bound-
     stage policy of operators/partitioning.py, overridable here via
@@ -102,28 +105,38 @@ def difference_all_tiled_distributed(
     """
     if target_partitions is None:
         target_partitions = cpu_partitions(df, 4)
+    # the input's type rides with its tiles: a feature whose every tile
+    # is subtracted away still has a group, and merges to its empty
+    split = row_udf(lambda g: (g.type_id, subdivide_kernel(g, subdivide_coords)), _SPLIT)
     tiles = (
-        df.select(id_col, F.explode(subdivide_col(wkb_col, subdivide_coords)).alias("_tile"))
+        df.select(id_col, split(wkb_col).alias("_split"))
+        .select(id_col, "_split._type", F.posexplode("_split._tiles").alias("_pos", "_tile"))
         .repartition(target_partitions, F.col(id_col), F.col("_tile"))
     )
     diffed = tiles.select(
         id_col,
-        difference_all_col("_tile", subtrahend_wkbs, keep_geom_type).alias("_diff"),
-    ).where(F.col("_diff").isNotNull())
+        "_type",
+        F.struct(
+            "_pos", difference_all_col("_tile", subtrahend_wkbs, keep_geom_type).alias("_diff")
+        ).alias("_piece"),
+    )
 
-    # union via collect_list + a scalar row UDF: a plain aggregate plus
+    # merge via collect_list + a scalar row UDF: a plain aggregate plus
     # a batched map beats per-group grouped-map machinery (measured
-    # ~25% faster; the agg is map-side partial like any collect_list)
-    union_arr = row_udf(_union_tiles, BinaryType())
+    # ~25% faster; the agg is map-side partial like any collect_list).
+    # Sorting the pieces by tile position hands the kernel's merge step
+    # the kernel's order.
+    merge = row_udf(merge_tiles, BinaryType())
 
     # explicit repartition(id) feeds the groupBy: hash partitioning on
     # id already satisfies the agg's clustering requirement, so Catalyst
     # adds no second exchange, and the explicit count keeps the
-    # CPU-heavy union UDF parallel (AQE would coalesce the tiny shuffle
+    # CPU-heavy merge UDF parallel (AQE would coalesce the tiny shuffle
     # to one task otherwise).
     agg = (
         diffed.repartition(target_partitions, F.col(id_col))
-        .groupBy(id_col)
-        .agg(F.collect_list("_diff").alias("_parts"))
+        .groupBy(id_col, "_type")
+        .agg(F.array_sort(F.collect_list("_piece")).alias("_pieces"))
     )
-    return agg.select(id_col, union_arr("_parts").alias("result_wkb"))
+    pieces = F.transform("_pieces", lambda p: p["_diff"])
+    return agg.select(id_col, merge(pieces, "_type").alias("result_wkb"))

@@ -36,6 +36,7 @@ from pygeoops_spark.geom.exact import (
     exact_symmetric_difference_area,
     exact_union_area,
     exact_union_pair_area,
+    hole_nesting_faults,
 )
 from pygeoops_spark.geom.kernels import polygon_area
 from pygeoops_spark.geom.overlay import (
@@ -53,7 +54,14 @@ def _n(base: int) -> int:
 
 
 def _area(g):
-    return 0.0 if g is None else polygon_area(g)
+    """Area of an overlay result, after the structure check the area
+    oracle cannot make: every hole inside its own shell and outside
+    every other part but the islands inside it
+    (geom/exact.py:hole_nesting_faults)."""
+    if g is None:
+        return 0.0
+    assert hole_nesting_faults(g) == [], g
+    return polygon_area(g)
 
 
 # -- oracle self-tests (closed forms, no kernel involved) ------------------
@@ -240,6 +248,46 @@ def test_kernel_matches_exact_on_vertex_on_edge():
     assert _area(polygon_difference(a, b)) == pytest.approx(
         float(exact_difference_area(a, b)), abs=1e-6
     )
+
+
+# -- hole nesting: which shell owns a hole ----------------------------------
+# An island inside a hole must not take the hole (the area stays right,
+# the structure does not), and a U-shaped hole, whose vertex mean lies
+# outside it, must be kept.
+
+_FRAME = polygon([(0, 0), (10, 0), (10, 10), (0, 10)], holes=[[(2, 2), (2, 8), (8, 8), (8, 2)]])
+_ISLAND = polygon([(4, 4), (6, 4), (6, 6), (4, 6)])
+# the 10x10 square minus a notch at x 3..7, y 3..10, and a width-1 U
+# inside it; U with V as its hole has the exact area 50
+_U = polygon([(0, 0), (10, 0), (10, 10), (7, 10), (7, 3), (3, 3), (3, 10), (0, 10)])
+_V = [(1, 1), (9, 1), (9, 9), (8, 9), (8, 2), (2, 2), (2, 9), (1, 9)]
+_U_HOLED = polygon(np.asarray(_U.data[0]), holes=[_V[::-1]])
+
+
+def test_union_keeps_hole_off_island():
+    got = polygon_union([_FRAME, _ISLAND])
+    assert hole_nesting_faults(got) == []
+    assert _area(got) == float(exact_union_pair_area(_FRAME, _ISLAND)) == 68
+
+
+def test_difference_keeps_u_shaped_hole():
+    v = polygon(_V)
+    assert exact_difference_area(_U, v) == 50
+    assert _area(polygon_difference(_U, v)) == pytest.approx(50, abs=1e-9)
+
+
+def test_union_keeps_u_shaped_hole():
+    far = polygon([(20, 0), (21, 0), (21, 1), (20, 1)])
+    assert exact_union_pair_area(_U_HOLED, far) == 51
+    assert _area(polygon_union([_U_HOLED, far])) == pytest.approx(51, abs=1e-9)
+
+
+def test_dissolve_keeps_u_shaped_hole():
+    from pygeoops_spark.geom.overlay import dissolve_partition
+
+    tile = polygon([(10, 0), (12, 0), (12, 2), (10, 2)])
+    assert exact_union_pair_area(_U_HOLED, tile) == 54
+    assert _area(dissolve_partition([_U_HOLED, tile])) == pytest.approx(54, abs=1e-9)
 
 
 # -- kernel vs oracle: hypothesis sweeps -----------------------------------

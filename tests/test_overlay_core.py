@@ -92,6 +92,37 @@ def test_overlay_edge_set_is_one_array():
     assert args == ["edges", "others", "snap"]
 
 
+def test_hole_nesting_exists_once():
+    """Holes are nested by one function, overlay._assemble_polygons,
+    for overlay results and make_valid alike: validity.py keeps no
+    loop classifier or interior-point helper of its own, and no other
+    function tests points against a polygon it builds from one ring
+    (the shape of a "which shell holds this point" loop)."""
+    pickers = set()
+    for path in ("pygeoops_spark/geom/overlay.py", "pygeoops_spark/geom/validity.py"):
+        tree = ast.parse((ROOT / path).read_text())
+        defined = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+        if path.endswith("validity.py"):
+            assert not defined & {"_classify_loops", "_loop_interior_point"}
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            calls = [n for n in ast.walk(fn) if isinstance(n, ast.Call)]
+            names = {getattr(c.func, "id", getattr(c.func, "attr", None)) for c in calls}
+            builds_ring_polygon = any(
+                getattr(c.func, "id", None) == "Geometry"
+                and getattr(c.args[0], "id", None) == "POLYGON"
+                and isinstance(c.args[1], ast.List)
+                for c in calls
+                if len(c.args) >= 2
+            )
+            if "points_in_polygon" in names and builds_ring_polygon:
+                pickers.add(fn.name)
+    assert pickers == {"_assemble_polygons", "_loop_interior_point"}
+    assert _calls("pygeoops_spark/geom/validity.py").get("_assemble_polygons") == 1
+    assert _calls("pygeoops_spark/geom/overlay.py").get("_assemble_polygons") == 1
+
+
 def test_geodesic_shooting_root_finder_once():
     calls = _calls("pygeoops_spark/geom/geodesic.py")
     assert calls.get("linspace") == 1  # one azimuth bracket grid

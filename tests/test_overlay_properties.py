@@ -9,6 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pygeoops_spark.geom import polygon
+from pygeoops_spark.geom.exact import hole_nesting_faults
 from pygeoops_spark.geom.kernels import polygon_area
 from pygeoops_spark.geom.overlay import (
     polygon_difference,
@@ -40,7 +41,14 @@ def boxes(draw):
 
 
 def _area(g):
-    return 0.0 if g is None else polygon_area(g)
+    """Area of an overlay result, after the structure check the area
+    oracle cannot make: every hole inside its own shell and outside
+    every other part but the islands inside it
+    (geom/exact.py:hole_nesting_faults)."""
+    if g is None:
+        return 0.0
+    assert hole_nesting_faults(g) == [], g
+    return polygon_area(g)
 
 
 def _rect_intersection_area(a, b) -> float:

@@ -1,6 +1,7 @@
 """Spark-layer geometry operator tests: simplify/view-angles UDFs and
 the distributed difference pipeline vs single-node kernel results."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -40,6 +41,47 @@ def test_difference_distributed_matches_kernel(spark):
         got_area = polygon_area(wkb_loads(bytes(rows[i])))
         assert got_area == pytest.approx(polygon_area(expected), rel=1e-9)
         assert got_area < polygon_area(g)
+
+
+def _long_line():
+    from pygeoops_spark.geom import linestring
+
+    xs = np.linspace(0.0, 60.0, 3000)
+    return linestring(np.column_stack([xs, np.sin(xs)]))
+
+
+# (inputs, subdivide_coords): a 3,000-vertex line, once returned as NULL
+# (every type was dissolved as polygons); a fully covered square, once a
+# missing row; the comb polygons of the test above
+_TILED_CASES = {
+    "long_line": (lambda: [_long_line()], 1000),
+    "covered_square": (lambda: [box(100, 100, 101, 101)], 1000),
+    "combs": (lambda: [comb_polygon(40), comb_polygon(60)], 60),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_TILED_CASES))
+def test_difference_distributed_returns_kernel_bytes(spark, case):
+    """The distributed tiled difference merges through the kernel's own
+    merge step, so every non-null input row gets the kernel's bytes."""
+    from pygeoops_spark.operators.difference import difference_all_tiled_distributed
+
+    make, subdivide_coords = _TILED_CASES[case]
+    geoms = make()
+    subs = [box(5 * k, -2, 5 * k + 2, 2) for k in range(6)] + [box(99, 99, 102, 102)]
+    df = spark.createDataFrame(
+        [(i, wkb_dumps(g)) for i, g in enumerate(geoms)] + [(len(geoms), None)],
+        "gid long, wkb binary",
+    )
+    out = difference_all_tiled_distributed(
+        df, "gid", "wkb", [wkb_dumps(s) for s in subs], subdivide_coords=subdivide_coords
+    )
+    rows = {r["gid"]: r["result_wkb"] for r in out.collect()}
+    assert set(rows) == set(range(len(geoms)))
+    for i, g in enumerate(geoms):
+        expected = difference_all_tiled(g, subs, subdivide_coords=subdivide_coords)
+        assert not expected.is_empty or case == "covered_square"
+        assert rows[i] is not None and bytes(rows[i]) == wkb_dumps(expected), i
 
 
 def test_simplify_udf_polygon(spark):

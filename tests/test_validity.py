@@ -199,7 +199,7 @@ def test_make_valid_nonzero_winding_property_sweep():
         # parts' interiors disjoint: each part's interior point is in no
         # other part
         if len(parts) > 1:
-            from pygeoops_spark.geom.validity import _loop_interior_point
+            from pygeoops_spark.geom.overlay import _loop_interior_point
 
             for i, p in enumerate(parts):
                 rep = _loop_interior_point(np.asarray(p.data[0]))
