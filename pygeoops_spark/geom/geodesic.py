@@ -45,19 +45,23 @@ of porting GeographicLib's 6th-order series:
 Accuracy: all formulas above are exact; the only error is quadrature
 (composite GL-12 x 8 panels, ~1e-15 relative for edges that stay away
 from the poles) and inverse-iteration convergence (~f per iteration).
-Edges passing within ~1e-4 rad of a pole are re-evaluated with an
-adaptive Simpson fallback that resolves the near-polar peak of
-1/(1 - cos^2 alpha0 sin^2 sigma).  NEAR-ANTIPODAL edges — where the
-fixed point is known to oscillate because the shortest geodesic turns
-near-meridional over a pole — are detected by the iteration residual
-and solved exactly by SHOOTING the geodesic ODE on the departure
-azimuth (_shoot_inverse: bracket + bisect + fine secant polish,
-in-step crossing refinement; ~1e-11 relative, a few seconds per such
-edge — they are pathological ~20,000 km ring edges).  Tests validate
-against an independent exact geodesic ODE integrator (RK4 on the
-textbook meridional/normal curvature-radius equations), against the
-exact closed forms for pole wedges and hemispheres, and against
-split-through-the-true-geodesic consistency for the antipodal case.
+Edges whose 1/(1 - cos^2 alpha0 sin^2 sigma) peak (a pass near a pole)
+comes within a GL panel of the span are re-evaluated with an adaptive
+Simpson quadrature.  NEAR-ANTIPODAL edges — where the fixed point is
+known to oscillate because the shortest geodesic turns near-meridional
+over a pole — are detected by the iteration residual and solved on the
+same auxiliary sphere by a root-find on the departure azimuth (Karney,
+"Algorithms for geodesics", 2013): Clairaut gives the start, the span
+that reaches the target longitude is a fixed point on the spherical
+longitude, and the latitude miss is bracketed on an azimuth grid and
+bisected (~0.01 s per such edge).  Of equally short geodesics (lat2 =
+-lat1) the one whose midpoint lies furthest north is taken, so an edge
+names the same path from either end.  Tests validate against an
+independent exact geodesic ODE integrator (RK4 on the textbook
+meridional/normal curvature-radius equations, geodesic_ode_path — it
+has no caller in the engine), against the exact closed forms for pole
+wedges and hemispheres, and against split-through-the-true-geodesic
+consistency for the antipodal case.
 
 Vertices exactly at a pole are handled like the covering-space Green
 contour: the incoming and outgoing meridian edges carry their
@@ -81,9 +85,9 @@ _FRAC = np.concatenate(
     [(p + (_GL_X + 1.0) / 2.0) / _N_PANELS for p in range(_N_PANELS)]
 )
 _FRAC_W = np.concatenate([_GL_W / (2.0 * _N_PANELS) for _ in range(_N_PANELS)])
-# lighter grid for the longitude-defect integral inside the inverse
-# iteration: the defect is O(f) and only needs ~1e-12 rad absolute, so
-# GL-8 x 4 panels is ample and runs ~3x cheaper per iteration
+# lighter grid for the longitude-defect integral (_lambda_defect): the
+# defect is O(f) and smooth, so GL-8 x 4 panels is ample and runs ~3x
+# cheaper per iteration
 _GL8_X, _GL8_W = np.polynomial.legendre.leggauss(8)
 _FRAC_DEF = np.concatenate([(p + (_GL8_X + 1.0) / 2.0) / 4.0 for p in range(4)])
 _FRAC_DEF_W = np.concatenate([_GL8_W / 8.0 for _ in range(4)])
@@ -111,30 +115,49 @@ def _reduced_lat(phi: np.ndarray, f: float) -> np.ndarray:
     return np.arctan2((1.0 - f) * np.sin(phi), np.cos(phi))
 
 
-def _lambda_defect_integrand(sig, sina0, cosa0_sq, f):
-    """[(1-f) sqrt(1+k^2 sin^2 s) - 1] / (1 - cos^2(a0) sin^2 s)."""
+def _clairaut(beta1, alpha1):
+    """Start of the geodesic leaving reduced latitude beta1 at azimuth
+    alpha1: (sin alpha0, cos^2 alpha0, sigma1) by Clairaut's relations."""
+    cosb1 = np.cos(beta1)
+    sina0 = np.sin(alpha1) * cosb1
+    cosa0_sq = np.clip(1.0 - sina0 * sina0, 0.0, 1.0)
+    return sina0, cosa0_sq, np.arctan2(np.sin(beta1), cosb1 * np.cos(alpha1))
+
+
+def _lambda_defect(sig1, sigd, cosa0_sq, f):
+    """Exact longitude defect int [(1-f) sqrt(1 + k^2 sin^2 s) - 1]
+    / (1 - cos^2 a0 sin^2 s) ds over [sig1, sig1 + sigd] (composite GL;
+    the integrand is O(f) and smooth, the 1/(...) peak cancels)."""
     e2 = f * (2.0 - f)
-    ep2 = e2 / (1.0 - e2)
-    sin2 = np.sin(sig) ** 2
-    k2 = ep2 * cosa0_sq
+    ca2 = np.asarray(cosa0_sq)[..., None]
+    nodes = np.asarray(sig1)[..., None] + np.asarray(sigd)[..., None] * _FRAC_DEF
+    sin2 = np.sin(nodes) ** 2
     # denominator clamp: exact-meridian edges (sin a0 = 0) hit 0/0 at
     # sigma = pi/2; their contribution is multiplied by sin(a0) = 0
     # anyway, so any finite value is correct
-    den = np.maximum(1.0 - cosa0_sq * sin2, 1e-30)
-    return ((1.0 - f) * np.sqrt(1.0 + k2 * sin2) - 1.0) / den
+    den = np.maximum(1.0 - ca2 * sin2, 1e-30)
+    g = ((1.0 - f) * np.sqrt(1.0 + e2 / (1.0 - e2) * ca2 * sin2) - 1.0) / den
+    return sigd * (g * _FRAC_DEF_W).sum(axis=-1)
+
+
+def _unwrap(x, p, q):
+    """atan2(p sin x, q cos x) for p, q >= 0, unwrapped to run
+    continuously with x (the two meet at every multiple of pi)."""
+    turn = np.arctan2(p * np.sin(x), q * np.cos(x)) - x
+    return x + np.remainder(turn + math.pi, 2.0 * math.pi) - math.pi
 
 
 def _area_integrand(sig, sina0, cosa0_sq, a, f):
     """Z(phi(sigma)) * dlambda/dsigma along the geodesic."""
     e2 = f * (2.0 - f)
-    ep2 = e2 / (1.0 - e2) if e2 < 1.0 else 0.0
+    ep2 = e2 / (1.0 - e2)
     sin_s = np.sin(sig)
     sin2 = sin_s * sin_s
     k2 = ep2 * cosa0_sq
     sinbeta = np.sqrt(cosa0_sq) * sin_s
     # sin(phi) from sin(beta): sin^2 phi = sin^2 beta / (1 - e^2 cos^2 beta)
     sinphi = sinbeta / np.sqrt(1.0 - e2 * (1.0 - sinbeta * sinbeta))
-    den = np.maximum(1.0 - cosa0_sq * sin2, 1e-30)  # see _lambda_defect_integrand
+    den = np.maximum(1.0 - cosa0_sq * sin2, 1e-30)  # see _lambda_defect
     dlam_dsig = sina0 * (1.0 - f) * np.sqrt(1.0 + k2 * sin2) / den
     return zone_area(sinphi, a, f) * dlam_dsig
 
@@ -170,9 +193,8 @@ def _solve_edges(beta1, beta2, L, f):
     final |Lambda_new - Lambda|: the fixed point is known to oscillate
     without converging for near-antipodal endpoints (|L| within ~0.5
     deg of pi), where the true geodesic is near-meridional over a
-    pole; callers must route edges with residual > ~1e-9 to the exact
-    ODE-shooting fallback (_edge_area_shoot) instead of trusting the
-    returned parameters.
+    pole; edges with residual > 1e-9 take their parameters from
+    _solve_antipodal instead.
     """
     sinb1, cosb1 = np.sin(beta1), np.cos(beta1)
     sinb2, cosb2 = np.sin(beta2), np.cos(beta2)
@@ -191,247 +213,76 @@ def _solve_edges(beta1, beta2, L, f):
         cossig = sinb1 * sinb2 + cosb1 * cosb2 * cosl
         degen = sinsig < 1e-15
         sigd = np.arctan2(sinsig, cossig)
-        alpha1 = np.arctan2(n1, n2)
-        sina0 = np.sin(alpha1) * cosb1
-        cosa0_sq = np.clip(1.0 - sina0 * sina0, 0.0, 1.0)
-        sig1 = np.arctan2(sinb1, cosb1 * np.cos(alpha1))
-        # exact longitude defect integral per edge (composite GL)
-        nodes = sig1[:, None] + sigd[:, None] * _FRAC_DEF[None, :]
-        g = _lambda_defect_integrand(
-            nodes, sina0[:, None], cosa0_sq[:, None], f
-        )
-        defect = sigd * (g * _FRAC_DEF_W[None, :]).sum(axis=1)
-        lam_new = np.where(degen, lam, L - sina0 * defect)
+        sina0, cosa0_sq, sig1 = _clairaut(beta1, np.arctan2(n1, n2))
+        lam_new = np.where(degen, lam, L - sina0 * _lambda_defect(sig1, sigd, cosa0_sq, f))
         resid = np.abs(lam_new - lam)
         if np.max(resid) < 1e-15:
             lam = lam_new
             break
         lam = lam_new
+    for i in np.nonzero(~degen & (resid > 1e-9))[0]:
+        sina0[i], cosa0_sq[i], sig1[i], sigd[i] = _solve_antipodal(beta1[i], beta2[i], L[i], f)
     return sina0, cosa0_sq, sig1, sigd, degen, resid
 
 
-def _edge_polar_flag(sina0, cosa0_sq, sig1, sigd):
-    """Edges whose sigma-span strictly contains sigma = pi/2 (mod pi)
-    while sin^2(alpha0) is small: the 1/(1 - cos^2 a0 sin^2 s) peak
-    needs adaptive quadrature.  Exact meridians (|sin a0| < 1e-15,
-    i.e. a geodesic passing within ~1e-9 m of the pole) are excluded —
-    they run through the pole and contribute exactly zero."""
-    s2 = sina0 * sina0
-    peaky = (s2 < 1e-3) & (np.abs(sina0) >= 1e-15)
+def _edge_polar_flag(sina0, sig1, sigd):
+    """Edges whose area integrand the composite GL cannot resolve: the
+    1/(1 - cos^2 a0 sin^2 s) factor has poles at sigma = pi/2 + k pi
+    +- i ~|sin a0|, and once the nearest one lies within a panel width
+    (sigd / _N_PANELS) of the span the GL-12 panels lose accuracy
+    (measured on random edges: errors up to 0.9 of the edge's
+    z_pole |L| scale inside that radius, <= 2e-12 outside it).  Exact
+    meridians (|sin a0| < 1e-15, i.e. a geodesic passing within ~1e-9 m
+    of the pole) are excluded — they run through the pole and contribute
+    exactly zero."""
     lo, hi = sig1, sig1 + sigd
-    # nearest odd multiple of pi/2 at or above lo
-    kk = np.ceil((lo - math.pi / 2.0) / math.pi)
-    peak = math.pi / 2.0 + kk * math.pi
-    return peaky & (peak > lo + 1e-12) & (peak < hi - 1e-12) & (sigd > 1e-12)
+    peak = math.pi / 2.0 + math.pi * np.round((0.5 * (lo + hi) - math.pi / 2.0) / math.pi)
+    dist = np.maximum(np.maximum(lo - peak, peak - hi), 0.0)
+    return (np.hypot(dist, sina0) < sigd / _N_PANELS) & (np.abs(sina0) >= 1e-15)
 
 
-def _rk4_geodesic_vec(phi, lam, alpha, h, a, f):
-    """One vectorized RK4 step of the exact geodesic ODEs in arc
-    length (dphi/ds = cos a / M, dlam/ds = sin a / (N cos phi),
-    da/ds = sin a tan phi / N) over candidate-azimuth state arrays."""
-    e2 = f * (2.0 - f)
+def _solve_antipodal(beta1, beta2, L, f):
+    """(sina0, cosa0_sq, sig1, sigd) of the shortest geodesic from reduced
+    latitude beta1 to (beta2, longitude offset L) for a near-antipodal
+    pair, where the fixed point of _solve_edges oscillates.
 
-    def deriv(p, al):
-        s2 = np.sin(p) ** 2
-        w = np.sqrt(1.0 - e2 * s2)
-        M = a * (1.0 - e2) / w**3
-        N = a / w
-        return (
-            np.cos(al) / M,
-            np.sin(al) / (N * np.cos(p)),
-            np.sin(al) * np.tan(p) / N,
-        )
+    Solved for |L| (the L < 0 geodesic is the mirror image, sin(alpha0)
+    negated).  For each departure azimuth alpha1 in (0, pi), Clairaut
+    gives the start, and the span sigd at which the path's longitude
+    reaches |L| is a fixed point on the spherical omega (contraction
+    ~f per step).  The miss sin(beta(sig1 + sigd)) - sin(beta2) is
+    bracketed on a 97-azimuth grid and every bracket is bisected to
+    the last bit.  The shortest root wins; roots whose lengths tie
+    within 1e-12 a (the two mirror paths of lat2 = -lat1) resolve to
+    the one whose midpoint lies furthest north, which names the same
+    path from either end."""
+    L_abs = abs(L)
 
-    k1p, k1l, k1a = deriv(phi, alpha)
-    k2p, k2l, k2a = deriv(phi + 0.5 * h * k1p, alpha + 0.5 * h * k1a)
-    k3p, k3l, k3a = deriv(phi + 0.5 * h * k2p, alpha + 0.5 * h * k2a)
-    k4p, k4l, k4a = deriv(phi + h * k3p, alpha + h * k3a)
-    return (
-        phi + (h / 6.0) * (k1p + 2 * k2p + 2 * k3p + k4p),
-        lam + (h / 6.0) * (k1l + 2 * k2l + 2 * k3l + k4l),
-        alpha + (h / 6.0) * (k1a + 2 * k2a + 2 * k3a + k4a),
-    )
+    def shoot(alpha):
+        sina0, cosa0_sq, sig1 = _clairaut(beta1, alpha)
+        w1 = _unwrap(sig1, sina0, 1.0)
+        sigd = np.zeros_like(alpha)
+        for _ in range(8):
+            omega = w1 + L_abs - sina0 * _lambda_defect(sig1, sigd, cosa0_sq, f)
+            sigd = _unwrap(omega, 1.0, sina0) - sig1
+        miss = np.sqrt(cosa0_sq) * np.sin(sig1 + sigd) - math.sin(beta2)
+        return sina0, cosa0_sq, sig1, sigd, miss
 
-
-def _shoot_crossing(phi1, alphas, L, a, f, n_steps, refine=True):
-    """Integrate the geodesic ODE from latitude phi1 (longitude
-    measured relative to the start) for each candidate
-    departure azimuth until the accumulated longitude reaches L
-    (lambda is strictly monotone along a non-meridian geodesic by
-    Clairaut).  Returns (phi_at_crossing, s_at_crossing) arrays with
-    nan where no crossing happened within the length budget."""
-    m = len(alphas)
-    phi = np.full(m, phi1)
-    lam = np.zeros(m)
-    alpha = alphas.copy()
-    cross_phi = np.full(m, np.nan)
-    cross_s = np.full(m, np.nan)
-    live = np.ones(m, dtype=bool)
-    s_max = math.pi * a * 1.02  # just over half the circumference
-    h = s_max / n_steps
-    target = abs(L)
-    sgn = 1.0 if L >= 0 else -1.0
-    s = 0.0
-    for _ in range(n_steps):
-        if not live.any():
-            break
-        p2, l2, a2 = _rk4_geodesic_vec(phi, lam, alpha, h, a, f)
-        crossed = live & (sgn * l2 >= target)
-        if crossed.any() and not refine:
-            # coarse/bracketing use: linear interpolation is plenty
-            t = (target - sgn * lam[crossed]) / (
-                sgn * (l2[crossed] - lam[crossed])
-            )
-            cross_phi[crossed] = phi[crossed] + t * (p2[crossed] - phi[crossed])
-            cross_s[crossed] = s + t * h
-            live &= ~crossed
-        elif crossed.any():
-            # refine the crossing INSIDE the step by bisection on the
-            # partial-step size (a single RK4 partial step has error
-            # (t h)^5 — linear interpolation's h^2 curvature error
-            # would floor the landing accuracy at ~1e-7 rad)
-            for i in np.nonzero(crossed)[0]:
-                lo_t, hi_t = 0.0, 1.0
-                ph = np.array([phi[i]])
-                lm = np.array([lam[i]])
-                al = np.array([alpha[i]])
-                pt, lt = float(ph[0]), float(lm[0])
-                for _b in range(40):
-                    mid_t = 0.5 * (lo_t + hi_t)
-                    pm, lm2, _am = _rk4_geodesic_vec(ph, lm, al, mid_t * h, a, f)
-                    if sgn * float(lm2[0]) >= target:
-                        hi_t = mid_t
-                        pt, lt = float(pm[0]), float(lm2[0])
-                    else:
-                        lo_t = mid_t
-                cross_phi[i] = pt
-                cross_s[i] = s + hi_t * h
-            live &= ~crossed
-        # freeze finished candidates, and any that blew past a pole
-        bad = live & (np.abs(p2) > math.pi / 2 - 1e-12)
-        live &= ~bad
-        upd = live
-        phi = np.where(upd, p2, phi)
-        lam = np.where(upd, l2, lam)
-        alpha = np.where(upd, a2, alpha)
-        s += h
-    return cross_phi, cross_s
-
-
-def _shoot_inverse(
-    phi1: float, phi2: float, L: float, a: float, f: float, n_steps: int = 4096
-) -> tuple[float, float]:
-    """Shortest-geodesic ``(distance, departure azimuth)`` from latitude
-    phi1 to (phi2, longitude offset L) by SHOOTING the exact geodesic
-    ODE on the departure azimuth — the exact fallback for pairs where
-    the auxiliary-sphere fixed point does not converge (near-antipodal
-    endpoints, where the shortest geodesic is near-meridional over a
-    pole).  Brackets sign changes of phi(at longitude L) - phi2 over a
-    97-azimuth grid, bisects each bracket, keeps the shortest crossing
-    and secant-polishes its azimuth.  Raises if no azimuth brackets the
-    target."""
-    sgn = 1.0 if L >= 0 else -1.0
-    # bracket and bisect on a coarse integrator (RK4 at ~40 km steps is
-    # already ~1e-9 rad accurate — bracketing and bisection need far
-    # less), measure crossings at full resolution
-    n_coarse = max(n_steps // 8, 256)
-
-    def miss(al: float, fine: bool) -> tuple[float, float]:
-        n = n_steps if fine else n_coarse
-        p, sc = _shoot_crossing(phi1, np.array([al]), L, a, f, n, refine=fine)
-        return float(p[0]) - phi2, float(sc[0])
-
-    grid = sgn * np.linspace(1e-6, math.pi - 1e-6, 97)
-    g = _shoot_crossing(phi1, grid, L, a, f, n_coarse, refine=False)[0] - phi2
-    roots = []
-    for i in range(len(grid) - 1):
-        if np.isnan(g[i]) or np.isnan(g[i + 1]) or g[i] * g[i + 1] > 0:
-            continue
-        lo, hi, glo = grid[i], grid[i + 1], g[i]
-        # bisection only needs to land inside the fine secant's basin
-        for _ in range(20):
-            mid = 0.5 * (lo + hi)
-            gm = miss(mid, False)[0]
-            if math.isnan(gm):
-                break
-            if glo * gm <= 0:
-                hi = mid
-            else:
-                lo, glo = mid, gm
-        alpha = 0.5 * (lo + hi)
-        s_cross = miss(alpha, True)[1]
-        if not math.isnan(s_cross):
-            roots.append((s_cross, alpha))
-    if not roots:
-        raise ValueError(
-            "geodesic inverse failed: no shooting bracket for the "
-            "near-antipodal pair"
-        )
-    alpha1 = min(roots)[1]  # shortest geodesic
-
-    # polish the azimuth on the FULL-resolution integrator: the
-    # coarse-model root lands ~1e-7 rad off at fine resolution, and
-    # the area error is landing-offset x edge-length; secant brings
-    # the landing to ~1e-12 rad in 2-3 steps
-    g0, s_cross = miss(alpha1, True)
-    da = 1e-8
-    for _ in range(4):
-        if abs(g0) < 1e-12 or math.isnan(g0):
-            break
-        deriv = (miss(alpha1 + da, True)[0] - g0) / da
-        if deriv == 0 or math.isnan(deriv):
-            break
-        alpha1 -= g0 / deriv
-        g0, s_cross = miss(alpha1, True)
-    return s_cross, alpha1
-
-
-def _edge_area_shoot(
-    phi1: float,
-    phi2: float,
-    L: float,
-    a: float,
-    f: float,
-    n_steps: int = 4096,
-) -> float:
-    """Exact area fallback for edges where the auxiliary-sphere fixed
-    point does not converge: takes the shortest geodesic from
-    _shoot_inverse and Simpson-integrates Z(phi) dlambda along it.
-    Self-validating: raises if the path does not land on the target
-    vertex."""
-    s_cross, alpha1 = _shoot_inverse(phi1, phi2, L, a, f, n_steps)
-
-    # final pass: uniform steps ending exactly at the crossing, with
-    # Simpson over Z(phi) * dlambda/ds (needs even step count)
-    n = n_steps if n_steps % 2 == 0 else n_steps + 1
-    h = s_cross / n
-    e2 = f * (2.0 - f)
-    phi = np.array([phi1])
-    lam = np.array([0.0])
-    alpha = np.array([alpha1])
-    vals = []
-
-    def integrand(p, al):
-        w = math.sqrt(1.0 - e2 * math.sin(p) ** 2)
-        dlam_ds = math.sin(al) / ((a / w) * math.cos(p))
-        return float(zone_area(math.sin(p), a, f)) * dlam_ds
-
-    vals.append(integrand(float(phi[0]), float(alpha[0])))
-    for _ in range(n):
-        phi, lam, alpha = _rk4_geodesic_vec(phi, lam, alpha, h, a, f)
-        vals.append(integrand(float(phi[0]), float(alpha[0])))
-    # landing check: the path must end on the target vertex
-    end_err = math.hypot(float(phi[0]) - phi2, float(lam[0]) - L)
-    if end_err > 1e-9:
-        raise ValueError(
-            f"geodesic edge shooting landed {end_err * a:.1f} m off the "
-            "target vertex; densify the ring"
-        )
-    v = np.asarray(vals)
-    simpson = (h / 3.0) * (
-        v[0] + v[-1] + 4.0 * v[1:-1:2].sum() + 2.0 * v[2:-1:2].sum()
-    )
-    return float(simpson)
+    grid = np.linspace(1e-6, math.pi - 1e-6, 97)
+    miss = shoot(grid)[-1]
+    k = np.nonzero(miss[:-1] * miss[1:] <= 0)[0]
+    lo, hi, miss_lo = grid[k], grid[k + 1], miss[k]
+    for _ in range(52):
+        mid = 0.5 * (lo + hi)
+        m = shoot(mid)[-1]
+        left = miss_lo * m <= 0
+        lo, hi = np.where(left, lo, mid), np.where(left, mid, hi)
+        miss_lo = np.where(left, miss_lo, m)
+    sina0, cosa0_sq, sig1, sigd, _ = shoot(0.5 * (lo + hi))
+    length = edge_length_ellipsoidal(sina0, cosa0_sq, sig1, sigd, 1.0, f)
+    north = np.sqrt(cosa0_sq) * np.sin(sig1 + 0.5 * sigd)
+    best = np.argmax(np.where(length <= length.min() + 1e-12, north, -np.inf))
+    return math.copysign(sina0[best], L), cosa0_sq[best], sig1[best], sigd[best]
 
 
 def ring_area_ellipsoidal(
@@ -493,24 +344,16 @@ def ring_area_ellipsoidal(
         beta1 = _reduced_lat(lat[live], f)
         beta2 = _reduced_lat(lat_n[live], f)
         L = dL[live]
-        sina0, cosa0_sq, sig1, sigd, degen, resid = _solve_edges(
-            beta1, beta2, L, f
-        )
+        sina0, cosa0_sq, sig1, sigd, degen, _ = _solve_edges(beta1, beta2, L, f)
         # exact meridians contribute zero (and their clamped integrand
         # would only add quadrature noise)
         ok = ~degen & (np.abs(sina0) >= 1e-15)
-        # near-antipodal edges: the fixed point oscillates without
-        # converging (the true geodesic is near-meridional over a
-        # pole) — route to the exact ODE-shooting fallback instead of
-        # silently using the wrong parameters
-        shoot = ok & (resid > 1e-9)
-        ok &= ~shoot
         nodes = sig1[:, None] + sigd[:, None] * _FRAC[None, :]
         vals = _area_integrand(nodes, sina0[:, None], cosa0_sq[:, None], a, f)
         s_edges = sigd * (vals * _FRAC_W[None, :]).sum(axis=1)
         s_edges = np.where(ok, s_edges, 0.0)
         # near-polar edges: adaptive re-evaluation resolves the peak
-        for i in np.nonzero(_edge_polar_flag(sina0, cosa0_sq, sig1, sigd) & ok)[0]:
+        for i in np.nonzero(_edge_polar_flag(sina0, sig1, sigd) & ok)[0]:
             scale = abs(s_edges[i]) + z_pole * abs(L[i]) + 1.0
             s_edges[i] = _adaptive_simpson(
                 lambda s: float(
@@ -521,12 +364,6 @@ def ring_area_ellipsoidal(
                 float(sig1[i]),
                 float(sig1[i] + sigd[i]),
                 1e-14 * scale,
-            )
-        # near-antipodal edges via the exact shooting path
-        lat_l, latn_l = lat[live], lat_n[live]
-        for i in np.nonzero(shoot)[0]:
-            s_edges[i] = _edge_area_shoot(
-                float(lat_l[i]), float(latn_l[i]), float(L[i]), a, f
             )
         oint += float(s_edges.sum())
 
@@ -563,41 +400,25 @@ def geodesic_inverse(
     """Vectorized inverse geodesic: (distance_m, fwd_azimuth_rad) per
     coordinate pair (degrees in, shortest-path convention |dlon| <= pi).
 
-    Uses the same auxiliary-sphere solve as the area kernel; the
-    distance is  b * int sqrt(1 + k^2 sin^2 sigma) dsigma  (exact,
-    composite Gauss-Legendre), the forward azimuth comes from
-    Clairaut's relations.  Equatorial arcs reduce to the closed form
-    a * dlambda exactly (the driver oracle); meridional arcs to the
-    meridian elliptic arc.  Near-antipodal pairs — where the fixed
-    point oscillates — fall back to the exact ODE shooting solver.
-    Coincident points return (0, 0)."""
+    Uses the same auxiliary-sphere solve as the area kernel (near-antipodal
+    pairs included); the distance is  b * int sqrt(1 + k^2 sin^2 sigma)
+    dsigma  (exact, composite Gauss-Legendre), the forward azimuth comes
+    from Clairaut's relations.  Equatorial arcs reduce to the closed
+    form a * dlambda exactly (the driver oracle); meridional arcs to the
+    meridian elliptic arc.  Coincident points return (0, 0)."""
     lon1 = np.atleast_1d(np.asarray(lon1, dtype=float))
     lat1 = np.atleast_1d(np.asarray(lat1, dtype=float))
     lon2 = np.atleast_1d(np.asarray(lon2, dtype=float))
     lat2 = np.atleast_1d(np.asarray(lat2, dtype=float))
-    phi1, phi2 = np.radians(lat1), np.radians(lat2)
     L = np.remainder(np.radians(lon2 - lon1) + math.pi, 2.0 * math.pi) - math.pi
-    beta1 = _reduced_lat(phi1, f)
-    beta2 = _reduced_lat(phi2, f)
-    sina0, cosa0_sq, sig1, sigd, degen, resid = _solve_edges(beta1, beta2, L, f)
-    e2 = f * (2.0 - f)
-    ep2 = e2 / (1.0 - e2) if e2 > 0 else 0.0
-    nodes = sig1[:, None] + sigd[:, None] * _FRAC[None, :]
-    w = np.sqrt(1.0 + (ep2 * cosa0_sq)[:, None] * np.sin(nodes) ** 2)
-    s12 = a * (1.0 - f) * sigd * (w * _FRAC_W[None, :]).sum(axis=1)
+    beta1 = _reduced_lat(np.radians(lat1), f)
+    beta2 = _reduced_lat(np.radians(lat2), f)
+    sina0, cosa0_sq, sig1, sigd, degen, _ = _solve_edges(beta1, beta2, L, f)
+    s12 = edge_length_ellipsoidal(sina0, cosa0_sq, sig1, sigd, a, f)
     # forward azimuth: sin a1 = sin a0 / cos b1, cos a1 = cos a0
     # cos sig1 / cos b1 (the common cos b1 > 0 cancels in atan2)
     az1 = np.arctan2(sina0, np.sqrt(cosa0_sq) * np.cos(sig1))
-    s12 = np.where(degen, 0.0, s12)
-    az1 = np.where(degen, 0.0, az1)
-    # near-antipodal pairs: exact shooting fallback (rare, scalar)
-    for i in np.nonzero(~degen & (resid > 1e-9))[0]:
-        s_i, az_i = _shoot_inverse(
-            float(phi1[i]), float(phi2[i]), float(L[i]), a, f
-        )
-        s12[i] = s_i
-        az1[i] = az_i
-    return s12, az1
+    return np.where(degen, 0.0, s12), np.where(degen, 0.0, az1)
 
 
 def geodesic_direct(
@@ -618,69 +439,36 @@ def geodesic_direct(
     (Gauss-Legendre per iteration), and the longitude from the
     unwrapped spherical omega plus the exact defect integral — the
     same pieces as the inverse solve, so direct(inverse(p1, p2)) is an
-    identity to machine precision.  Supported for distances up to
-    ~half the circumference (sigma span < pi); longer distances raise
-    ValueError instead of silently mis-unwrapping the longitude."""
+    identity to machine precision.  The omega unwrap is continuous, so
+    any distance is supported, including beyond half the circumference."""
     lon1 = np.atleast_1d(np.asarray(lon1, dtype=float))
     lat1 = np.atleast_1d(np.asarray(lat1, dtype=float))
     az = np.atleast_1d(np.asarray(azimuth, dtype=float))
     s12 = np.atleast_1d(np.asarray(distance, dtype=float))
-    phi1 = np.radians(lat1)
-    beta1 = _reduced_lat(phi1, f)
-    sinb1, cosb1 = np.sin(beta1), np.cos(beta1)
-    sina0 = np.sin(az) * cosb1
-    cosa0_sq = np.clip(1.0 - sina0 * sina0, 0.0, 1.0)
-    sig1 = np.arctan2(sinb1, cosb1 * np.cos(az))
+    sina0, cosa0_sq, sig1 = _clairaut(_reduced_lat(np.radians(lat1), f), az)
     e2 = f * (2.0 - f)
-    ep2 = e2 / (1.0 - e2) if e2 > 0 else 0.0
-    k2 = ep2 * cosa0_sq
+    k2 = e2 / (1.0 - e2) * cosa0_sq
     b = a * (1.0 - f)
-
-    def arc_len(sigd):
-        nodes = sig1[:, None] + sigd[:, None] * _FRAC[None, :]
-        w = np.sqrt(1.0 + k2[:, None] * np.sin(nodes) ** 2)
-        return b * sigd * (w * _FRAC_W[None, :]).sum(axis=1)
 
     # Newton on the sigma span (integrand bounded in [1, 1/(1-f)], so
     # the initial guess is within ~f and 4 iterations reach 1e-15)
     sigd = s12 / b
     for _ in range(6):
-        fval = arc_len(sigd) - s12
+        fval = edge_length_ellipsoidal(sina0, cosa0_sq, sig1, sigd, a, f) - s12
         fprime = b * np.sqrt(1.0 + k2 * np.sin(sig1 + sigd) ** 2)
         step = fval / fprime
         sigd = sigd - step
         if np.max(np.abs(step)) < 1e-15:
             break
-    if np.any(sigd >= math.pi):
-        # documented support limit: the single-wrap longitude unwrap
-        # below is only correct for sigma spans < pi (~half the
-        # circumference) — reject loudly instead of returning
-        # silently-unwrapped longitudes (ADVICE r03)
-        n_bad = int(np.count_nonzero(sigd >= math.pi))
-        raise ValueError(
-            f"geodesic_direct: {n_bad} distance(s) exceed ~half the "
-            "ellipsoid circumference (sigma span >= pi), which is "
-            "outside the supported range"
-        )
-    sig2 = sig1 + sigd
-
-    sinb2 = np.sqrt(cosa0_sq) * np.sin(sig2)
+    sinb2 = np.sqrt(cosa0_sq) * np.sin(sig1 + sigd)
     cosb2 = np.sqrt(np.clip(1.0 - sinb2 * sinb2, 0.0, 1.0))
     lat2 = np.degrees(np.arctan2(sinb2, (1.0 - f) * cosb2))
-
-    # unwrapped spherical longitude: omega = atan2(sin a0 sin sigma,
-    # cos sigma) is monotone with the sign of sin(a0) along the path
-    w1 = np.arctan2(sina0 * np.sin(sig1), np.cos(sig1))
-    w2 = np.arctan2(sina0 * np.sin(sig2), np.cos(sig2))
-    raw = w2 - w1
-    two_pi = 2.0 * math.pi
-    raw = np.where((sina0 > 0) & (raw < 0), raw + two_pi, raw)
-    raw = np.where((sina0 < 0) & (raw > 0), raw - two_pi, raw)
-    nodes = sig1[:, None] + sigd[:, None] * _FRAC_DEF[None, :]
-    g = _lambda_defect_integrand(nodes, sina0[:, None], cosa0_sq[:, None], f)
-    defect = sigd * (g * _FRAC_DEF_W[None, :]).sum(axis=1)
-    dlam = raw + sina0 * defect
-    lon2 = np.remainder(lon1 + np.degrees(dlam) + 180.0, 360.0) - 180.0
+    # longitude gained: the unwrapped spherical omega plus the exact
+    # defect, solved for |sin a0| (a westward path is the mirror image)
+    s = np.abs(sina0)
+    dlam = _unwrap(sig1 + sigd, s, 1.0) - _unwrap(sig1, s, 1.0)
+    dlam = dlam + s * _lambda_defect(sig1, sigd, cosa0_sq, f)
+    lon2 = np.remainder(lon1 + np.degrees(np.copysign(dlam, sina0)) + 180.0, 360.0) - 180.0
     # zero-distance rows keep the start point exactly
     zero = s12 == 0.0
     lon2 = np.where(zero, lon1, lon2)
@@ -740,12 +528,12 @@ def geodesic_ode_path(
 
 def edge_length_ellipsoidal(
     sina0, cosa0_sq, sig1, sigd, a: float = WGS84_A, f: float = WGS84_F
-) -> float:
-    """Geodesic edge length b * int sqrt(1 + k^2 sin^2 sigma) dsigma
-    (for the ODE cross-check in tests)."""
+):
+    """Geodesic edge length b * int sqrt(1 + k^2 sin^2 sigma) dsigma over
+    [sig1, sig1 + sigd] (composite GL), per edge; sina0 is not needed
+    (k^2 = e'^2 cos^2 alpha0) and kept for the parameter-tuple order."""
     e2 = f * (2.0 - f)
-    ep2 = e2 / (1.0 - e2)
-    k2 = ep2 * cosa0_sq
-    nodes = sig1 + sigd * _FRAC
-    vals = np.sqrt(1.0 + k2 * np.sin(nodes) ** 2)
-    return float(a * (1.0 - f) * sigd * (vals * _FRAC_W).sum())
+    k2 = e2 / (1.0 - e2) * np.asarray(cosa0_sq)[..., None]
+    nodes = np.asarray(sig1)[..., None] + np.asarray(sigd)[..., None] * _FRAC
+    w = np.sqrt(1.0 + k2 * np.sin(nodes) ** 2)
+    return a * (1.0 - f) * sigd * (w * _FRAC_W).sum(axis=-1)

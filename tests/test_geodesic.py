@@ -141,6 +141,14 @@ def _ode_ring_area(pts_deg: np.ndarray, n_steps: int = 20000) -> float:
     return area
 
 
+def _ode_miss(lon1, lat1, lon2, lat2, s12, az1, n_steps=40000):
+    """Metres between the RK4 geodesic ODE's end point after (s12, az1)
+    from point 1 and point 2."""
+    path = geodesic_ode_path(math.radians(lat1), math.radians(lon1), az1, s12, n_steps)
+    dlon = (path[-1, 1] - math.radians(lon2) + math.pi) % (2 * math.pi) - math.pi
+    return math.hypot(path[-1, 0] - math.radians(lat2), dlon) * WGS84_A
+
+
 def test_general_quadrilateral_vs_ode_truth():
     pts = np.array([[10.0, 40.0], [12.5, 41.0], [12.0, 43.5], [9.5, 42.5]])
     got = ring_area_ellipsoidal(np.vstack([pts, pts[:1]]))
@@ -162,6 +170,17 @@ def test_near_polar_edge_vs_ode_truth():
     # exercises the adaptive quadrature path for the 1/(1 - cos^2 a0
     # sin^2 sigma) peak
     pts = np.array([[0.0, 80.0], [179.0, 80.0], [90.0, 60.0]])
+    got = ring_area_ellipsoidal(np.vstack([pts, pts[:1]]))
+    truth = _ode_ring_area(pts, n_steps=60000)
+    assert got == pytest.approx(truth, rel=5e-9)  # ODE-resolution bound
+
+
+def test_edge_passing_near_pole_vs_ode_truth():
+    # the (0, 0) -> (170, 70) edge passes ~3.6 deg from the north pole
+    # (sin^2 a0 ~ 0.004): its integrand peak is too narrow for the GL
+    # panels, though a sin^2 a0 < 1e-3 test would leave it on them
+    # (1e-5 off)
+    pts = np.array([[0.0, 0.0], [170.0, 70.0], [90.0, 10.0]])
     got = ring_area_ellipsoidal(np.vstack([pts, pts[:1]]))
     truth = _ode_ring_area(pts, n_steps=60000)
     assert got == pytest.approx(truth, rel=5e-9)  # ODE-resolution bound
@@ -262,6 +281,26 @@ def test_near_antipodal_edge_shooting_fallback():
     assert whole == pytest.approx(split, rel=1e-9)
 
 
+def test_near_antipodal_edge_southern_split():
+    """Split identity for a near-antipodal edge bent over the SOUTH pole with
+    L < 0: the split point is the ODE midpoint of the solved geodesic
+    (RK4 from the returned azimuth over half the returned length), and
+    the two sub-triangles take the ordinary converged path."""
+    from pygeoops_spark.geom.geodesic import geodesic_inverse
+
+    p, q, c = [0.0, -10.0], [-179.5, 9.5], [-90.0, -35.0]
+    s12, az1 = geodesic_inverse([p[0]], [p[1]], [q[0]], [q[1]])
+    assert _ode_miss(p[0], p[1], q[0], q[1], s12[0], az1[0]) < 1e-6
+    path = geodesic_ode_path(math.radians(p[1]), 0.0, az1[0], s12[0] / 2, 20000)
+    mid = [math.degrees(path[-1, 1]), math.degrees(path[-1, 0])]
+    assert mid[1] < -60  # the path bends over the south pole
+    whole = ring_area_ellipsoidal(np.array([p, q, c, p]))
+    split = ring_area_ellipsoidal(np.array([p, mid, c, p])) + ring_area_ellipsoidal(
+        np.array([mid, q, c, mid])
+    )
+    assert whole == pytest.approx(split, rel=1e-9)
+
+
 def test_geodesic_inverse_equator_closed_form():
     from pygeoops_spark.geom.geodesic import geodesic_inverse
 
@@ -349,11 +388,41 @@ def test_geodesic_inverse_vs_helmert_series():
 
 
 def test_geodesic_inverse_near_antipodal_fallback():
+    """Seeded near-antipodal sweep (|lat| <= 40, lat2 ~ -lat1, |L| in
+    179.3..179.97, alternating signs of L): nearly every pair is one
+    where the fixed point oscillates (residual > 1e-9) and the azimuth
+    solve takes over.  Each routed (s, az1) must carry the exact
+    geodesic ODE (RK4, 40,000 steps) onto the target within 1e-6 m,
+    and the reverse pair must have the same length."""
     from pygeoops_spark.geom.geodesic import geodesic_inverse
 
-    s, az = geodesic_inverse([0.0], [0.3], [179.9], [-0.2])
-    # matches the shooting-validated crossing length of the area test
-    assert s[0] == pytest.approx(19992082.1, abs=200.0)
+    rng = np.random.default_rng(3)
+    lat1 = rng.uniform(-40, 40, 12)
+    lat2 = -lat1 + rng.uniform(-0.3, 0.3, 12)
+    dlon = rng.uniform(179.3, 179.97, 12) * np.tile([1.0, -1.0], 6)
+    b1, b2 = _reduced_lat(np.radians(lat1), WGS84_F), _reduced_lat(np.radians(lat2), WGS84_F)
+    routed = _solve_edges(b1, b2, np.radians(dlon), WGS84_F)[-1] > 1e-9
+    assert routed.sum() >= 10
+    assert {1.0, -1.0} <= set(np.sign(dlon[routed]))  # both signs of L
+    assert {1.0, -1.0} <= set(np.sign(lat1[routed]))  # both hemispheres
+    assert np.abs(lat1[routed]).max() > 30
+    s12, az1 = geodesic_inverse(np.zeros(12), lat1, dlon, lat2)
+    s21, _ = geodesic_inverse(dlon, lat2, np.zeros(12), lat1)
+    for i in np.nonzero(routed)[0]:
+        assert _ode_miss(0.0, lat1[i], dlon[i], lat2[i], s12[i], az1[i]) < 1e-6
+        assert s21[i] == pytest.approx(s12[i], abs=1e-6)
+
+
+@pytest.mark.parametrize(
+    "tri", [[[0, 0], [179.7, 0], [90, 30]], [[0, 10], [179.6, -10], [90, 40]]]
+)
+def test_near_antipodal_area_independent_of_orientation(tri):
+    """Both triangles carry an edge with two equally short geodesics
+    (lat2 = -lat1, one over each pole); either traversal must pick the
+    same one, so the ring and its reverse have the same area."""
+    ring = np.array(tri + tri[:1], float)
+    fwd = ring_area_ellipsoidal(ring)
+    assert ring_area_ellipsoidal(ring[::-1]) == pytest.approx(fwd, rel=1e-12)
 
 
 def test_geodesic_inverse_coincident():
@@ -444,3 +513,19 @@ def test_geodesic_direct_zero_distance():
 
     lon2, lat2 = geodesic_direct([7.5], [-33.25], [1.0], [0.0])
     assert lon2[0] == 7.5 and lat2[0] == -33.25
+
+
+def test_geodesic_direct_beyond_half_circumference():
+    """The longitude unwrap is continuous, so distances past half the
+    circumference are supported: the equator closed form, and an
+    oblique path checked on the RK4 geodesic ODE."""
+    from pygeoops_spark.geom.geodesic import geodesic_direct
+
+    lon2, lat2 = geodesic_direct([10.0], [0.0], [math.pi / 2], [WGS84_A * math.radians(200)])
+    assert lon2[0] == pytest.approx(-150.0, abs=1e-9)
+    assert lat2[0] == pytest.approx(0.0, abs=1e-12)
+    s = 2.6e7  # ~0.65 of the circumference
+    lon2, lat2 = geodesic_direct([20.0], [30.0], [1.0], [s])
+    path = geodesic_ode_path(math.radians(30.0), math.radians(20.0), 1.0, s, 40000)
+    dlon = (path[-1, 1] - math.radians(lon2[0]) + math.pi) % (2 * math.pi) - math.pi
+    assert math.hypot(path[-1, 0] - math.radians(lat2[0]), dlon) * WGS84_A < 1e-5

@@ -124,8 +124,30 @@ def test_hole_nesting_exists_once():
 
 
 def test_geodesic_shooting_root_finder_once():
-    calls = _calls("pygeoops_spark/geom/geodesic.py")
+    path = "pygeoops_spark/geom/geodesic.py"
+    calls = _calls(path)
     assert calls.get("linspace") == 1  # one azimuth bracket grid
+    src = (ROOT / path).read_text()
+    for gone in ("_rk4_geodesic_vec", "_shoot_crossing", "_shoot_inverse", "_edge_area_shoot"):
+        assert gone not in src
+    # the geodesic ODE's azimuth equation d(alpha)/ds = sin(alpha)
+    # tan(phi) / N is the one place the engine would call tan: only the
+    # tests' ground truth may step the ODE, and nothing in the engine
+    # may call it
+    steppers = set()
+    for file in sorted((ROOT / "pygeoops_spark").rglob("*.py")):
+        tree = ast.parse(file.read_text())
+        body = tree.body + [m for c in tree.body if isinstance(c, ast.ClassDef) for m in c.body]
+        for fn in body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call):
+                    name = getattr(node.func, "id", getattr(node.func, "attr", None))
+                    if name == "tan":
+                        steppers.add((file.relative_to(ROOT).as_posix(), fn.name))
+                    assert name != "geodesic_ode_path", file
+    assert steppers == {(path, "geodesic_ode_path")}
 
 
 def test_session_aqe_settings_are_constants():
