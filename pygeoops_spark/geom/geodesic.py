@@ -183,6 +183,11 @@ def _adaptive_simpson(fun, lo, hi, tol, depth=30):
     return rec(lo, hi, f0, f1, f2, simp(lo, hi, f0, f1, f2), depth)
 
 
+# residual (rad) above which an edge's fixed point counts as unconverged;
+# converged edges stop at a few ulp of their longitude (<= 1e-15)
+_ANTIPODAL_RESID = 1e-13
+
+
 def _solve_edges(beta1, beta2, L, f):
     """Vectorized inverse solve on the auxiliary sphere.
 
@@ -193,8 +198,10 @@ def _solve_edges(beta1, beta2, L, f):
     final |Lambda_new - Lambda|: the fixed point is known to oscillate
     without converging for near-antipodal endpoints (|L| within ~0.5
     deg of pi), where the true geodesic is near-meridional over a
-    pole; edges with residual > 1e-9 take their parameters from
-    _solve_antipodal instead.
+    pole.  Edges whose residual stays above _ANTIPODAL_RESID take their
+    parameters from _solve_antipodal instead: a fixed point that is
+    still moving after 30 iterations has not converged, however small
+    the last step (one that stopped at 3e-12 rad landed 2e-5 m off).
     """
     sinb1, cosb1 = np.sin(beta1), np.cos(beta1)
     sinb2, cosb2 = np.sin(beta2), np.cos(beta2)
@@ -220,7 +227,7 @@ def _solve_edges(beta1, beta2, L, f):
             lam = lam_new
             break
         lam = lam_new
-    for i in np.nonzero(~degen & (resid > 1e-9))[0]:
+    for i in np.nonzero(~degen & (resid > _ANTIPODAL_RESID))[0]:
         sina0[i], cosa0_sq[i], sig1[i], sigd[i] = _solve_antipodal(beta1[i], beta2[i], L[i], f)
     return sina0, cosa0_sq, sig1, sigd, degen, resid
 
