@@ -19,7 +19,7 @@ from __future__ import annotations
 import numpy as np
 
 from pygeoops_spark.geom.general import collect, collection_extract, subdivide
-from pygeoops_spark.geom.kernels import get_primitivetype_id, points_in_polygon
+from pygeoops_spark.geom.kernels import get_primitivetype_id
 from pygeoops_spark.geom.overlay import (
     dissolve_partition,
     line_difference,
@@ -56,10 +56,10 @@ def _subtract_polyset(geom: Geometry, sub: Geometry | None) -> Geometry | None:
     if t == POINT:
         if geom.data is None:
             return geom
-        inside = points_in_polygon(
-            np.array([geom.data[0]]), np.array([geom.data[1]]), sub
-        )[0]
-        return None if inside else geom
+        # a point is a zero-length line: on the closed polygon (inside
+        # or on its boundary) it is subtracted
+        p = np.asarray(geom.data, dtype=float)[:2]
+        return geom if line_difference(np.array([p, p]), sub) else None
     if t == LINESTRING:
         chains = line_difference(np.asarray(geom.data), sub)
         if not chains:

@@ -215,10 +215,9 @@ def exact_symmetric_difference_area(
 # crossing parameters solve linear systems, and sub-interval midpoints
 # classify by an exact even-odd crossing test. Only the final
 # conversion to metric length multiplies the exact fraction by one
-# float segment length — "exact up to one sqrt". Generic-position
-# inputs only: a sub-segment collinear ON the boundary has an
-# ambiguous midpoint and is not handled (float kernels are equally
-# ambiguous there).
+# float segment length — "exact up to one sqrt". The polygon is a
+# closed point set (OGC Simple Features, as GEOS): a sub-segment ON a
+# ring edge lies on the polygon, whichever edge of the ring it follows.
 
 
 def _pip_even_odd(x: Fraction, y: Fraction, rings) -> bool:
@@ -238,30 +237,43 @@ def _pip_even_odd(x: Fraction, y: Fraction, rings) -> bool:
 def _segment_inside_fraction(
     p: tuple[Fraction, Fraction], q: tuple[Fraction, Fraction], rings
 ) -> Fraction:
-    """Exact t-measure of [p, q] strictly inside the even-odd region."""
+    """Exact t-measure of [p, q] inside the closed even-odd region.
+    Proper crossings and the endpoints of collinear ring edges cut the
+    segment; a sub-interval whose midpoint lies on a ring edge runs
+    along the boundary and counts as inside, any other one reads the
+    even-odd test at its midpoint."""
     dx, dy = q[0] - p[0], q[1] - p[1]
     if dx == 0 and dy == 0:
         return _F(0)
     cuts = {_F(0), _F(1)}
-    for pts in rings:
-        n = len(pts)
-        for i in range(n):
-            a = pts[i]
-            b = pts[(i + 1) % n]
-            ex, ey = b[0] - a[0], b[1] - a[1]
-            denom = dx * ey - dy * ex
-            if denom == 0:
-                continue
-            qpx, qpy = a[0] - p[0], a[1] - p[1]
-            t = (qpx * ey - qpy * ex) / denom
-            u = (qpx * dy - qpy * dx) / denom
-            if 0 < t < 1 and 0 <= u <= 1:
-                cuts.add(t)
+    edges = [(pts[i], pts[(i + 1) % len(pts)]) for pts in rings for i in range(len(pts))]
+    for a, b in edges:
+        ex, ey = b[0] - a[0], b[1] - a[1]
+        qpx, qpy = a[0] - p[0], a[1] - p[1]
+        denom = dx * ey - dy * ex
+        if denom == 0:
+            if qpx * dy - qpy * dx == 0:  # collinear: the edge's ends cut
+                for v in (a, b):
+                    t = ((v[0] - p[0]) * dx + (v[1] - p[1]) * dy) / (dx * dx + dy * dy)
+                    if 0 < t < 1:
+                        cuts.add(t)
+            continue
+        t = (qpx * ey - qpy * ex) / denom
+        u = (qpx * dy - qpy * dx) / denom
+        if 0 < t < 1 and 0 <= u <= 1:
+            cuts.add(t)
     ts = sorted(cuts)
     total = _F(0)
     for t1, t2 in zip(ts, ts[1:]):
         tm = (t1 + t2) / 2
-        if _pip_even_odd(p[0] + tm * dx, p[1] + tm * dy, rings):
+        x, y = p[0] + tm * dx, p[1] + tm * dy
+        on_edge = any(
+            (b[0] - a[0]) * (y - a[1]) == (b[1] - a[1]) * (x - a[0])
+            and min(a[0], b[0]) <= x <= max(a[0], b[0])
+            and min(a[1], b[1]) <= y <= max(a[1], b[1])
+            for a, b in edges
+        )
+        if on_edge or _pip_even_odd(x, y, rings):
             total += t2 - t1
     return total
 

@@ -11,9 +11,11 @@ edges with boolean masks or concatenations:
  2. node: split every edge at its intersections with edges of the
     other input(s) (bbox-prefiltered pairwise tests); each edge's
     pieces replace it in place, in order along the edge
- 3. classify every noded edge by where its midpoint lies relative to
-    each input (strictly inside / outside, on-boundary handled via the
-    edge-ownership rules below)
+ 3. classify every noded edge against each other input, once, in
+    _classify — the one place that decides where an edge lies: whether
+    it is on that input's boundary band, and whether its left and its
+    right side lie inside that input. Every keep/drop below (binary
+    ops, union, line and point differences) reads those arrays
  4. keep edges according to the boolean rule:
        union:        edges not strictly inside the *other* input
        intersection: edges strictly inside the other input (or shared)
@@ -21,7 +23,7 @@ edges with boolean masks or concatenations:
     shared edges (same undirected segment in both inputs) are kept once
     for union/intersection when co-directed, dropped when anti-directed.
     The binary ops run one pipeline (_binary_overlay); each op is only
-    a _Rule row — the class each operand keeps, whether B's kept edges
+    a _Rule row — the side each operand keeps, whether B's kept edges
     are reversed, the empty-operand result and the retry area bound.
  5. stitch the kept edge array into rings (at multi-way vertices take
     the sharpest counter-clockwise turn), classify shells/holes by
@@ -61,12 +63,15 @@ reference gets these for free from GEOS, _difference.py:171-181):
    lines meet at most once; collinear overlap has its own branch) —
    otherwise ulp-rotated pieces of the same original edge produce a
    phantom interior crossing arbitrarily far from the shared node.
- * on-boundary keep/drop decisions are the exact off->0 limit of side
-   sampling (_onb_verdict): midpoint point-in-polygon when strictly
-   off the other NODED chain, co-direction with the nearest chain
-   segment when bit-coincident. No finite sampling offset is safe —
-   noding near-duplicate vertices creates micro edges bounding wedges
-   thinner than any fixed offset.
+ * the sides of an on-boundary edge are the exact off->0 limit of
+   side sampling (_classify): the midpoint point-in-polygon value when
+   strictly off the other NODED chain, co-direction with the nearest
+   chain segment when bit-coincident. No finite sampling offset is
+   safe — noding near-duplicate vertices creates micro edges bounding
+   wedges thinner than any fixed offset.
+ * polygons are closed point sets (OGC Simple Features): a line piece
+   or a point on the boundary band lies on the polygon, so a
+   difference removes it on every edge of a ring alike.
 
 These invariants are graded against an exact rational-arithmetic area
 oracle (geom/exact.py, signed-trapezoid decomposition over Fractions)
@@ -374,8 +379,7 @@ def _midpoints(edges: np.ndarray) -> np.ndarray:
 
 def _poly_segments(poly: Geometry) -> np.ndarray:
     """All boundary segments in raw ring orientation, zero-length ones
-    included: the on-boundary distance reference of _classify and of
-    polygon_union's per-neighbor test."""
+    included: the boundary-band distance reference of _classify."""
     return _chain_edges([r for part in get_parts(poly) for r in part.data], skip_zero=False)
 
 
@@ -406,87 +410,76 @@ def _nearest_segment(mids: np.ndarray, segs: np.ndarray) -> tuple[np.ndarray, np
     return best, jmin
 
 
-def _onb_verdict(
+def _classify(
     edges: np.ndarray,
+    mids: np.ndarray,
     other: Geometry,
     segs: np.ndarray,
-    inside: np.ndarray | None = None,
+    noded: np.ndarray,
+    snap: float,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Keep/drop evidence for edges lying in ``other``'s coincidence
-    band, as the exact off->0 limit of side sampling. Returns per-edge
-    boolean arrays ``(coincident, codir, inside)``:
+    """Where each edge lies relative to ``other``: the one edge
+    classification of the overlay core. ``mids`` are the edges'
+    midpoints, ``segs`` other's raw boundary segments (_poly_segments)
+    and ``noded`` its NODED edge array. Returns per-edge boolean arrays
+    ``(onb, left, right)``:
 
-    * ``coincident`` — the edge midpoint lies ON other's boundary to
-      ~100 ulps: line offset against the nearest canonically-oriented
-      segment below ``scale * 1e-13`` with the projection inside the
-      segment. Only here is point-in-polygon undefined. Coincidence
-      MUST be judged against the same arrangement the stitcher walks:
-      ``segs`` is other's NODED edge array — vertex-on-edge
-      noding detours chains onto the opposite set's vertices (up to
-      10*snap off the original boundary), and a piece that is
-      bit-identical to a detoured chain segment reads as "strictly
-      inside by 5e-10" against the original segments, producing a
-      spurious keep, a dangling spur, and a spurious coarse retry (the
-      round-6 driver `difference` v2 regression).
-    * ``codir`` — the edge runs the same way as that nearest segment.
-      Since both edge sets are normalized interior-left (shell CCW,
-      holes CW), co-direction means the interiors lie on the SAME side
-      — the classical arrangement rule for coincident boundaries.
-    * ``inside`` — exact point-in-polygon of the midpoint itself, the
-      ground truth whenever not coincident (distances down to ~100
-      ulps resolve fine in doubles; the band is 10*snap >> that).
+    * ``onb`` — the midpoint lies within the 10*snap band of other's
+      boundary (the noding tolerance, so "cut here" and "shared
+      boundary" agree).
+    * ``left`` / ``right`` — that side of the edge lies inside other.
+      Off the band both read the midpoint's exact point-in-polygon.
+      On it they are the exact off->0 limit of side sampling: when the
+      midpoint is ON other's noded chain to ~100 ulps (line offset
+      against the nearest segment below ``scale * 1e-13``, projection
+      inside the segment), the sides follow that segment's direction —
+      both edge sets are normalized interior-left (shell CCW, holes
+      CW), so a co-directed edge has other's interior on its left, an
+      anti-directed one on its right (the arrangement rule for
+      coincident boundaries). Otherwise they read the same
+      point-in-polygon value: distances down to ~100 ulps resolve fine
+      in doubles, and the band is 10*snap >> that.
 
-    Replaces finite-offset side sampling: NO fixed offset is safe,
-    because noding near-duplicate vertices produces micro edges
-    bounding wedges thinner than any chosen offset — the exact
-    rational oracle (tests/test_exact_oracle.py) caught the
-    intersection kernel emptying a 0.09-area overlap through a
-    100*snap sample, and a 14-degree corner wedge through a
-    quarter-edge-length one.
-
-    ``inside`` (precomputed raw midpoint PIP) lets polygon_union, which
-    evaluates one verdict per (polygon, neighbor) onb subset, skip the
-    re-test; semantics are identical.
+    Coincidence MUST be judged against the arrangement the stitcher
+    walks, not the original boundary: vertex-on-edge noding detours
+    chains onto the opposite set's vertices (up to 10*snap off the
+    original boundary), and a piece bit-identical to a detoured chain
+    segment reads as "strictly inside by 5e-10" against the original
+    segments, producing a spurious keep, a dangling spur and a
+    spurious coarse retry (the round-6 regression of the `difference`
+    query's v2 variant). No finite sampling offset replaces the limit: noding
+    near-duplicate vertices makes micro edges bounding wedges thinner
+    than any offset — the exact rational oracle
+    (tests/test_exact_oracle.py) caught the intersection kernel
+    emptying a 0.09-area overlap through a 100*snap sample, and a
+    14-degree corner wedge through a quarter-edge-length one.
     """
-    n = len(edges)
-    empty = np.zeros(n, dtype=bool)
-    if n == 0 or not len(segs):
-        return empty, empty, empty
-    mids = _midpoints(edges)
-    near = segs[_nearest_segment(mids, segs)[1]]
-    dx, dy = near[:, 2] - near[:, 0], near[:, 3] - near[:, 1]
-    vx, vy = mids[:, 0] - near[:, 0], mids[:, 1] - near[:, 1]
-    seg_len2 = dx * dx + dy * dy
-    seg_len = np.sqrt(seg_len2)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        s = (dx * vy - dy * vx) / seg_len
-        t = (dx * vx + dy * vy) / seg_len2
-    scale = np.maximum(1.0, np.abs(near).max(axis=1))
-    scale = np.maximum(scale, np.abs(mids).max(axis=1))
-    thr = scale * 1e-13
-    with np.errstate(divide="ignore", invalid="ignore"):
-        tpad = thr / seg_len
-    coincident = (
-        (np.abs(s) <= thr) & (t >= -tpad) & (t <= 1 + tpad) & (seg_len > 0)
-    )
-    edir = edges[:, 2:] - edges[:, :2]
-    codir = edir[:, 0] * dx + edir[:, 1] * dy > 0
-    if inside is None:
-        inside = points_in_polygon(mids[:, 0], mids[:, 1], other)
-    return coincident, codir, np.asarray(inside, dtype=bool)
-
-
-def _classify(edges: np.ndarray, poly: Geometry, snap: float = SNAP) -> np.ndarray:
-    """For each edge: 1 inside poly, 0 on boundary, -1 outside (by
-    midpoint; on-boundary detected via distance test)."""
-    if not len(edges):
-        return np.empty(0, dtype=int)
-    mids = _midpoints(edges)
-    res = np.where(points_in_polygon(mids[:, 0], mids[:, 1], poly), 1, -1)
-    segs = _poly_segments(poly)
+    inside = np.asarray(points_in_polygon(mids[:, 0], mids[:, 1], other), dtype=bool)
+    onb = np.zeros(len(edges), dtype=bool)
     if len(segs):
-        res = np.where(_nearest_segment(mids, segs)[0] <= snap * 10, 0, res)
-    return res
+        onb = _nearest_segment(mids, segs)[0] <= snap * 10
+    left, right = inside.copy(), inside.copy()
+    idx = np.nonzero(onb)[0]
+    if len(idx) and len(noded):
+        m = mids[idx]
+        near = noded[_nearest_segment(m, noded)[1]]
+        dx, dy = near[:, 2] - near[:, 0], near[:, 3] - near[:, 1]
+        vx, vy = m[:, 0] - near[:, 0], m[:, 1] - near[:, 1]
+        seg_len2 = dx * dx + dy * dy
+        seg_len = np.sqrt(seg_len2)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            s = (dx * vy - dy * vx) / seg_len
+            t = (dx * vx + dy * vy) / seg_len2
+        scale = np.maximum(1.0, np.abs(near).max(axis=1))
+        thr = np.maximum(scale, np.abs(m).max(axis=1)) * 1e-13
+        with np.errstate(divide="ignore", invalid="ignore"):
+            tpad = thr / seg_len
+        coin = (np.abs(s) <= thr) & (t >= -tpad) & (t <= 1 + tpad) & (seg_len > 0)
+        e = edges[idx]
+        codir = (e[:, 2] - e[:, 0]) * dx + (e[:, 3] - e[:, 1]) * dy > 0
+        left[idx] = np.where(coin, codir, inside[idx])
+        right[idx] = np.where(coin, ~codir, inside[idx])
+    return onb, left, right
 
 
 def _cluster_nodes(uniq: np.ndarray, radius: int) -> np.ndarray:
@@ -892,19 +885,19 @@ def _codirected_near_duplicate(kept_a: np.ndarray, kept_b: np.ndarray, snap: flo
 class _Rule(NamedTuple):
     """A binary boolean op as an edge-selection rule over _binary_overlay.
 
-    ``sides`` holds, for A then B, the class of the noded edges kept
-    (1 strictly inside the other operand, -1 strictly outside) and
-    whether they are kept reversed. The same pair decides the edges ON
-    the other operand's boundary: a kept edge bounds the result on its
-    left, so the side that must lie inside the other operand is the
-    edge's left (its right when reversed) exactly when the strict class
-    kept is 1. ``b_empty_keeps_a``: the result is A when B has no
-    polygon (else None). ``bound(|A|, |B|)``: the retry's area upper
-    bound. ``dedupe``: a shared edge is kept once by its snapped key.
-    ``near_dup``: co-directed near-duplicate shared edges from both
-    operands force the coarse retry."""
+    ``sides`` holds, for A then B, whether the edges kept lie inside
+    the other operand (else outside) and whether they are kept
+    reversed. A kept edge bounds the result on its left, so the side
+    of an edge that _classify must find inside (or outside) the other
+    operand is its left, or its right when reversed; one test keeps
+    the strict and the on-boundary edges alike. ``b_empty_keeps_a``:
+    the result is A when B has no polygon (else None).
+    ``bound(|A|, |B|)``: the retry's area upper bound. ``dedupe``: a
+    shared edge is kept once by its snapped key. ``near_dup``:
+    co-directed near-duplicate shared edges from both operands force
+    the coarse retry."""
 
-    sides: tuple[tuple[int, bool], tuple[int, bool]]
+    sides: tuple[tuple[bool, bool], tuple[bool, bool]]
     b_empty_keeps_a: bool
     bound: Callable[[float, float], float]
     dedupe: bool
@@ -916,10 +909,10 @@ class _Rule(NamedTuple):
 # double-subtract when each survives as a complete ring (a plug hugging
 # a hole at sub-tolerance offset: the result is SMALLER than A, which
 # the area bound cannot see) — hence the near-duplicate trigger.
-_DIFFERENCE = _Rule(((-1, False), (1, True)), True, lambda aa, ab: aa, False, True)
+_DIFFERENCE = _Rule(((False, False), (True, True)), True, lambda aa, ab: aa, False, True)
 # A ∩ B: edges of either operand inside the other; co-directed shared
 # edges count once.
-_INTERSECTION = _Rule(((1, False), (1, False)), False, min, True, False)
+_INTERSECTION = _Rule(((True, False), (True, False)), False, min, True, False)
 
 
 def _binary_overlay(
@@ -937,32 +930,30 @@ def _binary_overlay(
     snap = _op_snap(ops)
     edges = [_poly_edges(pa), _poly_edges(pb)]
     noded = [_node_edges(edges[i], edges[1 - i], snap) for i in (0, 1)]
-    cls = [_classify(noded[i], ops[1 - i], snap) for i in (0, 1)]
-    keep = [side[c == want] for (want, _), side, c in zip(rule.sides, noded, cls)]
-    keep = [e[:, [2, 3, 0, 1]] if rev else e for (_, rev), e in zip(rule.sides, keep)]
-    seen = set(_cell_keys(np.vstack(keep), snap)) if rule.dedupe else None
-    # edges on the other operand's boundary, in the off->0 limit: exact
-    # midpoint point-in-polygon when strictly off the other boundary,
-    # co-direction with the underlying segment when bit-coincident
-    # (interiors on the same side — the arrangement rule). B-edges
-    # hugging A's boundary from inside bound a sub-tolerance strip of
-    # the result; exact-shared duplicates collapse in _stitch and
-    # tolerance-zone double-keeps fall to its degree repair.
-    shared = []
-    for i, (want, rev) in enumerate(rule.sides):
-        onb = noded[i][cls[i] == 0]
-        coin, cod, ins = _onb_verdict(onb, ops[1 - i], noded[1 - i])
-        e = onb[np.where(coin, cod != rev, ins) == (want == 1)]
-        if rev:
-            e = e[:, [2, 3, 0, 1]]
-        if seen is not None:
+    segs = [_poly_segments(g) for g in ops]
+    # strict keeps of A then B, then the edges on the other operand's
+    # boundary of A then B. B-edges hugging A's boundary from inside
+    # bound a sub-tolerance strip of the result; exact-shared
+    # duplicates collapse in _stitch and tolerance-zone double-keeps
+    # fall to its degree repair.
+    keep, shared = [], []
+    for i, (inside, rev) in enumerate(rule.sides):
+        onb, left, right = _classify(
+            noded[i], _midpoints(noded[i]), ops[1 - i], segs[1 - i], noded[1 - i], snap
+        )
+        kept = (right if rev else left) == inside
+        e = noded[i][:, [2, 3, 0, 1]] if rev else noded[i]
+        keep.append(e[kept & ~onb])
+        shared.append(e[kept & onb])
+    if rule.dedupe:
+        seen = set(_cell_keys(np.vstack(keep), snap))
+        for i, e in enumerate(shared):
             fresh = np.zeros(len(e), dtype=bool)
             for j, k in enumerate(_cell_keys(e, snap)):
                 if k not in seen:
                     seen.add(k)
                     fresh[j] = True
-            e = e[fresh]
-        shared.append(e)
+            shared[i] = e[fresh]
     keep = np.vstack(keep + shared)
     rings, lost = _stitch(keep, snap)
     result = _rings_to_polygons(rings, snap)
@@ -1028,9 +1019,9 @@ def polygon_union(
         [j for j in range(len(flat)) if j != i and _bbox_overlap(boxes[i], boxes[j])]
         for i in range(len(flat))
     ]
-    # noded edges for ALL polygons first: onb verdicts below must be
-    # judged against the NODED arrangement (chains detour onto the
-    # opposite set's vertices), not the original boundaries
+    # noded edges for ALL polygons first: the sides of an edge on a
+    # neighbour's boundary are judged against that neighbour's NODED
+    # arrangement (chains detour onto the opposite set's vertices)
     noded_all = [
         _node_edges(per_poly_edges[i], np.vstack([per_poly_edges[j] for j in near]), snap)
         if near
@@ -1041,60 +1032,24 @@ def polygon_union(
     raw_segs = {j: _poly_segments(flat[j]) for j in sorted(set().union(*near_all))}
     keep = []
     for near, noded in zip(near_all, noded_all):
-        inside_any = np.zeros(len(noded), dtype=bool)
-        onb_any = np.zeros(len(noded), dtype=bool)
-        per_j: list[tuple[int, np.ndarray, np.ndarray]] = []  # (j, raw pip, onb mask)
-        if near and len(noded):
-            # one midpoint build shared across the per-neighbor passes.
-            # Per-j semantics preserved: a midpoint ON j's boundary is
-            # NOT inside j even when the crossing test says so. The raw
-            # PIP and onb masks are kept per neighbor so the onb-keep
-            # phase below can reuse them instead of re-testing.
-            mids = _midpoints(noded)
-            for j in near:
-                segs = raw_segs[j]
-                if len(segs):
-                    onb_j = _nearest_segment(mids, segs)[0] <= snap * 10
-                else:
-                    onb_j = np.zeros(len(noded), dtype=bool)
-                pip_j = np.asarray(
-                    points_in_polygon(mids[:, 0], mids[:, 1], flat[j]), dtype=bool
-                )
-                per_j.append((j, pip_j, onb_j))
-                inside_any |= pip_j & ~onb_j
-                onb_any |= onb_j
-        # shared/near-shared boundary edges of positive length: keep iff
-        # the RIGHT side (this polygon's own exterior — interior is left
-        # of a CCW shell / normalized hole edge) is not covered by any
-        # other polygon, evaluated in the off->0 limit per neighbor:
-        # exact midpoint point-in-polygon when strictly off j's
-        # boundary, anti-direction with j's underlying segment when
-        # bit-coincident (anti-directed shared CHAINS cancel even when
-        # the two sides were noded at different cut points — edge-level
-        # key matching cannot pair those). Exact co-directed duplicates
-        # both survive and collapse via _stitch's directed-key dedupe,
-        # near-identical ones via its degree repair.
-        onb_idx = np.nonzero(
-            onb_any
-            & ~inside_any
-            & ((noded[:, 0] != noded[:, 2]) | (noded[:, 1] != noded[:, 3]))
-        )[0]
-        covered = np.zeros(len(onb_idx), dtype=bool)
-        for j, pip_j, onb_j in per_j:
-            # edges >= the 10*snap band away from j's boundary can
-            # never be coincident with its noded chain (detours are
-            # bounded by the band): the off->0 limit is just the raw
-            # midpoint PIP already computed above. Only the true
-            # onb-vs-j subset needs the coincidence test.
-            sel = onb_j[onb_idx]
-            covered |= ~sel & pip_j[onb_idx]
-            if sel.any():
-                sub = onb_idx[sel]
-                coin, cod, ins = _onb_verdict(
-                    noded[sub], flat[j], noded_all[j], inside=pip_j[sub]
-                )
-                covered[sel] |= np.where(coin, ~cod, ins)
-        keep += [noded[onb_idx[~covered]], noded[~inside_any & ~onb_any]]
+        # an edge survives iff its RIGHT side (this polygon's own
+        # exterior: interior is left of a CCW shell / normalized hole
+        # edge) lies inside no neighbour. On a neighbour's boundary
+        # that is its off->0 side: anti-directed shared CHAINS cancel
+        # even when the two sides were noded at different cut points
+        # (edge-level key matching cannot pair those). Exact
+        # co-directed duplicates both survive and collapse via
+        # _stitch's directed-key dedupe, near-identical ones via its
+        # degree repair.
+        onb = np.zeros(len(noded), dtype=bool)
+        covered = np.zeros(len(noded), dtype=bool)
+        mids = _midpoints(noded)
+        for j in near:
+            onb_j, _, right_j = _classify(noded, mids, flat[j], raw_segs[j], noded_all[j], snap)
+            onb |= onb_j
+            covered |= right_j
+        live = (noded[:, 0] != noded[:, 2]) | (noded[:, 1] != noded[:, 3])
+        keep += [noded[onb & ~covered & live], noded[~onb & ~covered]]
     keep = np.vstack(keep)
     rings, lost = _stitch(keep, snap)
     result = _rings_to_polygons(rings, snap)
@@ -1219,7 +1174,7 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
 
 def line_intersection(line_coords: np.ndarray, poly: Geometry) -> list[np.ndarray]:
     """Line clipped to polygon: split at boundary crossings, keep pieces
-    whose midpoint is inside."""
+    on the closed polygon (inside or on its boundary band)."""
     chains = line_difference(line_coords, poly, keep_outside=False)
     return chains
 
@@ -1227,17 +1182,20 @@ def line_intersection(line_coords: np.ndarray, poly: Geometry) -> list[np.ndarra
 def line_difference(
     line_coords: np.ndarray, poly: Geometry, keep_outside: bool = True
 ) -> list[np.ndarray]:
-    """Line minus polygon: split at boundary crossings, keep pieces
-    whose midpoint is outside (or inside when keep_outside=False).
-    Consecutive kept pieces whose ends share a snap cell form one
-    chain."""
-    noded = _node_edges(
-        _chain_edges([line_coords], skip_zero=False), _poly_edges(_as_polys(poly))
-    )
+    """Line minus polygon: split at boundary crossings, keep pieces off
+    the closed polygon (or on it when keep_outside=False): a piece on
+    the boundary band is on the polygon, whichever edge of the ring it
+    follows. Consecutive kept pieces whose ends share a snap cell form
+    one chain. A zero-length line is a point: it comes back as one
+    two-vertex chain when kept."""
+    ring_edges = _poly_edges(_as_polys(poly))
+    noded = _node_edges(_chain_edges([line_coords], skip_zero=False), ring_edges)
     if not len(noded):
         return []
-    mids = _midpoints(noded)
-    inside = points_in_polygon(mids[:, 0], mids[:, 1], poly)
+    onb, left, _ = _classify(
+        noded, _midpoints(noded), poly, _poly_segments(poly), ring_edges, SNAP
+    )
+    inside = onb | left
     keep = ~inside if keep_outside else inside
     cells = np.round(noded / SNAP)
     joined = np.zeros(len(noded), dtype=bool)

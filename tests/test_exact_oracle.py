@@ -473,6 +473,20 @@ def test_line_kernels_match_exact_pinned():
     assert exact_line_clip_length(line, box) == pytest.approx(10.0)
     assert _chain_length(line_difference(line, box)) == pytest.approx(10.0)
     assert exact_line_difference_length(line, box) == pytest.approx(10.0)
+    # along each edge of the square, 1 unit past both corners: the
+    # polygon is closed, so the edge span is on it whichever edge it is
+    for edge in (
+        [(-1.0, 0.0), (11.0, 0.0)],
+        [(-1.0, 10.0), (11.0, 10.0)],
+        [(0.0, -1.0), (0.0, 11.0)],
+        [(10.0, -1.0), (10.0, 11.0)],
+        [(11.0, 10.0), (4.0, 10.0), (-1.0, 10.0)],  # reversed, cut mid-edge
+    ):
+        along = np.array(edge)
+        assert exact_line_clip_length(along, box) == pytest.approx(10.0), edge
+        assert exact_line_difference_length(along, box) == pytest.approx(2.0), edge
+        assert _chain_length(line_intersection(along, box)) == pytest.approx(10.0), edge
+        assert _chain_length(line_difference(along, box)) == pytest.approx(2.0), edge
     # diagonal through a holed polygon: hole span excluded
     holed = polygon(
         [(0, 0), (10, 0), (10, 10), (0, 10)], holes=[[(4, 4), (6, 4), (6, 6), (4, 6)]]

@@ -126,6 +126,58 @@ def test_difference_all_none_empty():
     assert difference_all(p, [box(5, 5, 6, 6)]) == p
 
 
+# -- polygons are closed point sets (OGC Simple Features, as GEOS) ---------
+# A line or point on ANY edge of a ring lies on the polygon: a difference
+# removes it and an intersection keeps it, on the top and right edges as on
+# the bottom and left ones.
+_SQUARE = box(0, 0, 10, 10)
+_EDGE_LINES = {  # each runs along one edge and 1 unit past both corners
+    "bottom": [(-1, 0), (11, 0)],
+    "top": [(-1, 10), (11, 10)],
+    "left": [(0, -1), (0, 11)],
+    "right": [(10, -1), (10, 11)],
+}
+_EDGE_POINTS = {
+    "bottom": (5, 0),
+    "top": (5, 10),
+    "left": (0, 5),
+    "right": (10, 5),
+    "lower-left": (0, 0),
+    "lower-right": (10, 0),
+    "upper-right": (10, 10),
+    "upper-left": (0, 10),
+}
+
+
+def _chains_length(chains):
+    return sum(float(np.hypot(*np.diff(np.asarray(c), axis=0).T).sum()) for c in chains)
+
+
+def test_line_on_any_square_edge_lies_on_the_polygon():
+    from pygeoops_spark.geom.overlay import line_difference, line_intersection
+
+    for name, coords in _EDGE_LINES.items():
+        line = np.array(coords, dtype=float)
+        inter = line_intersection(line, _SQUARE)
+        assert len(inter) == 1 and _chains_length(inter) == pytest.approx(10.0), name
+        diff = line_difference(line, _SQUARE)
+        assert len(diff) == 2 and _chains_length(diff) == pytest.approx(2.0), name
+        d = difference_all(linestring(coords), [_SQUARE])
+        assert d.geom_type == "MULTILINESTRING", name
+        assert geom_length(d) == pytest.approx(2.0), name
+
+
+def test_point_on_any_square_edge_lies_on_the_polygon():
+    from pygeoops_spark.geom.overlay import line_difference, line_intersection
+
+    for name, (x, y) in _EDGE_POINTS.items():
+        p = np.array([(x, y), (x, y)], dtype=float)  # a zero-length line
+        assert line_difference(p, _SQUARE) == [], name
+        assert [c.tolist() for c in line_intersection(p, _SQUARE)] == [[[x, y], [x, y]]], name
+        assert difference_all(point(x, y), [_SQUARE]) is None, name
+    assert difference_all(point(10, 10.5), [_SQUARE]) == point(10, 10.5)
+
+
 # -- difference_all_tiled (reference tests/test_difference.py:83-153) -----
 def test_difference_all_tiled_basic():
     small = box(0, 0, 5, 5)

@@ -2,8 +2,9 @@
 decode for every coordinate layout.
 
 * Site guard: the coarse-grid snap retry, the stitch walk's pinch-off,
-  the blocked nearest-segment scan and the binary-op pipeline each
-  exist once; difference and intersection are rules over the core.
+  the blocked nearest-segment scan, the binary-op pipeline and the edge
+  classifier each exist once; difference and intersection are rules
+  over the core.
 * Z/M inputs: the overlay computes on x/y, so results are tagged ``xy``
   (GEOS would interpolate Z); before, a Z-tagged result carried 2-D
   coordinates and its WKB could not be decoded.
@@ -17,7 +18,7 @@ import pytest
 
 from pygeoops_spark.geom import polygon
 from pygeoops_spark.geom.difference import difference_all
-from pygeoops_spark.geom.kernels import polygon_area
+from pygeoops_spark.geom.kernels import points_in_polygon, polygon_area
 from pygeoops_spark.geom.overlay import (
     dissolve_partition,
     polygon_difference,
@@ -60,7 +61,6 @@ def test_overlay_repeats_exist_once():
     calls = _calls(path)
     assert calls.get("_snap_geometry") == 1  # the one retry ladder
     assert calls.get("point_segment_distance") == 1  # the one nearest-segment scan
-    assert calls.get("_classify") == 1  # the one binary pipeline
     assert "_seg_intersections" not in (ROOT / path).read_text()
     pinch = [
         n
@@ -79,6 +79,52 @@ def test_overlay_repeats_exist_once():
             if isinstance(n, ast.Call)
         }
         assert body_calls == {"_binary_overlay"}, op
+
+
+def test_edge_classification_exists_once():
+    """_classify is the one place that decides where an edge lies
+    relative to an operand: every overlay that keeps or drops edges
+    calls it and none re-tests point-in-polygon or coincidence itself,
+    and the point case of difference_all goes through line_difference."""
+    path = "pygeoops_spark/geom/overlay.py"
+    for fn in ("_binary_overlay", "polygon_union", "line_difference"):
+        names = {
+            getattr(n.func, "id", getattr(n.func, "attr", None))
+            for n in ast.walk(_function(path, fn))
+            if isinstance(n, ast.Call)
+        }
+        assert "_classify" in names, fn
+        assert not names & {"points_in_polygon", "_nearest_segment"}, fn
+    tree = ast.parse((ROOT / path).read_text())
+    assert "_onb_verdict" not in {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+    imported = {
+        a.name
+        for n in ast.walk(ast.parse((ROOT / "pygeoops_spark/geom/difference.py").read_text()))
+        if isinstance(n, (ast.Import, ast.ImportFrom))
+        for a in n.names
+    }
+    assert "points_in_polygon" not in imported
+
+
+@pytest.mark.parametrize("op", [polygon_difference, polygon_intersection])
+def test_one_point_in_polygon_test_per_classified_edge(op, monkeypatch):
+    """Two unit squares overlapping by half: each one's bottom and top
+    edge is cut once at the other's corner, so 6 + 6 noded edges, and
+    each is tested against the other square exactly once (the on-boundary
+    pieces are not re-tested)."""
+    from pygeoops_spark.geom import overlay
+
+    tested = []
+
+    def spy(px, py, poly):
+        tested.append(len(px))
+        return points_in_polygon(px, py, poly)
+
+    monkeypatch.setattr(overlay, "points_in_polygon", spy)
+    a = polygon([(0, 0), (1, 0), (1, 1), (0, 1)])
+    b = polygon([(0.5, 0), (1.5, 0), (1.5, 1), (0.5, 1)])
+    assert polygon_area(op(a, b)) == pytest.approx(0.5)
+    assert sum(tested) == 12
 
 
 def test_overlay_edge_set_is_one_array():
