@@ -188,6 +188,9 @@ def centerline(
     sites = np.vstack([r[:-1] for r in all_rings])
     sites = np.unique(np.round(sites, 12), axis=0)
     vedges = voronoi_edges(sites)
+    if not vedges:
+        # collinear sites (a zero-area polygon) have no voronoi edges
+        return None
 
     # 4. keep edges contained in the polygon (vectorized across all
     # edges at once: chain-crossing batch + PIP of 3 samples per edge).

@@ -61,12 +61,15 @@ def _subtract_polyset(geom: Geometry, sub: Geometry | None) -> Geometry | None:
         p = np.asarray(geom.data, dtype=float)[:2]
         return geom if line_difference(np.array([p, p]), sub) else None
     if t == LINESTRING:
+        # the cut chains are 2-D, so they are tagged xy, as polygon
+        # results are: the input's Z/M tag over 2-D rows writes WKB no
+        # reader can decode
         chains = line_difference(np.asarray(geom.data), sub)
         if not chains:
             return None
         if len(chains) == 1:
-            return Geometry(LINESTRING, chains[0], geom.dims)
-        return multi(MULTILINESTRING, [Geometry(LINESTRING, c, geom.dims) for c in chains])
+            return Geometry(LINESTRING, chains[0])
+        return multi(MULTILINESTRING, [Geometry(LINESTRING, c) for c in chains])
     if t == POLYGON:
         return polygon_difference(geom, sub)
     # multi / collection: recurse over parts, re-collect

@@ -31,6 +31,8 @@ from pygeoops_spark.geom.wkb import (
 
 def extend_line_by_distance(line: Geometry, start_distance: float, end_distance: float) -> Geometry:
     """Linear extrapolation of the first/last segment by the distances."""
+    if line.type_id != LINESTRING:
+        raise ValueError(f"line must be a LineString, not {line.geom_type}")
     if start_distance == 0 and end_distance == 0:
         return line
     coords = np.asarray(line.data, dtype=float).copy()
@@ -116,6 +118,8 @@ def _extend_linestring(
     line: Geometry, chains: list[np.ndarray], ext_bounds, blockers: list[np.ndarray]
 ) -> Geometry:
     coords = np.asarray(line.data, dtype=float).copy()
+    if not len(coords):
+        return line
     if not _point_on_chains(coords[0, :2], blockers):
         coords[0, :2] = _closest_extend_point(coords[1, :2], coords[0, :2], chains, ext_bounds)
     if not _point_on_chains(coords[-1, :2], blockers):

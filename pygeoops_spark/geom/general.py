@@ -208,11 +208,23 @@ def subdivide(geom: Geometry, num_coords_max: int = 1000) -> list[Geometry]:
     if n <= num_coords_max:
         return [geom]
     xmin, ymin, xmax, ymax = bounds(geom)
-    cols, rows = grid_shape_squarish((xmin, ymin, xmax, ymax), math.ceil(n / num_coords_max))
-    tiles = create_grid_bboxes((xmin, ymin, xmax, ymax), cols, rows)
+    k = math.ceil(n / num_coords_max)
+    if xmin < xmax and ymin < ymax:
+        cols, rows = grid_shape_squarish((xmin, ymin, xmax, ymax), k)
+        tiles = create_grid_bboxes((xmin, ymin, xmax, ymax), cols, rows)[:, 2:]
+    elif xmin < xmax or ymin < ymax:
+        # a flat bbox (an axis-parallel line, a collapsed polygon) has no
+        # squarish grid: split it along its one nonzero extent only
+        xs = np.linspace(xmin, xmax, k + 1) if xmin < xmax else np.array([xmin, xmax])
+        ys = np.linspace(ymin, ymax, k + 1) if ymin < ymax else np.array([ymin, ymax])
+        tiles = [
+            (x0, y0, x1, y1) for x0, x1 in zip(xs[:-1], xs[1:]) for y0, y1 in zip(ys[:-1], ys[1:])
+        ]
+    else:
+        return [geom]
     want = get_primitivetype_id(geom)
     out: list[Geometry] = []
-    for _, _, tx0, ty0, tx1, ty1 in tiles:
+    for tx0, ty0, tx1, ty1 in tiles:
         c = clip_geom_rect(geom, tx0, ty0, tx1, ty1)
         if c is None:
             continue

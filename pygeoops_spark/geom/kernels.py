@@ -237,17 +237,9 @@ def point_segment_distance(
     return np.hypot(px - (ax + t * dx), py - (ay + t * dy))
 
 
-def segments_cross_chain_batch(edges: np.ndarray, chain: np.ndarray) -> np.ndarray:
-    """(E,) bool: does each edge (edges[(E,2,2)]) intersect any segment
-    of the coordinate chain? Fully vectorized (E x S broadcast),
-    inclusive of touching/collinear contact."""
-    E = len(edges)
-    if E == 0 or len(chain) < 2:
-        return np.zeros(E, dtype=bool)
-    p1 = edges[:, 0, :][:, None, :]  # (E,1,2)
-    p2 = edges[:, 1, :][:, None, :]
-    q1 = chain[:-1][None, :, :]  # (1,S,2)
-    q2 = chain[1:][None, :, :]
+def segments_touch(p1: np.ndarray, p2: np.ndarray, q1: np.ndarray, q2: np.ndarray) -> np.ndarray:
+    """Does segment p1-p2 intersect segment q1-q2, touching and collinear
+    contact included? Elementwise over broadcast (..., 2) endpoints."""
 
     def cross(o, a, b):
         return (a[..., 0] - o[..., 0]) * (b[..., 1] - o[..., 1]) - (
@@ -275,7 +267,19 @@ def segments_cross_chain_batch(edges: np.ndarray, chain: np.ndarray) -> np.ndarr
         | on_seg(p1, p2, q1, d3)
         | on_seg(p1, p2, q2, d4)
     )
-    return (proper | touch).any(axis=1)
+    return proper | touch
+
+
+def segments_cross_chain_batch(edges: np.ndarray, chain: np.ndarray) -> np.ndarray:
+    """(E,) bool: does each edge (edges[(E,2,2)]) intersect any segment
+    of the coordinate chain? Fully vectorized (E x S broadcast),
+    inclusive of touching/collinear contact."""
+    E = len(edges)
+    if E == 0 or len(chain) < 2:
+        return np.zeros(E, dtype=bool)
+    return segments_touch(
+        edges[:, None, 0], edges[:, None, 1], chain[None, :-1], chain[None, 1:]
+    ).any(axis=1)
 
 
 def geom_intersects_segment(geom: Geometry, seg_a, seg_b) -> bool:

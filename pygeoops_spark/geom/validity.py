@@ -7,12 +7,14 @@ _make_valid_line); points are always valid; GeometryCollections
 recurse per part.
 
 A non-simple shell ring is resolved by the NONZERO-WINDING rule over
-its full planar arrangement (_nonzero_region): node the ring against
-itself (once, _self_noded: the loop split reads the same edge array),
-walk the half-edge faces, propagate winding numbers from the
-unbounded face, keep faces with winding != 0, and re-assemble the kept
-region's boundary rings.  One rule covers all the shapes the reference
-test-suite exercises (tests/test_simplify.py:181-251) and beyond:
+its full planar arrangement, decided by the geometry core's one face
+walk, overlay._winding_region (polygon_union reads the same function):
+node the ring against itself (once, _self_noded: the loop split reads
+the same edge array), build the half-edge arrangement, carry winding
+numbers across its faces from the unbounded face, keep faces with
+winding != 0, and walk the kept region's boundary rings.  One rule
+covers all the shapes the reference test-suite exercises
+(tests/test_simplify.py:181-251) and beyond:
 
 * self-touch / self-cross shells (figure-eight, bowtie) -> one part
   per lobe (winding 0 -> +-1 on each side);
@@ -50,8 +52,6 @@ drops them.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 
 from pygeoops_spark.geom.kernels import ring_signed_area
@@ -61,6 +61,8 @@ from pygeoops_spark.geom.overlay import (
     _cell_keys,
     _chain_edges,
     _node_edges,
+    _revisit_loops,
+    _winding_region,
 )
 from pygeoops_spark.geom.wkb import (
     Geometry,
@@ -99,7 +101,7 @@ def _self_noded(ring: np.ndarray) -> np.ndarray:
     """A closed ring's edge array noded against itself (crossing points
     inserted), in ring order with each edge's cuts sorted along it. The
     one arrangement of a ring: the validity check, the loop split and
-    the nonzero region all read it, so a ring is noded once."""
+    the winding region all read it, so a ring is noded once."""
     edges = _chain_edges([ring])
     return _node_edges(edges, edges)
 
@@ -112,34 +114,16 @@ def _ring_loops(ring: np.ndarray) -> list[np.ndarray]:
 
 def _noded_loops(noded: np.ndarray) -> list[np.ndarray]:
     """The simple loops of a self-noded ring (_self_noded), by the
-    vertex-revisit stack walk: walk in ring order popping a loop
-    whenever a vertex repeats."""
+    vertex-revisit stack walk (overlay._revisit_loops) in ring order;
+    loops of no area are dropped."""
     if not len(noded):
         return []
     verts = np.vstack([noded[:1, :2], noded[:, 2:]])
-    keys = _cell_keys(verts, SNAP)
-    loops: list[np.ndarray] = []
-    path: list[int] = []  # vertex indices
-    index: dict[tuple, int] = {}
-    for v, k in enumerate(keys):
-        if k in index:
-            i = index[k]
-            loop = path[i:] + [v]
-            if len(loop) >= 4:
-                lp = verts[loop]
-                if abs(ring_signed_area(lp)) > 1e-12:
-                    loops.append(lp)
-            for p in path[i + 1 :]:
-                index.pop(keys[p], None)
-            path = path[: i + 1]
-        else:
-            index[k] = len(path)
-            path.append(v)
+    loops, path = _revisit_loops(_cell_keys(verts, SNAP))
     if len(path) >= 3:
-        lp = verts[path + path[:1]]
-        if abs(ring_signed_area(lp)) > 1e-12:
-            loops.append(lp)
-    return loops
+        loops.append(path + path[:1])
+    rings = [verts[lp] for lp in loops if len(lp) >= 4]
+    return [r for r in rings if abs(ring_signed_area(r)) > 1e-12]
 
 
 def polygon_is_simple(poly: Geometry) -> bool:
@@ -178,16 +162,10 @@ def make_valid(
         if t == POLYGON:
             return repaired[0]
         parts = [q for r in repaired if r is not None for q in get_parts(r)]
-        if not parts:
-            return None
-        if len(parts) == 1:
-            return parts[0]
-        if all(p.type_id == POLYGON for p in parts):
-            if any(p.dims != parts[0].dims for p in parts):
-                # a repaired part came back 2-D: drop Z/M from all parts
-                parts = [Geometry(POLYGON, [r[:, :2] for r in p.data]) for p in parts]
-            return multi(MULTIPOLYGON, parts)
-        return multi(GEOMETRYCOLLECTION, parts)
+        if all(p.type_id == POLYGON for p in parts) and len({p.dims for p in parts}) > 1:
+            # a repaired part came back 2-D: drop Z/M from all parts
+            parts = [Geometry(POLYGON, [r[:, :2] for r in p.data]) for p in parts]
+        return _reassemble(parts, MULTIPOLYGON, POLYGON)
     if t == LINESTRING:
         return _make_valid_line(geom, keep_collapsed)
     if t == MULTILINESTRING:
@@ -246,143 +224,6 @@ def _make_valid_line(line: Geometry, keep_collapsed: bool = True) -> Geometry | 
     return Geometry(POINT, arr[0].copy(), line.dims) if keep_collapsed else None
 
 
-def _nonzero_region(noded: np.ndarray):
-    """Planar-arrangement resolution of a self-intersecting closed ring,
-    given noded against itself (_self_noded), under the NONZERO-WINDING
-    rule.
-
-    Classical algorithm: from the self-noded ring, build the
-    half-edge arrangement, walk faces (face-on-the-left rule: the next
-    half-edge is the clockwise-next outgoing edge after the twin),
-    propagate winding numbers from the unbounded face across edges
-    (+1 to the left of each traversal direction), keep faces with
-    winding != 0, and re-assemble the kept region's boundary with the
-    same angular walk restricted to boundary half-edges.  Handles
-    partially-overlapping lobes (e.g. pentagram-like rings) that a
-    pure loop-nesting classification cannot.
-
-    Returns (shells, holes) as lists of closed coordinate arrays:
-    shells CCW-walked, holes CW-walked (as produced by the left-hand
-    boundary walk)."""
-    if not len(noded):
-        return [], []
-
-    pts: dict[tuple, np.ndarray] = {}
-    # traversal list as vertex keys; net winding delta per undirected edge
-    delta: dict[tuple, int] = {}
-    for cells, e in zip(_cell_keys(noded, SNAP), noded):
-        ka, kb = cells[:2], cells[2:]
-        if ka == kb:
-            continue
-        pts.setdefault(ka, e[:2])
-        pts.setdefault(kb, e[2:])
-        und = (ka, kb) if ka <= kb else (kb, ka)
-        delta[und] = delta.get(und, 0) + (1 if ka <= kb else -1)
-
-    # half-edges: both directions of every undirected arrangement edge
-    out_edges: dict[tuple, list[tuple]] = {}
-    for (ka, kb) in delta:
-        out_edges.setdefault(ka, []).append(kb)
-        out_edges.setdefault(kb, []).append(ka)
-    # angular order of outgoing half-edges at each vertex
-    ang: dict[tuple, float] = {}
-    for ka, nbrs in out_edges.items():
-        pa = pts[ka]
-        nbrs.sort(key=lambda kb: math.atan2(pts[kb][1] - pa[1], pts[kb][0] - pa[0]))
-        for kb in nbrs:
-            pb = pts[kb]
-            ang[(ka, kb)] = math.atan2(pb[1] - pa[1], pb[0] - pa[0])
-
-    def cw_next(v: tuple, frm: tuple, pool=None) -> tuple:
-        """Outgoing half-edge at v that is clockwise-next after (v, frm)."""
-        nbrs = out_edges[v] if pool is None else pool[v]
-        a0 = ang[(v, frm)]
-        best, best_d = None, None
-        for kb in nbrs:
-            d = (a0 - ang[(v, kb)]) % (2.0 * math.pi)
-            if d < 1e-15:
-                d = 2.0 * math.pi  # the twin itself comes last
-            if best_d is None or d < best_d:
-                best, best_d = kb, d
-        return (v, best)
-
-    # face walk: assign every half-edge to a face (face on its left)
-    face_of: dict[tuple, int] = {}
-    faces: list[list[tuple]] = []
-    for ka, nbrs in out_edges.items():
-        for kb in nbrs:
-            h = (ka, kb)
-            if h in face_of:
-                continue
-            walk = []
-            cur = h
-            while cur not in face_of:
-                face_of[cur] = len(faces)
-                walk.append(cur)
-                cur = cw_next(cur[1], cur[0])
-            faces.append(walk)
-
-    def walk_area(walk) -> float:
-        c = np.array([pts[h[0]] for h in walk] + [pts[walk[0][0]]])
-        return ring_signed_area(c)
-
-    # winding propagation: BFS from the unbounded face (most negative
-    # walk area) with w = 0; stepping across half-edge h from face(h)
-    # to face(twin): the ring's net traversal delta D on that edge has
-    # winding D higher on the left of ka->kb
-    areas = [walk_area(w) for w in faces]
-    outer = int(np.argmin(areas))
-    w_face = {outer: 0}
-    queue = [outer]
-    while queue:
-        fi = queue.pop()
-        for (ka, kb) in faces[fi]:
-            tw = (kb, ka)
-            fj = face_of[tw]
-            if fj in w_face:
-                continue
-            und = (ka, kb) if ka <= kb else (kb, ka)
-            d = delta[und] if ka <= kb else -delta[und]
-            # face fi is on the LEFT of ka->kb; crossing to the right
-            # face lowers the winding by d
-            w_face[fj] = w_face[fi] - d
-            queue.append(fj)
-
-    kept = {fi for fi, w in w_face.items() if w != 0}
-    if not kept:
-        return [], []
-
-    # boundary half-edges: kept face on the left, not-kept on the right
-    boundary = {
-        h
-        for h, fi in face_of.items()
-        if fi in kept and face_of[(h[1], h[0])] not in kept
-    }
-    pool: dict[tuple, list[tuple]] = {}
-    for (ka, kb) in boundary:
-        pool.setdefault(ka, []).append(kb)
-    shells: list[np.ndarray] = []
-    holes: list[np.ndarray] = []
-    seen: set[tuple] = set()
-    for h0 in sorted(boundary):  # deterministic ring starts
-        if h0 in seen:
-            continue
-        walk = [h0]
-        seen.add(h0)
-        cur = h0
-        while True:
-            cur = cw_next(cur[1], cur[0], pool)
-            if cur == h0:
-                break
-            seen.add(cur)
-            walk.append(cur)
-        coords = np.array([pts[h[0]] for h in walk] + [pts[walk[0][0]]])
-        if abs(ring_signed_area(coords)) <= 1e-12:
-            continue
-        (shells if ring_signed_area(coords) > 0 else holes).append(coords)
-    return shells, holes
-
-
 def _make_valid_polygon(
     poly: Geometry, noded: np.ndarray | None, keep_collapsed: bool
 ) -> Geometry | None:
@@ -399,7 +240,7 @@ def _make_valid_polygon(
         # keep the original shell coords (repair is a no-op)
         shells = [np.asarray(poly.data[0], dtype=float)]
     else:
-        shells, holes = _nonzero_region(noded)
+        shells, holes, _ = _winding_region(noded, SNAP)
         if not shells:  # arrangement degenerated: fall back to loops
             shells, holes = loops, []
         shells.sort(key=lambda lp: -abs(ring_signed_area(lp)))

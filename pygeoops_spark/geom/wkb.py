@@ -186,7 +186,15 @@ def _wkb_code(geom: Geometry) -> int:
     return geom.type_id + _DIM_OFFSET[geom.dims]
 
 
-def _pack_coords(arr: np.ndarray) -> bytes:
+def _pack_coords(arr: np.ndarray, geom: Geometry) -> bytes:
+    """Coordinate rows as little-endian doubles. A row narrower or
+    wider than ``geom.dims`` would write bytes no reader can decode
+    (the type code promises ``len(dims)`` doubles per vertex), so it is
+    refused."""
+    if arr.size and (arr.ndim != 2 or arr.shape[1] != geom.ndim):
+        raise ValueError(
+            f"{arr.shape[-1]}-wide coordinates cannot be written as {geom.dims!r}"
+        )
     return np.ascontiguousarray(arr, dtype="<f8").tobytes()
 
 
@@ -204,16 +212,16 @@ def _wkb_write(geom: Geometry, out: bytearray) -> None:
         if geom.data is None:
             out += struct.pack("<%dd" % geom.ndim, *([float("nan")] * geom.ndim))
         else:
-            out += _pack_coords(geom.data.reshape(1, -1))
+            out += _pack_coords(geom.data.reshape(1, -1), geom)
     elif t == LINESTRING:
         arr = np.asarray(geom.data)
         out += struct.pack("<I", len(arr))
-        out += _pack_coords(arr)
+        out += _pack_coords(arr, geom)
     elif t == POLYGON:
         out += struct.pack("<I", len(geom.data))
         for ring in geom.data:
             out += struct.pack("<I", len(ring))
-            out += _pack_coords(np.asarray(ring))
+            out += _pack_coords(np.asarray(ring), geom)
     else:
         out += struct.pack("<I", len(geom.data))
         for part in geom.data:

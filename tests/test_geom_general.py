@@ -151,6 +151,59 @@ def test_subdivide():
     assert all(get_primitivetype_id(p) == 3 for p in parts)
 
 
+@pytest.mark.parametrize(
+    "wkt, left",
+    [
+        # zero height: the squarish grid shape was NaN
+        ("LINESTRING (-1 10, 4 10, 11 10)", "MULTILINESTRING ((-1 10, 0 10), (10 10, 11 10))"),
+        # zero width: the grid shape overflowed
+        ("LINESTRING (3 -1, 3 4, 3 11)", "MULTILINESTRING ((3 -1, 3 0), (3 10, 3 11))"),
+        ("POLYGON ((0 5, 5 5, 12 5, 0 5))", None),  # a flat polygon
+        ("MULTIPOINT ((1 1), (1 1), (1 1))", None),  # no extent at all
+    ],
+)
+def test_subdivide_flat_bbox(wkt, left):
+    """A bbox with a zero extent has no squarish grid: subdivide splits
+    it along its nonzero extent only (or returns it whole), and the
+    tiled difference equals the untiled one."""
+    from pygeoops_spark.geom.difference import difference_all, difference_all_tiled
+
+    g = wkt_loads(wkt)
+    parts = subdivide(g, num_coords_max=2)
+    xs = np.vstack([get_coordinates(p) for p in parts])
+    assert np.allclose(xs.min(axis=0), get_coordinates(g).min(axis=0))
+    assert np.allclose(xs.max(axis=0), get_coordinates(g).max(axis=0))
+    square = box(0, 0, 10, 10)
+    whole = difference_all(g, [square])
+    tiled = difference_all_tiled(g, [square], subdivide_coords=2)
+    if left is None:
+        assert whole is None and tiled.is_empty
+    else:
+        assert wkt_dumps(whole) == wkt_dumps(tiled) == left
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["centerline_flat", "extend_to_empty_line", "extend_polygon_by_distance"],
+)
+def test_degenerate_inputs(case):
+    """Degenerate inputs get the kernel's documented empty result or a
+    ValueError that names the problem, never an IndexError: a zero-area
+    polygon has no centerline, an empty line extends to itself, and a
+    polygon is not a line to extend."""
+    from pygeoops_spark.geom.centerline import centerline
+
+    square = box(0, 0, 10, 10)
+    if case == "centerline_flat":
+        assert centerline(wkt_loads("POLYGON ((0 0, 5 0, 10 0, 0 0))")) is None
+    elif case == "extend_to_empty_line":
+        got = extend_line_to_geometry(wkt_loads("LINESTRING EMPTY"), square)
+        assert got.is_empty and got.type_id == 2
+    else:
+        with pytest.raises(ValueError, match="POLYGON"):
+            extend_line_by_distance(square, 1.0, 1.0)
+
+
 # -- extend_line (reference tests/test_extend_line.py) ---------------------
 def test_extend_line_by_distance_goldens():
     # reference tests/test_extend_line.py:20-55

@@ -27,7 +27,9 @@ from pygeoops_spark.geom.overlay import (
 )
 from pygeoops_spark.geom.validity import make_valid
 from pygeoops_spark.geom.wkb import (
+    LINESTRING,
     MULTIPOLYGON,
+    POLYGON,
     multi,
     wkb_dumps,
     wkb_loads,
@@ -81,18 +83,24 @@ def test_overlay_repeats_exist_once():
         assert body_calls == {"_binary_overlay"}, op
 
 
+def _calls_in(path: str, fn: str) -> set:
+    return {
+        getattr(n.func, "id", getattr(n.func, "attr", None))
+        for n in ast.walk(_function(path, fn))
+        if isinstance(n, ast.Call)
+    }
+
+
 def test_edge_classification_exists_once():
     """_classify is the one place that decides where an edge lies
     relative to an operand: every overlay that keeps or drops edges
     calls it and none re-tests point-in-polygon or coincidence itself,
-    and the point case of difference_all goes through line_difference."""
+    and the point case of difference_all goes through line_difference.
+    (polygon_union keeps no edges: its faces decide it, see
+    test_face_winding_exists_once.)"""
     path = "pygeoops_spark/geom/overlay.py"
-    for fn in ("_binary_overlay", "polygon_union", "line_difference"):
-        names = {
-            getattr(n.func, "id", getattr(n.func, "attr", None))
-            for n in ast.walk(_function(path, fn))
-            if isinstance(n, ast.Call)
-        }
+    for fn in ("_binary_overlay", "line_difference"):
+        names = _calls_in(path, fn)
         assert "_classify" in names, fn
         assert not names & {"points_in_polygon", "_nearest_segment"}, fn
     tree = ast.parse((ROOT / path).read_text())
@@ -104,6 +112,160 @@ def test_edge_classification_exists_once():
         for a in n.names
     }
     assert "points_in_polygon" not in imported
+
+
+def test_face_winding_exists_once():
+    """The faces of a region are decided once, by
+    overlay._winding_region: no other function under geom/ orders edges
+    around a vertex by angle (view_angles sorts the bearings of its own
+    coordinates around one viewpoint, not edges), make_valid's repair
+    and polygon_union both read it, and polygon_union neither classifies
+    edges nor stitches them."""
+    walks = set()
+    for file in sorted((ROOT / "pygeoops_spark/geom").glob("*.py")):
+        for fn in ast.walk(ast.parse(file.read_text())):
+            if isinstance(fn, ast.FunctionDef):
+                names = {
+                    getattr(n.func, "id", getattr(n.func, "attr", None))
+                    for n in ast.walk(fn)
+                    if isinstance(n, ast.Call)
+                }
+                sorts = names & {"sort", "sorted", "lexsort", "argsort"}
+                if names & {"atan2", "arctan2"} and sorts:
+                    walks.add((file.name, fn.name))
+    assert walks == {("overlay.py", "_winding_region"), ("view_angles.py", "view_angles")}
+    validity = "pygeoops_spark/geom/validity.py"
+    assert "_nonzero_region" not in (ROOT / validity).read_text()
+    assert "_winding_region" in _calls_in(validity, "_make_valid_polygon")
+    assert "_make_valid_polygon" in _calls_in(validity, "make_valid")
+    union = _calls_in("pygeoops_spark/geom/overlay.py", "polygon_union")
+    assert "_winding_region" in union
+    assert not union & {"_classify", "_nearest_segment", "points_in_polygon", "_stitch"}
+
+
+def _spy_winding(monkeypatch):
+    """Record every _winding_region call: (edges, snap, dirty), where
+    ``dirty`` is None on the fast pass and the rows the clustered pass
+    nodes again and clusters."""
+    from pygeoops_spark.geom import overlay
+
+    calls = []
+    real = overlay._winding_region
+
+    def spy(edges, snap, dirty=None):
+        calls.append((edges, snap, dirty))
+        return real(edges, snap, dirty)
+
+    monkeypatch.setattr(overlay, "_winding_region", spy)
+    return calls, real
+
+
+def test_clustered_pass_matches_fast_pass(monkeypatch):
+    """The clustered pass changes only what it merges. On every pinned
+    union set whose arrangement raises no signal, the clustered pass
+    over all of its edges gives the fast pass's exact area wherever it
+    has nothing to merge (noding again adds no cut, no two cells lie
+    within its 10-cell radius and no cell holds two distinct points);
+    elsewhere, where it reports itself consistent, every hole lies in
+    its own shell and the area stays inside the band its own area
+    signal allows (10*snap over the edge length)."""
+    from test_overlay_pins import _union_sets
+
+    from pygeoops_spark.geom.exact import exact_area, hole_nesting_faults
+    from pygeoops_spark.geom.overlay import _near_pairs, _node_edges, _rings_to_polygons
+
+    calls, real = _spy_winding(monkeypatch)
+    idle = 0
+    for polys in _union_sets():
+        calls.clear()
+        polygon_union(polys)
+        if len(calls) != 1:
+            continue  # a signal fired
+        edges, snap, _ = calls[0]
+        shells, holes, _ = real(edges, snap)
+        fast = _rings_to_polygons(shells + holes, snap)
+        shells, holes, ok = real(edges, snap, np.ones(len(edges), dtype=bool))
+        clustered = _rings_to_polygons(shells + holes, snap)
+        gap = abs(exact_area(clustered) - exact_area(fast))
+        points = np.unique(edges.reshape(-1, 2), axis=0)
+        cells = np.unique(np.round(points / snap).astype(np.int64), axis=0)
+        renoded = _node_edges(edges, edges, snap)
+        if len(cells) == len(points) and not len(_near_pairs(cells, 10)[0]) and np.array_equal(renoded, edges):
+            assert ok and gap == 0
+            idle += 1
+        elif ok:
+            assert hole_nesting_faults(clustered) == []
+            length = np.hypot(edges[:, 2] - edges[:, 0], edges[:, 3] - edges[:, 1]).sum()
+            assert gap <= 10 * snap * length
+    assert idle
+
+
+def test_bench_buffer_unions_take_the_fast_pass(monkeypatch):
+    """The 200 bench-shaped buffer_by_m unions (bench.py's M-lines) are
+    decided by the first arrangement: no clustered pass, no retry."""
+    from pygeoops_spark.geom import overlay
+    from pygeoops_spark.geom.buffer_by_m import buffer_by_m
+
+    calls, _ = _spy_winding(monkeypatch)
+    retries = []
+    real_snap = overlay._snap_geometry
+    monkeypatch.setattr(
+        overlay, "_snap_geometry", lambda g, grid: retries.append(grid) or real_snap(g, grid)
+    )
+    for i in range(200):
+        x0, y0 = (i % 512) * 300.0, (i // 512 % 512) * 300.0
+        pts = ", ".join(f"{x0 + v * 20} {y0 + (v % 2) * 10} {1.0 + (i + v) % 5}" for v in range(7))
+        assert polygon_area(buffer_by_m(wkt_loads(f"LINESTRING M ({pts})"))) > 0
+    assert len(calls) == 200
+    assert all(dirty is None for _, _, dirty in calls)
+    assert retries == []
+
+
+def test_union_of_parcels_a_nanometre_apart():
+    """Two parcels whose shared edge is offset by 1e-9 share no node,
+    so they are two components of the arrangement, and the second one's
+    corner lies on the first one's bottom edge: a contact no node
+    records, where a winding taken at that corner is not defined. The
+    contact signal sends it to the clustered pass, which merges the near
+    nodes without moving them: area exactly 234, one polygon."""
+    a = wkt_loads("POLYGON((0 0,13 0,15 13,0 13,0 0))")
+    b = wkt_loads("POLYGON((12.999999999 0,18 0,18 13,14.999999999 13,12.999999999 0))")
+    for polys in ([a, b], [b, a]):
+        got = polygon_union(polys)
+        assert polygon_area(got) == 234.0
+        assert got.type_id == POLYGON
+
+
+def test_near_vertices_of_a_densified_column_stay_linear(monkeypatch):
+    """A straight edge densified into 20,000 vertices (one x for all)
+    goes through polygon_union and make_valid, and the near-vertex
+    search behind the contact signal and the node clusters expands at
+    most 3 * (radius + 1)**2 candidates per vertex: bucketed by x, a
+    column does not make every vertex a candidate of every other one."""
+    from pygeoops_spark.geom import overlay
+
+    expanded = []
+    real_ranges = overlay._ranges
+
+    def spy(lo, hi):
+        out = real_ranges(lo, hi)
+        expanded.append(len(out[0]))
+        return out
+
+    monkeypatch.setattr(overlay, "_ranges", spy)
+    ys = np.linspace(0.0, 10.0, 20_000)
+    column = [(0.0, y) for y in ys[::-1]]
+    a = polygon([(5.0, 0.0), (5.0, 10.0)] + column)
+    b = polygon([(4.0, 2.0), (6.0, 2.0), (6.0, 8.0), (4.0, 8.0)])
+    assert polygon_area(polygon_union([a, b])) == pytest.approx(50.0 + 6.0)
+    bowtie = polygon([(0.0, 10.0), (10.0, 0.0), (10.0, 10.0), (0.0, 0.0)] + column[::-1][1:-1])
+    assert polygon_area(make_valid(bowtie)) == pytest.approx(50.0)
+    expanded.clear()
+    cells = np.stack([np.zeros(20_000, dtype=np.int64), np.arange(20_000) * 7], axis=1)
+    i, j = overlay._near_pairs(cells, 16)
+    assert sum(expanded) <= 3 * 17**2 * len(cells)
+    pairs = sorted(zip(i.tolist(), j.tolist()))
+    assert pairs == sorted([(k, k + 1) for k in range(19_999)] + [(k, k + 2) for k in range(19_998)])
 
 
 @pytest.mark.parametrize("op", [polygon_difference, polygon_intersection])
@@ -275,3 +437,63 @@ def test_difference_all_col_z_row(spark):
     got = wkb_loads(bytes(row.d))
     assert got.dims == "xy"
     assert polygon_area(got) == pytest.approx(polygon_area(polygon_difference(_A, _B)))
+
+
+_SQUARE = polygon([(0, 0), (10, 0), (10, 10), (0, 10)])
+# a Z line across the square, a Z line that misses it, an M line across
+_ZM_LINES = {
+    "LINESTRING Z (-5 5 1, 15 5 2)": [[(-5, 5), (0, 5)], [(10, 5), (15, 5)]],
+    "LINESTRING Z (-5 15 1, 15 15 2)": [[(-5, 15), (15, 15)]],
+    "LINESTRING M (-5 5 1, 15 5 2)": [[(-5, 5), (0, 5)], [(10, 5), (15, 5)]],
+}
+
+
+def _chains(g):
+    return [np.asarray(p.data).tolist() for p in ([g] if g.type_id == LINESTRING else g.data)]
+
+
+@pytest.mark.parametrize("tiled", [False, True])
+@pytest.mark.parametrize("wkt", sorted(_ZM_LINES))
+def test_zm_line_difference_decodes(wkt, tiled):
+    """The pieces of a line cut by a polygon are 2-D, so they are
+    tagged xy (as polygon results are); tagged with the input's Z or M
+    their WKB could not be decoded, whether the line crossed the
+    subtrahend or missed it."""
+    from pygeoops_spark.geom.difference import difference_all_tiled
+
+    line = wkt_loads(wkt)
+    got = (
+        difference_all_tiled(line, [_SQUARE], subdivide_coords=2)
+        if tiled
+        else difference_all(line, [_SQUARE])
+    )
+    back = wkb_loads(wkb_dumps(got))
+    # the tiled op hands back a tile that misses the subtrahend's bbox
+    # untouched, Z included
+    assert back.dims == ("xyz" if tiled and "15 15" in wkt else "xy")
+    assert [[p[:2] for p in c] for c in _chains(back)] == [
+        [list(p) for p in c] for c in _ZM_LINES[wkt]
+    ]
+
+
+def test_zm_line_difference_col_row(spark):
+    from pyspark.sql import functions as F
+
+    from pygeoops_spark.operators.difference import difference_all_col
+
+    wkt = "LINESTRING Z (-5 5 1, 15 5 2)"
+    df = spark.createDataFrame([(1, wkb_dumps(wkt_loads(wkt)))], "id long, wkb binary")
+    row = df.select(difference_all_col(F.col("wkb"), [wkb_dumps(_SQUARE)]).alias("d")).collect()[0]
+    got = wkb_loads(bytes(row.d))
+    assert got.dims == "xy"
+    assert _chains(got) == [[list(p) for p in c] for c in _ZM_LINES[wkt]]
+
+
+def test_wkb_refuses_coordinates_narrower_than_dims():
+    from pygeoops_spark.geom.wkb import Geometry
+
+    with pytest.raises(ValueError, match="'xyz'"):
+        wkb_dumps(Geometry(LINESTRING, np.array([[0.0, 0.0], [1.0, 1.0]]), "xyz"))
+    ring = np.array([[0.0, 0.0, 1.0], [1.0, 0.0, 1.0], [1.0, 1.0, 1.0], [0.0, 0.0, 1.0]])
+    with pytest.raises(ValueError, match="'xy'"):
+        wkb_dumps(Geometry(POLYGON, [ring], "xy"))
