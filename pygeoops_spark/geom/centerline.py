@@ -38,6 +38,7 @@ from pygeoops_spark.geom.wkb import (
     get_coordinates,
     get_parts,
     multi,
+    require_finite,
 )
 
 
@@ -131,6 +132,7 @@ def centerline(
 ) -> Geometry | None:
     if geom is None or geom.is_empty:
         return None
+    require_finite(geom, "centerline")
     if geom.type_id != POLYGON:
         parts = [p for p in get_parts(geom) if p.type_id == POLYGON and p.data]
         if not parts:

@@ -152,6 +152,18 @@ def difference_all_tiled(
     )
 
 
+def _xy(geom: Geometry) -> Geometry:
+    """``geom`` with Z/M dropped, tagged xy at every level."""
+    t = geom.type_id
+    if t == POINT:
+        return Geometry(POINT, None if geom.data is None else np.asarray(geom.data)[:2].copy())
+    if t == LINESTRING:
+        return Geometry(LINESTRING, np.asarray(geom.data)[:, :2])
+    if t == POLYGON:
+        return Geometry(POLYGON, [np.asarray(r)[:, :2] for r in geom.data])
+    return Geometry(t, [_xy(p) for p in geom.data])
+
+
 def merge_tiles(pieces: list[Geometry | None], type_id: int) -> Geometry:
     """The merge step of the tiled difference, for the kernel above and
     the distributed operator alike: ``pieces`` are the per-tile results
@@ -160,7 +172,11 @@ def merge_tiles(pieces: list[Geometry | None], type_id: int) -> Geometry:
     polygonal pieces dissolve back together (tile pieces are
     interior-disjoint with axis-aligned shared cuts — the signed-
     coverage dissolve is O(E log E) and falls back to polygon_union on
-    any contract violation); other types collect."""
+    any contract violation); other types collect, every piece 2-D and
+    tagged xy, as the dissolve's are. A tile the subtrahends missed
+    comes back untouched, Z/M included, while cut pieces are 2-D like
+    every overlay result, and one collection of both would hold 3-D
+    parts in a 2-D container."""
     results = [r for r in pieces if r is not None and not r.is_empty]
     if not results:
         return empty(type_id)
@@ -168,7 +184,7 @@ def merge_tiles(pieces: list[Geometry | None], type_id: int) -> Geometry:
         return results[0]
     if all(p.type_id in (POLYGON, MULTIPOLYGON) for p in results):
         return dissolve_partition(results)
-    return collect(results)
+    return collect([_xy(r) for r in results])
 
 
 def keep_geom_type2primitivetype_id(

@@ -30,6 +30,7 @@ from pygeoops_spark.geom.wkb import (
     get_coordinates,
     get_parts,
     multi,
+    require_finite,
 )
 
 _TO_MULTI = {POINT: MULTIPOINT, LINESTRING: MULTILINESTRING, POLYGON: MULTIPOLYGON}
@@ -202,9 +203,9 @@ def subdivide(geom: Geometry, num_coords_max: int = 1000) -> list[Geometry]:
     """Split a big geometry into ~squarish tiles of <= num_coords_max
     coords on average: create_grid2(ceil(n/max)) over the bounds, clip
     per tile, keep input primitive type, drop empties."""
+    n = len(require_finite(geom, "subdivide"))
     if num_coords_max <= 0:
         return [geom]
-    n = len(get_coordinates(geom))
     if n <= num_coords_max:
         return [geom]
     xmin, ymin, xmax, ymax = bounds(geom)

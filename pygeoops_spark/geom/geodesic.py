@@ -384,8 +384,9 @@ def ring_area_ellipsoidal(
 
 def polygon_area_ellipsoidal(geom, a: float = WGS84_A, f: float = WGS84_F) -> float:
     """Unsigned ellipsoidal area: |shell| minus |holes| over parts."""
-    from pygeoops_spark.geom.wkb import POLYGON, get_parts
+    from pygeoops_spark.geom.wkb import POLYGON, get_parts, require_finite
 
+    require_finite(geom, "polygon_area_ellipsoidal")
     total = 0.0
     for part in get_parts(geom):
         if part.type_id != POLYGON or not part.data:

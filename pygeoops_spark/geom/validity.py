@@ -151,14 +151,18 @@ def make_valid(
     t = geom.type_id
     if t in (POLYGON, MULTIPOLYGON):
         polys = [geom] if t == POLYGON else list(geom.data)
-        # each shell is noded once, for the check and the repair alike
+        # each shell is noded and split into loops once, for the check
+        # and the repair alike
         shells = [_self_noded(p.data[0]) if p.data else None for p in polys]
+        loops = [None if s is None else _noded_loops(s) for s in shells]
         # valid: every shell is exactly ONE simple loop. A zero-area
         # (collapsed) shell yields 0 loops and is INVALID — it must
         # fall through to the repair path so keep_collapsed applies
-        if only_if_invalid and all(s is None or len(_noded_loops(s)) == 1 for s in shells):
+        if only_if_invalid and all(lp is None or len(lp) == 1 for lp in loops):
             return geom
-        repaired = [_make_valid_polygon(p, s, keep_collapsed) for p, s in zip(polys, shells)]
+        repaired = [
+            _make_valid_polygon(p, s, lp, keep_collapsed) for p, s, lp in zip(polys, shells, loops)
+        ]
         if t == POLYGON:
             return repaired[0]
         parts = [q for r in repaired if r is not None for q in get_parts(r)]
@@ -225,13 +229,13 @@ def _make_valid_line(line: Geometry, keep_collapsed: bool = True) -> Geometry | 
 
 
 def _make_valid_polygon(
-    poly: Geometry, noded: np.ndarray | None, keep_collapsed: bool
+    poly: Geometry, noded: np.ndarray | None, loops: list | None, keep_collapsed: bool
 ) -> Geometry | None:
-    """Repair one polygon whose shell ``noded`` is already self-noded
-    (None when the polygon is empty)."""
+    """Repair one polygon whose shell ``noded`` is already self-noded and
+    split into its simple ``loops`` (both None when the polygon is
+    empty)."""
     if not poly.data:
         return poly
-    loops = _noded_loops(noded)
     if not loops:
         # the whole shell is zero-area: a collapse to line/point
         return _collapsed_geometry(np.asarray(poly.data[0])) if keep_collapsed else None

@@ -168,6 +168,20 @@ def get_coordinates(geom: Geometry) -> np.ndarray:
     return np.vstack(arrs) if arrs else np.empty((0, k))
 
 
+def require_finite(geom: Geometry, kernel: str) -> np.ndarray:
+    """The coordinates of ``geom`` (``get_coordinates``), after checking
+    that every vertex of its non-empty points, lines and rings has a
+    finite x and y; a ValueError names the first that does not.  An
+    empty geometry holds no vertex (WKB's NaN-coordinate empty point
+    decodes to one), so empties pass."""
+    coords = get_coordinates(geom)
+    bad = ~np.isfinite(coords[:, :2]).all(axis=1)
+    if bad.any():
+        i = int(np.argmax(bad))
+        raise ValueError(f"{kernel}: vertex {i} is not finite: {tuple(coords[i].tolist())}")
+    return coords
+
+
 def bounds(geom: Geometry) -> tuple[float, float, float, float]:
     c = get_coordinates(geom)
     if len(c) == 0:

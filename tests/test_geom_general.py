@@ -365,3 +365,38 @@ def test_extend_segment_by_ratio_table():
         assert extend_segment_by_ratio(p1, p2, ratio) == exp
     with pytest.raises(ValueError, match="ratio must be >= 0"):
         extend_segment_by_ratio((0, 0), (1, 1), -1)
+
+
+def _nan_ring_polygon(bad):
+    """A 60-vertex polygon (more than one subdivide tile) with ``bad`` as
+    its x at vertex 3."""
+    tail = [(0, 10 - i * 0.2) for i in range(1, 50)]
+    return polygon([(0, 0), (10, 0), (10, 10), (bad, 10)] + tail)
+
+
+def _kernels():
+    from pygeoops_spark.geom.centerline import centerline
+    from pygeoops_spark.geom.geodesic import polygon_area_ellipsoidal
+
+    return {
+        "polygon_area_ellipsoidal": polygon_area_ellipsoidal,
+        "subdivide": lambda g: subdivide(g, 8),
+        "centerline": centerline,
+    }
+
+
+@pytest.mark.parametrize("bad", [math.nan, math.inf, -math.inf])
+@pytest.mark.parametrize("kernel", ["polygon_area_ellipsoidal", "subdivide", "centerline"])
+def test_non_finite_vertex_is_named(kernel, bad):
+    """A vertex with a non-finite x raises a ValueError that names the
+    kernel and the vertex (the area kernel raised an unrelated error,
+    subdivide returned no tiles, centerline a line), while an empty
+    geometry, whose WKB holds NaN coordinates, still passes."""
+    from pygeoops_spark.geom.wkb import POINT, POLYGON, Geometry, empty, wkb_dumps, wkb_loads
+
+    run = _kernels()[kernel]
+    with pytest.raises(ValueError, match=rf"{kernel}: vertex 3 is not finite: \({bad}, 10\.0\)"):
+        run(_nan_ring_polygon(bad))
+    run(empty(POLYGON))
+    run(wkb_loads(wkb_dumps(Geometry(POINT, None))))
+    run(box(0, 0, 10, 10))

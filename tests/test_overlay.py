@@ -205,6 +205,25 @@ def test_difference_all_tiled_complex():
     assert polygon_area(tiled) < polygon_area(comb)
 
 
+@pytest.mark.parametrize("dims", ["xyz", "xym"])
+def test_tiled_line_difference_parts_share_the_container_dims(dims):
+    """A Z/M line cut in some tiles and missed in others: every part of
+    the merged result is tagged like its container (xy), and the WKB
+    reads back as written."""
+    from pygeoops_spark.geom.wkb import wkb_dumps, wkb_loads
+
+    line = linestring(
+        [(-5, 5, 1), (2, 5, 1), (8, 5, 2), (15, 5, 2), (15, 20, 3), (30, 20, 3)], dims=dims
+    )
+    out = difference_all_tiled(line, [box(0, 0, 10, 10)], subdivide_coords=2)
+    assert out.geom_type == "MULTILINESTRING" and len(out.data) == 3
+    assert {p.dims for p in out.data} == {out.dims} == {"xy"}
+    back = wkb_loads(wkb_dumps(out))
+    assert wkb_dumps(back) == wkb_dumps(out)
+    assert [p.dims for p in back.data] == [p.dims for p in out.data]
+    assert geom_length(out) == pytest.approx(geom_length(difference_all(line, [box(0, 0, 10, 10)])))
+
+
 # -- stitch anti-parallel filter (ADVICE r01: dead `or True` made the
 # filter a no-op; both members of a reversed duplicate pair must go) --
 def test_stitch_drops_anti_parallel_duplicate_pair():

@@ -432,3 +432,23 @@ def test_make_valid_nodes_each_shell_once(monkeypatch, only_if_invalid):
     square = polygon([(0, 0), (4, 0), (4, 4), (0, 4)])
     assert polygon_area(make_valid(square, only_if_invalid=only_if_invalid)) == 16.0
     assert calls == [4]
+
+
+@pytest.mark.parametrize("only_if_invalid", [False, True])
+def test_make_valid_splits_each_shell_into_loops_once(monkeypatch, only_if_invalid):
+    """A shell's loops are walked once per make_valid: the validity check
+    (only_if_invalid) and the repair read the same split."""
+    from pygeoops_spark.geom import validity
+
+    calls = []
+    real = validity._noded_loops
+
+    def spy(noded):
+        calls.append(noded)
+        return real(noded)
+
+    monkeypatch.setattr(validity, "_noded_loops", spy)
+    bowtie = polygon([(0, 0), (4, 4), (4, 0), (0, 4)])
+    out = make_valid(bowtie, only_if_invalid=only_if_invalid)
+    assert polygon_area(out) == pytest.approx(8.0)
+    assert len(calls) == 1
