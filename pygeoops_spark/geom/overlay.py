@@ -1,7 +1,7 @@
 """Polygon boolean operations (union / intersection / difference) from
 scratch — no GEOS available in this environment.
 
-Approach (noding, then faces by winding or edges by classification).
+Approach (noding, then edges by classification, then faces by winding).
 An edge set is ONE (n, 4) float64 array, a row ``[x1 y1 x2 y2]`` per
 directed edge, from the moment a ring is cut into edges (_chain_edges)
 until it is walked into rings; every step below takes and returns that
@@ -12,26 +12,29 @@ array, in order, and picks edges with boolean masks or concatenations:
  2. node: split every edge at its intersections with edges of the
     other input(s) (bbox-prefiltered pairwise tests); each edge's
     pieces replace it in place, in order along the edge
- 3. union: the faces of the noded edges of all inputs decide it, once,
-    in _winding_region — the half-edge arrangement of the edges, its
-    faces, and each face's winding number, which is its coverage count
-    because every ring is normalized interior-left. The result is the
-    boundary between nonzero and zero faces; make_valid reads the same
-    function over a self-noded ring (nonzero winding)
- 4. binary ops and line ops: classify every noded edge against the
-    other input, once, in _classify — the one place that decides where
-    an edge lies: whether it is on that input's boundary band, and
-    whether its left and its right side lie inside that input — and
-    keep edges by the boolean rule:
+ 3. pick edges (binary ops and line ops): classify every noded edge
+    against the other input, once, in _classify — the one place that
+    decides where an edge lies: whether it is on that input's boundary
+    band, and whether its left and its right side lie inside that
+    input — and keep edges by the boolean rule:
        intersection: edges strictly inside the other input (or shared)
        difference:   A-edges outside B  +  B-edges inside A (reversed)
-    shared edges (same undirected segment in both inputs) are kept once
-    when co-directed, dropped when anti-directed. The binary ops run
-    one pipeline (_binary_overlay); each op is only a _Rule row — the
-    side each operand keeps, whether B's kept edges are reversed, the
-    empty-operand result and the retry area bound. The kept edges are
-    stitched into rings (_stitch: at multi-way vertices take the
-    sharpest clockwise turn), as are dissolve_partition's
+    The binary ops run one pipeline (_binary_overlay); each op is only a
+    _Rule row — the side each operand keeps, whether B's kept edges are
+    reversed, the empty-operand result and the retry area bound. Line
+    ops join their kept pieces into chains. dissolve_partition picks its
+    edges without classification: signed 1-D coverage per cut line
+    cancels the seams between tiles
+ 4. faces: every polygon op reads its result from ONE function,
+    _winding_region — the half-edge arrangement of the edges, its
+    faces, and each face's winding number; the result is the boundary
+    between nonzero and zero faces. Union passes the noded edges of all
+    inputs, so the winding is the coverage count (every ring is
+    normalized interior-left); make_valid passes a self-noded ring. The
+    binary ops and dissolve_partition pass their kept edges, which
+    bound the result: each undirected edge counts once there, so a
+    shared edge kept from both operands is one edge, and an
+    anti-directed pair cancels
  5. classify the rings as shells/holes by signed area and nest the
     holes (_assemble_polygons, the one hole-nesting step, which
     make_valid shares): a hole goes to the smallest shell that contains
@@ -44,7 +47,7 @@ subtrahends once then a single difference, :167-169) and the polygon
 unions in buffer_by_m / centerline.
 
 Robustness: exact float arithmetic where possible; vertices are snapped
-to a scale-relative grid during stitching (mirrors the reference's 1e-8
+to a scale-relative grid in the arrangement (mirrors the reference's 1e-8
 dedup + set_precision fallbacks in _centerline.py:146-172). Two
 hardening rules keep shared/near-shared boundaries consistent (the
 reference gets these for free from GEOS, _difference.py:171-181):
@@ -62,7 +65,7 @@ reference gets these for free from GEOS, _difference.py:171-181):
    are exact negation/commutation images under the role swap
    (qp' = -qp, denom' = -denom, hence t' = u and u' = t bit-exactly),
    so the two independent noding passes of an operation produce
-   IDENTICAL cut coordinates and ring stitching always reconnects —
+   IDENTICAL cut coordinates and the kept edges always meet at nodes —
    even for ill-conditioned near-parallel crossings.
  * endpoint-sharing pairs never cross: segments that share an endpoint
    bit-exactly are excluded from the general-position solve (straight
@@ -86,7 +89,6 @@ in tests/test_exact_oracle.py, including 5000-example soaks.
 
 from __future__ import annotations
 
-import math
 from collections import defaultdict
 from typing import Callable, NamedTuple
 
@@ -162,34 +164,22 @@ def _snap_geometry(g: Geometry | None, grid: float) -> Geometry | None:
     return multi(MULTIPOLYGON, parts_out)
 
 
-# lost-edge fraction above which an overlay retries on a coarse exact
-# grid (200*snap — 20x the 10*snap coincidence band, so everything the
-# tolerance machinery reasons about collapses to exact coincidence)
-_LOST_RETRY_FRAC = 1e-3
-
-
 def _area_of(g: Geometry | None) -> float:
     from pygeoops_spark.geom.kernels import polygon_area
 
     return 0.0 if g is None else polygon_area(g)
 
 
-def _retry_on_coarse_grid(result, lost, snap, bound, geoms, rerun, suspect=None):
+def _retry_on_coarse_grid(result, consistent, snap, bound, geoms, rerun):
     """The one retry ladder under every polygon op: rerun once on the
-    inputs snapped to ``200*snap`` when the boundary graph was
-    classification-inconsistent (material edge loss in the stitch),
-    when the result exceeds ``bound()`` — the op's area upper bound:
-    |A| for A \\ B, min(|A|, |B|) for A ∩ B, the hull for a union
-    (double-counted near-duplicate rings survive a clean walk
-    undetected) — or when the op's own ``suspect()`` check fires (a
-    union whose winding arrangement stayed inconsistent). ``rerun``
-    takes the snapped operands (None where one collapsed) and must not
-    retry again."""
-    if not (
-        lost > _LOST_RETRY_FRAC
-        or _area_of(result) > bound() * (1 + 1e-7) + snap
-        or (suspect is not None and suspect())
-    ):
+    inputs snapped to ``200*snap`` (20x the 10*snap coincidence band,
+    so everything the tolerance machinery reasons about collapses to
+    exact coincidence) when the winding arrangement stayed inconsistent
+    after its clustered pass, or when the result exceeds ``bound()`` —
+    the op's area upper bound: |A| for A \\ B, min(|A|, |B|) for
+    A ∩ B, the hull for a union. ``rerun`` takes the snapped operands
+    (None where one collapsed) and must not retry again."""
+    if consistent and _area_of(result) <= bound() * (1 + 1e-7) + snap:
         return result
     grid = snap * 200
     return rerun([_snap_geometry(g, grid) for g in geoms])
@@ -452,8 +442,8 @@ def _classify(
       point-in-polygon value: distances down to ~100 ulps resolve fine
       in doubles, and the band is 10*snap >> that.
 
-    Coincidence MUST be judged against the arrangement the stitcher
-    walks, not the original boundary: vertex-on-edge noding detours
+    Coincidence MUST be judged against the arrangement the faces are
+    read from, not the original boundary: vertex-on-edge noding detours
     chains onto the opposite set's vertices (up to 10*snap off the
     original boundary), and a piece bit-identical to a detoured chain
     segment reads as "strictly inside by 5e-10" against the original
@@ -573,19 +563,23 @@ def _revisit_loops(keys: list) -> tuple[list[list[int]], list[int]]:
 
 
 def _winding_region(
-    edges: np.ndarray, snap: float, dirty: np.ndarray | None = None
+    edges: np.ndarray, snap: float, dirty: np.ndarray | None = None, unit: bool = False
 ) -> tuple[list[np.ndarray], list[np.ndarray], bool]:
     """The boundary of the nonzero-winding region of a noded directed
-    edge array: the one face walk of the geometry core, under
-    make_valid and polygon_union alike. Returns ``(shells, holes,
-    consistent)``: closed coordinate arrays, shells CCW and holes CW.
+    edge array: the one face walk of the geometry core, under every
+    polygon op. Returns ``(shells, holes, consistent)``: closed
+    coordinate arrays, shells CCW and holes CW.
 
     The half-edge arrangement is built with whole-array numpy. Vertices
     are the edges' snapped cells, numbered in cell order; a vertex takes
     the coordinates of its first occurrence in edge order. Each
     undirected edge carries the signed count of the edges laid on it
     (``np.bincount``): coincident edges merge, anti-directed ones
-    cancel to 0 and stay in the arrangement. One ``lexsort`` by origin
+    cancel to 0 and stay in the arrangement. With ``unit`` the count is
+    clamped to its sign: the kept edges of a binary op or a dissolve
+    are a boundary, where a coincident co-directed edge (the same
+    shared edge kept from both operands) counts once, while union and
+    make_valid count coverage. One ``lexsort`` by origin
     and angle gives each half-edge its next, the clockwise-next edge
     out of its end after its twin, so a face lies on the left of its
     cycle; the faces are the cycles of that permutation (pointer
@@ -614,7 +608,8 @@ def _winding_region(
       them all;
     * on the clustered pass, the winding integral sum(w_f * A_f)
       differs from the signed area of ``edges`` by more than the
-      10*snap band over their length.
+      10*snap band over their length (not with ``unit``: that area
+      counts a duplicated boundary edge twice).
 
     On a signal the arrangement is rebuilt once, the clustered pass:
     the ``dirty`` rows (the named components' edges) are noded again
@@ -657,6 +652,8 @@ def _winding_region(
     # undirected edges lo < hi with the net count laid on lo -> hi
     und, inv = np.unique(np.minimum(a, b) * nv + np.maximum(a, b), return_inverse=True)
     delta = np.bincount(inv, weights=np.sign(b - a)).astype(np.int64)
+    if unit:
+        delta = np.sign(delta)
     m = len(und)
     # half-edge h < m runs lo -> hi and h + m is its twin; the winding
     # on the left of a half-edge exceeds the right by its count
@@ -742,7 +739,7 @@ def _winding_region(
     if nv - m + len(faces) != 2 * len(outer):
         euler = np.bincount(comp[order[beg]], minlength=2 * m) + np.bincount(comp[faces], minlength=2 * m)
         bad |= (euler - np.bincount(comp[:m], minlength=2 * m) != 2)[comp]
-    bad |= dirty is not None and abs(float(wind[face] @ cross) / 2 - target) > band
+    bad |= dirty is not None and not unit and abs(float(wind[face] @ cross) / 2 - target) > band
     kept = wind[face] != 0
     bnd = kept & ~kept[twin]
     hb = np.nonzero(bnd)[0]
@@ -764,7 +761,7 @@ def _winding_region(
         # the components a signal names go to the clustered pass
         dirty = np.zeros(len(edges), dtype=bool)
         dirty[alive] = np.isin(comp[inv], comp[bad])
-        return _winding_region(edges, snap, dirty)
+        return _winding_region(edges, snap, dirty, unit)
     if not closes:
         return [], [], False
     shells, holes = [], []
@@ -793,254 +790,22 @@ def _winding_region(
     return shells, holes, not bad.any()
 
 
-def _stitch(edges: np.ndarray, snap: float = SNAP) -> tuple[list[np.ndarray], float]:
-    """Assemble a directed edge array into closed rings. At branching
-    vertices pick the most counter-clockwise continuation (keeps
-    minimal rings).
-
-    Two-phase: the fast path uses raw grid keys and NO degenerate-input
-    machinery — a clean overlay (the overwhelming majority) walks with
-    zero discarded edges, so node clustering / degree repair / gap
-    bridging would be pure overhead. Only when the fast walk
-    drops or bridges anything does the robust path re-run with the
-    full tolerance machinery.
-
-    Returns ``(rings, lost_frac)`` — the fraction of total edge length
-    that was discarded (repair removals + dangling chains). A material
-    ``lost_frac`` is the callers' signal that the input boundary graph
-    was classification-inconsistent (e.g. N-way near-coincident seams
-    whose pairwise overlap/gap signs disagree) and a coarser-grid
-    retry is warranted; tolerance-scale sliver losses stay far below
-    any threshold.
-    """
-    rings, clean, _lost = _stitch_core(edges, snap, robust=False)
-    if clean:
-        return rings, 0.0
-    rings, _clean, lost_frac = _stitch_core(edges, snap, robust=True)
-    return rings, lost_frac
-
-
-def _stitch_core(
-    edges: np.ndarray, snap: float, robust: bool
-) -> tuple[list[np.ndarray], bool, float]:
-    # dedupe identical directed edges, then drop anti-parallel pairs
-    # entirely (BOTH members): an edge traversed in both directions is
-    # an interior seam between coincident boundaries — keeping either
-    # one forms a degenerate 2-edge ring in the max-turn walk and
-    # consumes an edge a real ring needed.
-    # Keys are snapped in ONE numpy pass (per-endpoint _key calls were
-    # ~20% of the union profile). In robust mode they are CLUSTERED
-    # within the 10*snap classification tolerance: dropped micro-pieces
-    # (e.g. a 1.4*snap connector between a vertex and a degenerate
-    # crossing, classified as shared boundary and absorbed by the other
-    # operand) would otherwise leave a gap wider than one grid cell and
-    # the walk would discard the whole ring as an open chain.
-    if not len(edges):
-        return [], True, 0.0
-    ka = np.round(edges[:, :2] / snap).astype(np.int64)
-    kb = np.round(edges[:, 2:] / snap).astype(np.int64)
-    if robust:
-        n_edge = len(edges)
-        uniq, inv = np.unique(np.vstack([ka, kb]), axis=0, return_inverse=True)
-        canon = _cluster_nodes(uniq, radius=10)
-        ka, kb = uniq[canon[inv[:n_edge]]], uniq[canon[inv[n_edge:]]]
-    # degenerate: both endpoints on one node (zero-length after snap /
-    # collapsed cluster)
-    live = (ka != kb).any(axis=1)
-    edges = edges[live]
-    keys = [(tuple(a), tuple(b)) for a, b in zip(ka[live].tolist(), kb[live].tolist())]
-    seen = set(keys)
-    kept_idx: list[int] = []
-    emitted: set[tuple] = set()
-    for i, k in enumerate(keys):
-        if k in emitted:
-            continue
-        if (k[1], k[0]) in seen:
-            continue
-        emitted.add(k)
-        kept_idx.append(i)
-    edge_keys = [keys[i] for i in kept_idx]
-    # the walk reads the kept rows [x1, y1, x2, y2] as python floats
-    edges = edges[kept_idx].tolist()
-    # loss accounting (robust mode): reference length BEFORE repair;
-    # everything not emitted into a ring (repair removals + dangling
-    # chains) counts as lost — the caller's catastrophic-loss signal
-    total_len = sum(math.hypot(x2 - x1, y2 - y1) for x1, y1, x2, y2 in edges)
-    emitted_len = 0.0
-
-    # degree repair (robust mode): in a clean overlay every node has
-    # out-degree == in-degree (each face boundary passes through). A
-    # spurious seam edge — one operand's boundary hugging the other's
-    # corner inside the tolerance band, kept with no anti-parallel
-    # partner — adds exactly one surplus-out node and one surplus-in
-    # node; the max-turn walk then takes it, dead-ends, and discards a
-    # whole valid ring. Remove the shortest surplus->deficit edge until
-    # balanced. The fast path instead treats ANY imbalance as the
-    # degenerate-input signal and defers to the robust re-run.
-    clean = True
-    while True:
-        outdeg: dict[tuple, int] = defaultdict(int)
-        indeg: dict[tuple, int] = defaultdict(int)
-        for ka, kb in edge_keys:
-            outdeg[ka] += 1
-            indeg[kb] += 1
-        cands = [
-            i
-            for i, (ka, kb) in enumerate(edge_keys)
-            if outdeg[ka] > indeg[ka] and indeg[kb] > outdeg[kb]
-        ]
-        if not cands:
-            if not robust and any(
-                outdeg.get(k, 0) != indeg.get(k, 0)
-                for k in set(outdeg) | set(indeg)
-            ):
-                return [], False, 0.0
-            break
-        if not robust:
-            return [], False, 0.0
-        drop = min(
-            cands,
-            key=lambda i: math.hypot(edges[i][2] - edges[i][0], edges[i][3] - edges[i][1]),
-        )
-        del edges[drop]
-        del edge_keys[drop]
-
-    out_map: dict[tuple, list[int]] = defaultdict(list)
-    for i, (ka, _kb) in enumerate(edge_keys):
-        out_map[ka].append(i)
-    used = [False] * len(edges)
-    rings: list[np.ndarray] = []
-    # Hierholzer-style walk with turn preference: whenever the path
-    # returns to ANY node already on it, that sub-cycle is pinched off
-    # as a ring and the walk continues from the remaining path. A plain
-    # "close only at the start node" walk discards a whole valid ring
-    # when it happens to start on a dangling micro-chain (e.g. the
-    # edges of a sub-tolerance sliver whose connector was absorbed) and
-    # dead-ends after traversing the ring.
-    for start in range(len(edges)):
-        if used[start]:
-            continue
-        used[start] = True
-        stack = [start]
-        nodes = [edge_keys[start][0]]  # nodes[i] = start node of stack[i]
-        node_pos = {nodes[0]: 0}
-        while stack:
-            cur = stack[-1]
-            end_key = edge_keys[cur][1]
-            i0 = node_pos.get(end_key)
-            if i0 is not None:
-                emitted_len += _pinch_off(edges, stack, nodes, node_pos, i0, rings)
-                continue
-            cands = [i for i in out_map[end_key] if not used[i]]
-            if not cands and not robust:
-                # fast path: a dead end means degenerate input — defer
-                # to the robust re-run (clustered keys + repair +
-                # bridging) instead of discarding anything here
-                return [], False, 0.0
-            if not cands:
-                # dead end: bridge a tolerance-scale gap. The onb
-                # keep/drop rules can absorb a connector piece up to
-                # ~100 cells long (coincidence-band scale), leaving the
-                # ring unclosable by exact key match; jump to the
-                # nearest node (within 1.5x the scale) that is on the
-                # path or still has an unused out-edge. Area error is
-                # bounded by gap * perimeter — the discarded-ring
-                # alternative loses the whole face.
-                best_key, best_d = None, 151
-                for nk in node_pos:
-                    dch = max(abs(nk[0] - end_key[0]), abs(nk[1] - end_key[1]))
-                    if 0 < dch < best_d:
-                        best_key, best_d = nk, dch
-                for nk, lst in out_map.items():
-                    if any(not used[i] for i in lst):
-                        dch = max(abs(nk[0] - end_key[0]), abs(nk[1] - end_key[1]))
-                        if 0 < dch < best_d:
-                            best_key, best_d = nk, dch
-                if best_key is None:
-                    break  # genuinely dangling: discard (rings already emitted)
-                if best_key in node_pos and not any(
-                    not used[i] for i in out_map.get(best_key, ())
-                ):
-                    i0 = node_pos[best_key]
-                    emitted_len += _pinch_off(edges, stack, nodes, node_pos, i0, rings)
-                    continue
-                cands = [i for i in out_map[best_key] if not used[i]]
-            if len(cands) == 1:
-                nxt = cands[0]
-            else:
-                # rightmost (sharpest clockwise) turn relative to the
-                # incoming direction keeps each simple loop separate at
-                # figure-eight vertices (touching rings stay two rings)
-                x1, y1, x2, y2 = edges[cur]
-                ain = math.atan2(y2 - y1, x2 - x1)
-
-                def turn(i):
-                    e = edges[i]
-                    ang = math.atan2(e[3] - e[1], e[2] - e[0]) - (ain + math.pi)
-                    while ang <= 0:
-                        ang += 2 * math.pi
-                    while ang > 2 * math.pi:
-                        ang -= 2 * math.pi
-                    return ang
-
-                nxt = max(cands, key=turn)
-            used[nxt] = True
-            node_pos[end_key] = len(stack)
-            nodes.append(end_key)
-            stack.append(nxt)
-    lost_frac = (
-        max(0.0, total_len - emitted_len) / total_len if total_len > 0 else 0.0
-    )
-    return rings, clean, lost_frac
-
-
-def _pinch_off(
-    edges: list[list[float]],
-    stack: list[int],
-    nodes: list[tuple],
-    node_pos: dict[tuple, int],
-    i0: int,
-    rings: list[np.ndarray],
-) -> float:
-    """Pinch the sub-cycle ``stack[i0:]`` off the stitch walk's path:
-    emit it as a ring when it has >= 3 edges, drop it and its nodes
-    from the path, and return the edge length emitted. ``edges`` are
-    the walk's rows [x1, y1, x2, y2]."""
-    cycle = stack[i0:]
-    emitted = 0.0
-    if len(cycle) >= 3:
-        rings.append(np.array([edges[e][:2] for e in cycle] + [edges[cycle[-1]][2:]]))
-        emitted = sum(
-            math.hypot(edges[e][2] - edges[e][0], edges[e][3] - edges[e][1]) for e in cycle
-        )
-    del stack[i0:]
-    for nk in nodes[i0:]:
-        node_pos.pop(nk, None)
-    del nodes[i0:]
-    return emitted
-
-
 def _rings_to_polygons(rings: list[np.ndarray], snap: float = 0.0) -> Geometry | None:
-    """Shells (CCW) and holes (CW) of the stitched rings as a
-    (multi)polygon. Rings are 2-D, so the result is tagged ``xy``
-    whatever the inputs carried: overlay results drop Z/M."""
+    """Shells (CCW) and holes (CW) of the closed rings of
+    _winding_region as a (multi)polygon. Rings are 2-D, so the result
+    is tagged ``xy`` whatever the inputs carried: overlay results drop
+    Z/M."""
     shells, holes = [], []
     for r in rings:
         if len(r) < 4:
             continue
-        # stitched rings can close within tolerance rather than
-        # bit-exactly (clustered nodes / bridged gaps); emit a properly
-        # closed ring so downstream consumers and the shoelace see the
-        # exact closure
-        if r[-1, 0] != r[0, 0] or r[-1, 1] != r[0, 1]:
-            r = np.vstack([r, r[0]])
         area = ring_signed_area(r)
         # min-area filter is scale-relative like the noding tolerance:
-        # node clustering / gap bridging can produce sliver rings of
-        # width up to ~2*snap whose area (width*perimeter/2) exceeds
-        # the absolute SNAP floor at projected-CRS magnitudes; a ring
-        # thinner than 2*snap is below the noding resolution and is
-        # stitching debris, not geometry
+        # node clustering can produce sliver rings of width up to
+        # ~2*snap whose area (width*perimeter/2) exceeds the absolute
+        # SNAP floor at projected-CRS magnitudes; a ring thinner than
+        # 2*snap is below the noding resolution and is debris, not
+        # geometry
         seg = np.diff(r, axis=0)
         perim = float(np.hypot(seg[:, 0], seg[:, 1]).sum())
         if abs(area) < max(SNAP, snap * perim):
@@ -1114,46 +879,6 @@ def _as_polys(geom: Geometry | None) -> list[Geometry]:
     return [p for p in get_parts(geom) if p.type_id == POLYGON and p.data]
 
 
-def _codirected_near_duplicate(kept_a: np.ndarray, kept_b: np.ndarray, snap: float) -> bool:
-    """True when some kept B-side shared edge lies within the noding
-    tolerance of a CO-DIRECTED kept A-side shared edge without being
-    bit-identical to it: the double-keep signature of a sub-tolerance
-    strip bounded twice (once per rule). Distance is point-to-segment
-    (the two chains may be cut at different nodes). Both edge arrays
-    are boundary-scale small, so the pairwise scan is cheap."""
-    tol = snap * 20
-    for p2, q2 in zip(kept_b[:, :2], kept_b[:, 2:]):
-        m2 = (p2 + q2) / 2
-        d2 = q2 - p2
-        l2 = math.hypot(d2[0], d2[1])
-        if l2 == 0:
-            continue
-        for p1, q1 in zip(kept_a[:, :2], kept_a[:, 2:]):
-            d1 = q1 - p1
-            l1 = math.hypot(d1[0], d1[1])
-            if l1 == 0:
-                continue
-            # co-directed: parallel within tolerance and same sense
-            if d1[0] * d2[0] + d1[1] * d2[1] <= 0:
-                continue
-            if abs(d1[0] * d2[1] - d1[1] * d2[0]) > tol * (l1 + l2):
-                continue
-            # midpoint of the B edge within tol of the A segment
-            t = ((m2 - p1) @ d1) / (l1 * l1)
-            t = min(1.0, max(0.0, t))
-            c = p1 + t * d1
-            if math.hypot(m2[0] - c[0], m2[1] - c[1]) > tol:
-                continue
-            # exactly-coincident duplicates collapse in _stitch
-            if (
-                p1[0] == p2[0] and p1[1] == p2[1]
-                and q1[0] == q2[0] and q1[1] == q2[1]
-            ):
-                continue
-            return True
-    return False
-
-
 class _Rule(NamedTuple):
     """A binary boolean op as an edge-selection rule over _binary_overlay.
 
@@ -1164,35 +889,27 @@ class _Rule(NamedTuple):
     operand is its left, or its right when reversed; one test keeps
     the strict and the on-boundary edges alike. ``b_empty_keeps_a``:
     the result is A when B has no polygon (else None).
-    ``bound(|A|, |B|)``: the retry's area upper bound. ``dedupe``: a
-    shared edge is kept once by its snapped key. ``near_dup``:
-    co-directed near-duplicate shared edges from both operands force
-    the coarse retry."""
+    ``bound(|A|, |B|)``: the retry's area upper bound."""
 
     sides: tuple[tuple[bool, bool], tuple[bool, bool]]
     b_empty_keeps_a: bool
     bound: Callable[[float, float], float]
-    dedupe: bool
-    near_dup: bool
 
 
 # A \ B: A-edges outside B, plus B-edges inside A reversed (they bound
-# holes). Both shared-edge rules bounding the SAME tolerance strip
-# double-subtract when each survives as a complete ring (a plug hugging
-# a hole at sub-tolerance offset: the result is SMALLER than A, which
-# the area bound cannot see) — hence the near-duplicate trigger.
-_DIFFERENCE = _Rule(((False, False), (True, True)), True, lambda aa, ab: aa, False, True)
-# A ∩ B: edges of either operand inside the other; co-directed shared
-# edges count once.
-_INTERSECTION = _Rule(((True, False), (True, False)), False, min, True, False)
+# holes).
+_DIFFERENCE = _Rule(((False, False), (True, True)), True, lambda aa, ab: aa)
+# A ∩ B: edges of either operand inside the other.
+_INTERSECTION = _Rule(((True, False), (True, False)), False, min)
 
 
 def _binary_overlay(
     a: Geometry | None, b: Geometry | None, rule: _Rule, snapped: bool = False
 ) -> Geometry | None:
     """The one binary overlay pipeline: snap scale, node both ways,
-    classify both ways, strict keeps, on-boundary keeps, stitch, rings
-    to polygons, then the coarse-grid retry (skipped when ``snapped``)."""
+    classify both ways, keep edges by the rule, the kept edges' winding
+    region, rings to polygons, then the coarse-grid retry (skipped when
+    ``snapped``)."""
     pa, pb = _as_polys(a), _as_polys(b)
     if not pa:
         return None
@@ -1204,10 +921,9 @@ def _binary_overlay(
     noded = [_node_edges(edges[i], edges[1 - i], snap) for i in (0, 1)]
     segs = [_poly_segments(g) for g in ops]
     # strict keeps of A then B, then the edges on the other operand's
-    # boundary of A then B. B-edges hugging A's boundary from inside
-    # bound a sub-tolerance strip of the result; exact-shared
-    # duplicates collapse in _stitch and tolerance-zone double-keeps
-    # fall to its degree repair.
+    # boundary of A then B. A shared edge kept from both operands is
+    # one boundary edge: the winding region counts it once, and
+    # cancels an anti-directed pair.
     keep, shared = [], []
     for i, (inside, rev) in enumerate(rule.sides):
         onb, left, right = _classify(
@@ -1217,30 +933,17 @@ def _binary_overlay(
         e = noded[i][:, [2, 3, 0, 1]] if rev else noded[i]
         keep.append(e[kept & ~onb])
         shared.append(e[kept & onb])
-    if rule.dedupe:
-        seen = set(_cell_keys(np.vstack(keep), snap))
-        for i, e in enumerate(shared):
-            fresh = np.zeros(len(e), dtype=bool)
-            for j, k in enumerate(_cell_keys(e, snap)):
-                if k not in seen:
-                    seen.add(k)
-                    fresh[j] = True
-            shared[i] = e[fresh]
-    keep = np.vstack(keep + shared)
-    rings, lost = _stitch(keep, snap)
-    result = _rings_to_polygons(rings, snap)
+    shells, holes, consistent = _winding_region(np.vstack(keep + shared), snap, unit=True)
+    result = _rings_to_polygons(shells + holes, snap)
     if snapped:
         return result
     return _retry_on_coarse_grid(
         result,
-        lost,
+        consistent,
         snap,
         lambda: rule.bound(sum(_area_of(p) for p in pa), sum(_area_of(p) for p in pb)),
         ops,
         lambda g: _binary_overlay(g[0], g[1], rule, snapped=True),
-        suspect=lambda: rule.near_dup
-        and bool(len(shared[0]) and len(shared[1]))
-        and _codirected_near_duplicate(shared[0], shared[1], snap),
     )
 
 
@@ -1287,12 +990,11 @@ def polygon_union(
         return result
     return _retry_on_coarse_grid(
         result,
-        0.0,
+        consistent,
         snap,
         lambda: _hull_area(flat),
         flat,
         lambda g: polygon_union(g, _snapped=True),
-        suspect=lambda: not consistent,
     )
 
 
@@ -1307,18 +1009,19 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
     axis-aligned directed edge becomes a signed interval on its line;
     summing coverage over elementary intervals cancels the anti-directed
     overlap between neighbouring tiles even when the two sides split the
-    shared edge at different points. Surviving segments + all
-    non-axis-aligned edges stitch into rings as usual.
+    shared edge at different points. The surviving segments and all
+    non-axis-aligned edges bound the result: their winding region
+    (_winding_region, each undirected edge counted once) is its faces.
 
     Input contract: pieces are interior-disjoint (tile results are, by
-    construction). Violations that surface at the boundary level —
-    coincident same-direction segments (|coverage| > 1), shared diagonal
-    edges, stitch failures — are detected via interval algebra plus an
-    area-conservation check (union area of a partition == sum of part
-    areas) and fall back to the general polygon_union. Fully interior
-    overlaps without coincident boundaries are NOT detected (both sides
-    of the area check see the same sum) — don't call this on arbitrary
-    possibly-overlapping sets; use polygon_union there.
+    construction). A set that is not a partition falls back to the
+    general polygon_union: coincident same-direction segments
+    (|coverage| > 1) fail the interval algebra, and any other overlap
+    fails the area-conservation check (the union area of a partition
+    == the sum of the part areas), since the winding region covers an
+    overlap once. A set that overlaps pays for the dissolve and then
+    the union, so polygon_union stays the op for sets that may
+    overlap.
 
     Mirrors the recombination semantics of the reference's
     difference_all_tiled (shapely.unary_union over interior-disjoint
@@ -1389,7 +1092,8 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
     ok = _emit(vert, True) and _emit(horiz, False)
     if ok:
         keep = np.vstack([edges[~is_vert & ~is_horiz], np.reshape(emitted, (-1, 4))])
-        result = _rings_to_polygons(_stitch(keep)[0])
+        shells, holes, _ = _winding_region(keep, SNAP, unit=True)
+        result = _rings_to_polygons(shells + holes)
     else:
         result = None
     target = sum(polygon_area(p) for p in flat)

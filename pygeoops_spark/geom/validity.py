@@ -8,7 +8,7 @@ recurse per part.
 
 A non-simple shell ring is resolved by the NONZERO-WINDING rule over
 its full planar arrangement, decided by the geometry core's one face
-walk, overlay._winding_region (polygon_union reads the same function):
+walk, overlay._winding_region (every polygon op reads the same function):
 node the ring against itself (once, _self_noded: the loop split reads
 the same edge array), build the half-edge arrangement, carry winding
 numbers across its faces from the unbounded face, keep faces with

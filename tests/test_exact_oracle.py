@@ -250,6 +250,19 @@ def test_kernel_matches_exact_on_vertex_on_edge():
     )
 
 
+def test_difference_at_projected_magnitude_matches_exact():
+    # a parcel pair 5e5 out whose shared diagonal is offset by 1e-9:
+    # the noded difference reads within 1e-6 of exact, where a coarse
+    # retry's 200*snap grid (1e-4 at this magnitude) would not
+    a = polygon([(500000, 500000), (500002, 500000), (500008, 500018), (500000, 500018)])
+    b = polygon(
+        [(500001.999999999, 500000), (500010, 500000), (500010, 500018), (500007.999999999, 500018)]
+    )
+    assert _area(polygon_difference(a, b)) == pytest.approx(
+        float(exact_difference_area(a, b)), abs=1e-6
+    )
+
+
 # -- hole nesting: which shell owns a hole ----------------------------------
 # An island inside a hole must not take the hole (the area stays right,
 # the structure does not), and a U-shaped hole, whose vertex mean lies

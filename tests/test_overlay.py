@@ -224,21 +224,22 @@ def test_tiled_line_difference_parts_share_the_container_dims(dims):
     assert geom_length(out) == pytest.approx(geom_length(difference_all(line, [box(0, 0, 10, 10)])))
 
 
-# -- stitch anti-parallel filter (ADVICE r01: dead `or True` made the
-# filter a no-op; both members of a reversed duplicate pair must go) --
-def test_stitch_drops_anti_parallel_duplicate_pair():
-    from pygeoops_spark.geom.overlay import _stitch
+# -- anti-parallel seams cancel (ADVICE r01: both members of a
+# reversed duplicate pair must go) --
+def test_winding_region_cancels_anti_parallel_seam():
+    from pygeoops_spark.geom.overlay import _winding_region
 
     # one edge array [x1 y1 x2 y2]: the unit square, then an interior
     # seam traversed both ways from the (0,0) corner
     sq = [[0.0, 0.0, 1.0, 0.0], [1.0, 0.0, 1.0, 1.0], [1.0, 1.0, 0.0, 1.0], [0.0, 1.0, 0.0, 0.0]]
     seam = [[0.0, 0.0, 0.5, 0.5], [0.5, 0.5, 0.0, 0.0]]
-    rings, _lost = _stitch(np.array(sq + seam))
-    assert len(rings) == 1
-    ring = rings[0]
-    # the square survives intact; the seam vertex never appears
-    assert len(ring) == 5
-    assert not any(abs(p[0] - 0.5) < 1e-9 and abs(p[1] - 0.5) < 1e-9 for p in ring)
+    for unit in (False, True):
+        shells, holes, consistent = _winding_region(np.array(sq + seam), 1e-9, unit=unit)
+        assert consistent and holes == [] and len(shells) == 1
+        ring = shells[0]
+        # the square survives intact; the seam vertex never appears
+        assert len(ring) == 5
+        assert not any(abs(p[0] - 0.5) < 1e-9 and abs(p[1] - 0.5) < 1e-9 for p in ring)
 
 
 def test_union_shared_edge_squares_still_merges():
@@ -311,6 +312,19 @@ def test_dissolve_duplicate_piece_falls_back_to_union():
     g = _dp([box(0, 0, 2, 2), box(0, 0, 2, 2)])
     assert polygon_area(g) == pytest.approx(4.0)
     assert g.geom_type == "POLYGON"
+
+
+def test_dissolve_overlapping_pieces_fall_back_to_union():
+    # pieces that overlap without a coincident boundary: the winding
+    # faces count the overlap once, the area check against the sum of
+    # the parts fails, and the union fallback answers
+    for parts, union_area in (
+        ([box(18, 4, 32, 10), box(23, 6, 38, 14), box(21, 22, 24, 26)], 180.0),
+        ([box(0, 0, 10, 10), box(2, 2, 5, 5)], 100.0),
+    ):
+        g = _dp(parts)
+        assert polygon_area(g) == pytest.approx(union_area)
+        assert polygon_area(polygon_union(parts)) == pytest.approx(union_area)
 
 
 def test_dissolve_matches_union_on_tiled_difference():

@@ -64,16 +64,14 @@ def test_overlay_repeats_exist_once():
     assert calls.get("_snap_geometry") == 1  # the one retry ladder
     assert calls.get("point_segment_distance") == 1  # the one nearest-segment scan
     assert "_seg_intersections" not in (ROOT / path).read_text()
-    pinch = [
-        n
-        for n in ast.walk(ast.parse((ROOT / path).read_text()))
-        if isinstance(n, ast.Delete)
-        and any(
-            isinstance(t, ast.Subscript) and getattr(t.value, "id", None) == "stack"
-            for t in n.targets
-        )
-    ]
-    assert len(pinch) == 1  # the one pinch-off
+    # the one face walk: no stitch walk is left beside _winding_region,
+    # and every polygon op reaches it
+    tree = ast.parse((ROOT / path).read_text())
+    defined = {n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
+    assert not {n for n in defined if n.startswith("_stitch")}
+    for fn in ("_binary_overlay", "dissolve_partition", "polygon_union"):
+        assert "_winding_region" in _calls_in(path, fn), fn
+    assert "_winding_region" in _calls_in("pygeoops_spark/geom/validity.py", "_make_valid_polygon")
     for op in ("polygon_difference", "polygon_intersection"):
         body_calls = {
             getattr(n.func, "id", None)
@@ -144,17 +142,18 @@ def test_face_winding_exists_once():
 
 
 def _spy_winding(monkeypatch):
-    """Record every _winding_region call: (edges, snap, dirty), where
-    ``dirty`` is None on the fast pass and the rows the clustered pass
-    nodes again and clusters."""
+    """Record every _winding_region call: (edges, snap, dirty, unit),
+    where ``dirty`` is None on the fast pass and the rows the clustered
+    pass nodes again and clusters, and ``unit`` is True for the kept
+    edges of a binary op or a dissolve."""
     from pygeoops_spark.geom import overlay
 
     calls = []
     real = overlay._winding_region
 
-    def spy(edges, snap, dirty=None):
-        calls.append((edges, snap, dirty))
-        return real(edges, snap, dirty)
+    def spy(edges, snap, dirty=None, unit=False):
+        calls.append((edges, snap, dirty, unit))
+        return real(edges, snap, dirty, unit)
 
     monkeypatch.setattr(overlay, "_winding_region", spy)
     return calls, real
@@ -181,7 +180,7 @@ def test_clustered_pass_matches_fast_pass(monkeypatch):
         polygon_union(polys)
         if len(calls) != 1:
             continue  # a signal fired
-        edges, snap, _ = calls[0]
+        edges, snap, _, _ = calls[0]
         shells, holes, _ = real(edges, snap)
         fast = _rings_to_polygons(shells + holes, snap)
         shells, holes, ok = real(edges, snap, np.ones(len(edges), dtype=bool))
@@ -217,7 +216,7 @@ def test_bench_buffer_unions_take_the_fast_pass(monkeypatch):
         pts = ", ".join(f"{x0 + v * 20} {y0 + (v % 2) * 10} {1.0 + (i + v) % 5}" for v in range(7))
         assert polygon_area(buffer_by_m(wkt_loads(f"LINESTRING M ({pts})"))) > 0
     assert len(calls) == 200
-    assert all(dirty is None for _, _, dirty in calls)
+    assert all(dirty is None and not unit for _, _, dirty, unit in calls)
     assert retries == []
 
 
