@@ -167,6 +167,9 @@ def main(argv: list[str]) -> None:
             opts[a] = int(next(it))
         else:
             pos.append(a)
+    allowed = sorted(os.sched_getaffinity(0))
+    if opts["--cpu"] not in allowed:
+        sys.exit(f"--cpu {opts['--cpu']}: not a CPU this process may run on (allowed: {allowed})")
     alternate(pos[0], pos[1], int(pos[2]) if len(pos) > 2 else 3, opts["--reps"], opts["--cpu"])
 
 

@@ -30,10 +30,11 @@ from pygeoops_spark.geom.wkb import (
 
 
 def extend_line_by_distance(line: Geometry, start_distance: float, end_distance: float) -> Geometry:
-    """Linear extrapolation of the first/last segment by the distances."""
+    """Linear extrapolation of the first/last segment by the distances;
+    an empty line has no segment and comes back as it is."""
     if line.type_id != LINESTRING:
         raise ValueError(f"line must be a LineString, not {line.geom_type}")
-    if start_distance == 0 and end_distance == 0:
+    if line.is_empty or (start_distance == 0 and end_distance == 0):
         return line
     coords = np.asarray(line.data, dtype=float).copy()
     coords[0] = _extend_point(coords[1], coords[0], start_distance)

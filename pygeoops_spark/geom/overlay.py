@@ -1,7 +1,7 @@
 """Polygon boolean operations (union / intersection / difference) from
 scratch — no GEOS available in this environment.
 
-Approach (noding, then edges by classification, then faces by winding).
+Approach (noding, then faces by winding).
 An edge set is ONE (n, 4) float64 array, a row ``[x1 y1 x2 y2]`` per
 directed edge, from the moment a ring is cut into edges (_chain_edges)
 until it is walked into rings; every step below takes and returns that
@@ -12,29 +12,24 @@ array, in order, and picks edges with boolean masks or concatenations:
  2. node: split every edge at its intersections with edges of the
     other input(s) (bbox-prefiltered pairwise tests); each edge's
     pieces replace it in place, in order along the edge
- 3. pick edges (binary ops and line ops): classify every noded edge
-    against the other input, once, in _classify — the one place that
-    decides where an edge lies: whether it is on that input's boundary
-    band, and whether its left and its right side lie inside that
-    input — and keep edges by the boolean rule:
-       intersection: edges strictly inside the other input (or shared)
-       difference:   A-edges outside B  +  B-edges inside A (reversed)
-    The binary ops run one pipeline (_binary_overlay); each op is only a
-    _Rule row — the side each operand keeps, whether B's kept edges are
-    reversed, the empty-operand result and the retry area bound. Line
-    ops join their kept pieces into chains. dissolve_partition picks its
-    edges without classification: signed 1-D coverage per cut line
-    cancels the seams between tiles
- 4. faces: every polygon op reads its result from ONE function,
+ 3. faces: every polygon op reads its result from ONE function,
     _winding_region — the half-edge arrangement of the edges, its
-    faces, and each face's winding number; the result is the boundary
-    between nonzero and zero faces. Union passes the noded edges of all
-    inputs, so the winding is the coverage count (every ring is
-    normalized interior-left); make_valid passes a self-noded ring. The
-    binary ops and dissolve_partition pass their kept edges, which
-    bound the result: each undirected edge counts once there, so a
-    shared edge kept from both operands is one edge, and an
-    anti-directed pair cancels
+    faces, and each face's winding number per operand; the result is
+    the boundary between kept and other faces. Union passes the noded
+    edges of all inputs as one operand, so the winding is the coverage
+    count (every ring is normalized interior-left) and a face is kept
+    where it is nonzero; make_valid passes a self-noded ring. The
+    binary ops pass both operands' noded edges, each labelled by its
+    operand, and keep faces by a rule over the two counts (a _Rule row):
+       intersection: wA != 0 and wB != 0
+       difference:   wA != 0 and wB == 0
+    dissolve_partition first cancels the seams between tiles by signed
+    1-D coverage per cut line, then passes the surviving edges
+ 4. lines and points (line_difference, line_intersection, the point
+    case of difference_all): each noded piece is kept or dropped by
+    _classify, the one line-and-point test — on the closed polygon
+    (within its 10*snap boundary band, or strictly inside) or off it;
+    kept pieces join into chains
  5. classify the rings as shells/holes by signed area and nest the
     holes (_assemble_polygons, the one hole-nesting step, which
     make_valid shares): a hole goes to the smallest shell that contains
@@ -65,19 +60,17 @@ reference gets these for free from GEOS, _difference.py:171-181):
    are exact negation/commutation images under the role swap
    (qp' = -qp, denom' = -denom, hence t' = u and u' = t bit-exactly),
    so the two independent noding passes of an operation produce
-   IDENTICAL cut coordinates and the kept edges always meet at nodes —
+   IDENTICAL cut coordinates and the two operands' edges meet at nodes —
    even for ill-conditioned near-parallel crossings.
  * endpoint-sharing pairs never cross: segments that share an endpoint
    bit-exactly are excluded from the general-position solve (straight
    lines meet at most once; collinear overlap has its own branch) —
    otherwise ulp-rotated pieces of the same original edge produce a
    phantom interior crossing arbitrarily far from the shared node.
- * the sides of an on-boundary edge are the exact off->0 limit of
-   side sampling (_classify): the midpoint point-in-polygon value when
-   strictly off the other NODED chain, co-direction with the nearest
-   chain segment when bit-coincident. No finite sampling offset is
-   safe — noding near-duplicate vertices creates micro edges bounding
-   wedges thinner than any fixed offset.
+ * no polygon op samples the side of an edge: a face's winding
+   numbers decide it, so a shared or near-shared boundary needs no
+   sampling offset (noding near-duplicate vertices creates micro edges
+   bounding wedges thinner than any fixed offset).
  * polygons are closed point sets (OGC Simple Features): a line piece
    or a point on the boundary band lies on the polygon, so a
    difference removes it on every edge of a ring alike.
@@ -105,6 +98,7 @@ from pygeoops_spark.geom.wkb import (
     POLYGON,
     get_parts,
     multi,
+    require_finite,
 )
 
 SNAP = 1e-9
@@ -121,16 +115,15 @@ def _op_snap(geoms) -> float:
     """Scale-relative snap for one overlay operation: 1e-9 for unit-ish
     coordinates, growing with magnitude so the int64 grid keys stay
     exact (1e-9 absolute overflows the 2^53 mantissa near |x| ~ 1e7,
-    e.g. projected metre coordinates)."""
+    e.g. projected metre coordinates). A non-finite vertex raises the
+    ValueError of wkb.require_finite: its snapped cell is meaningless,
+    and the faces around it would silently vanish."""
     m = 1.0
     for g in geoms:
-        if g is None:
-            continue
-        for p in get_parts(g):
-            for ring in p.data:
-                arr = np.asarray(ring, dtype=float)
-                if arr.size:
-                    m = max(m, float(np.abs(arr[:, :2]).max()))
+        if g is not None:
+            xy = require_finite(g, "overlay")[:, :2]
+            if len(xy):
+                m = max(m, float(np.abs(xy).max()))
     return max(SNAP, m * 1e-12)
 
 
@@ -375,113 +368,37 @@ def _node_edges(edges: np.ndarray, others: np.ndarray, snap: float = SNAP) -> np
     return out[(np.repeat(k, k + 1) == 0) | distinct]
 
 
-def _midpoints(edges: np.ndarray) -> np.ndarray:
-    return (edges[:, :2] + edges[:, 2:]) / 2
-
-
-def _poly_segments(poly: Geometry) -> np.ndarray:
-    """All boundary segments in raw ring orientation, zero-length ones
-    included: the boundary-band distance reference of _classify."""
-    return _chain_edges([r for part in get_parts(poly) for r in part.data], skip_zero=False)
-
-
-def _nearest_segment(mids: np.ndarray, segs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Per-midpoint ``(distance, index)`` of the nearest of the (m, 4)
-    segments — one broadcast distance matrix per segment block (a
-    per-segment python loop was the profiled hot spot), blocked so
-    memory stays bounded for very large polygons. ``segs`` must not be
-    empty; ties keep the lowest index."""
+def _nearest_segment(mids: np.ndarray, segs: np.ndarray) -> np.ndarray:
+    """Per-midpoint distance to the nearest of the (m, 4) segments — one
+    broadcast distance matrix per segment block (a per-segment python
+    loop was the profiled hot spot), blocked so memory stays bounded
+    for very large polygons. ``segs`` must not be empty."""
     from pygeoops_spark.geom.kernels import point_segment_distance
 
-    n = len(mids)
     px, py = mids[:, 0][:, None], mids[:, 1][:, None]
-    rows = np.arange(n)
-    block = max(int(4_000_000 / max(n, 1)), 16)
+    block = max(int(4_000_000 / max(len(mids), 1)), 16)
+    best = np.full(len(mids), np.inf)
     for s0 in range(0, len(segs), block):
         sb = segs[s0 : s0 + block]
         d = point_segment_distance(
             px, py, sb[None, :, 0], sb[None, :, 1], sb[None, :, 2], sb[None, :, 3]
         )
-        loc = d.argmin(axis=1)
-        dm = d[rows, loc]
-        if s0 == 0:
-            best, jmin = dm, loc
-        else:
-            upd = dm < best
-            best, jmin = np.where(upd, dm, best), np.where(upd, loc + s0, jmin)
-    return best, jmin
+        best = np.minimum(best, d.min(axis=1))
+    return best
 
 
-def _classify(
-    edges: np.ndarray,
-    mids: np.ndarray,
-    other: Geometry,
-    segs: np.ndarray,
-    noded: np.ndarray,
-    snap: float,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Where each edge lies relative to ``other``: the one edge
-    classification of the overlay core. ``mids`` are the edges'
-    midpoints, ``segs`` other's raw boundary segments (_poly_segments)
-    and ``noded`` its NODED edge array. Returns per-edge boolean arrays
-    ``(onb, left, right)``:
-
-    * ``onb`` — the midpoint lies within the 10*snap band of other's
-      boundary (the noding tolerance, so "cut here" and "shared
-      boundary" agree).
-    * ``left`` / ``right`` — that side of the edge lies inside other.
-      Off the band both read the midpoint's exact point-in-polygon.
-      On it they are the exact off->0 limit of side sampling: when the
-      midpoint is ON other's noded chain to ~100 ulps (line offset
-      against the nearest segment below ``scale * 1e-13``, projection
-      inside the segment), the sides follow that segment's direction —
-      both edge sets are normalized interior-left (shell CCW, holes
-      CW), so a co-directed edge has other's interior on its left, an
-      anti-directed one on its right (the arrangement rule for
-      coincident boundaries). Otherwise they read the same
-      point-in-polygon value: distances down to ~100 ulps resolve fine
-      in doubles, and the band is 10*snap >> that.
-
-    Coincidence MUST be judged against the arrangement the faces are
-    read from, not the original boundary: vertex-on-edge noding detours
-    chains onto the opposite set's vertices (up to 10*snap off the
-    original boundary), and a piece bit-identical to a detoured chain
-    segment reads as "strictly inside by 5e-10" against the original
-    segments, producing a spurious keep, a dangling spur and a
-    spurious coarse retry (the round-6 regression of the `difference`
-    query's v2 variant). No finite sampling offset replaces the limit: noding
-    near-duplicate vertices makes micro edges bounding wedges thinner
-    than any offset — the exact rational oracle
-    (tests/test_exact_oracle.py) caught the intersection kernel
-    emptying a 0.09-area overlap through a 100*snap sample, and a
-    14-degree corner wedge through a quarter-edge-length one.
-    """
-    inside = np.asarray(points_in_polygon(mids[:, 0], mids[:, 1], other), dtype=bool)
-    onb = np.zeros(len(edges), dtype=bool)
-    if len(segs):
-        onb = _nearest_segment(mids, segs)[0] <= snap * 10
-    left, right = inside.copy(), inside.copy()
-    idx = np.nonzero(onb)[0]
-    if len(idx) and len(noded):
-        m = mids[idx]
-        near = noded[_nearest_segment(m, noded)[1]]
-        dx, dy = near[:, 2] - near[:, 0], near[:, 3] - near[:, 1]
-        vx, vy = m[:, 0] - near[:, 0], m[:, 1] - near[:, 1]
-        seg_len2 = dx * dx + dy * dy
-        seg_len = np.sqrt(seg_len2)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            s = (dx * vy - dy * vx) / seg_len
-            t = (dx * vx + dy * vy) / seg_len2
-        scale = np.maximum(1.0, np.abs(near).max(axis=1))
-        thr = np.maximum(scale, np.abs(m).max(axis=1)) * 1e-13
-        with np.errstate(divide="ignore", invalid="ignore"):
-            tpad = thr / seg_len
-        coin = (np.abs(s) <= thr) & (t >= -tpad) & (t <= 1 + tpad) & (seg_len > 0)
-        e = edges[idx]
-        codir = (e[:, 2] - e[:, 0]) * dx + (e[:, 3] - e[:, 1]) * dy > 0
-        left[idx] = np.where(coin, codir, inside[idx])
-        right[idx] = np.where(coin, ~codir, inside[idx])
-    return onb, left, right
+def _classify(edges: np.ndarray, poly: Geometry, snap: float) -> np.ndarray:
+    """Whether each edge of a line lies on the closed polygon ``poly``
+    — the one line-and-point test of the overlay core: its midpoint is
+    within the 10*snap band of poly's boundary segments (the noding
+    tolerance, so "cut here" and "on the boundary" agree), or strictly
+    inside poly. Polygons are closed for lines and points, as in GEOS:
+    a piece on the band lies on the polygon whichever edge of the ring
+    it follows."""
+    mids = (edges[:, :2] + edges[:, 2:]) / 2
+    segs = _chain_edges([r for part in get_parts(poly) for r in part.data], skip_zero=False)
+    onb = _nearest_segment(mids, segs) <= snap * 10 if len(segs) else np.zeros(len(edges), dtype=bool)
+    return onb | np.asarray(points_in_polygon(mids[:, 0], mids[:, 1], poly), dtype=bool)
 
 
 def _ranges(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -563,32 +480,41 @@ def _revisit_loops(keys: list) -> tuple[list[list[int]], list[int]]:
 
 
 def _winding_region(
-    edges: np.ndarray, snap: float, dirty: np.ndarray | None = None, unit: bool = False
+    edges: np.ndarray,
+    snap: float,
+    dirty: np.ndarray | None = None,
+    operand: np.ndarray | None = None,
+    keep: Callable[[np.ndarray], np.ndarray] | None = None,
 ) -> tuple[list[np.ndarray], list[np.ndarray], bool]:
-    """The boundary of the nonzero-winding region of a noded directed
-    edge array: the one face walk of the geometry core, under every
-    polygon op. Returns ``(shells, holes, consistent)``: closed
-    coordinate arrays, shells CCW and holes CW.
+    """The boundary of the kept region of a noded directed edge array:
+    the one face walk of the geometry core, under every polygon op.
+    Returns ``(shells, holes, consistent)``: closed coordinate arrays,
+    shells CCW and holes CW.
+
+    Each edge belongs to one operand (``operand``: a label per edge, all
+    0 when None), and each face carries one winding number per operand.
+    ``keep`` maps the (faces, operands) windings to the kept faces; by
+    default a face is kept where any winding is nonzero. Union and
+    make_valid pass one operand (coverage > 0: every ring is normalized
+    interior-left), dissolve_partition its surviving edges, and the
+    binary ops both operands' noded edges with a rule over the two
+    counts (_Rule).
 
     The half-edge arrangement is built with whole-array numpy. Vertices
     are the edges' snapped cells, numbered in cell order; a vertex takes
     the coordinates of its first occurrence in edge order. Each
-    undirected edge carries the signed count of the edges laid on it
-    (``np.bincount``): coincident edges merge, anti-directed ones
-    cancel to 0 and stay in the arrangement. With ``unit`` the count is
-    clamped to its sign: the kept edges of a binary op or a dissolve
-    are a boundary, where a coincident co-directed edge (the same
-    shared edge kept from both operands) counts once, while union and
-    make_valid count coverage. One ``lexsort`` by origin
-    and angle gives each half-edge its next, the clockwise-next edge
-    out of its end after its twin, so a face lies on the left of its
-    cycle; the faces are the cycles of that permutation (pointer
-    doubling). Windings are carried across twins, one frontier of faces
-    per pass, from the outer (most negative area) face of each
+    undirected edge carries, per operand, the signed count of the edges
+    laid on it (one ``np.bincount``): coincident edges merge, and
+    anti-directed ones cancel to 0 and stay in the arrangement. One
+    ``lexsort`` by origin and angle gives each half-edge its next, the
+    clockwise-next edge out of its end after its twin, so a face lies on
+    the left of its cycle; the faces are the cycles of that permutation
+    (pointer doubling). Windings are carried across twins, one frontier
+    of faces per pass, from the outer (most negative area) face of each
     connected component; where there are several, an outer face takes
     the winding of one of its component's vertices against the other
-    components' edges. The kept region's boundary (a nonzero face on
-    the left, a zero face on the right) is walked the same way, rings
+    components' edges. The kept region's boundary (a kept face on the
+    left, one not kept on the right) is walked the same way, rings
     starting at the boundary half-edges in (origin, end) order; a walk
     through one vertex twice (a hole touching its shell) is pinched into
     simple rings there, and a ring vertex takes its vertex's
@@ -602,26 +528,33 @@ def _winding_region(
       cross away from a shared vertex: noding leaves a contact uncut
       only that close to another vertex, a component's vertex on
       another component's edge included;
-    * crossing a twin disagrees with a winding already assigned, a face
-      is reached from no outer face, or a component is not a planar
-      map (V - E + F != 2); a boundary walk that does not close names
-      them all;
-    * on the clustered pass, the winding integral sum(w_f * A_f)
-      differs from the signed area of ``edges`` by more than the
-      10*snap band over their length (not with ``unit``: that area
-      counts a duplicated boundary edge twice).
+    * crossing a twin disagrees with a winding already assigned (for
+      any operand), a face is reached from no outer face, or a
+      component is not a planar map (V - E + F != 2); a boundary walk
+      that does not close names them all;
+    * on the clustered pass, the winding integral sum(w_f * A_f), w_f
+      summed over the operands, differs from the signed area of
+      ``edges`` by more than the 10*snap band over their length.
 
     On a signal the arrangement is rebuilt once, the clustered pass:
     the ``dirty`` rows (the named components' edges) are noded again
-    among themselves, and their endpoint cells join their 10-cell
-    clusters (_cluster_nodes). That merges the topology and moves no
-    coordinate: a boundary half-edge takes the edge laid on it furthest
-    to its right (where near edges merged, the region keeps the widest),
-    and its ring runs through both ends of it, so a merged vertex keeps
-    the end of the edge into it as well as the start of the edge out of
-    it. ``consistent`` reports that pass."""
+    among themselves, each keeping its operand, and their endpoint
+    cells join their 10-cell clusters (_cluster_nodes). That merges the
+    topology and moves no coordinate: a boundary half-edge takes one of
+    the edges laid on it — stepping from its kept face across them,
+    from left to right, the last one that turns a kept winding into one
+    not kept — and its ring runs through both ends of it, so a merged
+    vertex keeps the end of the edge into it as well as the start of
+    the edge out of it. For one operand that is the edge furthest to
+    the right (where near edges merged, a union keeps the widest); where
+    A's and B's boundaries merged, it is the operand whose edge ends
+    the kept region (an intersection keeps the narrowest).
+    ``consistent`` reports that pass."""
     if not len(edges):
         return [], [], True
+    if operand is None:
+        operand = np.zeros(len(edges), dtype=np.intp)
+    n_op = int(operand.max()) + 1
     o0 = edges[0, :2]
     if dirty is not None:
         # the signed area and length of the input, about its first vertex
@@ -632,7 +565,9 @@ def _winding_region(
         # cross a neighbour: the flagged components are noded again
         # among themselves, and their cells join their 10-cell clusters
         # (the topology merges, no coordinate moves)
-        flagged = _node_edges(edges[dirty], edges[dirty], snap)
+        flagged = [_node_edges(edges[dirty & (operand == i)], edges[dirty], snap) for i in range(n_op)]
+        operand = np.concatenate([operand[~dirty]] + [np.full(len(f), i) for i, f in enumerate(flagged)])
+        flagged = np.vstack(flagged)
         edges = np.vstack([edges[~dirty], flagged])
     xy = edges.reshape(-1, 2)
     keys = np.round(xy / snap).astype(np.int64)
@@ -645,32 +580,22 @@ def _winding_region(
     # vertices: endpoint keys in edge order (start, end, start, ...),
     # numbered in cell order (complex keys sort by x, then y) with the
     # coordinates of their first occurrence
-    keys, xy = keys[alive.repeat(2)], xy[alive.repeat(2)]
+    keys, xy, op = keys[alive.repeat(2)], xy[alive.repeat(2)], operand[alive]
     _, first, vid = np.unique(keys[:, 0] + 1j * keys[:, 1], True, True)
     cells, pts, nv = keys[first], xy[first], len(first)
     a, b = vid[0::2], vid[1::2]
-    # undirected edges lo < hi with the net count laid on lo -> hi
+    # undirected edges lo < hi with the net count per operand laid on
+    # lo -> hi
     und, inv = np.unique(np.minimum(a, b) * nv + np.maximum(a, b), return_inverse=True)
-    delta = np.bincount(inv, weights=np.sign(b - a)).astype(np.int64)
-    if unit:
-        delta = np.sign(delta)
     m = len(und)
+    delta = np.bincount(inv * n_op + op, np.sign(b - a), m * n_op)
+    delta = delta.reshape(m, n_op).astype(np.int64)
     # half-edge h < m runs lo -> hi and h + m is its twin; the winding
     # on the left of a half-edge exceeds the right by its count
     org = np.concatenate([und // nv, und % nv])
     dst = np.concatenate([und % nv, und // nv])
     twin = np.concatenate([np.arange(m, 2 * m), np.arange(m)])
     count = np.concatenate([delta, -delta])
-    # ring coordinates: a half-edge's origin vertex; on the clustered
-    # pass, both ends of the edge laid on it furthest to its right
-    hxy = pts[org]
-    if dirty is not None:
-        lo_xy, hi_xy = pts[np.minimum(a, b)], pts[np.maximum(a, b)]
-        mid = (xy[0::2] + xy[1::2]) / 2 - lo_xy
-        o = np.lexsort(((hi_xy[:, 0] - lo_xy[:, 0]) * mid[:, 1] - (hi_xy[:, 1] - lo_xy[:, 1]) * mid[:, 0], inv))
-        st = np.searchsorted(inv[o], np.arange(m + 1))
-        rep = np.concatenate([o[st[:-1]], o[st[1:] - 1]])
-        hxy, hxd = xy[2 * rep + (a[rep] != org)], xy[2 * rep + (a[rep] == org)]
     d = pts[dst] - pts[org]
     order = np.lexsort((np.arctan2(d[:, 1], d[:, 0]), org))
     deg = np.bincount(org, minlength=nv)
@@ -699,7 +624,7 @@ def _winding_region(
         comp = _min_labels(2 * m, face, right)[face]
         o = np.lexsort((area[faces], comp[faces]))
         outer = faces[o][np.r_[True, np.diff(comp[faces][o]) != 0]]
-    wind = np.zeros(2 * m, dtype=np.int64)
+    wind = np.zeros((2 * m, n_op), dtype=np.int64)
     if len(outer) > 1:
         # an outer face takes the winding of a vertex of its component
         # against the other components' edges: the half-open crossing
@@ -713,8 +638,7 @@ def _winding_region(
         s = (p2[e, 0] - p1[e, 0]) * (q[k, 1] - p1[e, 1]) - (q[k, 0] - p1[e, 0]) * (p2[e, 1] - p1[e, 1])
         up = p2[e, 1] > p1[e, 1]
         hit = np.where(up, s > 0, s < 0) & (comp[e] != comp[outer][k])
-        w = np.bincount(k, weights=np.where(up, delta[e], -delta[e]) * hit, minlength=len(outer))
-        wind[outer] = np.rint(w)
+        np.add.at(wind, outer[k], (np.where(up, 1, -1) * hit)[:, None] * delta[e])
     # windings spread from the outer faces across twins, one frontier of
     # faces per pass
     done = np.zeros(2 * m, dtype=bool)
@@ -735,12 +659,13 @@ def _winding_region(
         hit = (org[f] != dst[g]) & (dst[f] != org[g]) & (dst[f] != dst[g])
         hit &= segments_touch(pts[org[f]], pts[dst[f]], pts[org[g]], pts[dst[g]])
         bad[f[hit]] = bad[g[hit]] = True
-    bad |= ~done[face] | (wind[face] - wind[right] != count)
+    bad |= ~done[face] | (wind[face] - wind[right] != count).any(axis=1)
     if nv - m + len(faces) != 2 * len(outer):
         euler = np.bincount(comp[order[beg]], minlength=2 * m) + np.bincount(comp[faces], minlength=2 * m)
         bad |= (euler - np.bincount(comp[:m], minlength=2 * m) != 2)[comp]
-    bad |= dirty is not None and not unit and abs(float(wind[face] @ cross) / 2 - target) > band
-    kept = wind[face] != 0
+    bad |= dirty is not None and abs(float(wind[face].sum(axis=1) @ cross) / 2 - target) > band
+    keep = keep or (lambda w: (w != 0).any(axis=1))
+    kept = keep(wind[face])
     bnd = kept & ~kept[twin]
     hb = np.nonzero(bnd)[0]
     # each boundary half-edge's successor: its next around the end
@@ -761,9 +686,43 @@ def _winding_region(
         # the components a signal names go to the clustered pass
         dirty = np.zeros(len(edges), dtype=bool)
         dirty[alive] = np.isin(comp[inv], comp[bad])
-        return _winding_region(edges, snap, dirty, unit)
+        return _winding_region(edges, snap, dirty, operand, keep)
     if not closes:
         return [], [], False
+    # ring coordinates: a half-edge's origin vertex. On the clustered
+    # pass, a boundary half-edge runs through both ends of one edge laid
+    # on it: stepping from its kept face across those edges, from left
+    # to right, the last one that turns a kept winding into one not kept
+    # (for one operand, the edge furthest to its right)
+    hxy = pts[org]
+    if dirty is not None:
+        lo_xy, hi_xy = pts[np.minimum(a, b)], pts[np.maximum(a, b)]
+        mid = (xy[0::2] + xy[1::2]) / 2 - lo_xy
+        o = np.lexsort(((hi_xy[:, 0] - lo_xy[:, 0]) * mid[:, 1] - (hi_xy[:, 1] - lo_xy[:, 1]) * mid[:, 0], inv))
+        st = np.searchsorted(inv[o], np.arange(m + 1))
+        g = hb % m
+        k, pos = _ranges(st[g], st[g + 1])
+        # lo -> hi meets its edges by falling offset, hi -> lo by rising
+        back = hb[k] < m
+        j = o[np.where(back, st[g][k] + st[g + 1][k] - 1 - pos, pos)]
+        step = np.zeros((len(j), n_op), dtype=np.int64)
+        step[np.arange(len(j)), op[j]] = np.where(back, 1, -1) * np.sign(b[j] - a[j])
+        # whether the windings past each edge are kept, and before it
+        n = st[g + 1] - st[g]
+        head = np.cumsum(n) - n
+        cs = np.cumsum(step, axis=0)
+        inside = keep(wind[face[hb]][k] - cs + (cs - step)[head][k])
+        before = np.r_[True, inside][:-1]
+        before[head] = True
+        turn = np.nonzero(before & ~inside)[0]
+        at = np.full(len(hb), -1)
+        np.maximum.at(at, k[turn], turn)
+        # where the windings disagree and nothing turns: the furthest
+        rep = j[np.where(at < 0, head + n - 1, at)]
+        hxy = np.empty((2 * m, 2))
+        hxd = np.empty((2 * m, 2))
+        hxy[hb] = xy[2 * rep + (a[rep] != org[hb])]
+        hxd[hb] = xy[2 * rep + (a[rep] == org[hb])]
     shells, holes = [], []
     nb, start = nb.tolist(), org[hb].tolist()
     seen: set[int] = set()
@@ -880,36 +839,31 @@ def _as_polys(geom: Geometry | None) -> list[Geometry]:
 
 
 class _Rule(NamedTuple):
-    """A binary boolean op as an edge-selection rule over _binary_overlay.
+    """A binary boolean op as a face rule over _binary_overlay.
 
-    ``sides`` holds, for A then B, whether the edges kept lie inside
-    the other operand (else outside) and whether they are kept
-    reversed. A kept edge bounds the result on its left, so the side
-    of an edge that _classify must find inside (or outside) the other
-    operand is its left, or its right when reversed; one test keeps
-    the strict and the on-boundary edges alike. ``b_empty_keeps_a``:
+    ``keep`` takes each face's (faces, 2) winding counts, in A then in
+    B, and returns the faces the result covers. ``b_empty_keeps_a``:
     the result is A when B has no polygon (else None).
     ``bound(|A|, |B|)``: the retry's area upper bound."""
 
-    sides: tuple[tuple[bool, bool], tuple[bool, bool]]
+    keep: Callable[[np.ndarray], np.ndarray]
     b_empty_keeps_a: bool
     bound: Callable[[float, float], float]
 
 
-# A \ B: A-edges outside B, plus B-edges inside A reversed (they bound
-# holes).
-_DIFFERENCE = _Rule(((False, False), (True, True)), True, lambda aa, ab: aa)
-# A ∩ B: edges of either operand inside the other.
-_INTERSECTION = _Rule(((True, False), (True, False)), False, min)
+# A \ B: faces inside A and outside B.
+_DIFFERENCE = _Rule(lambda w: (w[:, 0] != 0) & (w[:, 1] == 0), True, lambda aa, ab: aa)
+# A ∩ B: faces inside both.
+_INTERSECTION = _Rule(lambda w: (w != 0).all(axis=1), False, min)
 
 
 def _binary_overlay(
     a: Geometry | None, b: Geometry | None, rule: _Rule, snapped: bool = False
 ) -> Geometry | None:
-    """The one binary overlay pipeline: snap scale, node both ways,
-    classify both ways, keep edges by the rule, the kept edges' winding
-    region, rings to polygons, then the coarse-grid retry (skipped when
-    ``snapped``)."""
+    """The one binary overlay pipeline: snap scale, node both ways, the
+    winding region of both operands' noded edges (each edge labelled by
+    its operand) under the rule, rings to polygons, then the
+    coarse-grid retry (skipped when ``snapped``)."""
     pa, pb = _as_polys(a), _as_polys(b)
     if not pa:
         return None
@@ -919,21 +873,8 @@ def _binary_overlay(
     snap = _op_snap(ops)
     edges = [_poly_edges(pa), _poly_edges(pb)]
     noded = [_node_edges(edges[i], edges[1 - i], snap) for i in (0, 1)]
-    segs = [_poly_segments(g) for g in ops]
-    # strict keeps of A then B, then the edges on the other operand's
-    # boundary of A then B. A shared edge kept from both operands is
-    # one boundary edge: the winding region counts it once, and
-    # cancels an anti-directed pair.
-    keep, shared = [], []
-    for i, (inside, rev) in enumerate(rule.sides):
-        onb, left, right = _classify(
-            noded[i], _midpoints(noded[i]), ops[1 - i], segs[1 - i], noded[1 - i], snap
-        )
-        kept = (right if rev else left) == inside
-        e = noded[i][:, [2, 3, 0, 1]] if rev else noded[i]
-        keep.append(e[kept & ~onb])
-        shared.append(e[kept & onb])
-    shells, holes, consistent = _winding_region(np.vstack(keep + shared), snap, unit=True)
+    operand = np.repeat([0, 1], [len(e) for e in noded])
+    shells, holes, consistent = _winding_region(np.vstack(noded), snap, operand=operand, keep=rule.keep)
     result = _rings_to_polygons(shells + holes, snap)
     if snapped:
         return result
@@ -965,12 +906,12 @@ def polygon_union(
     None inputs (empty operands, e.g. an empty difference result) are
     skipped."""
     flat = [p for g in polys if g is not None for p in _as_polys(g)]
-    flat = [p for p in flat if p.data and abs(ring_signed_area(np.asarray(p.data[0]))) > 0]
+    snap = _op_snap(flat)
+    flat = [p for p in flat if abs(ring_signed_area(np.asarray(p.data[0]))) > 0]
     if not flat:
         return None
     if len(flat) == 1:
         return flat[0]
-    snap = _op_snap(flat)
     edges = [_poly_edges([p]) for p in flat]
     # each polygon is noded against the polygons whose bboxes come
     # within the noding tolerance of its own: the others can neither
@@ -1003,15 +944,18 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
     on axis-aligned lines — the exact shape produced by subdivide tiling
     (+ per-tile difference), which cuts on vertical/horizontal lines.
 
-    Instead of polygon_union's pairwise noding + point-in-polygon
-    classification (quadratic in coordinates for a tile fan-out), shared
+    Instead of polygon_union's pairwise noding (quadratic in
+    coordinates for a tile fan-out), shared
     boundaries are cancelled by signed 1D coverage per cut line: every
     axis-aligned directed edge becomes a signed interval on its line;
     summing coverage over elementary intervals cancels the anti-directed
     overlap between neighbouring tiles even when the two sides split the
     shared edge at different points. The surviving segments and all
     non-axis-aligned edges bound the result: their winding region
-    (_winding_region, each undirected edge counted once) is its faces.
+    (_winding_region) is its faces.
+
+    A non-finite vertex raises wkb.require_finite's ValueError, as in
+    the other polygon ops.
 
     Input contract: pieces are interior-disjoint (tile results are, by
     construction). A set that is not a partition falls back to the
@@ -1030,7 +974,9 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
     from pygeoops_spark.geom.kernels import polygon_area
 
     flat = [p for g in polys if g is not None for p in _as_polys(g)]
-    flat = [p for p in flat if p.data and abs(ring_signed_area(np.asarray(p.data[0]))) > 0]
+    for p in flat:
+        require_finite(p, "dissolve_partition")
+    flat = [p for p in flat if abs(ring_signed_area(np.asarray(p.data[0]))) > 0]
     if not flat:
         return None
     if len(flat) == 1:
@@ -1092,7 +1038,7 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
     ok = _emit(vert, True) and _emit(horiz, False)
     if ok:
         keep = np.vstack([edges[~is_vert & ~is_horiz], np.reshape(emitted, (-1, 4))])
-        shells, holes, _ = _winding_region(keep, SNAP, unit=True)
+        shells, holes, _ = _winding_region(keep, SNAP)
         result = _rings_to_polygons(shells + holes)
     else:
         result = None
@@ -1126,10 +1072,7 @@ def line_difference(
     noded = _node_edges(_chain_edges([line_coords], skip_zero=False), ring_edges)
     if not len(noded):
         return []
-    onb, left, _ = _classify(
-        noded, _midpoints(noded), poly, _poly_segments(poly), ring_edges, SNAP
-    )
-    inside = onb | left
+    inside = _classify(noded, poly, SNAP)
     keep = ~inside if keep_outside else inside
     cells = np.round(noded / SNAP)
     joined = np.zeros(len(noded), dtype=bool)

@@ -184,13 +184,19 @@ def test_subdivide_flat_bbox(wkt, left):
 
 @pytest.mark.parametrize(
     "case",
-    ["centerline_flat", "extend_to_empty_line", "extend_polygon_by_distance"],
+    [
+        "centerline_flat",
+        "extend_to_empty_line",
+        "extend_empty_line_by_distance",
+        "extend_polygon_by_distance",
+    ],
 )
 def test_degenerate_inputs(case):
     """Degenerate inputs get the kernel's documented empty result or a
     ValueError that names the problem, never an IndexError: a zero-area
-    polygon has no centerline, an empty line extends to itself, and a
-    polygon is not a line to extend."""
+    polygon has no centerline, an empty line extends to itself (to a
+    geometry or by a distance), and a polygon is not a line to
+    extend."""
     from pygeoops_spark.geom.centerline import centerline
 
     square = box(0, 0, 10, 10)
@@ -198,6 +204,9 @@ def test_degenerate_inputs(case):
         assert centerline(wkt_loads("POLYGON ((0 0, 5 0, 10 0, 0 0))")) is None
     elif case == "extend_to_empty_line":
         got = extend_line_to_geometry(wkt_loads("LINESTRING EMPTY"), square)
+        assert got.is_empty and got.type_id == 2
+    elif case == "extend_empty_line_by_distance":
+        got = extend_line_by_distance(wkt_loads("LINESTRING EMPTY"), 1.0, 1.0)
         assert got.is_empty and got.type_id == 2
     else:
         with pytest.raises(ValueError, match="POLYGON"):

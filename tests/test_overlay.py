@@ -233,13 +233,12 @@ def test_winding_region_cancels_anti_parallel_seam():
     # seam traversed both ways from the (0,0) corner
     sq = [[0.0, 0.0, 1.0, 0.0], [1.0, 0.0, 1.0, 1.0], [1.0, 1.0, 0.0, 1.0], [0.0, 1.0, 0.0, 0.0]]
     seam = [[0.0, 0.0, 0.5, 0.5], [0.5, 0.5, 0.0, 0.0]]
-    for unit in (False, True):
-        shells, holes, consistent = _winding_region(np.array(sq + seam), 1e-9, unit=unit)
-        assert consistent and holes == [] and len(shells) == 1
-        ring = shells[0]
-        # the square survives intact; the seam vertex never appears
-        assert len(ring) == 5
-        assert not any(abs(p[0] - 0.5) < 1e-9 and abs(p[1] - 0.5) < 1e-9 for p in ring)
+    shells, holes, consistent = _winding_region(np.array(sq + seam), 1e-9)
+    assert consistent and holes == [] and len(shells) == 1
+    ring = shells[0]
+    # the square survives intact; the seam vertex never appears
+    assert len(ring) == 5
+    assert not any(abs(p[0] - 0.5) < 1e-9 and abs(p[1] - 0.5) < 1e-9 for p in ring)
 
 
 def test_union_shared_edge_squares_still_merges():

@@ -90,17 +90,17 @@ def _calls_in(path: str, fn: str) -> set:
 
 
 def test_edge_classification_exists_once():
-    """_classify is the one place that decides where an edge lies
-    relative to an operand: every overlay that keeps or drops edges
-    calls it and none re-tests point-in-polygon or coincidence itself,
-    and the point case of difference_all goes through line_difference.
-    (polygon_union keeps no edges: its faces decide it, see
-    test_face_winding_exists_once.)"""
+    """_classify is the one line-and-point test: line_difference reaches
+    it and re-tests nothing itself, and the point case of
+    difference_all goes through line_difference. No polygon op samples
+    an edge at all: their faces' winding numbers decide them (see
+    test_face_winding_exists_once)."""
     path = "pygeoops_spark/geom/overlay.py"
-    for fn in ("_binary_overlay", "line_difference"):
-        names = _calls_in(path, fn)
-        assert "_classify" in names, fn
-        assert not names & {"points_in_polygon", "_nearest_segment"}, fn
+    names = _calls_in(path, "line_difference")
+    assert "_classify" in names
+    assert not names & {"points_in_polygon", "_nearest_segment"}
+    for fn in ("_binary_overlay", "polygon_union", "dissolve_partition"):
+        assert not _calls_in(path, fn) & {"_classify", "points_in_polygon", "_nearest_segment"}, fn
     tree = ast.parse((ROOT / path).read_text())
     assert "_onb_verdict" not in {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
     imported = {
@@ -142,18 +142,19 @@ def test_face_winding_exists_once():
 
 
 def _spy_winding(monkeypatch):
-    """Record every _winding_region call: (edges, snap, dirty, unit),
-    where ``dirty`` is None on the fast pass and the rows the clustered
-    pass nodes again and clusters, and ``unit`` is True for the kept
-    edges of a binary op or a dissolve."""
+    """Record every _winding_region call: (edges, snap, dirty, operand,
+    keep), where ``dirty`` is None on the fast pass and the rows the
+    clustered pass nodes again and clusters, and ``operand`` and
+    ``keep`` are a binary op's labels and face rule, None for a
+    single-operand region (union, make_valid, dissolve)."""
     from pygeoops_spark.geom import overlay
 
     calls = []
     real = overlay._winding_region
 
-    def spy(edges, snap, dirty=None, unit=False):
-        calls.append((edges, snap, dirty, unit))
-        return real(edges, snap, dirty, unit)
+    def spy(edges, snap, dirty=None, operand=None, keep=None):
+        calls.append((edges, snap, dirty, operand, keep))
+        return real(edges, snap, dirty, operand, keep)
 
     monkeypatch.setattr(overlay, "_winding_region", spy)
     return calls, real
@@ -180,7 +181,7 @@ def test_clustered_pass_matches_fast_pass(monkeypatch):
         polygon_union(polys)
         if len(calls) != 1:
             continue  # a signal fired
-        edges, snap, _, _ = calls[0]
+        edges, snap, _, _, _ = calls[0]
         shells, holes, _ = real(edges, snap)
         fast = _rings_to_polygons(shells + holes, snap)
         shells, holes, ok = real(edges, snap, np.ones(len(edges), dtype=bool))
@@ -216,7 +217,7 @@ def test_bench_buffer_unions_take_the_fast_pass(monkeypatch):
         pts = ", ".join(f"{x0 + v * 20} {y0 + (v % 2) * 10} {1.0 + (i + v) % 5}" for v in range(7))
         assert polygon_area(buffer_by_m(wkt_loads(f"LINESTRING M ({pts})"))) > 0
     assert len(calls) == 200
-    assert all(dirty is None and not unit for _, _, dirty, unit in calls)
+    assert all(dirty is None and operand is None for _, _, dirty, operand, _ in calls)
     assert retries == []
 
 
@@ -268,11 +269,12 @@ def test_near_vertices_of_a_densified_column_stay_linear(monkeypatch):
 
 
 @pytest.mark.parametrize("op", [polygon_difference, polygon_intersection])
-def test_one_point_in_polygon_test_per_classified_edge(op, monkeypatch):
+def test_binary_ops_run_no_point_in_polygon_test(op, monkeypatch):
     """Two unit squares overlapping by half: each one's bottom and top
     edge is cut once at the other's corner, so 6 + 6 noded edges, and
-    each is tested against the other square exactly once (the on-boundary
-    pieces are not re-tested)."""
+    no edge is tested against the other square: the faces' two winding
+    counts decide the result (the edge classifier tested 12 midpoints
+    here)."""
     from pygeoops_spark.geom import overlay
 
     tested = []
@@ -285,7 +287,31 @@ def test_one_point_in_polygon_test_per_classified_edge(op, monkeypatch):
     a = polygon([(0, 0), (1, 0), (1, 1), (0, 1)])
     b = polygon([(0.5, 0), (1.5, 0), (1.5, 1), (0.5, 1)])
     assert polygon_area(op(a, b)) == pytest.approx(0.5)
-    assert sum(tested) == 12
+    assert sum(tested) == 0
+
+
+_NAN_VERTEX = polygon([(0, 0), (10, 0), (np.nan, 10), (0, 10)])
+_OVER_IT = polygon([(5, -5), (15, -5), (15, 15), (5, 15)])
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda: polygon_union([_NAN_VERTEX, _OVER_IT]),
+        lambda: dissolve_partition([_NAN_VERTEX, _OVER_IT]),
+        lambda: polygon_intersection(_NAN_VERTEX, _OVER_IT),
+        lambda: difference_all(_NAN_VERTEX, [_OVER_IT]),
+        lambda: polygon_difference(_OVER_IT, _NAN_VERTEX),
+    ],
+    ids=["polygon_union", "dissolve_partition", "polygon_intersection", "difference_all", "polygon_difference"],
+)
+def test_overlay_refuses_a_non_finite_vertex(op):
+    """A NaN vertex raises the ValueError that names it: the union and
+    the dissolve used to return the other operand alone, the
+    intersection and difference_all None, and the difference all of
+    the other operand."""
+    with pytest.raises(ValueError, match=r"vertex 2 is not finite: \(nan, 10\.0\)"):
+        op()
 
 
 def test_overlay_edge_set_is_one_array():

@@ -403,16 +403,24 @@ PINS = {
     # of the stitch walk; the counts are scripts/pin_moves.py's, and
     # CHANGES.md lists every case that moved further from exact.
     # Re-recorded: 418 cases moved, 85 in exact area (65 closer, 20
-    # further, by at most 9.0e-7); coarse retries 74 -> 7
+    # further, by at most 9.0e-7); coarse retries 74 -> 7.
+    # Re-recorded again when the binary ops kept faces by the two
+    # winding counts of one arrangement over both operands' edges
+    # instead of classifying edges: 15 cases moved, all in exact area
+    # (6 closer, 9 further, by at most 2.4e-7; worst error 9e-7 ->
+    # 9e-7); coarse retries 7 -> 0
     "polygon_difference": (
         702,
-        "58fc96f5af00cdd0baa42a27906835ef5ea4bb6d32dce71f58bae2b919ae4f07",
+        "ea9ff9277462b3a0b02caec45bc23e4850766fbf97f30a29c7856ec546569eec",
     ),
     # re-recorded: 227 cases moved, 19 in exact area (16 closer, 3
-    # further, by at most 8.6e-7); coarse retries 12 -> 14
+    # further, by at most 8.6e-7); coarse retries 12 -> 14. Re-recorded
+    # again with the two winding counts: 28 cases moved, 20 in exact
+    # area (16 closer, 4 further, by at most 7.8e-14; worst error
+    # 2.46e-6 -> 9e-7); coarse retries 14 -> 0
     "polygon_intersection": (
         702,
-        "73556193d9097ef148ea161a554b9be814ef6de7284e160b3fe0a7db10386e1f",
+        "4926801e5e1663def4d26a363e53bcca7e423d106ae8a14e9ec7e9276a33b6e6",
     ),
     # re-recorded when union's faces came from one winding arrangement:
     # rings start at the lowest boundary half-edge instead of the first
@@ -472,3 +480,49 @@ def _digest(op: str) -> tuple[int, str]:
 @pytest.mark.parametrize("op", sorted(PINS))
 def test_overlay_result_bytes_pinned(op):
     assert _digest(op) == PINS[op]
+
+
+def test_jittered_triangles_intersection_near_exact():
+    """Intersection case 239, a triangle and its copy jittered by ~2e-8,
+    is within 1e-6 of the exact intersection area: the edge classifier
+    sent it to the coarse-grid retry, 2.46e-6 off; the two winding
+    counts of one arrangement decide it on the first pass."""
+    from pygeoops_spark.geom.exact import exact_area, exact_intersection_area
+
+    a, b = _pairs()[239]
+    got = polygon_intersection(a, b)
+    assert abs(float(exact_area(got)) - float(exact_intersection_area(a, b))) <= 1e-6
+
+
+def test_merged_boundaries_follow_the_operand_that_ends_the_region(monkeypatch):
+    """Where the clustered pass merges A's and B's near-coincident
+    boundaries, the ring runs along the edge past which the rule stops
+    holding, not the one furthest to the right (union's widest region):
+    the parcel pairs 1e-9 apart difference to their exact area (the
+    widest rule kept a 1e-9 sliver: 47.999999994 read 48.0), and the
+    quadrilateral jittered by 1e-9 and 1e-8 intersects its copy within
+    1e-12 of exact, never above the smaller operand (51.0000000667
+    against |A| = 51)."""
+    from pygeoops_spark.geom import overlay
+    from pygeoops_spark.geom.exact import exact_area, exact_difference_area, exact_intersection_area
+    from pygeoops_spark.geom.kernels import polygon_area
+
+    clustered = []
+    real = overlay._winding_region
+
+    def spy(edges, snap, dirty=None, operand=None, keep=None):
+        clustered.append(dirty is not None)
+        return real(edges, snap, dirty, operand, keep)
+
+    monkeypatch.setattr(overlay, "_winding_region", spy)
+    pairs = _pairs()
+    for i in [*range(172, 184), *range(523, 535)]:
+        a, b = pairs[i]
+        got = exact_area(polygon_difference(a, b))
+        assert abs(float(got - exact_difference_area(a, b))) <= 1e-12, i
+    for i in (224, 225, 226, 227, 575, 576, 577, 578):
+        a, b = pairs[i]
+        got = polygon_intersection(a, b)
+        assert abs(float(exact_area(got) - exact_intersection_area(a, b))) <= 1e-12, i
+        assert polygon_area(got) <= min(polygon_area(a), polygon_area(b)), i
+    assert sum(clustered) >= 16
