@@ -96,6 +96,7 @@ from pygeoops_spark.geom.wkb import (
     Geometry,
     MULTIPOLYGON,
     POLYGON,
+    get_coordinates,
     get_parts,
     multi,
     require_finite,
@@ -118,13 +119,14 @@ def _op_snap(geoms) -> float:
     e.g. projected metre coordinates). A non-finite vertex raises the
     ValueError of wkb.require_finite: its snapped cell is meaningless,
     and the faces around it would silently vanish."""
-    m = 1.0
-    for g in geoms:
-        if g is not None:
-            xy = require_finite(g, "overlay")[:, :2]
-            if len(xy):
-                m = max(m, float(np.abs(xy).max()))
-    return max(SNAP, m * 1e-12)
+    geoms = [g for g in geoms if g is not None]
+    # one stack over the op, a polygon's rings read as they are
+    chains = [c for g in geoms for c in (g.data if g.type_id == POLYGON else [get_coordinates(g)])]
+    xy = np.vstack([np.empty((0, 2))] + [np.asarray(c)[:, :2] for c in chains])
+    if not np.isfinite(xy).all():
+        for g in geoms:
+            require_finite(g, "overlay")
+    return max(SNAP, float(np.abs(xy).max(initial=1.0)) * 1e-12)
 
 
 def _snap_geometry(g: Geometry | None, grid: float) -> Geometry | None:
@@ -664,7 +666,7 @@ def _winding_region(
         euler = np.bincount(comp[order[beg]], minlength=2 * m) + np.bincount(comp[faces], minlength=2 * m)
         bad |= (euler - np.bincount(comp[:m], minlength=2 * m) != 2)[comp]
     bad |= dirty is not None and abs(float(wind[face].sum(axis=1) @ cross) / 2 - target) > band
-    keep = keep or (lambda w: (w != 0).any(axis=1))
+    keep = keep or (lambda w: w.any(axis=1))
     kept = keep(wind[face])
     bnd = kept & ~kept[twin]
     hb = np.nonzero(bnd)[0]
@@ -843,7 +845,7 @@ class _Rule(NamedTuple):
 
     ``keep`` takes each face's (faces, 2) winding counts, in A then in
     B, and returns the faces the result covers. ``b_empty_keeps_a``:
-    the result is A when B has no polygon (else None).
+    the result is A when B has no polygon, or no edge (else None).
     ``bound(|A|, |B|)``: the retry's area upper bound."""
 
     keep: Callable[[np.ndarray], np.ndarray]
@@ -873,6 +875,12 @@ def _binary_overlay(
     snap = _op_snap(ops)
     edges = [_poly_edges(pa), _poly_edges(pb)]
     noded = [_node_edges(edges[i], edges[1 - i], snap) for i in (0, 1)]
+    # an operand left with no edge (rings collapsed to a point) covers
+    # no face, as if it had no polygon
+    if not len(noded[0]):
+        return None
+    if not len(noded[1]):
+        return a if rule.b_empty_keeps_a else None
     operand = np.repeat([0, 1], [len(e) for e in noded])
     shells, holes, consistent = _winding_region(np.vstack(noded), snap, operand=operand, keep=rule.keep)
     result = _rings_to_polygons(shells + holes, snap)
@@ -974,8 +982,8 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
     from pygeoops_spark.geom.kernels import polygon_area
 
     flat = [p for g in polys if g is not None for p in _as_polys(g)]
-    for p in flat:
-        require_finite(p, "dissolve_partition")
+    # read for its non-finite check only: the arrangement keys on SNAP
+    _op_snap(flat)
     flat = [p for p in flat if abs(ring_signed_area(np.asarray(p.data[0]))) > 0]
     if not flat:
         return None

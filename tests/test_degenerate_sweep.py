@@ -1,8 +1,10 @@
 """Every exported scalar geometry kernel over a set of degenerate
 inputs: null, the empties, flat and backtracking lines, flat, bow-tie,
-repeated-vertex and spike polygons, touching and far holes, tiny and
-huge squares, a Z polygon, overlapping multipolygon parts, a mixed
-collection, M-lines and a NaN vertex.
+repeated-vertex, collapsed and spike polygons, touching and far holes,
+tiny and huge squares, a Z polygon, overlapping multipolygon parts, a
+mixed collection, M-lines and a NaN vertex. The polygon ops that take
+a second operand also run with each input as that operand, a square
+as the first.
 
 A call passes on a result that round-trips through WKB (a geometry, or
 a list or tuple of them, numbers allowed alongside), on None, or on a
@@ -20,6 +22,7 @@ import pytest
 
 import pygeoops_spark
 from pygeoops_spark.geom import polygon
+from pygeoops_spark.geom.overlay import polygon_difference, polygon_intersection
 from pygeoops_spark.geom.wkb import Geometry, wkb_dumps, wkb_loads, wkt_loads
 
 _SQUARE = wkt_loads("POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))")
@@ -65,6 +68,7 @@ _WKT = {
     "polygon_flat": "POLYGON ((0 0, 5 0, 10 0, 0 0))",
     "polygon_bowtie": "POLYGON ((0 0, 10 10, 10 0, 0 10, 0 0))",
     "polygon_repeated_vertex": "POLYGON ((0 0, 10 0, 10 0, 10 10, 0 10, 0 0))",
+    "polygon_collapsed": "POLYGON ((1 1, 1 1, 1 1, 1 1))",
     "polygon_spike": "POLYGON ((0 0, 10 0, 10 10, 5 10, 5 20, 5 10, 0 10, 0 0))",
     "polygon_touching_hole": "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (0 5, 5 2, 5 8, 0 5))",
     "polygon_far_hole": "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (20 20, 25 20, 25 25, 20 25, 20 20))",
@@ -89,16 +93,36 @@ def _inputs() -> dict[str, Geometry | None]:
 _INPUTS = _inputs()
 
 
-def _admits_none(kernel: str) -> bool:
-    arg = _KERNELS[kernel][0]
-    return "None" in str(inspect.signature(getattr(pygeoops_spark, kernel)).parameters[arg].annotation)
+# op -> (the op, name of its second operand, call with the square as
+# the first operand and one input as the second)
+_SECOND_OPERAND = {
+    "polygon_difference": (polygon_difference, "b", lambda f, g: f(_SQUARE, g)),
+    "polygon_intersection": (polygon_intersection, "b", lambda f, g: f(_SQUARE, g)),
+    "difference_all": (pygeoops_spark.difference_all, "geometries_to_subtract", lambda f, g: f(_SQUARE, g)),
+    "difference_all_tiled": (
+        pygeoops_spark.difference_all_tiled,
+        "geometries_to_subtract",
+        lambda f, g: f(_SQUARE, g, subdivide_coords=4),
+    ),
+}
+
+
+def _admits_none(fn, arg: str) -> bool:
+    return "None" in str(inspect.signature(fn).parameters[arg].annotation)
 
 
 _CASES = [
     (kernel, name)
     for kernel in _KERNELS
     for name in _INPUTS
-    if name != "null" or _admits_none(kernel)
+    if name != "null" or _admits_none(getattr(pygeoops_spark, kernel), _KERNELS[kernel][0])
+]
+
+_SECOND_CASES = [
+    (op, name)
+    for op, (fn, arg, _) in _SECOND_OPERAND.items()
+    for name in _INPUTS
+    if name != "null" or _admits_none(fn, arg)
 ]
 
 
@@ -124,10 +148,22 @@ def test_degenerate_input(kernel, name):
     assert _round_trips(result), (kernel, name, result)
 
 
+@pytest.mark.parametrize("op,name", _SECOND_CASES)
+def test_degenerate_second_operand(op, name):
+    fn, _, call = _SECOND_OPERAND[op]
+    try:
+        result = call(fn, _INPUTS[name])
+    except ValueError as exc:
+        assert str(exc), (op, name)
+        return
+    assert _round_trips(result), (op, name, result)
+
+
 def test_sweep_covers_the_kernels():
-    """24 kernels over 25 inputs; null only where the signature takes
-    it."""
-    assert len(_KERNELS) == 24 and len(_INPUTS) == 25
+    """24 kernels over 26 inputs, and 4 polygon ops with each input as
+    the second operand; null only where the signature takes it."""
+    assert len(_KERNELS) == 24 and len(_INPUTS) == 26
     assert all(k in pygeoops_spark._EXPORTS for k in _KERNELS)
     nulls = {k for k, n in _CASES if n == "null"}
     assert "centerline" in nulls and "extend_line_by_distance" not in nulls
+    assert {k for k, n in _SECOND_CASES if n == "null"} == {"difference_all", "difference_all_tiled"}

@@ -314,6 +314,30 @@ def test_overlay_refuses_a_non_finite_vertex(op):
         op()
 
 
+_COLLAPSED = wkt_loads("POLYGON ((1 1, 1 1, 1 1, 1 1))")
+_TEN = polygon([(0, 0), (10, 0), (10, 10), (0, 10)])
+
+
+@pytest.mark.parametrize(
+    "op,area",
+    [
+        (lambda: polygon_difference(_TEN, _COLLAPSED), 100.0),
+        (lambda: polygon_intersection(_TEN, _COLLAPSED), None),
+        (lambda: difference_all(_TEN, [_COLLAPSED]), 100.0),
+        (lambda: polygon_difference(_COLLAPSED, _TEN), None),
+        (lambda: polygon_intersection(_COLLAPSED, _TEN), None),
+    ],
+    ids=["difference", "intersection", "difference_all", "difference_of_collapsed", "intersection_of_collapsed"],
+)
+def test_operand_collapsed_to_a_point_covers_nothing(op, area):
+    """A polygon whose ring repeats one point has no edge once
+    zero-length edges are dropped: as a subtrahend it leaves A whole,
+    and it intersects nothing (as B the difference raised IndexError,
+    its edges carrying no operand label)."""
+    got = op()
+    assert (got is None) if area is None else polygon_area(got) == area
+
+
 def test_overlay_edge_set_is_one_array():
     """An edge set in the overlay core is one (n, 4) array from ring to
     stitcher: no tuple-list converters or array side-parameters remain."""
