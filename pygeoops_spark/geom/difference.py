@@ -170,13 +170,14 @@ def merge_tiles(pieces: list[Geometry | None], type_id: int) -> Geometry:
     in tile order (None or empty where a tile was subtracted away). No
     surviving piece gives an empty geometry of the input's ``type_id``;
     polygonal pieces dissolve back together (tile pieces are
-    interior-disjoint with axis-aligned shared cuts — the signed-
-    coverage dissolve is O(E log E) and falls back to polygon_union on
-    any contract violation); other types collect, every piece 2-D and
-    tagged xy, as the dissolve's are. A tile the subtrahends missed
-    comes back untouched, Z/M included, while cut pieces are 2-D like
-    every overlay result, and one collection of both would hold 3-D
-    parts in a 2-D container."""
+    interior-disjoint with axis-aligned shared cuts — dissolve_partition
+    is polygon_union's fast path for that shape, splitting the seams by
+    one sort per axis instead of pairwise noding, and falls back to
+    polygon_union on any contract violation); other types collect,
+    every piece 2-D and tagged xy, as the dissolve's are. A tile the
+    subtrahends missed comes back untouched, Z/M included, while cut
+    pieces are 2-D like every overlay result, and one collection of
+    both would hold 3-D parts in a 2-D container."""
     results = [r for r in pieces if r is not None and not r.is_empty]
     if not results:
         return empty(type_id)

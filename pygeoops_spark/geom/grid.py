@@ -119,34 +119,19 @@ def split_tile_geometry(geom, ratio: float) -> list:
     shapely.ops.split semantics).
 
     A cut along x=c (or y=c) is realized as two/three rectangle clips
-    (slabs spanning the piece's padded bbox); a concave piece whose
-    Sutherland-Hodgman clip pinches into a self-touching ring is
-    separated into its proper parts by the nonzero-winding make_valid,
-    matching split()'s one-geometry-per-connected-piece output.
+    (slabs spanning the piece's padded bbox) whose cut points lie
+    exactly on the cut line, so neighbouring children share their seam
+    bit for bit; a concave piece whose Sutherland-Hodgman clip pinches
+    into a self-touching ring is separated into its proper parts by the
+    nonzero-winding make_valid, matching split()'s
+    one-geometry-per-connected-piece output.
     Children that collapse to zero area are dropped.  Output order:
     slab order (low to high along the cut axis), then descending area
     within a slab — deterministic.
     """
     from pygeoops_spark.geom.clip import clip_geom_rect
     from pygeoops_spark.geom.validity import make_valid
-    from pygeoops_spark.geom.wkb import Geometry, POLYGON, bounds, get_parts
-
-    def _snap_to_cuts(g, sx0, sy0, sx1, sy1, tol):
-        """Snap coordinates within tol of a slab edge onto it EXACTLY.
-        Clip intersection points on the same cut line are computed
-        through different edge interpolations, so they land up to a
-        few ulps apart; the nonzero-winding arrangement handles
-        exactly-coincident opposite edges correctly but can drop a
-        sliver face for nearly-coincident ones (found by the
-        star-polygon property sweep)."""
-        rings = []
-        for ring in g.data:
-            r = np.array(ring, dtype=float, copy=True)
-            for v, col in ((sx0, 0), (sx1, 0), (sy0, 1), (sy1, 1)):
-                m = np.abs(r[:, col] - v) <= tol
-                r[m, col] = v
-            rings.append(r)
-        return Geometry(POLYGON, rings, g.dims)
+    from pygeoops_spark.geom.wkb import POLYGON, bounds, get_parts
 
     pieces = [geom]
     todo = ratio
@@ -160,8 +145,7 @@ def split_tile_geometry(geom, ratio: float) -> list:
             # OUTER slab edges are padded past the piece's own bounds
             # (matching the reference's +-1-padded cut lines): only the
             # INTERIOR cut lines clip.  Re-clipping a piece along its
-            # own boundary — which coincides with a PREVIOUS cut line
-            # up to 1-ulp interpolation noise — creates overlapping
+            # own boundary — a PREVIOUS cut line — creates overlapping
             # opposite edges that degrade the arrangement repair and
             # can drop a sliver face (found by the star-polygon
             # property sweep).
@@ -188,18 +172,10 @@ def split_tile_geometry(geom, ratio: float) -> list:
                     (x0 - 1.0, y0 - 1.0, x1 + 1.0, ym),
                     (x0 - 1.0, ym, x1 + 1.0, y1 + 1.0),
                 ]
-            tol = 1e-9 * max(w, h, 1.0)
             for sx0, sy0, sx1, sy1 in slabs:
                 c = clip_geom_rect(g, sx0, sy0, sx1, sy1)
                 if c is None:
                     continue
-                c = Geometry(
-                    c.type_id,
-                    [_snap_to_cuts(p, sx0, sy0, sx1, sy1, tol) for p in get_parts(c)]
-                    if c.type_id != POLYGON
-                    else _snap_to_cuts(c, sx0, sy0, sx1, sy1, tol).data,
-                    c.dims,
-                )
                 repaired = make_valid(c, keep_collapsed=False)
                 if repaired is None:
                     continue

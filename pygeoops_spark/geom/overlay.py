@@ -23,8 +23,9 @@ array, in order, and picks edges with boolean masks or concatenations:
     operand, and keep faces by a rule over the two counts (a _Rule row):
        intersection: wA != 0 and wB != 0
        difference:   wA != 0 and wB == 0
-    dissolve_partition first cancels the seams between tiles by signed
-    1-D coverage per cut line, then passes the surviving edges
+    dissolve_partition passes its tiles' edges as one operand too, each
+    axis-aligned edge first split at the endpoints on its line (the
+    seams' T-junctions), so the two sides of a seam cancel here
  4. lines and points (line_difference, line_intersection, the point
     case of difference_all): each noded piece is kept or dropped by
     _classify, the one line-and-point test — on the closed polygon
@@ -82,7 +83,6 @@ in tests/test_exact_oracle.py, including 5000-example soaks.
 
 from __future__ import annotations
 
-from collections import defaultdict
 from typing import Callable, NamedTuple
 
 import numpy as np
@@ -349,19 +349,25 @@ def _node_edges(edges: np.ndarray, others: np.ndarray, snap: float = SNAP) -> np
     if not len(ie):
         return edges
     # each edge's cuts sorted by (t, x, y) — stable, so exact ties keep
-    # pass order — then laid out as one point run per edge: start, cuts,
-    # end. Consecutive points within a run are the pieces; on a cut
-    # edge, pieces whose ends share a snap cell are dropped.
-    t_c = np.concatenate(cut_t)
+    # pass order
     p_c = np.vstack(cut_p)
-    order = np.lexsort((p_c[:, 1], p_c[:, 0], t_c, ie))
-    ie = ie[order]
+    order = np.lexsort((p_c[:, 1], p_c[:, 0], np.concatenate(cut_t), ie))
+    return _split_edges(edges, ie[order], p_c[order], snap)
+
+
+def _split_edges(edges: np.ndarray, ie: np.ndarray, cuts: np.ndarray, snap: float) -> np.ndarray:
+    """Each edge replaced in place by its pieces between the ``cuts``
+    points on it (``ie``: their edges, sorted; each edge's cuts in order
+    along it), laid out as one point run per edge: start, cuts, end.
+    Consecutive points within a run are the pieces; on a cut edge,
+    pieces whose ends share a snap cell are dropped."""
+    n_e = len(edges)
     k = np.bincount(ie, minlength=n_e)
     first = 2 * np.arange(n_e) + np.cumsum(k) - k
     pts = np.empty((2 * n_e + len(ie), 2))
-    pts[first] = e1
-    pts[first + k + 1] = e2
-    pts[2 * ie + np.arange(len(ie)) + 1] = p_c[order]
+    pts[first] = edges[:, :2]
+    pts[first + k + 1] = edges[:, 2:]
+    pts[2 * ie + np.arange(len(ie)) + 1] = cuts
     piece = np.ones(len(pts) - 1, dtype=bool)
     piece[(first + k + 1)[:-1]] = False
     cells = np.round(pts / snap)
@@ -498,7 +504,7 @@ def _winding_region(
     ``keep`` maps the (faces, operands) windings to the kept faces; by
     default a face is kept where any winding is nonzero. Union and
     make_valid pass one operand (coverage > 0: every ring is normalized
-    interior-left), dissolve_partition its surviving edges, and the
+    interior-left), dissolve_partition its seam-split edges, and the
     binary ops both operands' noded edges with a rule over the two
     counts (_Rule).
 
@@ -736,9 +742,14 @@ def _winding_region(
             walk.append(nb[walk[-1]])
         seen.update(walk)
         # a walk through one vertex twice (a hole touching its shell) is
-        # pinched there into simple rings
-        for loop in _revisit_loops([start[h] for h in walk] + [start[s0]])[0]:
-            h = hb[[walk[k - 1] for k in loop[1:]] + [walk[loop[1] - 1]]]
+        # pinched there into simple rings; any other walk is one ring
+        keys = [start[h] for h in walk]
+        loops = [walk + walk[:1]]
+        if len(set(keys)) < len(keys):
+            loops = _revisit_loops(keys + keys[:1])[0]
+            loops = [[walk[k - 1] for k in loop[1:]] + [walk[loop[1] - 1]] for loop in loops]
+        for loop in loops:
+            h = hb[loop]
             ring = hxy[h]
             if dirty is not None:
                 # a merged vertex keeps the end of the edge into it as
@@ -952,28 +963,27 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
     on axis-aligned lines — the exact shape produced by subdivide tiling
     (+ per-tile difference), which cuts on vertical/horizontal lines.
 
-    Instead of polygon_union's pairwise noding (quadratic in
-    coordinates for a tile fan-out), shared
-    boundaries are cancelled by signed 1D coverage per cut line: every
-    axis-aligned directed edge becomes a signed interval on its line;
-    summing coverage over elementary intervals cancels the anti-directed
-    overlap between neighbouring tiles even when the two sides split the
-    shared edge at different points. The surviving segments and all
-    non-axis-aligned edges bound the result: their winding region
-    (_winding_region) is its faces.
+    The fast path of polygon_union for that shape: instead of its
+    pairwise noding (quadratic in coordinates for a tile fan-out), each
+    axis-aligned edge is split at the endpoints of the other edges on
+    its line (the seams' T-junctions, found with one sort per axis), so
+    the two sides of a seam lay the same pieces in opposite directions.
+    The split edges go to the one winding arrangement
+    (_winding_region), keyed by the op's snap (_op_snap), where
+    coincident anti-directed pieces cancel like every other coincident
+    edge; sloped edges pass unsplit. On a partition the result is
+    polygon_union's, byte for byte.
 
     A non-finite vertex raises wkb.require_finite's ValueError, as in
     the other polygon ops.
 
     Input contract: pieces are interior-disjoint (tile results are, by
     construction). A set that is not a partition falls back to the
-    general polygon_union: coincident same-direction segments
-    (|coverage| > 1) fail the interval algebra, and any other overlap
-    fails the area-conservation check (the union area of a partition
-    == the sum of the part areas), since the winding region covers an
-    overlap once. A set that overlaps pays for the dissolve and then
-    the union, so polygon_union stays the op for sets that may
-    overlap.
+    general polygon_union when it fails the area-conservation check
+    (the union area of a partition == the sum of the part areas), since
+    the winding region covers an overlap once. A set that overlaps pays
+    for the dissolve and then the union, so polygon_union stays the op
+    for sets that may overlap.
 
     Mirrors the recombination semantics of the reference's
     difference_all_tiled (shapely.unary_union over interior-disjoint
@@ -982,74 +992,36 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
     from pygeoops_spark.geom.kernels import polygon_area
 
     flat = [p for g in polys if g is not None for p in _as_polys(g)]
-    # read for its non-finite check only: the arrangement keys on SNAP
-    _op_snap(flat)
+    snap = _op_snap(flat)
     flat = [p for p in flat if abs(ring_signed_area(np.asarray(p.data[0]))) > 0]
     if not flat:
         return None
     if len(flat) == 1:
         return flat[0]
-
     edges = _poly_edges(flat)
-    is_vert = edges[:, 0] == edges[:, 2]
-    is_horiz = ~is_vert & (edges[:, 1] == edges[:, 3])
-    emitted: list[list[float]] = []  # surviving axis-aligned rows
-    # line buckets: snapped coordinate -> list of (lo, hi, sign, coord)
-    vert: dict[int, list] = defaultdict(list)
-    horiz: dict[int, list] = defaultdict(list)
-    for bucket, mask, c in ((vert, is_vert, 0), (horiz, is_horiz, 1)):
-        along = 1 - c
-        for e in edges[mask].tolist():
-            a, b = e[along], e[along + 2]
-            sign = 1 if b > a else -1
-            lo, hi = (a, b) if sign == 1 else (b, a)
-            bucket[round(e[c] / SNAP)].append((lo, hi, sign, e[c]))
-
-    def _emit(bucket: dict[int, list], vertical: bool) -> bool:
-        for ivals in bucket.values():
-            if len(ivals) == 1:
-                lo, hi, sign, c = ivals[0]
-                pts = ((c, lo), (c, hi)) if vertical else ((lo, c), (hi, c))
-                a, b = (pts if sign == 1 else pts[::-1])
-                emitted.append([*a, *b])
-                continue
-            # elementary breakpoints (snap-deduped, keep representative float)
-            reps: dict[int, float] = {}
-            for lo, hi, _s, _c in ivals:
-                reps.setdefault(round(lo / SNAP), lo)
-                reps.setdefault(round(hi / SNAP), hi)
-            keys = sorted(reps, key=lambda k: reps[k])
-            idx = {k: i for i, k in enumerate(keys)}
-            cov = [0] * len(keys)
-            for lo, hi, sign, _c in ivals:
-                cov[idx[round(lo / SNAP)]] += sign
-                cov[idx[round(hi / SNAP)]] -= sign
-            c = ivals[0][3]
-            run_sign, run_start = 0, 0.0
-            net = 0
-            for i, k in enumerate(keys):
-                net += cov[i]
-                v = reps[k]
-                if run_sign and (i == len(keys) - 1 or net != run_sign):
-                    a = (c, run_start) if vertical else (run_start, c)
-                    b = (c, v) if vertical else (v, c)
-                    emitted.append([*a, *b] if run_sign == 1 else [*b, *a])
-                    run_sign = 0
-                if net != 0 and run_sign == 0 and i < len(keys) - 1:
-                    if abs(net) > 1:
-                        return False  # pieces overlap: not a partition
-                    run_sign, run_start = net, v
-            if net != 0:
-                return False  # unbalanced interval algebra
-        return True
-
-    ok = _emit(vert, True) and _emit(horiz, False)
-    if ok:
-        keep = np.vstack([edges[~is_vert & ~is_horiz], np.reshape(emitted, (-1, 4))])
-        shells, holes, _ = _winding_region(keep, SNAP)
-        result = _rings_to_polygons(shells + holes)
-    else:
-        result = None
+    # vertical edges (c = 0), then horizontal ones: each is cut at the
+    # endpoints on its line more than 10*snap inside it (_node_edges'
+    # vertex rule), keyed (line, position) as one complex number, in its
+    # own direction
+    cut_e, cut_p = [], []
+    for c in (0, 1):
+        rows = np.nonzero(edges[:, c] == edges[:, c + 2])[0]
+        line = np.round(edges[rows, c] / snap)
+        a, b = edges[rows, 1 - c], edges[rows, 3 - c]
+        ends = np.unique(np.concatenate([line + 1j * a, line + 1j * b]))
+        lo = np.searchsorted(ends, line + 1j * (np.minimum(a, b) + snap * 10), "right")
+        hi = np.searchsorted(ends, line + 1j * (np.maximum(a, b) - snap * 10), "left")
+        k, j = _ranges(lo, hi)
+        j = np.where(b[k] < a[k], lo[k] + hi[k] - 1 - j, j)
+        p = np.empty((len(k), 2))
+        p[:, c], p[:, 1 - c] = edges[rows[k], c], ends[j].imag
+        cut_e.append(rows[k])
+        cut_p.append(p)
+    ie = np.concatenate(cut_e)
+    order = np.argsort(ie, kind="stable")
+    edges = _split_edges(edges, ie[order], np.vstack(cut_p)[order], snap)
+    shells, holes, _ = _winding_region(edges, snap)
+    result = _rings_to_polygons(shells + holes, snap)
     target = sum(polygon_area(p) for p in flat)
     if (
         result is None

@@ -130,6 +130,50 @@ def test_clip_line_rect():
     assert len(c2.data) == 2
 
 
+def _star(rng, k):
+    ang = np.sort(rng.uniform(0, 2 * np.pi, k))
+    rad = rng.uniform(3, 10, k)
+    return polygon(np.column_stack([rad * np.cos(ang), rad * np.sin(ang)]))
+
+
+def test_clip_cut_points_lie_exactly_on_the_rect_lines():
+    """Every vertex a clip makes lies bit-exactly on one of the
+    rectangle's four lines: interpolation alone misses the line by an
+    ulp on some crossings (34 of these 2206), and the two tiles either
+    side of a cut must share their seam exactly."""
+    from pygeoops_spark.geom.clip import clip_polygon_rect
+
+    rng = np.random.default_rng(17)
+    made = 0
+    for _ in range(300):
+        g = _star(rng, int(rng.integers(8, 60)))
+        x0, y0 = rng.uniform(-8, 4, 2)
+        x1, y1 = x0 + rng.uniform(1, 12), y0 + rng.uniform(1, 12)
+        c = clip_polygon_rect(g, x0, y0, x1, y1)
+        if c is None:
+            continue
+        given = {tuple(p) for p in np.asarray(g.data[0]).tolist()}
+        for p in np.asarray(c.data[0]).tolist():
+            if tuple(p) not in given:
+                made += 1
+                assert p[0] in (x0, x1) or p[1] in (y0, y1), p
+    assert made > 1000
+
+
+def test_subdivide_pieces_meet_their_tile_edges_exactly():
+    """A subdivide piece's vertex within 1e-7 of its bbox edge lies on
+    it, unless it is an input vertex that happens to lie that close."""
+    rng = np.random.default_rng(23)
+    for _ in range(30):
+        g = _star(rng, 60)
+        given = {tuple(p) for p in np.asarray(g.data[0]).tolist()}
+        for piece in subdivide(g, num_coords_max=15):
+            xy = np.vstack([np.asarray(r) for r in piece.data])
+            lo, hi = xy.min(axis=0), xy.max(axis=0)
+            near = ((np.abs(xy - lo) < 1e-7) & (xy != lo)) | ((np.abs(xy - hi) < 1e-7) & (xy != hi))
+            assert all(tuple(p) in given for p in xy[near.any(axis=1)].tolist())
+
+
 # -- subdivide (reference tests/test_general.py:616-651) -------------------
 def test_subdivide():
     # lattice-ish polygon with many coords

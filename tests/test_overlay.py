@@ -249,7 +249,7 @@ def test_union_shared_edge_squares_still_merges():
     assert u.geom_type == "POLYGON"
 
 
-# -- dissolve_partition (signed-coverage tile dissolve) --------------------
+# -- dissolve_partition (seams cancelled in the winding arrangement) -------
 def _dp(parts):
     from pygeoops_spark.geom.overlay import dissolve_partition
 
@@ -269,7 +269,8 @@ def test_dissolve_grid_partition_rectangle():
 
 def test_dissolve_mismatched_shared_edge_splits():
     # left tile's right edge is one segment [0,2]; the two right tiles
-    # split the same line at y=1 — signed coverage must still cancel
+    # split the same line at y=1 — the left edge is split there too, and
+    # the seam pieces still cancel
     left = box(0, 0, 1, 2)
     right_lo = box(1, 0, 2, 1)
     right_hi = box(1, 1, 2, 2)
@@ -305,9 +306,9 @@ def test_dissolve_disjoint_pieces_multipolygon():
 
 
 def test_dissolve_duplicate_piece_falls_back_to_union():
-    # coincident boundaries with |coverage| > 1 (here: the same tile
-    # twice) violate the partition contract at the boundary level and
-    # trigger the polygon_union fallback, keeping the result correct
+    # the same tile twice: the winding faces cover it once, the area
+    # check against the sum of the parts fails, and the polygon_union
+    # fallback keeps the result correct
     g = _dp([box(0, 0, 2, 2), box(0, 0, 2, 2)])
     assert polygon_area(g) == pytest.approx(4.0)
     assert g.geom_type == "POLYGON"
@@ -369,6 +370,27 @@ def test_dissolve_fallback_tolerates_none_elements():
     # fallback (triggered here by a duplicate piece) must filter them too
     g = _dp([box(0, 0, 2, 2), box(0, 0, 2, 2), None])
     assert polygon_area(g) == pytest.approx(4.0)
+
+
+@pytest.mark.parametrize("scale", [1e10, 1e12])
+def test_dissolve_large_coordinates_stay_on_the_fast_path(scale, monkeypatch):
+    # an L-shape cut into two tiles far from the origin: the arrangement
+    # keys on the op's scale-relative snap, so its int64 cells stay exact
+    # (an absolute 1e-9 key overflows past |x| ~ 9.2e9, the cells
+    # collapse, and the area check sends the set to polygon_union)
+    import warnings
+
+    from pygeoops_spark.geom import overlay
+
+    calls = []
+    monkeypatch.setattr(overlay, "polygon_union", lambda *a, **k: calls.append(a))
+    tiles = [box(0, 0, scale, 2 * scale), box(scale, 0, 2 * scale, scale)]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        g = _dp(tiles)
+    assert calls == []
+    assert g.geom_type == "POLYGON"
+    assert polygon_area(g) == 3 * scale * scale
 
 
 # -- shared-boundary / near-coincidence regression corpus (round 5) ---------

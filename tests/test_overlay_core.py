@@ -71,6 +71,15 @@ def test_overlay_repeats_exist_once():
     assert not {n for n in defined if n.startswith("_stitch")}
     for fn in ("_binary_overlay", "dissolve_partition", "polygon_union"):
         assert "_winding_region" in _calls_in(path, fn), fn
+    # tile seams cancel in that arrangement: the dissolve splits them
+    # without the pairwise noding, keeps no interval sweep of its own,
+    # and the tiler leaves its exact cut points as they are
+    assert "_node_edges" not in _calls_in(path, "dissolve_partition")
+    assert "defaultdict" not in {
+        a.name for n in ast.walk(tree) if isinstance(n, ast.ImportFrom) for a in n.names
+    }
+    grid_tree = ast.parse((ROOT / "pygeoops_spark/geom/grid.py").read_text())
+    assert "_snap_to_cuts" not in {n.name for n in ast.walk(grid_tree) if isinstance(n, ast.FunctionDef)}
     assert "_winding_region" in _calls_in("pygeoops_spark/geom/validity.py", "_make_valid_polygon")
     for op in ("polygon_difference", "polygon_intersection"):
         body_calls = {
