@@ -75,6 +75,11 @@ reference gets these for free from GEOS, _difference.py:171-181):
  * polygons are closed point sets (OGC Simple Features): a line piece
    or a point on the boundary band lies on the polygon, so a
    difference removes it on every edge of a ring alike.
+ * one arrangement decides every polygon op: where near-coincident
+   input leaves a contact unnoded, _winding_region's clustered pass
+   merges the near nodes of the components its signals name, and of
+   any component such a merge brings into contact. No op reruns on
+   inputs snapped to a coarser grid.
 
 These invariants are graded against an exact rational-arithmetic area
 oracle (geom/exact.py, signed-trapezoid decomposition over Fractions)
@@ -127,72 +132,6 @@ def _op_snap(geoms) -> float:
         for g in geoms:
             require_finite(g, "overlay")
     return max(SNAP, float(np.abs(xy).max(initial=1.0)) * 1e-12)
-
-
-def _snap_geometry(g: Geometry | None, grid: float) -> Geometry | None:
-    """Round every coordinate to the grid (the coarse-retry ladder:
-    near-coincident geometry becomes EXACTLY coincident, for which the
-    shared-boundary rules are exact). Collapsed rings are dropped."""
-    if g is None:
-        return None
-    parts_out = []
-    for p in get_parts(g):
-        if p.type_id != POLYGON:
-            continue
-        rings = []
-        for ring in p.data:
-            arr = np.asarray(ring, dtype=float)[:, :2]
-            r = np.round(arr / grid) * grid
-            keep = np.ones(len(r), dtype=bool)
-            keep[1:] = (r[1:] != r[:-1]).any(axis=1)
-            r = r[keep]
-            if len(r) and (r[0] != r[-1]).any():
-                r = np.vstack([r, r[0]])
-            if len(r) >= 4 and abs(ring_signed_area(r)) > 0:
-                rings.append(r)
-        if rings:
-            parts_out.append(Geometry(POLYGON, rings))
-    if not parts_out:
-        return None
-    if len(parts_out) == 1:
-        return parts_out[0]
-    return multi(MULTIPOLYGON, parts_out)
-
-
-def _area_of(g: Geometry | None) -> float:
-    from pygeoops_spark.geom.kernels import polygon_area
-
-    return 0.0 if g is None else polygon_area(g)
-
-
-def _retry_on_coarse_grid(result, consistent, snap, bound, geoms, rerun):
-    """The one retry ladder under every polygon op: rerun once on the
-    inputs snapped to ``200*snap`` (20x the 10*snap coincidence band,
-    so everything the tolerance machinery reasons about collapses to
-    exact coincidence) when the winding arrangement stayed inconsistent
-    after its clustered pass, or when the result exceeds ``bound()`` —
-    the op's area upper bound: |A| for A \\ B, min(|A|, |B|) for
-    A ∩ B, the hull for a union. ``rerun`` takes the snapped operands
-    (None where one collapsed) and must not retry again."""
-    if consistent and _area_of(result) <= bound() * (1 + 1e-7) + snap:
-        return result
-    grid = snap * 200
-    return rerun([_snap_geometry(g, grid) for g in geoms])
-
-
-def _hull_area(polys: list[Geometry]) -> float:
-    """Convex-hull area of all shell vertices — a cheap upper bound on
-    any union of the inputs (catches double-counted near-duplicate
-    rings that per-ring checks cannot see)."""
-    from pygeoops_spark.geom.kernels import convex_hull_coords
-
-    pts = [np.asarray(p.data[0], dtype=float)[:, :2] for p in polys if p.data]
-    if not pts:
-        return 0.0
-    hull = convex_hull_coords(np.vstack(pts))
-    if len(hull) < 4:
-        return 0.0
-    return abs(ring_signed_area(np.asarray(hull)))
 
 
 def _chain_edges(chains, skip_zero: bool = True) -> np.ndarray:
@@ -493,11 +432,11 @@ def _winding_region(
     dirty: np.ndarray | None = None,
     operand: np.ndarray | None = None,
     keep: Callable[[np.ndarray], np.ndarray] | None = None,
-) -> tuple[list[np.ndarray], list[np.ndarray], bool]:
+) -> tuple[list[np.ndarray], list[np.ndarray]]:
     """The boundary of the kept region of a noded directed edge array:
     the one face walk of the geometry core, under every polygon op.
-    Returns ``(shells, holes, consistent)``: closed coordinate arrays,
-    shells CCW and holes CW.
+    Returns ``(shells, holes)``: closed coordinate arrays, shells CCW and
+    holes CW.
 
     Each edge belongs to one operand (``operand``: a label per edge, all
     0 when None), and each face carries one winding number per operand.
@@ -529,7 +468,7 @@ def _winding_region(
     coordinates.
 
     Near-coincident input can leave edges unnoded, and then the faces
-    are wrong. Three signals catch it, each naming the components it
+    are wrong. Two signals catch it, each naming the components it
     fires in:
 
     * two edges out of vertices within 16 cells of each other touch or
@@ -539,12 +478,9 @@ def _winding_region(
     * crossing a twin disagrees with a winding already assigned (for
       any operand), a face is reached from no outer face, or a
       component is not a planar map (V - E + F != 2); a boundary walk
-      that does not close names them all;
-    * on the clustered pass, the winding integral sum(w_f * A_f), w_f
-      summed over the operands, differs from the signed area of
-      ``edges`` by more than the 10*snap band over their length.
+      that does not close names them all.
 
-    On a signal the arrangement is rebuilt once, the clustered pass:
+    On a signal the arrangement is rebuilt, the clustered pass:
     the ``dirty`` rows (the named components' edges) are noded again
     among themselves, each keeping its operand, and their endpoint
     cells join their 10-cell clusters (_cluster_nodes). That merges the
@@ -557,18 +493,22 @@ def _winding_region(
     the right (where near edges merged, a union keeps the widest); where
     A's and B's boundaries merged, it is the operand whose edge ends
     the kept region (an intersection keeps the narrowest).
-    ``consistent`` reports that pass."""
+
+    A merge can bring a named component into contact with one the
+    signals left out: a parcel overlapping a named one by 1e-9 then lies
+    on the merged edge, and its outer face would take that edge's
+    winding and vanish. The clustered pass's signals name it, and the
+    pass runs again with it, until they name no component it left out.
+    Past that, only a boundary walk that does not close changes the
+    result: it comes back empty."""
     if not len(edges):
-        return [], [], True
+        return [], []
     if operand is None:
         operand = np.zeros(len(edges), dtype=np.intp)
     n_op = int(operand.max()) + 1
     o0 = edges[0, :2]
+    src_edges, src_operand = edges, operand
     if dirty is not None:
-        # the signed area and length of the input, about its first vertex
-        rel = edges - o0[[0, 1, 0, 1]]
-        target = float(rel[:, 0] @ rel[:, 3] - rel[:, 2] @ rel[:, 1]) / 2
-        band = snap * 10 * float(np.hypot(rel[:, 2] - rel[:, 0], rel[:, 3] - rel[:, 1]).sum())
         # a cut at a near vertex bends an edge, and the bent pieces can
         # cross a neighbour: the flagged components are noded again
         # among themselves, and their cells join their 10-cell clusters
@@ -584,7 +524,7 @@ def _winding_region(
         keys[-2 * len(flagged) :] = uniq[_cluster_nodes(uniq, radius=10)[inv.ravel()]]
     alive = (keys[0::2] != keys[1::2]).any(axis=1)
     if not alive.any():
-        return [], [], True
+        return [], []
     # vertices: endpoint keys in edge order (start, end, start, ...),
     # numbered in cell order (complex keys sort by x, then y) with the
     # coordinates of their first occurrence
@@ -657,7 +597,7 @@ def _winding_region(
     # the signals, per half-edge: an unnoded contact (a half-edge out of
     # a vertex that touches or crosses, away from a shared vertex, one
     # out of a vertex within 16 cells), a face no winding reached, a twin
-    # that disagrees, a component that is not a planar map, the area
+    # that disagrees, a component that is not a planar map
     i, j = _near_pairs(cells, 16)
     bad = np.zeros(2 * m, dtype=bool)
     if len(i):
@@ -671,7 +611,6 @@ def _winding_region(
     if nv - m + len(faces) != 2 * len(outer):
         euler = np.bincount(comp[order[beg]], minlength=2 * m) + np.bincount(comp[faces], minlength=2 * m)
         bad |= (euler - np.bincount(comp[:m], minlength=2 * m) != 2)[comp]
-    bad |= dirty is not None and abs(float(wind[face].sum(axis=1) @ cross) / 2 - target) > band
     keep = keep or (lambda w: w.any(axis=1))
     kept = keep(wind[face])
     bnd = kept & ~kept[twin]
@@ -690,13 +629,19 @@ def _winding_region(
     nb = local[nb]
     closes = bool((nb >= 0).all()) and bool((np.bincount(nb, minlength=len(hb)) == 1).all())
     bad |= not closes
-    if bad.any() and dirty is None:
-        # the components a signal names go to the clustered pass
-        dirty = np.zeros(len(edges), dtype=bool)
-        dirty[alive] = np.isin(comp[inv], comp[bad])
-        return _winding_region(edges, snap, dirty, operand, keep)
+    if bad.any():
+        # the components a signal names go to the clustered pass, with
+        # the rows it already clustered (the rows it left out come first
+        # in ``edges``, in their order)
+        named = np.zeros(len(edges), dtype=bool)
+        named[alive] = np.isin(comp[inv], comp[bad])
+        grown = np.zeros(len(src_edges), dtype=bool) if dirty is None else dirty.copy()
+        more = named[: np.count_nonzero(~grown)]
+        if more.any():
+            grown[~grown] = more
+            return _winding_region(src_edges, snap, grown, src_operand, keep)
     if not closes:
-        return [], [], False
+        return [], []
     # ring coordinates: a half-edge's origin vertex. On the clustered
     # pass, a boundary half-edge runs through both ends of one edge laid
     # on it: stepping from its kept face across those edges, from left
@@ -759,7 +704,7 @@ def _winding_region(
             ring_area = ring_signed_area(ring)
             if abs(ring_area) > 1e-12:
                 (shells if ring_area > 0 else holes).append(ring)
-    return shells, holes, not bad.any()
+    return shells, holes
 
 
 def _rings_to_polygons(rings: list[np.ndarray], snap: float = 0.0) -> Geometry | None:
@@ -856,34 +801,28 @@ class _Rule(NamedTuple):
 
     ``keep`` takes each face's (faces, 2) winding counts, in A then in
     B, and returns the faces the result covers. ``b_empty_keeps_a``:
-    the result is A when B has no polygon, or no edge (else None).
-    ``bound(|A|, |B|)``: the retry's area upper bound."""
+    the result is A when B has no polygon, or no edge (else None)."""
 
     keep: Callable[[np.ndarray], np.ndarray]
     b_empty_keeps_a: bool
-    bound: Callable[[float, float], float]
 
 
 # A \ B: faces inside A and outside B.
-_DIFFERENCE = _Rule(lambda w: (w[:, 0] != 0) & (w[:, 1] == 0), True, lambda aa, ab: aa)
+_DIFFERENCE = _Rule(lambda w: (w[:, 0] != 0) & (w[:, 1] == 0), True)
 # A ∩ B: faces inside both.
-_INTERSECTION = _Rule(lambda w: (w != 0).all(axis=1), False, min)
+_INTERSECTION = _Rule(lambda w: (w != 0).all(axis=1), False)
 
 
-def _binary_overlay(
-    a: Geometry | None, b: Geometry | None, rule: _Rule, snapped: bool = False
-) -> Geometry | None:
+def _binary_overlay(a: Geometry | None, b: Geometry | None, rule: _Rule) -> Geometry | None:
     """The one binary overlay pipeline: snap scale, node both ways, the
     winding region of both operands' noded edges (each edge labelled by
-    its operand) under the rule, rings to polygons, then the
-    coarse-grid retry (skipped when ``snapped``)."""
+    its operand) under the rule, rings to polygons."""
     pa, pb = _as_polys(a), _as_polys(b)
     if not pa:
         return None
     if not pb:
         return a if rule.b_empty_keeps_a else None
-    ops = (a, b)
-    snap = _op_snap(ops)
+    snap = _op_snap((a, b))
     edges = [_poly_edges(pa), _poly_edges(pb)]
     noded = [_node_edges(edges[i], edges[1 - i], snap) for i in (0, 1)]
     # an operand left with no edge (rings collapsed to a point) covers
@@ -893,18 +832,8 @@ def _binary_overlay(
     if not len(noded[1]):
         return a if rule.b_empty_keeps_a else None
     operand = np.repeat([0, 1], [len(e) for e in noded])
-    shells, holes, consistent = _winding_region(np.vstack(noded), snap, operand=operand, keep=rule.keep)
-    result = _rings_to_polygons(shells + holes, snap)
-    if snapped:
-        return result
-    return _retry_on_coarse_grid(
-        result,
-        consistent,
-        snap,
-        lambda: rule.bound(sum(_area_of(p) for p in pa), sum(_area_of(p) for p in pb)),
-        ops,
-        lambda g: _binary_overlay(g[0], g[1], rule, snapped=True),
-    )
+    shells, holes = _winding_region(np.vstack(noded), snap, operand=operand, keep=rule.keep)
+    return _rings_to_polygons(shells + holes, snap)
 
 
 def polygon_difference(a: Geometry, b: Geometry) -> Geometry | None:
@@ -917,9 +846,7 @@ def polygon_intersection(a: Geometry, b: Geometry) -> Geometry | None:
     return _binary_overlay(a, b, _INTERSECTION)
 
 
-def polygon_union(
-    polys: list[Geometry], _snapped: bool = False
-) -> Geometry | None:
+def polygon_union(polys: list[Geometry]) -> Geometry | None:
     """N-ary union: the region of nonzero winding (coverage > 0) of the
     normalized input rings over one noded arrangement (_winding_region).
     None inputs (empty operands, e.g. an empty difference result) are
@@ -944,18 +871,8 @@ def polygon_union(
         _node_edges(e, np.vstack([edges[j] for j in np.nonzero(row)[0]]), snap) if row.any() else e
         for e, row in zip(edges, near)
     ]
-    shells, holes, consistent = _winding_region(np.vstack(noded), snap)
-    result = _rings_to_polygons(shells + holes, snap)
-    if _snapped:
-        return result
-    return _retry_on_coarse_grid(
-        result,
-        consistent,
-        snap,
-        lambda: _hull_area(flat),
-        flat,
-        lambda g: polygon_union(g, _snapped=True),
-    )
+    shells, holes = _winding_region(np.vstack(noded), snap)
+    return _rings_to_polygons(shells + holes, snap)
 
 
 def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
@@ -1020,7 +937,7 @@ def dissolve_partition(polys: list[Geometry]) -> Geometry | None:
     ie = np.concatenate(cut_e)
     order = np.argsort(ie, kind="stable")
     edges = _split_edges(edges, ie[order], np.vstack(cut_p)[order], snap)
-    shells, holes, _ = _winding_region(edges, snap)
+    shells, holes = _winding_region(edges, snap)
     result = _rings_to_polygons(shells + holes, snap)
     target = sum(polygon_area(p) for p in flat)
     if (

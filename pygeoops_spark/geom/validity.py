@@ -244,7 +244,7 @@ def _make_valid_polygon(
         # keep the original shell coords (repair is a no-op)
         shells = [np.asarray(poly.data[0], dtype=float)]
     else:
-        shells, holes, _ = _winding_region(noded, SNAP)
+        shells, holes = _winding_region(noded, SNAP)
         if not shells:  # arrangement degenerated: fall back to loops
             shells, holes = loops, []
         shells.sort(key=lambda lp: -abs(ring_signed_area(lp)))

@@ -12,17 +12,22 @@ moved it prints:
   operands are past ``exact_union_area``'s cap);
 * ``hole_nesting_faults`` of each tree's result;
 * the coarse retries the case took on each tree (a spy on
-  ``overlay._snap_geometry``, which only the retry ladder calls).
+  ``overlay._snap_geometry``, which only the coarse-grid retry of older
+  trees calls; a tree without it reads 0);
+* the clustered passes the case took on each tree (a spy on
+  ``overlay._winding_region`` that counts its calls with ``dirty``
+  set).
 
 Then one summary row per op: cases, bytes moved, measure moved (closer
 to / further from the oracle), the worst error of each tree over all
-its cases, the summed error, the retry counts, and the hole-nesting
-faults of the moved cases on this checkout.
+its cases, the summed error, the retry and clustered-pass counts, and
+the hole-nesting faults of the moved cases on this checkout.
 
     python scripts/pin_moves.py <parent_tree> [op ...]
     python scripts/pin_moves.py <parent_tree> polygon_difference --quiet
 
-A child (one JSON line: per op, the WKB hex and the retries per case):
+A child (one JSON line: per op, the WKB hex, the retries and the
+clustered passes per case):
 
     python scripts/pin_moves.py --child <tree> [op ...]
 """
@@ -63,18 +68,27 @@ def _child(tree: str, ops: list[str]) -> None:
 
     pins = _pins()
     assert overlay.__file__.startswith(os.path.abspath(tree)), overlay.__file__
-    retries = []
-    real = overlay._snap_geometry
-    overlay._snap_geometry = lambda g, grid: retries.append(grid) or real(g, grid)
+    retries, clustered = [], []
+    if hasattr(overlay, "_snap_geometry"):
+        snap = overlay._snap_geometry
+        overlay._snap_geometry = lambda g, grid: retries.append(grid) or snap(g, grid)
+    winding = overlay._winding_region
+
+    def spy(edges, snap, dirty=None, operand=None, keep=None):
+        clustered.append(dirty is not None)
+        return winding(edges, snap, dirty, operand, keep)
+
+    overlay._winding_region = spy
     out = {}
     for op in ops:
-        wkb, count = [], []
+        wkb, count, passes = [], [], []
         for fn, args in pins._cases(op):
-            before = len(retries)
+            before, calls = len(retries), len(clustered)
             wkb.append(pins._enc(fn(*args)).hex())
             # one retry snaps every operand: count ladders, not operands
             count.append(int(len(retries) > before))
-        out[op] = {"wkb": wkb, "retries": count}
+            passes.append(sum(clustered[calls:]))
+        out[op] = {"wkb": wkb, "retries": count, "clustered": passes}
     print(json.dumps(out))
 
 
@@ -202,17 +216,19 @@ def main() -> None:
                 print(
                     f"{op}[{k}]  measure {m_p!r} -> {m_c!r}  err {_fmt(e_p, 4)} -> {_fmt(e_c, 4)} {verdict}"
                     f"  faults {f_p} -> {f_c}  retries {p['retries'][k]} -> {c['retries'][k]}"
+                    f"  clustered {p['clustered'][k]} -> {c['clustered'][k]}"
                 )
         rows.append(
             f"{op} | {len(cases)} | {len(moved)} | {area_moved} ({closer} / {further})"
             f" | {_fmt(worst_further) if further else '-'}"
             f" | {_fmt(max(err_p, default=None))} -> {_fmt(max(err_c, default=None))}"
             f" | {_fmt(sum(err_p) if err_p else None)} -> {_fmt(sum(err_c) if err_c else None)}"
-            f" | {sum(p['retries'])} -> {sum(c['retries'])} | {faults}"
+            f" | {sum(p['retries'])} -> {sum(c['retries'])}"
+            f" | {sum(p['clustered'])} -> {sum(c['clustered'])} | {faults}"
         )
     print(
         "op | cases | bytes moved | measure moved (closer / further) | worst further error"
-        " | worst error | summed error | retries | faults in moved"
+        " | worst error | summed error | retries | clustered passes | faults in moved"
     )
     print("\n".join(rows))
 

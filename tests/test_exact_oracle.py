@@ -4,14 +4,14 @@ geom/exact.py computes overlay AREAS in exact Fraction arithmetic via
 signed-trapezoid decomposition — no noding, classification, stitching,
 or snapping — so these tests judge geom/overlay.py on absolute values,
 not just internal identities. This closes the round-5 residual risk:
-a wrong overlay that preserves edge length and stays inside the
-retry-ladder's area envelopes would pass the identity sweeps, but it
-cannot also match an exact rational area.
+a wrong overlay that preserves edge length and stays inside the area
+envelopes of the identity sweeps would pass them, but it cannot also
+match an exact rational area.
 
 Tolerances follow the kernel's documented snapping envelope: vertices
 may move by up to the operation snap (max(1e-9, |coord|max * 1e-12)),
-and the coarse-retry ladder by 200x that, shifting areas by at most
-~grid * perimeter. Jittered inputs add eps * perimeter.
+shifting areas by at most ~snap * perimeter. Jittered inputs add
+eps * perimeter.
 
 Reference anchor: pygeoops delegates overlay correctness to GEOS
 (reference pygeoops/_difference.py:171-181); the oracle re-derives that
@@ -252,8 +252,8 @@ def test_kernel_matches_exact_on_vertex_on_edge():
 
 def test_difference_at_projected_magnitude_matches_exact():
     # a parcel pair 5e5 out whose shared diagonal is offset by 1e-9:
-    # the noded difference reads within 1e-6 of exact, where a coarse
-    # retry's 200*snap grid (1e-4 at this magnitude) would not
+    # the noded difference reads within 1e-6 of exact, where snapping to
+    # a 200*snap grid (1e-4 at this magnitude) would not
     a = polygon([(500000, 500000), (500002, 500000), (500008, 500018), (500000, 500018)])
     b = polygon(
         [(500001.999999999, 500000), (500010, 500000), (500010, 500018), (500007.999999999, 500018)]
@@ -569,7 +569,7 @@ def test_clip_polygon_rect_matches_exact(subject, rect):
 
 
 # -- kernel vs oracle: near-coincident boundaries under jitter -------------
-# The family the retry-ladder triggers cannot provably catch: two
+# The family the arrangement's signals cannot provably catch: two
 # parcels split by a chord, parcel B's chord endpoints perturbed by
 # eps. Graded on absolute exact areas, not identities.
 
@@ -662,8 +662,7 @@ def test_kernel_matches_exact_holed_plug(t):
 @given(parcel_pairs(), st.sampled_from([1e5, 5e5, 1e6]))
 def test_kernel_matches_exact_under_jitter_projected(t, offset):
     """Same family at projected-CRS magnitudes: the scale-relative snap
-    (offset * 1e-12, coarse retry 200x) widens the allowed drift by
-    grid * perimeter."""
+    (offset * 1e-12) widens the allowed drift by snap * perimeter."""
     a, b, eps = t
     if polygon_area(a) < 1e-6 or polygon_area(b) < 1e-6:
         return
@@ -673,8 +672,8 @@ def test_kernel_matches_exact_under_jitter_projected(t, offset):
 
     sa, sb = shift(a), shift(b)
     perim = 4 * (40 + 2 * offset)  # generous bound on both perimeters
-    grid = 200 * max(1e-9, (offset + 40) * 1e-12)
-    tol = 1e-6 + eps * 500 + grid * perim
+    snap = max(1e-9, (offset + 40) * 1e-12)
+    tol = 1e-6 + eps * 500 + snap * perim
     assert _area(polygon_intersection(sa, sb)) == pytest.approx(
         float(exact_intersection_area(sa, sb)), abs=tol
     )

@@ -226,15 +226,18 @@ def test_tiled_line_difference_parts_share_the_container_dims(dims):
 
 # -- anti-parallel seams cancel (ADVICE r01: both members of a
 # reversed duplicate pair must go) --
-def test_winding_region_cancels_anti_parallel_seam():
-    from pygeoops_spark.geom.overlay import _winding_region
+def test_winding_region_cancels_anti_parallel_seam(monkeypatch):
+    from pygeoops_spark.geom import overlay
 
     # one edge array [x1 y1 x2 y2]: the unit square, then an interior
     # seam traversed both ways from the (0,0) corner
     sq = [[0.0, 0.0, 1.0, 0.0], [1.0, 0.0, 1.0, 1.0], [1.0, 1.0, 0.0, 1.0], [0.0, 1.0, 0.0, 0.0]]
     seam = [[0.0, 0.0, 0.5, 0.5], [0.5, 0.5, 0.0, 0.0]]
-    shells, holes, consistent = _winding_region(np.array(sq + seam), 1e-9)
-    assert consistent and holes == [] and len(shells) == 1
+    real, passes = overlay._winding_region, []
+    monkeypatch.setattr(overlay, "_winding_region", lambda *a: passes.append(a) or real(*a))
+    shells, holes = real(np.array(sq + seam), 1e-9)
+    # no signal fires: the first arrangement decides it
+    assert passes == [] and holes == [] and len(shells) == 1
     ring = shells[0]
     # the square survives intact; the seam vertex never appears
     assert len(ring) == 5
@@ -542,10 +545,9 @@ def test_pie_slice_parcels_union(n, eps):
     """N parcels around one center point (pie slices): every pair
     shares a radial edge and ALL share the center vertex, per-slice
     perturbed by eps. With eps at ~100*snap the pairwise overlap/gap
-    signs disagree and the boundary graph goes classification-
-    inconsistent — the lost-edge fraction triggers the coarse-grid
-    retry (exactly-coincident inputs), which used to be a catastrophic
-    5/6-area loss."""
+    signs disagree, which used to be a catastrophic 5/6-area loss. One
+    winding arrangement over the noded slices decides it: its first
+    pass, or at eps = 1e-9 its clustered pass."""
     import math
 
     from pygeoops_spark.geom import polygon
@@ -576,9 +578,10 @@ def test_pie_slice_parcels_union(n, eps):
 def test_near_identical_operands(eps):
     """A vs a per-vertex-jittered copy of itself: at snap-scale jitter
     BOTH co-directed boundaries used to survive the clean stitch walk
-    and the intersection/union reported DOUBLE the area; the area
-    invariants (inter <= min, union <= hull) now trigger the
-    coarse-grid retry."""
+    and the intersection/union reported DOUBLE the area. In one winding
+    arrangement the faces between the copies carry both windings; at
+    eps = 1e-9 and 1e-8 the contact signal sends every op to the
+    clustered pass, which decides it."""
     from pygeoops_spark.geom import polygon
     from pygeoops_spark.geom.kernels import polygon_area
     from pygeoops_spark.geom.overlay import (
@@ -603,9 +606,11 @@ def test_hole_plug_jitter_difference_no_double_subtract():
     sweeps): B = the plug of A's hole shifted by eps < noding tolerance.
     Both shared-edge rules kept a complete co-directed ring (A's hole
     ring AND B's reversed boundary), double-subtracting the hole area —
-    and the result being SMALLER than A evaded the area trigger. The
-    co-directed near-duplicate detector now routes this onto the
-    coarse-grid retry ladder."""
+    and the result being SMALLER than A evaded the area trigger. Both
+    operands now lie in one winding arrangement, whose first pass
+    decides every case: a face between the hole ring and the plug's
+    boundary carries its winding in each operand, so nothing is
+    subtracted twice."""
     from pygeoops_spark.geom import polygon
     from pygeoops_spark.geom.kernels import polygon_area
     from pygeoops_spark.geom.overlay import (

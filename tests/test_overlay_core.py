@@ -1,10 +1,10 @@
 """The overlay core (geom/overlay.py) is written once, and its results
 decode for every coordinate layout.
 
-* Site guard: the coarse-grid snap retry, the stitch walk's pinch-off,
-  the blocked nearest-segment scan, the binary-op pipeline and the edge
-  classifier each exist once; difference and intersection are rules
-  over the core.
+* Site guard: the stitch walk's pinch-off, the blocked nearest-segment
+  scan, the binary-op pipeline and the edge classifier each exist once;
+  difference and intersection are rules over the core, and no
+  coarse-grid retry reruns it.
 * Z/M inputs: the overlay computes on x/y, so results are tagged ``xy``
   (GEOS would interpolate Z); before, a Z-tagged result carried 2-D
   coordinates and its WKB could not be decoded.
@@ -61,7 +61,6 @@ def _function(path: str, name: str) -> ast.FunctionDef:
 def test_overlay_repeats_exist_once():
     path = "pygeoops_spark/geom/overlay.py"
     calls = _calls(path)
-    assert calls.get("_snap_geometry") == 1  # the one retry ladder
     assert calls.get("point_segment_distance") == 1  # the one nearest-segment scan
     assert "_seg_intersections" not in (ROOT / path).read_text()
     # the one face walk: no stitch walk is left beside _winding_region,
@@ -69,6 +68,12 @@ def test_overlay_repeats_exist_once():
     tree = ast.parse((ROOT / path).read_text())
     defined = {n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
     assert not {n for n in defined if n.startswith("_stitch")}
+    # one arrangement decides every polygon op: no coarse-grid retry
+    # reruns it on snapped inputs, and no op carries an area bound for one
+    assert not defined & {"_snap_geometry", "_area_of", "_retry_on_coarse_grid", "_hull_area"}
+    from pygeoops_spark.geom.overlay import _Rule
+
+    assert _Rule._fields == ("keep", "b_empty_keeps_a")
     for fn in ("_binary_overlay", "dissolve_partition", "polygon_union"):
         assert "_winding_region" in _calls_in(path, fn), fn
     # tile seams cancel in that arrangement: the dissolve splits them
@@ -175,59 +180,56 @@ def test_clustered_pass_matches_fast_pass(monkeypatch):
     over all of its edges gives the fast pass's exact area wherever it
     has nothing to merge (noding again adds no cut, no two cells lie
     within its 10-cell radius and no cell holds two distinct points);
-    elsewhere, where it reports itself consistent, every hole lies in
-    its own shell and the area stays inside the band its own area
-    signal allows (10*snap over the edge length)."""
+    elsewhere every hole lies in its own shell and the area stays inside
+    the 10*snap band over the edge length, on every set but one. Set 784
+    is three copies of a hexagon jittered by up to 1.7e-8: its vertices'
+    10-cell clusters chain across 17 cells, the clustered map is not
+    planar, and the forced pass reads 3.7e-7 for 75.7. Its first
+    arrangement raises no signal, so no polygon op clusters it."""
     from test_overlay_pins import _union_sets
 
     from pygeoops_spark.geom.exact import exact_area, hole_nesting_faults
     from pygeoops_spark.geom.overlay import _near_pairs, _node_edges, _rings_to_polygons
 
     calls, real = _spy_winding(monkeypatch)
-    idle = 0
-    for polys in _union_sets():
+    idle, far = 0, []
+    for k, polys in enumerate(_union_sets()):
         calls.clear()
         polygon_union(polys)
         if len(calls) != 1:
             continue  # a signal fired
         edges, snap, _, _, _ = calls[0]
-        shells, holes, _ = real(edges, snap)
+        shells, holes = real(edges, snap)
         fast = _rings_to_polygons(shells + holes, snap)
-        shells, holes, ok = real(edges, snap, np.ones(len(edges), dtype=bool))
+        shells, holes = real(edges, snap, np.ones(len(edges), dtype=bool))
         clustered = _rings_to_polygons(shells + holes, snap)
         gap = abs(exact_area(clustered) - exact_area(fast))
         points = np.unique(edges.reshape(-1, 2), axis=0)
         cells = np.unique(np.round(points / snap).astype(np.int64), axis=0)
         renoded = _node_edges(edges, edges, snap)
         if len(cells) == len(points) and not len(_near_pairs(cells, 10)[0]) and np.array_equal(renoded, edges):
-            assert ok and gap == 0
+            assert gap == 0
             idle += 1
-        elif ok:
+        else:
             assert hole_nesting_faults(clustered) == []
             length = np.hypot(edges[:, 2] - edges[:, 0], edges[:, 3] - edges[:, 1]).sum()
-            assert gap <= 10 * snap * length
-    assert idle
+            if gap > 10 * snap * length:
+                far.append(k)
+    assert idle and far == [784]
 
 
 def test_bench_buffer_unions_take_the_fast_pass(monkeypatch):
     """The 200 bench-shaped buffer_by_m unions (bench.py's M-lines) are
-    decided by the first arrangement: no clustered pass, no retry."""
-    from pygeoops_spark.geom import overlay
+    decided by the first arrangement: no clustered pass."""
     from pygeoops_spark.geom.buffer_by_m import buffer_by_m
 
     calls, _ = _spy_winding(monkeypatch)
-    retries = []
-    real_snap = overlay._snap_geometry
-    monkeypatch.setattr(
-        overlay, "_snap_geometry", lambda g, grid: retries.append(grid) or real_snap(g, grid)
-    )
     for i in range(200):
         x0, y0 = (i % 512) * 300.0, (i // 512 % 512) * 300.0
         pts = ", ".join(f"{x0 + v * 20} {y0 + (v % 2) * 10} {1.0 + (i + v) % 5}" for v in range(7))
         assert polygon_area(buffer_by_m(wkt_loads(f"LINESTRING M ({pts})"))) > 0
     assert len(calls) == 200
     assert all(dirty is None and operand is None for _, _, dirty, operand, _ in calls)
-    assert retries == []
 
 
 def test_union_of_parcels_a_nanometre_apart():
@@ -243,6 +245,42 @@ def test_union_of_parcels_a_nanometre_apart():
         got = polygon_union(polys)
         assert polygon_area(got) == 234.0
         assert got.type_id == POLYGON
+
+
+def test_symdiff_halves_union_on_the_clustered_pass(monkeypatch):
+    """A triangle A and a neighbour B jittered 1e-9 off their shared
+    edge. A - B is non-simple at its corners, so the contact signal
+    names it alone, and its merged edge then lies on B - A, 1e-9 away
+    and unnamed: B - A's outer face took that edge's winding and
+    vanished (the union read 1.449999998). The clustered pass's own
+    contact signal now names B - A too, and the pass runs again with
+    it: the union the outermost arrangement returns reads 2.1."""
+    from pygeoops_spark.geom import overlay
+    from pygeoops_spark.geom.kernels import ring_signed_area
+
+    a = wkt_loads("POLYGON((0 1, 0.1 0, 3 0, 0 1))")
+    b = wkt_loads("POLYGON((2.999999999 0, 1 1.1, 0 0.999999999, 2.999999999 0))")
+    halves = [polygon_difference(a, b), polygon_difference(b, a)]
+    real, depth, passes, top = overlay._winding_region, [], [], []
+
+    def spy(edges, snap, dirty=None, operand=None, keep=None):
+        passes.append(dirty is not None)
+        depth.append(None)
+        out = real(edges, snap, dirty, operand, keep)
+        depth.pop()
+        if not depth:
+            top.append(out)
+        return out
+
+    monkeypatch.setattr(overlay, "_winding_region", spy)
+    got = polygon_union(halves)
+    assert abs(polygon_area(got) - 2.1) <= 1e-8
+    # polygon_union's first arrangement went through a clustered pass,
+    # and its rings (shells CCW, holes CW) already hold the union;
+    # nothing reruns the op
+    shells, holes = top[0]
+    assert any(passes) and abs(sum(ring_signed_area(r) for r in shells + holes) - 2.1) <= 1e-8
+    assert len(top) == 1
 
 
 def test_near_vertices_of_a_densified_column_stay_linear(monkeypatch):

@@ -5,7 +5,7 @@ A seeded numpy corpus covering the shape families of
 tests/test_exact_oracle.py (box vs L-shape, convex pairs, parcel pairs
 under eps jitter, holed plugs, n-ary box unions, axis-aligned tile
 partitions, bowties, lines, the driver `difference` corpus) plus the
-retry-ladder counterexamples of tests/test_overlay.py is run through
+near-coincident counterexamples of tests/test_overlay.py is run through
 every overlay entry point. Each op is pinned by its case count and one
 sha256 over the concatenated result WKB, so any change to ring order,
 start vertex, part order or a single coordinate bit shows here.
@@ -187,8 +187,8 @@ def _pairs():
         pairs.append((a, b))
     for (n, eps), rest in zip(((6, 1e-9), (6, 1e-7), (12, 1e-7)), _PIE_RESTS):
         pairs.append((_pie_slices(n, eps)[0], wkt_loads(rest)))
-    # near-identical triangles: the jitter that sends intersection and
-    # union onto the coarse-grid retry
+    # near-identical triangles: the jitter that sent intersection and
+    # union onto the coarse-grid retry, before it was deleted
     for eps in (2e-8, 3e-8, 4e-8):
         for _ in range(40):
             pts = rng.uniform(0, 40, (3, 2))
@@ -202,7 +202,8 @@ def _union_sets():
     sets = [[_rand_box(rng) for _ in range(int(rng.integers(2, 5)))] for _ in range(40)]
     sets += [[a, b] for a, b in _pairs()]
     sets += [_pie_slices(n, eps) for n, eps in ((4, 0.0), (6, 1e-9), (8, 1e-7))]
-    # three jittered copies of one polygon: the n-ary retry trigger
+    # three jittered copies of one polygon: the n-ary case the
+    # coarse-grid retry used to catch
     for eps in (1e-8, 2e-8):
         for _ in range(20):
             pts = np.asarray(_convex(rng).data[0])[:-1]

@@ -443,11 +443,11 @@ def test_concave_adjacent_parcels(t):
 # -- symmetric-difference identity: two independent kernel paths ------------
 # area(A △ B) computed CONSTRUCTIVELY as |(A\B) ∪ (B\A)| (difference +
 # union kernels) must equal |A| + |B| − 2·|A ∩ B| (intersection kernel).
-# The retry ladder's triggers (lost_frac, area envelopes) are
-# necessary-condition heuristics; a wrong result that preserves edge
-# length inside the envelopes would pass them silently — but it cannot
-# satisfy this cross-path identity, because the two sides never share a
-# code path past noding.
+# The arrangement's signals (unnoded contacts, winding disagreements)
+# are necessary-condition heuristics; a wrong result that preserves edge
+# length would pass them silently — but it cannot satisfy this
+# cross-path identity, because the two sides are different ops over
+# different arrangements.
 def _symdiff_area(a, b) -> float:
     ab = polygon_difference(a, b)
     ba = polygon_difference(b, a)
